@@ -29,7 +29,7 @@ from __future__ import annotations
 __version__ = "0.2.0"
 
 # Public API: the procedure-equivalent entry points.
-from .operators.dq import run_file_dq, run_table_dq  # noqa: F401
+from .operators.dq import run_table_dq  # noqa: F401
 from .operators.profile import profile_table  # noqa: F401
 from .operators.report import table_report  # noqa: F401
 from .operators.scd import scd1_merge  # noqa: F401

@@ -11,20 +11,25 @@ Two engines, mirroring the reference:
   *unrounded* pillar values rounded to 3 decimals, table score = mean
   of rounded column scores rounded to 3.
 
-* **File engine** (``run_file_dq`` / distributed variants) — parity
-  with ``DQ_DISCOVERY_AND_CHECKS`` (Data_Discovery_File.sql:97-313):
+* **File engine** (``*_long`` rule frames, swept by
+  sources/discovery.py ``run_file_dq_distributed``) — parity with
+  ``DQ_DISCOVERY_AND_CHECKS`` (Data_Discovery_File.sql:97-313):
   pass/fail at 0.95 thresholds, numeric z-score(>3σ) outlier accuracy,
   string rare-value (<1% frequency) accuracy, pairwise
-  functional-dependency consistency. Divergence from the reference
+  functional-dependency consistency. Divergences from the reference
   (documented): validity ``result`` is a proper boolean, not the
-  reference's ``str(valid)`` (Data_Discovery_File.sql:297).
+  reference's ``str(valid)`` (Data_Discovery_File.sql:297), and a
+  string column with no non-null value gets no rare-value record.
 
 Scale design: every full-column statistic comes from the single-pass
-profile (operators/profile.py). The file engine's per-column and
-per-pair checks are expressed as one unioned DataFrame plan per family
-instead of the reference's O(cols) / O(cols²) separate scans; pair
-count is capped (``max_pairs``) for wide tables, and the z-score pass
-reuses the profile's mean/std rather than rescanning.
+profile (operators/profile.py). The z-score, rare-value and FD rules
+are all answered by one stacked two-level aggregate
+(:func:`per_value_rules`) instead of the reference's O(cols) / O(cols²)
+separate scans: each row is copied once per checked column, grouped
+by (column, value), and one global aggregate of conditional sums reads
+every rule off those groups, fed the profile's mean, stddev and
+non-null counts. The FD pair list is capped (``max_pairs``) for wide
+tables.
 """
 
 from __future__ import annotations
@@ -32,7 +37,7 @@ from __future__ import annotations
 import datetime as _dt
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .profile import is_datelike, is_numeric, profile_aggregates, profile_table
@@ -240,140 +245,216 @@ def completeness_uniqueness_long(df: DataFrame) -> DataFrame:
     return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
 
 
+#: Row schema of :func:`per_value_rules`.
+_RULE_ROWS = (
+    "rule STRING, column_name STRING, inconsistent_keys BIGINT, "
+    "result DOUBLE, status STRING"
+)
+
+
+def per_value_rules(
+    df: DataFrame,
+    zscore: dict[str, tuple[Any, Any, int]] | None = None,
+    rare: dict[str, int] | None = None,
+    fd_pairs: list[tuple[str, str]] | None = None,
+    known_unique_cols: set[str] | None = None,
+) -> DataFrame:
+    """The z-score, rare-value and functional-dependency (FD) rules of
+    a frame as one Spark plan: a stacked, two-level aggregate. Rows are
+    ``(rule, column_name, inconsistent_keys, result, status)``, where
+    ``rule`` is ``zscore``, ``rare`` or ``fd`` and an FD row's
+    ``column_name`` is its pair ``c1->c2``.
+
+    The full-column statistics come from the caller's profile pass:
+    ``zscore`` maps a numeric column to ``(mean, sample stddev,
+    non-null count)``, ``rare`` maps a string column to its non-null
+    count, and ``known_unique_cols`` names the columns whose non-null
+    values are all distinct.
+
+    Level 1 copies each row once per checked column ``i`` (the z-score
+    and rare-value columns and the FD determinants not known unique).
+    Copy ``i`` holds ``c_i`` in its own typed slot and NULL in the
+    others. Copies whose value is NULL are dropped, the rest grouped by
+    ``(i, slots)``: the row count of every value of every checked
+    column, with the min and max of each FD dependent among its rows.
+    Level 2 is one global aggregate of conditional sums over the groups:
+
+    * z-score: rows of values more than 3 sample-stddevs from the mean;
+    * rare value: rows of values under 1% of the non-null count;
+    * FD ``c1->c2``: ``c1`` values whose ``c2`` min is below its max.
+      Spark orders values as it compares them (NaN equals NaN, -0.0
+      equals 0.0), so these are the values with more than one distinct
+      non-null ``c2``.
+
+    An FD pair whose determinant is known unique passes without a scan:
+    each determinant value labels one row, hence one ``c2`` value. A
+    string column with no non-null value has no frequencies and gets no
+    rare-value row. Results are rounded to 6 decimals in Spark.
+    """
+    # The plan is built from SQL text where it can: each Column call is
+    # a JVM round trip, and a Column-built sweep of a 5-column file
+    # spent longer in them than in its Spark jobs.
+    unique = set(known_unique_cols or ())
+    # Level-1 inputs, numbered as the level-2 rules first use them:
+    # checked columns (value slots) and FD dependents (min/max).
+    checked: dict[str, int] = {}
+    deps: dict[str, int] = {}
+
+    def value(c):
+        return f"__v{checked.setdefault(c, len(checked))}"
+
+    def low_high(c):
+        j = deps.setdefault(c, len(deps))
+        return f"__lo{j}", f"__hi{j}"
+
+    aggs: list[Column] = []
+    rows: list[str] = []
+
+    def level2(expr: Column | str) -> str:
+        name = f"__a{len(aggs)}"
+        if isinstance(expr, str):
+            expr = F.expr(expr)
+        aggs.append(expr.alias(name))
+        return name
+
+    def rule_row(rule, name, result, ok, keys="NULL"):
+        rows.append(
+            f"{_sql_str(rule)}, {_sql_str(name)}, CAST({keys} AS BIGINT), "
+            f"CAST({result} AS DOUBLE), "
+            f"CASE WHEN {ok} THEN 'passed' ELSE 'failed' END"
+        )
+
+    for c, (mean, std, n) in (zscore or {}).items():
+        if mean is None or std is None:
+            outliers = "0"
+        else:
+            # mean and std stay Column literals: a decimal column's mean
+            # keeps its exact decimal type
+            outlier = F.abs(F.col(value(c)) - F.lit(mean)) > ZSCORE * F.lit(std)
+            outliers = level2(
+                F.coalesce(F.sum(F.when(outlier, F.col("__n"))), F.lit(0))
+            )
+        result = f"1.0D - {outliers} / {n}D" if n else "1.0D"
+        rule_row("zscore", c, f"round({result}, 6)", f"{result} >= {PASS_THRESHOLD}D")
+    for c, n in (rare or {}).items():
+        if not n:
+            continue
+        # sum the INTEGER counts of rare values and divide once: summing
+        # per-value cnt/n floats is order dependent and can land at
+        # 1.0 +/- 1ulp, flipping the sign of a rounded zero
+        rare_rows = level2(
+            f"coalesce(sum(CASE WHEN {value(c)} IS NOT NULL "
+            f"AND __n / {n} < {RARE_FREQ}D THEN __n END), 0)"
+        )
+        result = f"round(1.0D - CAST({rare_rows} AS DOUBLE) / {n}, 6)"
+        rule_row("rare", c, result, f"{result} >= {PASS_THRESHOLD}D")
+    for c1, c2 in fd_pairs or ():
+        if c1 in unique:
+            keys = "0"
+        else:
+            low, high = low_high(c2)
+            keys = level2(
+                f"count(CASE WHEN {value(c1)} IS NOT NULL AND {low} < {high} THEN 1 END)"
+            )
+        rule_row(
+            "fd", f"{c1}->{c2}", f"CASE WHEN {keys} = 0 THEN 1.0D ELSE 0.0D END",
+            f"{keys} = 0", keys,
+        )
+    if not rows:
+        return df.sparkSession.createDataFrame([], _RULE_ROWS)
+    if not aggs:
+        wide = df.sparkSession.range(1)
+    else:
+        slots = [f"__v{i}" for i in checked.values()]
+        level1 = (
+            df.selectExpr(
+                f"explode(sequence(0, {len(checked) - 1})) AS __ci",
+                *[_ident(c) for c in dict.fromkeys([*checked, *deps])],
+            )
+            .selectExpr(
+                "__ci",
+                *[
+                    f"CASE WHEN __ci = {i} THEN {_ident(c)} END AS __v{i}"
+                    for c, i in checked.items()
+                ],
+                *[f"{_ident(c)} AS __d{j}" for c, j in deps.items()],
+            )
+            .where(" OR ".join(f"{s} IS NOT NULL" for s in slots))
+            .groupBy("__ci", *slots)
+            .agg(
+                F.expr("count(1) AS __n"),
+                *[
+                    F.expr(f"{fn}(__d{j}) AS __{bound}{j}")
+                    for j in deps.values()
+                    for fn, bound in (("min", "lo"), ("max", "hi"))
+                ],
+            )
+        )
+        wide = level1.agg(*aggs)
+    return wide.selectExpr(
+        f"stack({len(rows)}, {', '.join(rows)}) "
+        "AS (rule, column_name, inconsistent_keys, result, status)"
+    )
+
+
+def _ident(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(text: str) -> str:
+    """``text`` as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def zscore_accuracy_long(
     df: DataFrame,
     cols: list[str] | None = None,
     stats: dict[str, tuple[float | None, float | None, int]] | None = None,
 ) -> DataFrame:
-    """Numeric accuracy: share of values within 3 sample-stddevs of the
-    mean (Data_Discovery_File.sql:147-183). Two passes — one for
-    mean/std/count, one counting outliers — both full aggregates, no
-    per-column scans. ``result`` rounded to 6 for cross-engine hashing.
+    """Numeric accuracy ``(column_name, result, status)``: share of
+    values within 3 sample-stddevs of the mean
+    (Data_Discovery_File.sql:147-183), the z-score rows of
+    :func:`per_value_rules`.
 
-    ``stats`` lets a caller that already profiled the table (e.g. the
-    file-DQ sweep's fused first pass) supply ``{col: (mean, std, n)}``
-    and skip the stats job entirely.
+    ``stats`` lets a caller that already profiled the table supply
+    ``{col: (mean, std, n)}``; otherwise one aggregate job computes it.
     """
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = cols or [c for c in df.columns if is_numeric(schema[c])]
-    if stats is not None:
-        stats_row = {
-            k: v
-            for c in cols
-            for k, v in zip(
-                (f"{c}__mean", f"{c}__std", f"{c}__n"), stats[c]
-            )
-        }
-    else:
-        stats_row = df.agg(
+    if stats is None:
+        row = df.agg(
             *[
                 agg
-                for c in cols
+                for i, c in enumerate(cols)
                 for agg in (
-                    F.avg(c).alias(f"{c}__mean"),
-                    F.stddev(c).alias(f"{c}__std"),
-                    F.count(F.col(c)).alias(f"{c}__n"),
+                    F.avg(c).alias(f"__m{i}"),
+                    F.stddev(c).alias(f"__s{i}"),
+                    F.count(F.col(c)).alias(f"__n{i}"),
                 )
             ]
         ).collect()[0]
-    outlier_aggs = []
-    for c in cols:
-        mean, std = stats_row[f"{c}__mean"], stats_row[f"{c}__std"]
-        if mean is None or std is None:
-            outlier_aggs.append(F.lit(0).alias(f"{c}__outliers"))
-        else:
-            outlier_aggs.append(
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.abs(F.col(c) - F.lit(mean)) > ZSCORE * F.lit(std), 1
-                        ).otherwise(0)
-                    ),
-                    F.lit(0),
-                ).alias(f"{c}__outliers")
-            )
-    wide = df.agg(*outlier_aggs)
-    structs = []
-    for c in cols:
-        n = stats_row[f"{c}__n"]
-        if n and n > 0:
-            result = 1.0 - F.col(f"{c}__outliers") / F.lit(float(n))
-        else:
-            result = F.lit(1.0)
-        structs.append(
-            F.struct(
-                F.lit(c).alias("column_name"),
-                F.round(result, 6).alias("result"),
-                F.when(result >= PASS_THRESHOLD, F.lit("passed"))
-                .otherwise(F.lit("failed"))
-                .alias("status"),
-            )
-        )
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+        stats = {
+            c: (row[f"__m{i}"], row[f"__s{i}"], row[f"__n{i}"])
+            for i, c in enumerate(cols)
+        }
+    return per_value_rules(df, zscore={c: stats[c] for c in cols}).select(
+        "column_name", "result", "status"
+    )
 
 
 def rare_value_accuracy_long(df: DataFrame, cols: list[str]) -> DataFrame:
-    """String accuracy: 1 - Σ(frequency of values rarer than 1%)
-    (Data_Discovery_File.sql:185-211). One groupBy per column, unioned
-    into a single plan; each group-by shuffles only (value, count)
-    pairs. Frequencies are over non-null values (pandas
-    ``value_counts`` semantics)."""
-    parts = []
-    for c in cols:
-        counts = (
-            df.filter(F.col(c).isNotNull())
-            .groupBy(F.col(c).alias("v"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # Whole-frame window to attach the non-null total; post-groupBy
-        # cardinality is the column's distinct count, small for the
-        # categorical columns this rule targets.
-        parts.append(
-            counts.select(
-                F.lit(c).alias("column_name"),
-                F.col("cnt"),
-                F.sum("cnt").over(_whole()).alias("tot"),
-            )
-            .groupBy("column_name")
-            .agg(
-                # sum the INTEGER counts of rare values and divide once:
-                # summing per-row cnt/tot floats is partition-order
-                # dependent and can land at 1.0 +/- 1ulp, flipping the
-                # sign of the rounded zero (a real flake caught by the
-                # sign-sensitive oracle comparator)
-                F.round(
-                    1.0
-                    - F.coalesce(
-                        F.sum(
-                            F.when(
-                                F.col("cnt") / F.col("tot") < RARE_FREQ,
-                                F.col("cnt"),
-                            ).otherwise(F.lit(0))
-                        ).cast("double")
-                        / F.max("tot"),
-                        F.lit(0.0),
-                    ),
-                    6,
-                ).alias("result")
-            )
-            .select(
-                "column_name",
-                "result",
-                F.when(F.col("result") >= PASS_THRESHOLD, F.lit("passed"))
-                .otherwise(F.lit("failed"))
-                .alias("status"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _whole():
-    from pyspark.sql.window import Window
-
-    return Window.partitionBy()
+    """String accuracy ``(column_name, result, status)``: 1 - the share
+    of non-null rows holding a value rarer than 1%
+    (Data_Discovery_File.sql:185-211; pandas ``value_counts``
+    frequencies), the rare-value rows of :func:`per_value_rules`. One
+    aggregate job counts each column's non-null values first."""
+    row = df.agg(
+        *[F.count(F.col(c)).alias(f"__n{i}") for i, c in enumerate(cols)]
+    ).collect()[0]
+    return per_value_rules(
+        df, rare={c: row[f"__n{i}"] for i, c in enumerate(cols)}
+    ).select("column_name", "result", "status")
 
 
 def fd_consistency_long(
@@ -385,26 +466,18 @@ def fd_consistency_long(
 ) -> DataFrame:
     """Pairwise functional-dependency consistency
     (Data_Discovery_File.sql:97-143): for every ordered column pair
-    (c1, c2), passed iff no c1 value maps to more than one distinct c2
-    value. Output ``(pair, inconsistent_keys, result, status)``.
+    (c1, c2), passed iff no c1 value maps to more than one distinct
+    non-null c2 value. Output ``(pair, inconsistent_keys, result,
+    status)``, the FD rows of :func:`per_value_rules`: every pair in one
+    plan instead of the reference's O(cols²) scans. ``max_pairs`` caps
+    the pair list on wide tables.
 
-    The reference runs O(cols²) full pandas scans; here each
-    DETERMINANT is one groupBy subplan computing every dependent's
-    countDistinct at once (r11 — N scans/shuffles instead of N²) and
-    all determinants union into ONE Spark plan. ``max_pairs`` caps the
-    quadratic blowup on wide tables.
-
-    **Key-like pre-filter** (SURVEY §4; VERDICT r3 #7): a pair whose
-    determinant c1 is UNIQUE over its non-null rows passes with
-    certainty — each c1 value labels at most one row, hence at most one
-    c2 value (and the both-non-null FD subset only shrinks that). Such
-    pairs are emitted as literal passed rows with ZERO scan work, so an
-    N-column table with k key-like columns drops k·(N−1) grouped-agg
-    subplans. Callers that already profiled the table pass the proven
-    set via ``known_unique_cols`` (run_file_dq_distributed does — no
-    extra action); ``profile_keylike=True`` derives it here with one
-    extra count/countDistinct pass. Answers are bit-identical either
-    way — the skip is exact, not a heuristic."""
+    **Key-like pre-filter** (SURVEY §4): a pair whose determinant is
+    unique over its non-null rows passes with certainty and costs no
+    scan work. Callers that already profiled the table pass the proven
+    set via ``known_unique_cols``; ``profile_keylike=True`` derives it
+    here with one extra count/countDistinct pass. Answers are identical
+    either way: the skip is exact, not a heuristic."""
     cols = cols or df.columns
     pairs = [(c1, c2) for c1 in cols for c2 in cols if c1 != c2]
     if max_pairs is not None:
@@ -424,221 +497,6 @@ def fd_consistency_long(
             for i, c in enumerate(determinants)
             if prow[f"__n_{i}"] == prow[f"__d_{i}"]
         }
-    skipped_schema = (
-        "pair STRING, inconsistent_keys BIGINT, result DOUBLE, status STRING"
+    return per_value_rules(df, fd_pairs=pairs, known_unique_cols=unique_cols).select(
+        F.col("column_name").alias("pair"), "inconsistent_keys", "result", "status"
     )
-    # Batch ALL skipped pairs into ONE local relation: a per-pair
-    # createDataFrame would add k*(N-1) LocalRelations to the union
-    # plan on a wide table with k unique determinants, partially
-    # offsetting the scan savings the pre-filter exists for
-    # (ADVICE r4 #5).
-    skipped_rows = [
-        (f"{c1}->{c2}", 0, 1.0, "passed")
-        for c1, c2 in pairs
-        if c1 in unique_cols
-    ]
-    parts = []
-    if skipped_rows:
-        parts.append(df.sparkSession.createDataFrame(skipped_rows, skipped_schema))
-    # r11 (guide §1.2 fewer passes, §2.4 fewer shuffles): every
-    # dependent of one determinant shares the SAME groupBy(c1), so one
-    # subplan per DETERMINANT computes all its countDistinct(c2)
-    # columns at once — N scans/shuffles instead of N² — and the single
-    # wide summary row unpivots to the per-pair contract rows. Counts
-    # are identical to the old per-pair subplans: count_distinct
-    # ignores NULL c2 (the only effect the old both-non-null filter had
-    # on the aggregate), and a c1 value whose c2 are all NULL yields
-    # n=0 (not > 1) exactly like the old pre-filtered groupBy that
-    # never formed the group.
-    by_det: dict[str, list[str]] = {}
-    for c1, c2 in pairs:
-        if c1 in unique_cols:
-            continue
-        by_det.setdefault(c1, []).append(c2)
-    for c1, deps in by_det.items():
-        g = (
-            df.filter(F.col(c1).isNotNull())
-            .groupBy(c1)
-            .agg(
-                *[
-                    F.countDistinct(F.col(c2)).alias(f"__n_{j}")
-                    for j, c2 in enumerate(deps)
-                ]
-            )
-        )
-        # coalesce: an all-NULL determinant column leaves g empty and
-        # sum() NULL — the old empty count was 0 ("passed")
-        wide = g.agg(
-            *[
-                F.coalesce(
-                    F.sum((F.col(f"__n_{j}") > 1).cast("long")), F.lit(0)
-                ).alias(f"__k_{j}")
-                for j in range(len(deps))
-            ]
-        )
-        unpivot = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(f"{c1}->{c2}").alias("pair"),
-                        F.col(f"__k_{j}").cast("long").alias("ik"),
-                    )
-                    for j, c2 in enumerate(deps)
-                ]
-            )
-        ).alias("s")
-        parts.append(
-            wide.select(unpivot).select(
-                F.col("s.pair").alias("pair"),
-                F.col("s.ik").alias("inconsistent_keys"),
-                F.when(F.col("s.ik") == 0, F.lit(1.0))
-                .otherwise(F.lit(0.0))
-                .alias("result"),
-                F.when(F.col("s.ik") == 0, F.lit("passed"))
-                .otherwise(F.lit("failed"))
-                .alias("status"),
-            )
-        )
-    if not parts:
-        # single-column (or empty) frame: no pairs to check — return an
-        # empty result with the contract schema instead of crashing
-        return df.sparkSession.createDataFrame(
-            [],
-            "pair STRING, inconsistent_keys BIGINT, result DOUBLE, status STRING",
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def run_file_dq(pdf, max_pairs: int | None = None) -> list[dict[str, Any]]:
-    """Exact file-engine DQ sweep on an in-memory pandas DataFrame —
-    the reference's operating mode for discovered files
-    (Data_Discovery_File.sql:217-313). Returns the flat rule-record
-    list (completeness, uniqueness, validity, consistency, accuracy).
-
-    Kept pandas-native for small discovered files; use the ``*_long``
-    DataFrame variants for warehouse-scale tables. Validity ``result``
-    is a real bool (reference emitted ``str(valid)``)."""
-    import pandas as pd
-
-    results: list[dict[str, Any]] = []
-    total = len(pdf)
-    for col in pdf.columns:
-        nulls = int(pdf[col].isnull().sum())
-        completeness = (total - nulls) / total if total else 1.0
-        status = "passed" if completeness >= PASS_THRESHOLD else "failed"
-        results.append(
-            {
-                "pillar": "completeness",
-                "column": col,
-                "result": float(completeness),
-                "rule": f"Completeness of {col}",
-                "status": status,
-                "reason": f"{nulls} nulls out of {total} rows"
-                if status == "failed"
-                else "Less than 5% nulls",
-            }
-        )
-        nunique = int(pdf[col].nunique())
-        uniqueness = nunique / total if total else 1.0
-        status = "passed" if uniqueness >= PASS_THRESHOLD else "failed"
-        results.append(
-            {
-                "pillar": "uniqueness",
-                "column": col,
-                "result": float(uniqueness),
-                "rule": f"Uniqueness of {col}",
-                "status": status,
-                "reason": f"{nunique} unique values out of {total}"
-                if status == "failed"
-                else "High uniqueness",
-            }
-        )
-        dtype = str(pdf[col].dtype)
-        if dtype == "object":
-            valid = bool(pdf[col].dropna().map(lambda x: isinstance(x, str)).all())
-        else:
-            valid = bool(pd.api.types.is_numeric_dtype(pdf[col])) or (
-                "datetime" in dtype or dtype == "bool"
-            )
-        status = "passed" if valid else "failed"
-        results.append(
-            {
-                "pillar": "validity",
-                "column": col,
-                "result": valid,
-                "rule": f"Validity of {col}",
-                "status": status,
-                "reason": "All values match expected type"
-                if valid
-                else "Some values do not match expected type",
-            }
-        )
-    # Consistency: ordered-pair functional dependencies.
-    cols = list(pdf.columns)
-    pairs = [(a, b) for a in cols for b in cols if a != b]
-    if max_pairs is not None:
-        pairs = pairs[:max_pairs]
-    for c1, c2 in pairs:
-        mapping = pdf[[c1, c2]].dropna().drop_duplicates()
-        grouped = mapping.groupby(c1)[c2].nunique()
-        n_bad = int((grouped > 1).sum())
-        status = "passed" if n_bad == 0 else "failed"
-        results.append(
-            {
-                "pillar": "consistency",
-                "column": f"{c1}->{c2}",
-                "result": 1.0 if n_bad == 0 else 0.0,
-                "rule": f"Each {c1} maps to a consistent {c2}",
-                "status": status,
-                "reason": f"Each value in {c1} maps to one value in {c2}"
-                if status == "passed"
-                else f"{n_bad} values in {c1} map to multiple values in {c2}",
-            }
-        )
-    # Accuracy: numeric z-score outliers; string rare values.
-    for col in pdf.columns:
-        if pd.api.types.is_numeric_dtype(pdf[col]):
-            series = pdf[col].dropna()
-            if len(series) > 0:
-                mean, std = series.mean(), series.std()
-                outliers = series[(series - mean).abs() > ZSCORE * std]
-                result = 1.0 - len(outliers) / len(series)
-            else:
-                result, outliers = 1.0, []
-            status = "passed" if result >= PASS_THRESHOLD else "failed"
-            results.append(
-                {
-                    "pillar": "accuracy",
-                    "column": col,
-                    "result": float(result),
-                    "rule": f"Outlier check on {col} (z-score > 3)",
-                    "status": status,
-                    "reason": f"{len(outliers)} outliers detected in {col}"
-                    if status == "failed"
-                    else "Outliers within acceptable range",
-                }
-            )
-        elif pd.api.types.is_string_dtype(pdf[col]) or pdf[col].dtype == object:
-            # pandas ≥2 is_string_dtype no longer accepts plain object
-            # columns; the reference ran where object ⇒ string, so an
-            # object column must still get the rare-value rule
-            value_counts = pdf[col].value_counts(normalize=True)
-            rare = value_counts[value_counts < RARE_FREQ]
-            result = 1.0 - float(rare.sum())
-            status = "passed" if result >= PASS_THRESHOLD else "failed"
-            results.append(
-                {
-                    "pillar": "accuracy",
-                    "column": col,
-                    "result": float(result),
-                    "rule": f"Rare value check on {col} (<1% frequency)",
-                    "status": status,
-                    "reason": f"{len(rare)} rare values (<1%) in {col}"
-                    if status == "failed"
-                    else "Rare values within acceptable range",
-                }
-            )
-    return results

@@ -79,6 +79,36 @@ def _scan_details(plan: str) -> list[dict[str, Any]]:
     return scans
 
 
+def _top_level_lists(args: str) -> list[str]:
+    """The bracketed lists at depth 0 of an ``Arguments:`` line, e.g.
+    ``"[a, f(b)], [], [c ASC]"`` → ``["a, f(b)", "", "c ASC"]``."""
+    lists, depth, start = [], 0, 0
+    for i, ch in enumerate(args):
+        if ch == "[":
+            if depth == 0:
+                start = i + 1
+            depth += 1
+        elif ch == "]":
+            depth -= 1
+            if depth == 0:
+                lists.append(args[start:i])
+    return lists
+
+
+def _unpartitioned_windows(plan: str) -> int:
+    """Window nodes with an empty partition spec: Spark moves all their
+    rows to one task ("No Partition Defined for Window operation").
+    A Window detail block's arguments are ``[window exprs],
+    [partition spec], [order spec]`` with the empty lists left out, so
+    a second list of sort orders means there is no partition spec."""
+    n = 0
+    for m in re.finditer(r"^\(\d+\) Window\n(?:.+\n)*?Arguments: ([^\n]*)", plan, re.M):
+        lists = _top_level_lists(m.group(1))
+        if len(lists) < 2 or re.search(r" (ASC|DESC) NULLS (FIRST|LAST)$", lists[1]):
+            n += 1
+    return n
+
+
 def plan_report(df: DataFrame) -> dict[str, Any]:
     """Structured audit of a DataFrame's physical plan::
 
@@ -89,10 +119,12 @@ def plan_report(df: DataFrame) -> dict[str, Any]:
          "codegen_spans": <WholeStageCodegen region count>,
          "arrow_python": <Arrow-batched Python nodes>,
          "row_python": <row-at-a-time Python nodes>,
+         "unpartitioned_windows": <Window nodes with no partition spec>,
          "warnings": [...]}
 
     Warnings flag the patterns that do not survive scale: per-row
-    Python UDFs, cartesian/nested-loop joins, and scans that read
+    Python UDFs, cartesian/nested-loop joins, windows without a
+    partition spec (one task sees every row), and scans that read
     every column while pushing no filter (full unpruned reads are
     sometimes intended — the warning says "look", not "wrong").
     """
@@ -119,6 +151,7 @@ def plan_report(df: DataFrame) -> dict[str, Any]:
         "codegen_spans": len(set(re.findall(r"\*\((\d+)\)", simple))),
         "arrow_python": sum(count_nodes(n) for n in _ARROW_PY),
         "row_python": sum(count_nodes(n) for n in _ROW_PY),
+        "unpartitioned_windows": _unpartitioned_windows(plan),
     }
     warnings = []
     if report["row_python"]:
@@ -132,6 +165,11 @@ def plan_report(df: DataFrame) -> dict[str, Any]:
                 f"{j} in plan — quadratic unless one side is tiny; "
                 "verify the small side is bounded"
             )
+    if report["unpartitioned_windows"]:
+        warnings.append(
+            f"{report['unpartitioned_windows']} window(s) with no partition "
+            "spec — every row goes to a single task"
+        )
     for s in report["scans"]:
         if not s["pushed_filters"] and len(s["read_columns"]) >= 8:
             warnings.append(

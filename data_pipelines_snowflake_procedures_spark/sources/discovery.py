@@ -26,9 +26,9 @@ Spark-first notes:
   containers by sync-delimited block (sources/avrofile.py, S14) —
   driver reads headers only, executors seek straight to their slices.
 * The DQ sweep runs on the Spark DataFrame through the distributed
-  rule engines (operators/dq.py) — a handful of aggregate jobs total —
-  instead of whole-file pandas. Full-fidelity rule records
-  (reason strings, pass/fail) are preserved.
+  rule engine (operators/dq.py) in two Spark actions, whatever the
+  column count, instead of whole-file pandas. Rule records keep the
+  reference's shape and pass/fail semantics.
 """
 
 from __future__ import annotations
@@ -182,14 +182,19 @@ def file_metadata(path: str, df: DataFrame, row_count: int | None = None) -> dic
 
 def run_file_dq_distributed(
     df: DataFrame, max_pairs: int | None = None
-) -> list[dict[str, Any]]:
+) -> tuple[list[dict[str, Any]], int]:
     """Five-pillar DQ sweep on a Spark DataFrame, returning the
-    reference's flat rule-record shape (Data_Discovery_File.sql:217-313)
-    from the distributed rule engines — four aggregate-style jobs total
-    regardless of column count: one fused profiling pass serving both
-    completeness/uniqueness AND the z-score mean/std stats (they scan
-    the same rows), one outlier-count pass, one rare-value pass, one
-    FD pass.
+    reference's flat rule records (Data_Discovery_File.sql:217-313) and
+    the frame's row count, in two Spark actions whatever the column
+    count:
+
+    1. one fused profiling pass: null and distinct counts for
+       completeness/uniqueness, plus each numeric column's mean and
+       sample stddev;
+    2. one stacked two-level aggregate (operators/dq.py
+       ``per_value_rules``) for the z-score, rare-value and
+       functional-dependency rules, fed the profile's mean, stddev,
+       non-null counts and unique columns.
 
     Validity is schema-level here: a typed DataFrame column cannot hold
     mixed types, so a column is valid iff its type maps into the
@@ -198,12 +203,7 @@ def run_file_dq_distributed(
     """
     from decimal import ROUND_HALF_UP, Decimal
 
-    from ..operators.dq import (
-        PASS_THRESHOLD,
-        fd_consistency_long,
-        rare_value_accuracy_long,
-        zscore_accuracy_long,
-    )
+    from ..operators.dq import PASS_THRESHOLD, per_value_rules
     from ..operators.profile import is_numeric, profile_aggregates
 
     def _round6(x: float) -> float:
@@ -215,11 +215,13 @@ def run_file_dq_distributed(
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = df.columns
 
-    # Job 1 (fused): null/distinct counts + numeric mean/std in ONE pass.
+    # Action 1 (fused): null/distinct counts + numeric mean/std in ONE pass.
     prow = df.agg(*profile_aggregates(df, cols)).collect()[0]
-    total = float(max(int(prow["count_all"]), 1))
+    count_all = int(prow["count_all"])
+    total = float(max(count_all, 1))
+    nonnull = {c: count_all - int(prow[f"{c}__count_nulls"]) for c in cols}
     for c in cols:
-        completeness = (prow["count_all"] - prow[f"{c}__count_nulls"]) / total
+        completeness = nonnull[c] / total
         uniqueness = prow[f"{c}__count_distinct"] / total
         for pillar, result in (("completeness", completeness), ("uniqueness", uniqueness)):
             results.append(
@@ -242,62 +244,38 @@ def run_file_dq_distributed(
                 "status": "passed" if valid else "failed",
             }
         )
-    numeric_cols = [c for c, t in schema.items() if is_numeric(t)]
-    if numeric_cols:
-        stats = {
-            c: (
-                prow[f"{c}__avg"],
-                prow[f"{c}__stddev"],
-                int(prow["count_all"]) - int(prow[f"{c}__count_nulls"]),
-            )
-            for c in numeric_cols
-        }
-        # Job 2: outlier counting only — the stats job is fused above.
-        for row in zscore_accuracy_long(df, numeric_cols, stats=stats).collect():
-            results.append(
-                {
-                    "pillar": "accuracy",
-                    "column": row["column_name"],
-                    "result": float(row["result"]),
-                    "rule": f"Outlier check on {row['column_name']} (z-score > 3)",
-                    "status": row["status"],
-                }
-            )
-    string_cols = [c for c, t in schema.items() if isinstance(t, T.StringType)]
-    if string_cols:
-        for row in rare_value_accuracy_long(df, string_cols).collect():
-            results.append(
-                {
-                    "pillar": "accuracy",
-                    "column": row["column_name"],
-                    "result": float(row["result"]),
-                    "rule": f"Rare value check on {row['column_name']} (<1% frequency)",
-                    "status": row["status"],
-                }
-            )
-    # Job 4: FD sweep — pairs whose determinant the fused profile proved
-    # unique are emitted as literal passed rows (exact skip, no scan).
-    unique_cols = {
-        c
-        for c in cols
-        if int(prow[f"{c}__count_distinct"])
-        == int(prow["count_all"]) - int(prow[f"{c}__count_nulls"])
+    pairs = [(c1, c2) for c1 in cols for c2 in cols if c1 != c2]
+    # Action 2: every per-value rule from one stacked aggregate.
+    rules = per_value_rules(
+        df,
+        zscore={
+            c: (prow[f"{c}__avg"], prow[f"{c}__stddev"], nonnull[c])
+            for c, t in schema.items()
+            if is_numeric(t)
+        },
+        rare={c: nonnull[c] for c, t in schema.items() if isinstance(t, T.StringType)},
+        fd_pairs=pairs[:max_pairs],
+        known_unique_cols={
+            c for c in cols if int(prow[f"{c}__count_distinct"]) == nonnull[c]
+        },
+    ).collect()
+    rule_text = {
+        "zscore": ("accuracy", "Outlier check on {} (z-score > 3)"),
+        "rare": ("accuracy", "Rare value check on {} (<1% frequency)"),
+        "fd": ("consistency", "Functional dependency {}"),
     }
-    for row in fd_consistency_long(
-        df, max_pairs=max_pairs, known_unique_cols=unique_cols
-    ).collect():
+    for row in rules:
+        pillar, text = rule_text[row["rule"]]
         results.append(
             {
-                "pillar": "consistency",
-                "column": row["pair"],
+                "pillar": pillar,
+                "column": row["column_name"],
                 "result": float(row["result"]),
-                "rule": f"Functional dependency {row['pair']}",
+                "rule": text.format(row["column_name"]),
                 "status": row["status"],
             }
         )
-    # PASS_THRESHOLD re-exported for callers building summaries.
-    results_summary_threshold = PASS_THRESHOLD  # noqa: F841
-    return results
+    return results, count_all
 
 
 def summarize_rules(results: list[dict[str, Any]]) -> dict[str, Any]:
@@ -325,9 +303,8 @@ def discover_and_run_dq(
     start = _dt.datetime.now(_dt.timezone.utc)
     try:
         df = read_any(spark, file_path, fmt=fmt)
-        row_count = df.count()
+        rules, row_count = run_file_dq_distributed(df, max_pairs=max_pairs)
         definition = file_metadata(file_path, df, row_count=row_count)
-        rules = run_file_dq_distributed(df, max_pairs=max_pairs)
         end = _dt.datetime.now(_dt.timezone.utc)
         return {
             "status": "SUCCESS",

@@ -37,3 +37,20 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     yield con
     con.close()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say how many slowtier tests the default ``-m 'not slowtier'``
+    (pyproject addopts) left out, and how to run them."""
+    if "not slowtier" not in (terminalreporter.config.option.markexpr or ""):
+        return
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slowtier")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slowtier tests deselected; run them with: "
+            "python -m pytest tests/ -m slowtier"
+        )

@@ -111,12 +111,13 @@ def test_discover_failure_envelope(spark):
 
 
 def test_file_dq_action_count(spark, sample_files, monkeypatch):
-    """The sweep must run exactly 4 collect actions regardless of
-    column count: fused profile (completeness/uniqueness + z-score
-    stats in ONE pass), outlier count, rare-value, FD — the unfused
-    version ran 5. (Raw Spark job ids are no proxy here: AQE
-    materializes one job per stage, so the count is counted at the
-    action boundary.)"""
+    """The sweep runs exactly 2 collect actions regardless of column
+    count: the fused profile (completeness/uniqueness + z-score stats)
+    and the stacked per-value aggregate (z-score, rare-value and FD
+    rules). Neither plan has a window without a partition spec. (Raw
+    Spark job ids are no proxy here: AQE materializes one job per
+    stage, so the count is counted at the action boundary.)"""
+    from data_pipelines_snowflake_procedures_spark.plans.advisor import plan_report
     from data_pipelines_snowflake_procedures_spark.sources.discovery import (
         run_file_dq_distributed,
     )
@@ -126,15 +127,48 @@ def test_file_dq_action_count(spark, sample_files, monkeypatch):
     # pyspark.sql.DataFrame ABC and overrides collect)
     cls = type(df)
     real_collect = cls.collect
-    calls = []
+    collected = []
 
     def counting_collect(self):
-        calls.append(1)
+        collected.append(self)
         return real_collect(self)
 
     monkeypatch.setattr(cls, "collect", counting_collect)
     run_file_dq_distributed(df)
-    assert len(calls) == 4, f"file-DQ sweep ran {len(calls)} actions, expected 4"
+    assert len(collected) == 2, f"file-DQ sweep ran {len(collected)} actions, expected 2"
+    for action in collected:
+        assert plan_report(action)["unpartitioned_windows"] == 0
+
+
+def test_file_dq_jobs_do_not_grow_with_columns(spark, sample_files):
+    """The sweep starts as many Spark jobs on a 20-column copy of a
+    5-column file as on the file itself (counted per job group, after
+    the listener bus has delivered every job event)."""
+    from pyspark.sql import functions as F
+
+    from data_pipelines_snowflake_procedures_spark.sources.discovery import (
+        run_file_dq_distributed,
+    )
+
+    df = read_any(spark, sample_files["csv"])
+    df = df.withColumn("band", (F.col("id") % 7).cast("string"))
+    wide = df.select(
+        *[F.col(c).alias(f"{c}_{k}") for k in range(4) for c in df.columns]
+    )
+    sc = spark.sparkContext
+
+    def jobs(frame, group):
+        sc.setJobGroup(group, group)
+        try:
+            run_file_dq_distributed(frame)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert len(df.columns) == 5 and len(wide.columns) == 20
+    narrow_jobs = jobs(df, "file-dq-5-cols")
+    assert narrow_jobs == jobs(wide, "file-dq-20-cols")
 
 
 def _write_xlsx_fixture(path: str) -> None:

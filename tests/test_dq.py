@@ -1,8 +1,8 @@
+import re
+
 import pytest
-import pandas as pd
 
 from data_pipelines_snowflake_procedures_spark.operators.dq import (
-    run_file_dq,
     run_table_dq,
     score_table_pillars,
 )
@@ -62,15 +62,19 @@ def test_run_table_dq_report_shape(spark, sf_dir):
     assert 0 < rep["table_score"] <= 1.0
 
 
-def test_run_file_dq_reference_semantics():
-    pdf = pd.DataFrame(
-        {
-            "k": [1, 2, 3, 4, 5, 6, 7, 8, 9, 10],
-            "cat": ["a"] * 9 + [None],
-            "dup": ["x", "x", "x", "x", "x", "x", "x", "x", "y", "x"],
-        }
+def _file_dq(spark, rows, schema):
+    from data_pipelines_snowflake_procedures_spark.sources.discovery import (
+        run_file_dq_distributed,
     )
-    results = run_file_dq(pdf)
+
+    return run_file_dq_distributed(spark.createDataFrame(rows, schema))[0]
+
+
+def test_run_file_dq_reference_semantics(spark):
+    ks = list(range(1, 11))
+    cats = ["a"] * 9 + [None]
+    dups = ["x"] * 8 + ["y", "x"]
+    results = _file_dq(spark, list(zip(ks, cats, dups)), "k BIGINT, cat STRING, dup STRING")
     by = {(r["pillar"], r["column"]): r for r in results}
     # completeness: cat has 1 null of 10 → 0.9 → failed at 0.95
     assert abs(by[("completeness", "cat")]["result"] - 0.9) < 1e-12
@@ -87,11 +91,10 @@ def test_run_file_dq_reference_semantics():
     assert by[("accuracy", "k")]["result"] == 1.0
 
 
-def test_run_file_dq_rare_values():
+def test_run_file_dq_rare_values(spark):
     # 200 rows: one dominant value + 2 singleton (0.5% < 1%) values
     vals = ["common"] * 198 + ["rare1", "rare2"]
-    pdf = pd.DataFrame({"s": vals})
-    results = run_file_dq(pdf)
+    results = _file_dq(spark, [(v,) for v in vals], "s STRING")
     acc = [r for r in results if r["pillar"] == "accuracy" and r["column"] == "s"][0]
     assert abs(acc["result"] - (1.0 - 2 / 200)) < 1e-12
 
@@ -120,43 +123,133 @@ def test_approx_profile_within_tolerance(spark, sf_dir):
         assert abs(ap - ex) <= max(0.06 * ex, 2), (col, ex, ap)
 
 
-def test_file_dq_engines_agree(spark):
-    """The pandas parity engine (run_file_dq) and the distributed
-    engine (run_file_dq_distributed) must produce the same
-    completeness / uniqueness / accuracy / consistency results on the
-    same data (validity intentionally differs: value-level vs
-    schema-level — SURVEY.md §2.10 note)."""
-    import pandas as pd
+def _duckdb_file_dq(con, table, cols):
+    """The file-engine rule records recomputed in DuckDB from the
+    reference semantics (Data_Discovery_File.sql:97-313):
+    ``{(pillar, column): (result, status)}``."""
+    types = dict(
+        con.execute(f"SELECT column_name, column_type FROM (DESCRIBE {table})").fetchall()
+    )
+    n = con.execute(f"SELECT count(*) FROM {table}").fetchone()[0]
+    total = max(n, 1)
+    out = {}
+
+    def status(ok):
+        return "passed" if ok else "failed"
+
+    for c in cols:
+        nonnull, distinct = con.execute(
+            f'SELECT count("{c}"), count(DISTINCT "{c}") FROM {table}'
+        ).fetchone()
+        for pillar, count in (("completeness", nonnull), ("uniqueness", distinct)):
+            out[(pillar, c)] = (round(count / total, 6), status(count / total >= 0.95))
+        out[("validity", c)] = (True, "passed")
+        if types[c] in ("BIGINT", "INTEGER", "DOUBLE"):
+            # a NaN makes the mean and stddev NaN, and no value compares
+            # greater than NaN (DuckDB's stddev raises on NaN instead)
+            nan = f'isnan("{c}"::DOUBLE)'
+            outliers = con.execute(
+                f"""WITH st AS (
+                      SELECT bool_or({nan}) AS has_nan,
+                             avg("{c}") FILTER (WHERE NOT {nan}) AS m,
+                             stddev_samp("{c}") FILTER (WHERE NOT {nan}) AS sd
+                      FROM {table})
+                    SELECT count(*) FILTER (WHERE NOT coalesce(has_nan, false)
+                                            AND abs("{c}" - m) > 3 * sd)
+                    FROM {table}, st"""
+            ).fetchone()[0]
+            value = 1.0 - outliers / nonnull if nonnull else 1.0
+            out[("accuracy", c)] = (round(value, 6), status(value >= 0.95))
+        elif types[c] == "VARCHAR" and nonnull:
+            rare = con.execute(
+                f"""SELECT coalesce(sum(cnt) FILTER (WHERE cnt / {nonnull} < 0.01), 0)
+                    FROM (SELECT count(*) AS cnt FROM {table}
+                          WHERE "{c}" IS NOT NULL GROUP BY "{c}")"""
+            ).fetchone()[0]
+            value = round(1.0 - rare / nonnull, 6)
+            out[("accuracy", c)] = (value, status(value >= 0.95))
+    for c1 in cols:
+        for c2 in cols:
+            if c1 == c2:
+                continue
+            bad = con.execute(
+                f"""SELECT count(*) FROM (SELECT "{c1}" FROM {table}
+                    WHERE "{c1}" IS NOT NULL AND "{c2}" IS NOT NULL
+                    GROUP BY "{c1}" HAVING count(DISTINCT "{c2}") > 1)"""
+            ).fetchone()[0]
+            out[("consistency", f"{c1}->{c2}")] = (float(bad == 0), status(bad == 0))
+    return out
+
+
+def test_file_dq_matches_duckdb(spark, duck):
+    """The file-DQ sweep's records equal a DuckDB recomputation of the
+    reference rules on frames with nulls, an all-null string column
+    (no rare-value record: no frequencies), NaN and -0.0 doubles (one
+    value each, as in Spark's and DuckDB's grouping), a unique string
+    column of 150 rows (every value rare), a single column, no rows,
+    and column names that need quoting."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
     from data_pipelines_snowflake_procedures_spark.sources.discovery import (
         run_file_dq_distributed,
     )
 
-    pdf = pd.DataFrame(
-        {
-            "k": list(range(1, 21)),
-            "cat": ["a"] * 10 + ["b"] * 9 + [None],
-            "dep": ["x"] * 10 + ["y"] * 9 + ["x"],
+    nan = float("nan")
+    n = 150
+    mixed = [
+        ("k", "BIGINT", list(range(n))),
+        ("uniq", "STRING", [f"u{i}" for i in range(n)]),
+        ("blank", "STRING", [None] * n),
+        ("x", "DOUBLE", [[nan, -0.0, 0.0, None, 1.5][i % 5] for i in range(n)]),
+        ("cat", "STRING", [["a", "b", None][i % 3] for i in range(n)]),
+        ("grp", "INT", [i % 4 for i in range(n)]),
+        ("y", "DOUBLE", [1e9 if i in (7, 8) else float(i % 10) for i in range(n)]),
+        ("h", "BIGINT", [i // 75 for i in range(n)]),
+        ("z", "DOUBLE", [-0.0 if i % 2 else 0.0 for i in range(n)]),
+        ("w", "STRING", [["n", "neg", "pos", "n", "n"][i % 5] for i in range(n)]),
+    ]
+    frames = {
+        "mixed": mixed,
+        "single": [("a", "INT", [i % 3 for i in range(10)])],
+        "empty": [("a", "BIGINT", []), ("s", "STRING", []), ("d", "DOUBLE", [])],
+        # names that need quoting in SQL text
+        "names": [
+            ("it's a\\b", "STRING", ["p", "q"] * 3),
+            ("two words", "BIGINT", [1, 1, 2, 2, 3, 3]),
+        ],
+    }
+    types = {
+        "BIGINT": (pa.int64(), T.LongType()),
+        "INT": (pa.int32(), T.IntegerType()),
+        "STRING": (pa.string(), T.StringType()),
+        "DOUBLE": (pa.float64(), T.DoubleType()),
+    }
+    swept = {}
+    for name, fields in frames.items():
+        table = pa.table({c: pa.array(v, types[t][0]) for c, t, v in fields})
+        duck.register(f"file_dq_{name}", table)
+        want = _duckdb_file_dq(duck, f"file_dq_{name}", [c for c, _, _ in fields])
+        schema = T.StructType([T.StructField(c, types[t][1]) for c, t, _ in fields])
+        rows = list(zip(*(v for _, _, v in fields)))
+        records, row_count = run_file_dq_distributed(spark.createDataFrame(rows, schema))
+        assert row_count == len(rows)
+        got = {(r["pillar"], r["column"]): (r["result"], r["status"]) for r in records}
+        assert got.keys() == want.keys(), (name, got.keys() ^ want.keys())
+        diffs = {
+            k: (got[k], want[k])
+            for k in want
+            if got[k][1] != want[k][1] or abs(got[k][0] - want[k][0]) > 1e-9
         }
-    )
-    sdf = spark.createDataFrame(pdf)
-    pandas_rules = {
-        (r["pillar"], r["column"]): round(float(r["result"]), 6)
-        for r in run_file_dq(pdf)
-        if r["pillar"] != "validity"
-    }
-    spark_rules = {
-        (r["pillar"], r["column"]): round(float(r["result"]), 6)
-        for r in run_file_dq_distributed(sdf)
-        if r["pillar"] != "validity"
-    }
-    assert pandas_rules.keys() == spark_rules.keys()
-    diffs = {
-        k: (pandas_rules[k], spark_rules[k])
-        for k in pandas_rules
-        if abs(pandas_rules[k] - spark_rules[k]) > 1e-9
-    }
-    assert not diffs, diffs
+        assert not diffs, (name, diffs)
+        swept[name] = got
+    assert ("accuracy", "blank") not in swept["mixed"]
+    # every value of the unique 150-row column is under 1%
+    assert swept["mixed"][("accuracy", "uniq")] == (0.0, "failed")
+    # -0.0 and 0.0 are one value: h -> z holds, x -> w does not
+    assert swept["mixed"][("consistency", "h->z")] == (1.0, "passed")
+    assert swept["mixed"][("consistency", "x->w")] == (0.0, "failed")
+    assert not any(p == "consistency" for p, _ in swept["single"])
 
 
 @pytest.mark.slowtier
@@ -190,12 +283,15 @@ def test_fd_keylike_prefilter_skips_exactly_and_identically(spark):
     # id is unique -> id->* trivially passes; cat->sub genuinely fails
     assert full["id->cat"] == (0, 1.0, "passed")
     assert full["cat->sub"][2] == "failed"
-    # the skipped pairs' groupBy subplans are gone: the optimized plan
-    # aggregates only the 9 non-id-determinant pairs (12 total pairs,
-    # 3 with determinant id)
-    plan_full = fd_consistency_long(df)._jdf.queryExecution().optimizedPlan().toString()
-    plan_fast = fast._jdf.queryExecution().optimizedPlan().toString()
-    assert plan_full.count("Aggregate") > plan_fast.count("Aggregate")
+    # the skipped determinant is not stacked: the level-1 aggregate
+    # groups one value slot per scanned determinant, 4 in the full sweep
+    # and 3 once id is known unique
+    def value_slots(frame):
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        return len(set(re.findall(r"__v\d+", plan)))
+
+    assert value_slots(fd_consistency_long(df)) == 4
+    assert value_slots(fast) == 3
     # passing a pre-proven set (the run_file_dq_distributed path) gives
     # the same answers with zero extra profiling action
     pre = as_map(fd_consistency_long(df, known_unique_cols={"id"}))

@@ -73,6 +73,21 @@ def test_cartesian_warning_and_budget(spark):
         assert_plan(out, forbid=("CartesianProduct", "BroadcastNestedLoopJoin"))
 
 
+def test_unpartitioned_window_counted(spark):
+    from pyspark.sql.window import Window
+
+    df = spark.range(10).withColumn("g", F.col("id") % 2)
+    whole = df.withColumn("tot", F.sum("id").over(Window.partitionBy()))
+    ordered = whole.withColumn("run", F.sum("id").over(Window.orderBy("id")))
+    rep = plan_report(ordered)
+    assert rep["unpartitioned_windows"] == 2
+    assert any("no partition spec" in w for w in rep["warnings"])
+    by_group = df.withColumn(
+        "tot", F.sum("id").over(Window.partitionBy("g").orderBy("id"))
+    )
+    assert plan_report(by_group)["unpartitioned_windows"] == 0
+
+
 def test_shuffle_budget_enforced(spark, sf_dir):
     df = REGISTRY["pricing_summary"].spark_fn(spark, sf_dir)
     with pytest.raises(AssertionError, match="shuffles"):
