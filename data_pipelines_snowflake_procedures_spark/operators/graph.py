@@ -1,7 +1,8 @@
 """Iterative link analysis over DataFrame edge lists — PageRank-style
-centrality, the third member of this repo's iterative-algorithm family
-(k-means: `similarity.py::kmeans_lloyd`; connected components:
-`dedup.py::connected_components`).
+centrality, the second member of this repo's iterative-algorithm family
+(k-means: `similarity.py::kmeans_lloyd`). Connected components
+(`dedup.py::connected_components`) is not iterative: it is one
+union-find pass in a single Arrow task.
 
 Why a training-data engine carries this: link/similarity-graph
 centrality is a standard corpus-curation signal (rank pages by link
@@ -16,7 +17,7 @@ source (shuffle keyed on node id), groupBy destination (second
 shuffle), then a left join back onto the node set for dangling nodes.
 Per-iteration cost is O(|E|) shuffled bytes, independent of iteration
 count; ranks are node-sized. `localCheckpoint` truncates the growing
-lineage every few rounds exactly as connected components does.
+lineage every few rounds.
 
 Determinism (oracle-matchable, the k-means contract): edge weights are
 exact counts, out-weight normalization and the damping update are

@@ -38,9 +38,12 @@ def prepare_corpus(
     """Run clean → split → chunk → budget; return the reference-shaped
     envelope with per-stage row counts and the audit log.
 
-    ``chunks`` and ``budget`` in the result are DataFrames (lazy —
-    callers write or aggregate them); the envelope's counts are the
-    only actions this function triggers.
+    ``cleaned`` is the split corpus, materialised once by an eager
+    ``localCheckpoint`` (fresh per call: a ``cache()`` would match the
+    same plan across calls and serve stale rows if the source changed),
+    so the counts here and the caller's next stage scan it instead of
+    rerunning the clean plan. ``chunks`` and ``budget`` are lazy
+    DataFrames over it.
     """
     from ..operators.corpus import (
         assign_split,
@@ -56,13 +59,19 @@ def prepare_corpus(
             df, text_col=text_col, id_col=id_col,
             min_quality=min_quality, languages=languages,
         )
-        split = assign_split(cleaned, id_col=id_col, weights=split_weights, seed=seed)
+        split = assign_split(
+            cleaned, id_col=id_col, weights=split_weights, seed=seed
+        ).localCheckpoint()
         chunks = chunk_documents(
             split, text_col=text_col, id_col=id_col,
             chunk_tokens=chunk_tokens, overlap=chunk_overlap,
         )
         budget = token_budget(split, group_cols=("detected_lang", "split"))
-        n_clean = split.count()
+        split_counts = {
+            r["split"]: r["n"]
+            for r in split.groupBy("split").agg(F.count("*").alias("n")).collect()
+        }
+        n_clean = sum(split_counts.values())
         n_chunks = chunks.count()
         end = _dt.datetime.now(_dt.timezone.utc)
         return {
@@ -73,10 +82,7 @@ def prepare_corpus(
                 "kept_fraction": round(n_clean / max(n_raw, 1), 4),
                 "chunks": n_chunks,
             },
-            "split_counts": {
-                r["split"]: r["n"]
-                for r in split.groupBy("split").agg(F.count("*").alias("n")).collect()
-            },
+            "split_counts": split_counts,
             "cleaned": split,
             "chunks": chunks,
             "budget": budget,

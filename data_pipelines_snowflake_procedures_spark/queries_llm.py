@@ -500,9 +500,9 @@ def documents_dup_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(doc_id = cluster_id AS INT) AS is_rep
     FROM assigned
     """,
-    doc="Near-dup pairs → duplicate CLUSTERS via distributed connected "
-    "components (min-label propagation + pointer jumping, O(log "
-    "diameter) rounds over the pair list only — never the corpus). "
+    doc="Near-dup pairs → duplicate CLUSTERS via connected components "
+    "(one union-find pass over the pair list in a single Arrow task — "
+    "never the corpus; exact on any graph, no rounds). "
     "cluster_id = min doc_id in the component; is_rep marks the one "
     "row per cluster a dedup pipeline keeps. Oracle restates CC as a "
     "DuckDB recursive-CTE transitive closure (feasible at test scale; "
@@ -571,9 +571,10 @@ def dedup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "connected components → keep the min-id representative per cluster "
     "→ materialize the surviving corpus (reported per source with "
     "token budgets). Closes the detection→reduction loop end-to-end: "
-    "pairs shuffle on token (inverted index), CC shuffles the edge "
-    "list only, the keep-filter is doc_id = cluster_id (min-label "
-    "invariant — no extra aggregate), and the report is one groupBy. "
+    "pairs shuffle on token (inverted index), CC moves the edge list "
+    "into one union-find task, the keep-filter is doc_id = cluster_id "
+    "(min-label invariant — no extra aggregate), and the report is one "
+    "groupBy. "
     "Oracle restates CC as a recursive-CTE transitive closure.",
 )
 def corpus_neardup_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:

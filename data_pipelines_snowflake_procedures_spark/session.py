@@ -13,6 +13,7 @@ local mode.
 
 from __future__ import annotations
 
+import importlib.util
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +33,10 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+
+#: Python-worker daemon with numpy/pandas/pyarrow preloaded (pydaemon.py).
+DAEMON_MODULE = "data_pipelines_snowflake_procedures_spark.pydaemon"
 
 
 def get_spark(
@@ -55,7 +60,7 @@ def get_spark(
     # process on the harness sandbox and workers are re-forked whenever a
     # partially-consumed Arrow stream kills one). The repo root rides on
     # the executors' PYTHONPATH so the daemon module resolves regardless
-    # of the JVM's working directory.
+    # of the JVM's working directory; the conf is set only when it does.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     executor_pythonpath = os.pathsep.join(
         p
@@ -65,10 +70,6 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config(
-            "spark.python.daemon.module",
-            "data_pipelines_snowflake_procedures_spark.pydaemon",
-        )
         .config("spark.executorEnv.PYTHONPATH", executor_pythonpath)
         .config("spark.sql.shuffle.partitions", shuffle_partitions)
         .config("spark.sql.adaptive.enabled", "true")
@@ -85,9 +86,33 @@ def get_spark(
         # longs and convert in load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
+    if daemon_resolves(executor_pythonpath):
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def daemon_resolves(pythonpath: str) -> bool:
+    """True when :data:`DAEMON_MODULE` is a source file under one of the
+    ``pythonpath`` entries, so Python workers started with that path
+    can import it. A daemon module that fails to import fails every
+    Python UDF, so without it Spark's stock daemon is kept.
+    ``find_spec`` locates the module without importing it:
+    ``pyspark.daemon`` reads ``sys.argv`` at import time."""
+    try:
+        spec = importlib.util.find_spec(DAEMON_MODULE)
+    except (ImportError, ValueError):
+        return False
+    if spec is None or spec.origin is None:
+        return False
+    rel = os.path.join(*DAEMON_MODULE.split(".")) + ".py"
+    origin = os.path.realpath(spec.origin)
+    return any(
+        os.path.realpath(os.path.join(entry, rel)) == origin
+        for entry in pythonpath.split(os.pathsep)
+        if entry
+    )
 
 
 def _set_read_confs(spark: SparkSession) -> None:

@@ -18,6 +18,25 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, fn)`` runs ``fn`` under Spark job group
+    ``group`` and returns how many jobs it started, counted after the
+    listener bus has delivered every job event."""
+    sc = spark.sparkContext
+
+    def count(group: str, fn) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -140,7 +140,7 @@ def test_file_dq_action_count(spark, sample_files, monkeypatch):
         assert plan_report(action)["unpartitioned_windows"] == 0
 
 
-def test_file_dq_jobs_do_not_grow_with_columns(spark, sample_files):
+def test_file_dq_jobs_do_not_grow_with_columns(spark, sample_files, count_jobs):
     """The sweep starts as many Spark jobs on a 20-column copy of a
     5-column file as on the file itself (counted per job group, after
     the listener bus has delivered every job event)."""
@@ -155,20 +155,11 @@ def test_file_dq_jobs_do_not_grow_with_columns(spark, sample_files):
     wide = df.select(
         *[F.col(c).alias(f"{c}_{k}") for k in range(4) for c in df.columns]
     )
-    sc = spark.sparkContext
-
-    def jobs(frame, group):
-        sc.setJobGroup(group, group)
-        try:
-            run_file_dq_distributed(frame)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     assert len(df.columns) == 5 and len(wide.columns) == 20
-    narrow_jobs = jobs(df, "file-dq-5-cols")
-    assert narrow_jobs == jobs(wide, "file-dq-20-cols")
+    narrow_jobs = count_jobs("file-dq-5-cols", lambda: run_file_dq_distributed(df))
+    assert narrow_jobs == count_jobs(
+        "file-dq-20-cols", lambda: run_file_dq_distributed(wide)
+    )
 
 
 def _write_xlsx_fixture(path: str) -> None:

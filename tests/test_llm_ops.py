@@ -356,6 +356,111 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
+def test_connected_components_long_shuffled_chain(spark):
+    """A 3000-node chain with shuffled ids is one component labelled
+    with its minimum id: exact whatever the diameter, no partial
+    labels."""
+    import random
+
+    from data_pipelines_snowflake_procedures_spark.operators.dedup import (
+        connected_components,
+    )
+
+    ids = list(range(100, 3100))
+    random.Random(3).shuffle(ids)
+    edges = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "doc_a BIGINT, doc_b BIGINT"
+    )
+    rows = connected_components(edges).collect()
+    assert len(rows) == 3000
+    assert {r["id"] for r in rows} == set(ids)
+    assert {r["comp"] for r in rows} == {100}
+
+
+def test_connected_components_keeps_string_ids(spark):
+    from pyspark.sql import types as T
+
+    from data_pipelines_snowflake_procedures_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [("b", "c"), ("c", "a"), ("x", "y"), ("y", None)], "u STRING, v STRING"
+    )
+    cc = connected_components(edges, src="u", dst="v")
+    assert [f.dataType for f in cc.schema] == [T.StringType(), T.StringType()]
+    assert {r["id"]: r["comp"] for r in cc.collect()} == {
+        "a": "a", "b": "a", "c": "a", "x": "x", "y": "x",
+    }
+
+
+def test_connected_components_kernel_ships_by_value(spark, monkeypatch, tmp_path):
+    """The union-find kernel runs in a Python process that cannot
+    import this package (the workers of a session not built by
+    get_spark, started elsewhere): Spark's pickler ships it by value."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from data_pipelines_snowflake_procedures_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame([(3, 1), (1, 2), (7, 8)], "doc_a BIGINT, doc_b BIGINT")
+    kernels = []
+    map_in_arrow = type(edges).mapInArrow
+
+    def spy(self, fn, *args, **kwargs):
+        kernels.append(fn)
+        return map_in_arrow(self, fn, *args, **kwargs)
+
+    monkeypatch.setattr(type(edges), "mapInArrow", spy)
+    connected_components(edges)
+    script = (
+        "import pickle, sys, pyarrow as pa\n"
+        "kernel = pickle.loads(sys.stdin.buffer.read())\n"
+        "b = pa.RecordBatch.from_pydict({'id': pa.array([3, 1, 7], pa.int64()),"
+        " 'nbr': pa.array([1, 2, 8], pa.int64())})\n"
+        "(out,) = kernel(iter([b]))\n"
+        "print(sorted(zip(out.column('id').to_pylist(), out.column('comp').to_pylist())))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        input=cloudpickle.dumps(kernels[0]),
+        capture_output=True,
+        cwd=tmp_path,
+        env=env,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
+    assert proc.stdout.decode().strip() == "[(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]"
+
+
+def test_connected_components_job_count_is_fixed(spark, count_jobs):
+    """The same Spark job count, at most 2, on the 8-edge fixture and on
+    a 3000-node chain (counted per job group after the listener bus has
+    delivered every job event): no rounds that grow with the graph."""
+    from data_pipelines_snowflake_procedures_spark.operators.dedup import (
+        connected_components,
+    )
+
+    small = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)],
+        "doc_a BIGINT, doc_b BIGINT",
+    )
+    chain = spark.range(3000).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    small_jobs = count_jobs("cc-8-edges", lambda: connected_components(small))
+    assert small_jobs <= 2
+    assert small_jobs == count_jobs(
+        "cc-3000-chain", lambda: connected_components(chain)
+    )
+
+
 def test_decontaminate_drops_overlapping_docs(spark):
     from data_pipelines_snowflake_procedures_spark.operators.corpus import (
         contamination_hits,

@@ -273,6 +273,28 @@ def test_prepare_corpus_envelope(spark, sf_dir):
     assert out["audit_log"]["agent_name"] == "CorpusPrepAgent"
 
 
+def test_prepare_corpus_cleans_once(spark, sf_dir):
+    """The cleaned corpus is materialised once: the next stage's
+    optimised plan scans the checkpoint and computes no quality score
+    or language again."""
+    from data_pipelines_snowflake_procedures_spark.operators.dedup import (
+        exact_dedup,
+    )
+    from data_pipelines_snowflake_procedures_spark.pipelines.corpus_prep import (
+        prepare_corpus,
+    )
+    from data_pipelines_snowflake_procedures_spark.session import load_table
+
+    docs = load_table(spark, sf_dir, "documents").limit(200)
+    out = prepare_corpus(docs, min_quality=0.5, chunk_tokens=32, chunk_overlap=8)
+    assert out["status"] == "SUCCESS"
+    plan = exact_dedup(out["cleaned"])._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan
+    assert "Relation" not in plan  # no parquet scan of the raw documents
+    assert " AS quality_score#" not in plan
+    assert " AS detected_lang#" not in plan
+
+
 def test_prepare_corpus_failure_envelope(spark):
     from data_pipelines_snowflake_procedures_spark.pipelines.corpus_prep import (
         prepare_corpus,

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -121,7 +122,13 @@ _member_name = st.text(
     ),
     min_size=1,
     max_size=60,
-).filter(lambda s: not s.startswith("/") and "\x00" not in s)
+).filter(
+    # ustar's name field holds 100 bytes; multi-byte UTF-8 letters can push
+    # a 60-character name past that (rejection covered separately below)
+    lambda s: not s.startswith("/")
+    and "\x00" not in s
+    and len(s.encode("utf-8")) <= 100
+)
 
 
 @given(
@@ -143,6 +150,21 @@ def test_ustar_round_trip_arbitrary_members(members):
     ]
     for (name, off, size), (_, payload) in zip(parsed, members):
         assert blob[off : off + size] == payload
+
+
+@given(
+    st.text(
+        alphabet=st.characters(whitelist_categories=("Lu", "Ll", "Nd")),
+        min_size=26,
+        max_size=120,
+    ).filter(lambda s: len(s.encode("utf-8")) > 100)
+)
+@settings(max_examples=100, deadline=None)
+def test_ustar_rejects_names_over_100_bytes(name):
+    # no GNU long-name extension: an over-long name fails loudly instead
+    # of being silently truncated in the header
+    with pytest.raises(ValueError, match="longer than 100 bytes"):
+        encode_ustar([(name, b"x")])
 
 
 @given(_member_name)

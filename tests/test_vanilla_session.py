@@ -59,6 +59,50 @@ def test_load_table_forces_utc_session_tz(spark):
         spark.conf.set("spark.sql.session.timeZone", original)
 
 
+def test_daemon_module_set_only_when_it_resolves(spark, monkeypatch, tmp_path):
+    """``get_spark`` sets ``spark.python.daemon.module`` only when the
+    preloading daemon resolves under the executors' PYTHONPATH, and
+    checks that without importing it (``pyspark.daemon`` reads
+    ``sys.argv`` at import time)."""
+    from data_pipelines_snowflake_procedures_spark import session
+
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    sys.modules.pop(session.DAEMON_MODULE, None)
+    assert session.daemon_resolves(os.pathsep.join((str(tmp_path), repo_root)))
+    assert session.DAEMON_MODULE not in sys.modules
+    assert (
+        spark.sparkContext.getConf().get("spark.python.daemon.module")
+        == session.DAEMON_MODULE
+    )
+    # importable here, but not under any executor path entry
+    assert not session.daemon_resolves(str(tmp_path))
+    assert not session.daemon_resolves("")
+    # not found at all
+    with monkeypatch.context() as m:
+        m.setattr(
+            session, "DAEMON_MODULE", "data_pipelines_snowflake_procedures_spark.no_daemon"
+        )
+        assert not session.daemon_resolves(repo_root)
+
+    # get_spark's wiring, with the builder's options captured
+    from pyspark.sql import SparkSession
+
+    def built_options(resolves: bool) -> dict:
+        options = {}
+
+        def get_or_create(builder):
+            options.update(builder._options)
+            return spark
+
+        monkeypatch.setattr(session, "daemon_resolves", lambda path: resolves)
+        monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+        session.get_spark()
+        return options
+
+    assert built_options(True)["spark.python.daemon.module"] == session.DAEMON_MODULE
+    assert "spark.python.daemon.module" not in built_options(False)
+
+
 @pytest.mark.slowtier
 def test_registry_runs_under_vanilla_session():
     env = dict(os.environ)
