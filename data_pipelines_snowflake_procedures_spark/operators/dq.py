@@ -40,7 +40,16 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .profile import is_datelike, is_numeric, profile_aggregates, profile_table
+from ..session import rows_frame
+from .profile import (
+    ident,
+    is_datelike,
+    is_numeric,
+    profile_aggregates,
+    profile_table,
+    sql_str,
+    stat,
+)
 
 PASS_THRESHOLD = 0.95
 RARE_FREQ = 0.01
@@ -178,22 +187,22 @@ def table_dq_long(df: DataFrame, now: str) -> DataFrame:
     arithmetic, so it is directly oracle-comparable."""
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = df.columns
-    wide = df.agg(*profile_aggregates(df, cols, now=now))
+    wide = df.selectExpr(*profile_aggregates(df, cols, now=now))
     total = F.greatest(F.col("count_all"), F.lit(1)).cast("double")
     structs = []
     for c in cols:
-        completeness = 1.0 - F.col(f"{c}__count_nulls") / total
-        uniqueness = F.col(f"{c}__count_distinct") / total
+        completeness = 1.0 - stat(c, "count_nulls") / total
+        uniqueness = stat(c, "count_distinct") / total
         if is_numeric(schema[c]):
             validity = F.when(
-                F.coalesce(F.col(f"{c}__avg"), F.lit(0.0)) >= 0, F.lit(1.0)
+                F.coalesce(stat(c, "avg"), F.lit(0.0)) >= 0, F.lit(1.0)
             ).otherwise(F.lit(0.5))
         else:
             validity = F.lit(1.0)
         if is_datelike(schema[c]):
             accuracy = F.when(
                 F.col("count_all") > 0,
-                1.0 - F.col(f"{c}__count_future") / F.col("count_all").cast("double"),
+                1.0 - stat(c, "count_future") / F.col("count_all").cast("double"),
             ).otherwise(F.lit(1.0))
         else:
             accuracy = F.lit(1.0)
@@ -225,12 +234,12 @@ def completeness_uniqueness_long(df: DataFrame) -> DataFrame:
     ``(column_name, pillar, result, status)`` — one aggregate pass
     (Data_Discovery_File.sql:217-273 semantics, 0.95 threshold)."""
     cols = df.columns
-    wide = df.agg(*profile_aggregates(df, cols))
+    wide = df.selectExpr(*profile_aggregates(df, cols))
     total = F.greatest(F.col("count_all"), F.lit(1)).cast("double")
     structs = []
     for c in cols:
-        completeness = (F.col("count_all") - F.col(f"{c}__count_nulls")) / total
-        uniqueness = F.col(f"{c}__count_distinct") / total
+        completeness = (F.col("count_all") - stat(c, "count_nulls")) / total
+        uniqueness = stat(c, "count_distinct") / total
         for pillar, result in (("completeness", completeness), ("uniqueness", uniqueness)):
             structs.append(
                 F.struct(
@@ -319,7 +328,7 @@ def per_value_rules(
 
     def rule_row(rule, name, result, ok, keys="NULL"):
         rows.append(
-            f"{_sql_str(rule)}, {_sql_str(name)}, CAST({keys} AS BIGINT), "
+            f"{sql_str(rule)}, {sql_str(name)}, CAST({keys} AS BIGINT), "
             f"CAST({result} AS DOUBLE), "
             f"CASE WHEN {ok} THEN 'passed' ELSE 'failed' END"
         )
@@ -361,7 +370,7 @@ def per_value_rules(
             f"{keys} = 0", keys,
         )
     if not rows:
-        return df.sparkSession.createDataFrame([], _RULE_ROWS)
+        return rows_frame(df.sparkSession, [], _RULE_ROWS)
     if not aggs:
         wide = df.sparkSession.range(1)
     else:
@@ -369,15 +378,15 @@ def per_value_rules(
         level1 = (
             df.selectExpr(
                 f"explode(sequence(0, {len(checked) - 1})) AS __ci",
-                *[_ident(c) for c in dict.fromkeys([*checked, *deps])],
+                *[ident(c) for c in dict.fromkeys([*checked, *deps])],
             )
             .selectExpr(
                 "__ci",
                 *[
-                    f"CASE WHEN __ci = {i} THEN {_ident(c)} END AS __v{i}"
+                    f"CASE WHEN __ci = {i} THEN {ident(c)} END AS __v{i}"
                     for c, i in checked.items()
                 ],
-                *[f"{_ident(c)} AS __d{j}" for c, j in deps.items()],
+                *[f"{ident(c)} AS __d{j}" for c, j in deps.items()],
             )
             .where(" OR ".join(f"{s} IS NOT NULL" for s in slots))
             .groupBy("__ci", *slots)
@@ -395,16 +404,6 @@ def per_value_rules(
         f"stack({len(rows)}, {', '.join(rows)}) "
         "AS (rule, column_name, inconsistent_keys, result, status)"
     )
-
-
-def _ident(name: str) -> str:
-    """``name`` as a SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_str(text: str) -> str:
-    """``text`` as a SQL string literal."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def zscore_accuracy_long(

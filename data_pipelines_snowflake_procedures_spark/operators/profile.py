@@ -4,9 +4,12 @@ Parity target: the profiling loop of ``DISCOVER_AND_RUN_DQ_AUTO_RULES``
 (Data_Quality_Table.sql:62-104), which issues one 3-aggregate query per
 column, another 4-aggregate query per numeric column, and another per
 DATE column (N+1 full scans). Here every aggregate for every column is
-computed in ONE ``df.agg(...)`` job: Catalyst fuses them into a single
-scan with partial (map-side) aggregation, so cost is one pass over the
-table regardless of column count.
+computed in ONE ``df.selectExpr(...)`` job: Catalyst fuses them into a
+single scan with partial (map-side) aggregation, so cost is one pass
+over the table regardless of column count. The aggregates are SQL
+text with every name quoted, not PySpark Column calls: each Column
+call is a JVM round trip (about ten per column), and a quoted name may
+hold a dot, a backtick or a space.
 
 Scale note: exact ``countDistinct`` over k columns plans an Expand (k×
 row multiplication before the shuffle). At 100 TB pass
@@ -47,47 +50,64 @@ def is_datelike(dtype: T.DataType) -> bool:
     return isinstance(dtype, DATELIKE_TYPES)
 
 
+def ident(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(text: str) -> str:
+    """``text`` as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def stat(c: str, name: str) -> Column:
+    """Column ``<c>__<name>`` of a profile pass's row."""
+    return F.col(ident(f"{c}__{name}"))
+
+
+def _timestamp_sql(now: _dt.datetime | str) -> str:
+    """``now`` as the SQL timestamp ``F.lit(now).cast("timestamp")``
+    gives: a datetime becomes the instant PySpark converts it to (naive
+    ones in the local time zone), anything else is cast from text."""
+    if isinstance(now, _dt.datetime):
+        return f"timestamp_micros({T.TimestampType().toInternal(now)})"
+    return f"CAST({sql_str(str(now))} AS TIMESTAMP)"
+
+
 def profile_aggregates(
     df: DataFrame,
     cols: list[str] | None = None,
     now: _dt.datetime | str | None = None,
     approx: bool = False,
-) -> list[Column]:
-    """Build the flat aggregate list for one profiling pass.
+) -> list[str]:
+    """Build the flat aggregate list for one profiling pass, as SQL
+    expressions for ``df.selectExpr``.
 
     Per column: distinct count, null count; numeric columns add
     avg/min/max/stddev; date-like columns add a future-value count
     against ``now`` (pinned, not CURRENT_TIMESTAMP, so results are
-    reproducible and oracle-comparable).
+    reproducible and oracle-comparable). Output ``<column>__<stat>``.
     """
     cols = cols or df.columns
-    dtypes = dict(df.dtypes)
     schema = {f.name: f.dataType for f in df.schema.fields}
-    aggs: list[Column] = [F.count(F.lit(1)).alias("count_all")]
+    aggs = ["count(1) AS count_all"]
+    now_sql = _timestamp_sql(now) if now is not None else None
     for c in cols:
-        col = F.col(c)
-        distinct = (
-            F.approx_count_distinct(c, rsd=0.02) if approx else F.countDistinct(col)
-        )
-        aggs.append(distinct.alias(f"{c}__count_distinct"))
-        aggs.append(
-            F.coalesce(F.sum(F.when(col.isNull(), 1).otherwise(0)), F.lit(0)).alias(
-                f"{c}__count_nulls"
-            )
-        )
+        q = ident(c)
+        exprs = {
+            "count_distinct": (
+                f"approx_count_distinct({q}, 0.02)" if approx else f"count(DISTINCT {q})"
+            ),
+            "count_nulls": f"coalesce(sum(CASE WHEN {q} IS NULL THEN 1 ELSE 0 END), 0)",
+        }
         if is_numeric(schema[c]):
-            aggs.append(F.avg(col).alias(f"{c}__avg"))
-            aggs.append(F.min(col).alias(f"{c}__min"))
-            aggs.append(F.max(col).alias(f"{c}__max"))
-            aggs.append(F.stddev(col).alias(f"{c}__stddev"))
-        if is_datelike(schema[c]) and now is not None:
-            now_lit = F.lit(now).cast("timestamp")
-            aggs.append(
-                F.coalesce(
-                    F.sum(F.when(col.cast("timestamp") > now_lit, 1).otherwise(0)),
-                    F.lit(0),
-                ).alias(f"{c}__count_future")
+            exprs.update({fn: f"{fn}({q})" for fn in ("avg", "min", "max", "stddev")})
+        if is_datelike(schema[c]) and now_sql is not None:
+            exprs["count_future"] = (
+                f"coalesce(sum(CASE WHEN CAST({q} AS TIMESTAMP) > {now_sql} "
+                "THEN 1 ELSE 0 END), 0)"
             )
+        aggs += [f"{e} AS {ident(f'{c}__{k}')}" for k, e in exprs.items()]
     return aggs
 
 
@@ -107,7 +127,7 @@ def profile_table(
     """
     cols = cols or df.columns
     schema = {f.name: f.dataType for f in df.schema.fields}
-    row = df.agg(*profile_aggregates(df, cols, now=now, approx=approx)).collect()[0]
+    row = df.selectExpr(*profile_aggregates(df, cols, now=now, approx=approx)).collect()[0]
     total = row["count_all"]
     out: dict[str, Any] = {}
     for c in cols:
@@ -145,21 +165,22 @@ def profile_long(
     whole thing stays one Spark job and is oracle-comparable.
     """
     cols = cols or df.columns
-    wide = df.agg(*profile_aggregates(df, cols))
+    wide = df.selectExpr(*profile_aggregates(df, cols))
     total = F.col("count_all")
     structs = [
         F.struct(
             F.lit(c).alias("column_name"),
             total.cast("long").alias("count_all"),
-            F.col(f"{c}__count_distinct").cast("long").alias("count_distinct"),
-            F.col(f"{c}__count_nulls").cast("long").alias("count_nulls"),
+            stat(c, "count_distinct").cast("long").alias("count_distinct"),
+            stat(c, "count_nulls").cast("long").alias("count_nulls"),
             F.round(
-                F.col(f"{c}__count_nulls") / F.greatest(total, F.lit(1)), 6
+                stat(c, "count_nulls") / F.greatest(total, F.lit(1)), 6
             ).alias("null_ratio"),
             F.round(
-                F.col(f"{c}__count_distinct") / F.greatest(total, F.lit(1)), 6
+                stat(c, "count_distinct") / F.greatest(total, F.lit(1)), 6
             ).alias("distinct_ratio"),
         )
         for c in cols
     ]
     return wide.select(F.explode(F.array(*structs)).alias("p")).select("p.*")
+

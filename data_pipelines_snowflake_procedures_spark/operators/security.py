@@ -29,6 +29,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .profile import ident
+
 #: Detection order matters: first match wins, like the reference's
 #: detect_pii chain (Data_Security.sql:35-41). Patterns are UNANCHORED
 #: substring matches like the reference's (values with embedded PII —
@@ -214,7 +216,9 @@ def pii_masking_report(
 
     Detect → mask full table → optionally publish ``<table>_MASKED``
     (managed table, overwrite) → return the reference's report shape:
-    masked column list and before/after 5-row previews.
+    masked column list and before/after 5-row previews. Both previews
+    come from one Spark job over the same five rows, so each after row
+    is the masked form of the before row beside it.
     """
     masked, pii_info = apply_pii_masking(df, sample_rows=sample_rows)
     masked_name = f"{table_name}_MASKED"
@@ -232,8 +236,16 @@ def pii_masking_report(
         if local.startswith("/") and os.path.isdir(loc):
             shutil.rmtree(loc)
         masked.write.mode("overwrite").saveAsTable(masked_name)
-    before = df.limit(5).toPandas()
-    after = masked.limit(5).toPandas()
+    # the five rows' originals under positional names, then the same
+    # rows as apply_pii_masking masks them
+    cols = df.columns
+    sample = df.limit(5).select(
+        *[F.col(ident(c)).alias(f"__before{i}") for i, c in enumerate(cols)],
+        *[F.col(ident(c)) for c in cols],
+    )
+    both = apply_pii_masking(sample, pii_info)[0].toPandas()
+    before = both.iloc[:, : len(cols)].set_axis(cols, axis=1)
+    after = both.iloc[:, len(cols) :]
     try:
         before_md = before.to_markdown(index=False)
         after_md = after.to_markdown(index=False)

@@ -9,10 +9,13 @@ and report.
 Spark-first changes: the reference inserted one row per column with a
 string-interpolated ``INSERT INTO … VALUES`` (Business_Glossory.sql:
 85-89) — at scale that is N commits and an injection hazard. Here the
-rows buffer into ONE DataFrame append (S11 note in SURVEY.md §2.1),
-and identifiers are validated instead of quote-escaped. Definitions
-come from a deterministic template by default; inject ``llm`` to use a
-model (Business_Glossory.sql:69-80 called Cortex COMPLETE)."""
+clear and the insert are ONE write (S11/S12 notes in SURVEY.md §2.1):
+the other tables' rows are collected, the table truncated, and those
+rows plus the new ones appended from a driver-side Arrow table — at
+most two Spark jobs, and no Python worker. Identifiers are validated
+instead of quote-escaped. Definitions come from a deterministic
+template by default; inject ``llm`` to use a model
+(Business_Glossory.sql:69-80 called Cortex COMPLETE)."""
 
 from __future__ import annotations
 
@@ -22,6 +25,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from ..session import rows_frame
 from .codegen import LLMComplete
 
 AGENT_NAME = "BusinessGlossaryAgent"
@@ -50,23 +54,25 @@ def ensure_glossary_table(spark: SparkSession, table: str = GLOSSARY_TABLE) -> N
     )
 
 
-def clear_glossary(
-    spark: SparkSession, table_name: str | None = None, table: str = GLOSSARY_TABLE
+def replace_glossary_rows(
+    spark: SparkSession,
+    table_name: str,
+    records: list[tuple[str, str, str, str]],
+    table: str = GLOSSARY_TABLE,
 ) -> None:
-    """S12: targeted or full delete. Plain-parquet tables don't support
-    DELETE, so this is the documented filtered-overwrite fallback
-    (SURVEY.md §2.1 S12)."""
+    """S11+S12: replace the glossary rows of ``table_name`` with
+    ``records`` in one write. Plain-parquet tables don't support
+    DELETE (SURVEY.md §2.1 S12), so the other tables' rows are
+    collected (the glossary is metadata-sized: one row per column),
+    the table truncated, and those rows plus ``records`` appended
+    together: two Spark jobs, the collect and the append."""
     _check_ident(table)
-    if table_name is None:
-        spark.sql(f"TRUNCATE TABLE {table}")
-        return
-    remaining = spark.table(table).filter(f"TABLE_NAME <> '{_check_ident(table_name)}'")
-    rows = remaining.collect()  # glossary is metadata-sized: one row per column
+    glossary = spark.table(table)
+    kept = glossary.filter(f"TABLE_NAME <> '{_check_ident(table_name)}'").collect()
     spark.sql(f"TRUNCATE TABLE {table}")
-    if rows:
-        spark.createDataFrame(rows, spark.table(table).schema).write.mode(
-            "append"
-        ).saveAsTable(table)
+    rows_frame(spark, [*kept, *records], glossary.schema).write.mode(
+        "append"
+    ).saveAsTable(table)
 
 
 def template_definition(table: str, column: str, data_type: str) -> str:
@@ -89,15 +95,14 @@ def generate_business_glossary(
     glossary_table: str = GLOSSARY_TABLE,
     llm: LLMComplete | None = None,
 ) -> dict[str, Any]:
-    """Full glossary pipeline parity envelope: ensure → clear target →
-    per-column definitions → ONE batched append → report."""
+    """Full glossary pipeline parity envelope: ensure → per-column
+    definitions → ONE write replacing the target's rows → report."""
     start = _dt.datetime.now(_dt.timezone.utc)
     try:
         from ..sources.discovery import map_type_to_palette
 
         _check_ident(table_name)
         ensure_glossary_table(spark, glossary_table)
-        clear_glossary(spark, table_name, glossary_table)
         schema = spark.table(table_name).schema
         records = []
         for f in schema.fields:
@@ -110,11 +115,7 @@ def generate_business_glossary(
             else:
                 definition = template_definition(table_name, f.name, dtype)
             records.append((table_name, f.name, dtype, definition))
-        spark.createDataFrame(
-            records,
-            "TABLE_NAME STRING, COLUMN_NAME STRING, DATA_TYPE STRING, "
-            "BUSINESS_DEFINITION STRING",
-        ).write.mode("append").saveAsTable(glossary_table)
+        replace_glossary_rows(spark, table_name, records, glossary_table)
         end = _dt.datetime.now(_dt.timezone.utc)
         return {
             "status": "SUCCESS",

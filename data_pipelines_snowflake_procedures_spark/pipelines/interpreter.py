@@ -8,8 +8,10 @@ an interpretation envelope.
 
 The reference pulled INFORMATION_SCHEMA through an un-shipped helper
 (Obj_Interpreter.sql:13,35) and asked an LLM to interpret the
-objective. Here metadata comes from ``spark.catalog`` (the native
-equivalent of M1-M3) and interpretation is deterministic: the routing
+objective. Here metadata comes from ``SHOW TABLES`` plus each table's
+analysed schema (the native equivalent of M1-M3): an eager command
+that runs no Spark job, where ``spark.catalog.listTables`` drains its
+result through jobs. Interpretation is deterministic: the routing
 keywords + relevance filter the reference applied *around* its LLM
 call. An ``llm`` callable can be injected for free-text
 interpretation; tests never require one.
@@ -38,14 +40,17 @@ def fetch_catalog_metadata(
     spark: SparkSession, database: str | None = None
 ) -> list[dict[str, Any]]:
     """M1-M3: walk the Spark catalog into the metadata shape the
-    generator consumes: [{table, columns: [{column_name, type}]}].
-    Types use the reference palette via the discovery mapper."""
+    generator consumes: [{table, columns: [{column_name, type}]}],
+    temp views included. Types use the reference palette via the
+    discovery mapper. No Spark job: ``SHOW TABLES`` runs eagerly on the
+    driver, and a schema is read off the analysed plan."""
+    from ..operators.profile import ident
     from ..sources.discovery import map_type_to_palette
 
     db = database or spark.catalog.currentDatabase()
+    listing = spark.sql(f"SHOW TABLES IN {ident(db)}")
     out: list[dict[str, Any]] = []
-    for t in spark.catalog.listTables(db):
-        name = t.name
+    for name in (r["tableName"] for r in listing.collect()):
         try:
             schema = spark.table(name).schema
         except Exception:  # noqa: BLE001 — skip unreadable (e.g. dropped) tables

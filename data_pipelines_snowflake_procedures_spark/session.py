@@ -115,6 +115,32 @@ def daemon_resolves(pythonpath: str) -> bool:
     )
 
 
+def rows_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema``'s field order) as a
+    DataFrame, through a ``pyarrow.Table``.
+
+    Spark takes its Arrow path for a ``pa.Table`` whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says, and the plan is
+    a ``LocalRelation``: no Python worker, and no Spark job until an
+    action. A list of tuples would plan a Python RDD instead, whose
+    every action forks Python workers to unpickle the rows. The table
+    is built column by column from the schema, so duplicate field
+    names (a spreadsheet header can repeat) keep their positions."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = [
+        pa.array([row[i] for row in rows], type=field.type)
+        for i, field in enumerate(arrow)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
+
+
 def _set_read_confs(spark: SparkSession) -> None:
     """Runtime-settable SQL confs every harness read depends on.
 

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import rows_frame
+
 AGENT_NAME = "DataDiscoveryAgent"
 
 #: The reference's 6-type palette (Data_Discovery_File.sql:27-53),
@@ -216,7 +218,7 @@ def run_file_dq_distributed(
     cols = df.columns
 
     # Action 1 (fused): null/distinct counts + numeric mean/std in ONE pass.
-    prow = df.agg(*profile_aggregates(df, cols)).collect()[0]
+    prow = df.selectExpr(*profile_aggregates(df, cols)).collect()[0]
     count_all = int(prow["count_all"])
     total = float(max(count_all, 1))
     nonnull = {c: count_all - int(prow[f"{c}__count_nulls"]) for c in cols}
@@ -407,7 +409,7 @@ def read_with_quarantine(
     if "_corrupt_record" not in df.columns:
         return QuarantineSplit(
             clean=df,
-            corrupt=spark.createDataFrame([], "_corrupt_record STRING"),
+            corrupt=rows_frame(spark, [], "_corrupt_record STRING"),
         )
     df = df.cache()
     clean = df.filter(F.col("_corrupt_record").isNull()).drop(

@@ -25,6 +25,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import rows_frame
+
 _SSML = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
 
@@ -206,7 +208,9 @@ def rows_to_df(
 ) -> DataFrame:
     """Promote header+rows to a typed DataFrame: per-column type
     inference (bool < long < double < string), Nones preserved, string
-    fallback stringifies mixed columns."""
+    fallback stringifies mixed columns. The rows reach Spark as an
+    Arrow table (``session.rows_frame``): a ``LocalRelation`` plan, so
+    the DQ sweep's jobs over it fork no Python worker."""
     ncols = len(header)
     cols = [[row[i] if i < len(row) else None for row in data] for i in range(ncols)]
     fields = [_infer_field(h, c) for h, c in zip(header, cols)]
@@ -225,7 +229,7 @@ def rows_to_df(
         tuple(fix(row[i] if i < len(row) else None, fields[i]) for i in range(ncols))
         for row in data
     ]
-    return spark.createDataFrame(typed, schema)
+    return rows_frame(spark, typed, schema)
 
 
 def read_xlsx(spark: SparkSession, path: str) -> DataFrame:

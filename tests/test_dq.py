@@ -329,3 +329,52 @@ def test_robust_outlier_approx_close_to_exact(spark, sf_dir):
             abs(a["n_robust_outliers"] - e["n_robust_outliers"])
             <= max(2, 0.02 * e["n_events"])
         ), t
+
+
+def test_profile_pass_quotes_odd_column_names(spark, tmp_path):
+    """Column names holding a dot, a backtick or a space reach the
+    profile pass quoted: table DQ and a csv discovery both profile them."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from data_pipelines_snowflake_procedures_spark.session import rows_frame
+    from data_pipelines_snowflake_procedures_spark.sources.discovery import (
+        discover_and_run_dq,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("a.b", T.LongType()),
+            T.StructField("c`d", T.StringType()),
+            T.StructField("e f", T.TimestampType()),
+        ]
+    )
+    rows = [
+        (i, f"v{i % 3}" if i % 4 else None, dt.datetime(2030 if i == 0 else 2020, 1, 1))
+        for i in range(10)
+    ]
+    now = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    report = run_table_dq(rows_frame(spark, rows, schema), "odd", now=now)
+    prof = report["profiling"]
+    assert prof["a.b"]["count_distinct"] == 10
+    assert prof["a.b"]["numeric_stats"]["MIN_VAL"] == 0
+    assert prof["a.b"]["numeric_stats"]["MAX_VAL"] == 9
+    assert prof["c`d"]["count_nulls"] == 3 and prof["c`d"]["count_distinct"] == 3
+    assert prof["e f"]["count_future"] == 1
+    assert report["dq_results"]["e f"]["accuracy"]["score"] == 0.9
+
+    path = tmp_path / "odd.csv"
+    path.write_text(
+        "a.b,c`d,e f\n"
+        + "".join(f"{i},{s or ''},{t:%Y-%m-%d}\n" for i, s, t in rows)
+    )
+    out = discover_and_run_dq(spark, str(path))
+    assert out["status"] == "SUCCESS", out.get("error")
+    results = {
+        (r["pillar"], r["column"]): r["result"] for r in out["dq_auto_check_result"]["rules"]
+    }
+    assert results[("completeness", "c`d")] == 0.7
+    assert results[("uniqueness", "a.b")] == 1.0
+    assert results[("accuracy", "a.b")] == 1.0
+    assert results[("consistency", "a.b->c`d")] == 1.0

@@ -114,7 +114,7 @@ def test_interpret_objective_with_catalog(spark, sf_dir):
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
     out = interpret_objective(spark, "join o_orderkey against something")
     assert out["status"] == "SUCCESS"
-    # temp views are visible through listTables; orders_v carries o_orderkey
+    # temp views are listed by SHOW TABLES; orders_v carries o_orderkey
     names = [t["table"] for t in out["relevant_metadata"]["tables"]]
     assert "orders_v" in names
     assert out["audit_log"]["agent_name"] == "ObjectiveInterpreterAgent"

@@ -211,3 +211,33 @@ def test_t_closeness_entry_invariants(spark, sf_dir):
     # worst class (merging classes moves distributions toward global)
     by = {r.level: r for r in rows}
     assert by["L1_segment"].max_emd_bp <= by["L0_nation_segment"].max_emd_bp
+
+
+def test_pii_masking_report_previews_same_rows(spark):
+    """Both previews come from the same five rows: each after row is
+    the masked form of the before row at its position, and the
+    non-PII columns are equal."""
+    import re
+
+    from data_pipelines_snowflake_procedures_spark.operators.security import (
+        pii_masking_report,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"user{i}@mail{i % 3}.com", f"note_{i}") for i in range(40)],
+        ["id", "email", "note"],
+    ).repartition(4)
+    rep = pii_masking_report(spark, df, "pii_pairs", save=False)
+
+    def rows(table: str) -> list[list[str]]:
+        # markdown (tabulate) or to_string: data lines hold no spaces here
+        lines = [ln for ln in table.splitlines()[1:] if not set(ln) <= set("|-: ")]
+        return [re.split(r"[|\s]+", ln.strip(" |")) for ln in lines]
+
+    before, after = rows(rep["before_sample"]), rows(rep["after_sample"])
+    assert len(before) == len(after) == 5
+    for (b_id, b_email, b_note), a in zip(before, after):
+        a_id, a_email, a_note = a[:3]  # then the provenance column
+        assert (a_id, a_note) == (b_id, b_note)
+        assert a_email == b_email[0] + "***@" + b_email.split("@", 1)[1]
+    assert "PII_MASKING_TYPE" in rep["after_sample"]

@@ -58,38 +58,3 @@ def test_is_ddl():
 
 def test_escape_sql_literal():
     assert escape_sql_literal("it's") == "it''s"
-
-
-def test_sentence_udtf_lateral_join(spark):
-    """PySpark 4 Python UDTF: one row -> many rows via SQL lateral."""
-    from data_pipelines_snowflake_procedures_spark.functions.udtfs import (
-        register_udtfs,
-    )
-
-    register_udtfs(spark)
-    spark.createDataFrame(
-        [(1, "First one. Second here! Third?"), (2, ""), (3, "No end mark")],
-        "doc_id BIGINT, text STRING",
-    ).createOrReplaceTempView("udtf_docs")
-    rows = spark.sql(
-        "SELECT d.doc_id, s.pos, s.sentence, s.n_words "
-        "FROM udtf_docs d, LATERAL sentence_split(d.text) s "
-        "ORDER BY d.doc_id, s.pos"
-    ).collect()
-    got = [(r["doc_id"], r["pos"], r["sentence"], r["n_words"]) for r in rows]
-    assert got == [
-        (1, 0, "First one.", 2),
-        (1, 1, "Second here!", 2),
-        (1, 2, "Third?", 1),
-        (3, 0, "No end mark", 3),
-    ]
-
-
-def test_sentence_udtf_direct_call(spark):
-    from data_pipelines_snowflake_procedures_spark.functions.udtfs import (
-        SentenceSplit,
-    )
-    from pyspark.sql.functions import lit
-
-    out = SentenceSplit(lit("A b. C d e.")).collect()
-    assert [(r["pos"], r["n_words"]) for r in out] == [(0, 2), (1, 3)]
