@@ -44,8 +44,8 @@ def frequent_pairs(
     within a basket first).
 
     ``eager=False`` skips the final materialization and returns the
-    lazy pair plan with the internal basket-sets frame left persisted
-    (caller releases it) — for plan inspection/tests only.
+    lazy pair plan, with nothing left persisted — for plan
+    inspection/tests only.
 
     ``lift = support·N / (support_a·support_b)`` over N = number of
     baskets — >1 means the pair co-occurs more than independence
@@ -58,15 +58,17 @@ def frequent_pairs(
     # array (replacing bi.distinct() + per-aggregate re-scans of it:
     # guide §2.4 — the basket table's lineage is shuffled ONCE and the
     # persisted sets frame feeds supports, sizes, the pair expansion
-    # and the basket count).
+    # and the basket count). Only the eager path persists it, since
+    # only that path can release it before returning.
     sets = (
         baskets.select(
             F.col(basket_col).alias("bk"), F.col(item_col).alias("item")
         )
         .groupBy("bk")
         .agg(F.sort_array(F.collect_set("item")).alias("__ss"))
-        .persist()
     )
+    if eager:
+        sets = sets.persist()
     isup = (
         sets.select(F.explode("__ss").alias("item"))
         .groupBy("item")

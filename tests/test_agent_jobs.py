@@ -158,3 +158,75 @@ def test_table_and_file_dq_job_budget(spark, sf_dir, orders_csv, count_jobs):
     jobs = count_jobs("discover", lambda: out.update(discover_and_run_dq(spark, orders_csv)))
     assert out["status"] == "SUCCESS"
     assert jobs <= 8
+
+
+#: A 12-statement batch shaped like the agent cycle's: six queries, one
+#: statement that fails analysis, and a CTAS + INSERT + SELECT + DROP
+#: group, on the sf0.01 views.
+AGENT_BATCH = [
+    "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_totalprice > 200000 "
+    "AND o_orderstatus = 'F' ORDER BY o_totalprice DESC, o_orderkey LIMIT 20",
+    "SELECT n_name, count(*) AS customers, sum(c_acctbal) AS balance FROM customer "
+    "JOIN nation ON c_nationkey = n_nationkey WHERE c_mktsegment = 'BUILDING' GROUP BY n_name",
+    "SELECT l_returnflag, l_linestatus, sum(l_quantity) AS qty, "
+    "avg(l_extendedprice * (1 - l_discount)) AS price, count(*) AS n FROM lineitem "
+    "WHERE l_shipdate <= DATE '1997-06-01' GROUP BY l_returnflag, l_linestatus",
+    "SELECT o_orderkey, o_bogus FROM orders",
+    "SELECT r_name, count(*) AS orders, sum(o_totalprice) AS revenue FROM orders "
+    "JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey "
+    "JOIN region ON n_regionkey = r_regionkey WHERE o_orderdate >= DATE '1995-01-01' GROUP BY r_name",
+    "DROP TABLE IF EXISTS jobs_batch_tmp",
+    "CREATE TABLE jobs_batch_tmp USING parquet AS SELECT o_orderkey, o_custkey, o_totalprice "
+    "FROM orders WHERE o_orderkey % 5 = 0",
+    "INSERT INTO jobs_batch_tmp SELECT o_orderkey, o_custkey, o_totalprice FROM orders "
+    "WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 250000",
+    "SELECT count(*) AS n, sum(o_totalprice) AS total, max(o_orderkey) AS top FROM jobs_batch_tmp",
+    "DROP TABLE jobs_batch_tmp",
+    "SELECT o_orderpriority, count(DISTINCT o_orderkey) AS n FROM orders "
+    "JOIN lineitem ON l_orderkey = o_orderkey WHERE l_shipdate > date_add(o_orderdate, 30) "
+    "AND o_orderdate >= DATE '1996-01-01' GROUP BY o_orderpriority",
+    "SELECT sum(l_extendedprice * l_discount) AS revenue, count(*) AS n FROM lineitem "
+    "WHERE l_discount BETWEEN 0.029 AND 0.071 AND l_quantity < 24",
+]
+
+
+def test_sql_batch_job_budget(spark, sf_dir, count_jobs):
+    """The agent's 12-statement batch, previews included: 26 jobs
+    when the bound was set, pinned as an upper bound."""
+    from data_pipelines_snowflake_procedures_spark.plans.engine import execute_sql_batch
+    from data_pipelines_snowflake_procedures_spark.session import register_views
+
+    register_views(spark, sf_dir, ("region", "nation", "customer", "orders", "lineitem"))
+    _drop_table(spark, "jobs_batch_tmp")
+    out: dict = {}
+    jobs = count_jobs(
+        "batch", lambda: out.update(execute_sql_batch(spark, ";\n".join(AGENT_BATCH)))
+    )
+    assert (out["total_statements"], out["failed_statements"]) == (12, 1)
+    assert jobs <= 26
+
+
+def test_scd1_merge_write_job_budget(spark, sf_dir, count_jobs, tmp_path):
+    """``scd1_merge`` of an increment with duplicate keys, plus the
+    parquet write of the merged target: 4 jobs when the bound was set,
+    pinned as an upper bound."""
+    from pyspark.sql import functions as F
+
+    from data_pipelines_snowflake_procedures_spark.operators.scd import scd1_merge
+
+    target = load_table(spark, sf_dir, "customer")
+    changed = target.filter("c_custkey % 10 = 0")
+    src = changed.withColumn("row_version", F.lit(1)).unionByName(
+        changed.withColumn("c_acctbal", F.col("c_acctbal") + 1).withColumn(
+            "row_version", F.lit(2)
+        )
+    )
+    out = str(tmp_path / "scd1")
+    jobs = count_jobs(
+        "scd1",
+        lambda: scd1_merge(target, src, ["c_custkey"], order_col="row_version")
+        .write.mode("overwrite")
+        .parquet(out),
+    )
+    assert spark.read.parquet(out).count() == target.count()
+    assert jobs <= 4

@@ -226,7 +226,10 @@ def test_basket_rules_broadcasts_apriori_prune(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("item")
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     df = frequent_pairs(li, basket_col="bk", item_col="item", eager=False)
+    # the lazy path leaves nothing persisted for the caller to release
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -235,7 +238,6 @@ def test_basket_rules_broadcasts_apriori_prune(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 3
     assert "CartesianProduct" not in plan
     assert "LeftSemi" in plan
-    spark.catalog.clearCache()  # release the eager=False sets persist
 
 
 def test_stats_entries_single_pass_aggregates(spark, sf_dir):

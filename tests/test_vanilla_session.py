@@ -21,6 +21,7 @@ import pytest
 import os
 import subprocess
 import sys
+from urllib.parse import unquote, urlparse
 
 SNIPPET = """
 import sys
@@ -39,8 +40,75 @@ for name in ("events_rollup_type_day", "pricing_summary"):
     n = df.count()
     assert n > 0, f"{name} returned no rows"
     print(f"{name}:{n}", flush=True)
+
+# A caller-built session keeps its own parquet codec: the program's
+# writes follow it and never set it.
+from data_pipelines_snowflake_procedures_spark.operators.security import pii_masking_report
+from tests.test_vanilla_session import chunk_codecs
+
+codec = spark.conf.get("spark.sql.parquet.compression.codec")
+df = spark.createDataFrame([(i, f"user{i}@mail.com") for i in range(20)], "id BIGINT, email STRING")
+assert pii_masking_report(spark, df, "vanilla_pii", save=True)["status"] == "SUCCESS"
+assert spark.conf.get("spark.sql.parquet.compression.codec") == codec
+codecs = chunk_codecs(spark.table("vanilla_pii_MASKED").inputFiles())
+assert codecs == {codec.upper()}, (codec, codecs)
+print(f"codec:{codec}", flush=True)
 spark.stop()
 """
+
+
+def local_path(uri: str) -> str:
+    """Local path of a ``file:`` URI, as ``DataFrame.inputFiles`` lists them."""
+    return unquote(urlparse(uri).path)
+
+
+def chunk_codecs(files: list[str]) -> set[str]:
+    """Compression codec of every column chunk of the parquet ``files``
+    (``file:`` URIs)."""
+    import pyarrow.parquet as pq
+
+    out = set()
+    for uri in files:
+        meta = pq.ParquetFile(local_path(uri)).metadata
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            out.update(group.column(c).compression for c in range(group.num_columns))
+    return out
+
+
+def test_program_writes_are_zstd(spark):
+    """Tables the program writes through ``get_spark``'s session are
+    zstd parquet, every column chunk of every part file, and DuckDB
+    reads back the rows Spark does."""
+    import duckdb
+
+    from data_pipelines_snowflake_procedures_spark.operators.security import (
+        pii_masking_report,
+    )
+    from data_pipelines_snowflake_procedures_spark.pipelines.glossary import (
+        generate_business_glossary,
+    )
+    from data_pipelines_snowflake_procedures_spark.session import rows_frame
+    from tests.test_agent_jobs import _drop_table
+
+    for t in ("zstd_pii_MASKED", "ZSTD_GLOSSARY"):
+        _drop_table(spark, t)
+    df = rows_frame(
+        spark,
+        [(i, f"user{i}@mail.com", f"note {i}") for i in range(50)],
+        "id BIGINT, email STRING, note STRING",
+    )
+    df.createOrReplaceTempView("zstd_src")
+    assert pii_masking_report(spark, df, "zstd_pii", save=True)["status"] == "SUCCESS"
+    assert generate_business_glossary(spark, "zstd_src", "ZSTD_GLOSSARY")["status"] == "SUCCESS"
+    for table in ("zstd_pii_MASKED", "ZSTD_GLOSSARY"):
+        files = spark.table(table).inputFiles()
+        assert chunk_codecs(files) == {"ZSTD"}, table
+        paths = ", ".join("'" + local_path(f).replace("'", "''") + "'" for f in files)
+        with duckdb.connect() as con:
+            duck = con.execute(f"SELECT * FROM read_parquet([{paths}])").fetchall()
+        ours = [tuple(r) for r in spark.table(table).collect()]
+        assert sorted(duck, key=repr) == sorted(ours, key=repr), table
 
 
 def test_load_table_forces_utc_session_tz(spark):
@@ -104,7 +172,7 @@ def test_daemon_module_set_only_when_it_resolves(spark, monkeypatch, tmp_path):
 
 
 @pytest.mark.slowtier
-def test_registry_runs_under_vanilla_session():
+def test_registry_runs_under_vanilla_session(tmp_path):
     env = dict(os.environ)
     # Make sure nothing from the test session leaks config in.
     env.pop("PYSPARK_SUBMIT_ARGS", None)
@@ -114,9 +182,11 @@ def test_registry_runs_under_vanilla_session():
         text=True,
         timeout=600,
         env=env,
+        cwd=tmp_path,  # the session's warehouse directory
     )
     assert proc.returncode == 0, (
         f"vanilla-session run failed\nstdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
     )
     assert "events_rollup_type_day:" in proc.stdout
     assert "pricing_summary:" in proc.stdout
+    assert "codec:snappy" in proc.stdout  # stock Spark default, not ours
