@@ -6,9 +6,10 @@ dedup (operators/dedup.py) into the two calls a training-data team
 actually runs:
 
 * :func:`clean_corpus` — quality gate + language filter + exact dedup
-  in one plan: a single narrow projection computes all signals, the
-  filter prunes before the ONLY shuffle (dedup window on the content
-  fingerprint). At 100 TB the quality/language filter typically drops
+  in one plan: a single narrow projection computes all signals (one
+  ``selectExpr`` over the SQL-text generators of operators/text.py),
+  the filter prunes before the ONLY shuffle (dedup window on the
+  content fingerprint). At 100 TB the quality/language filter typically drops
   50-80% of raw web text before the shuffle — filtering first is the
   difference between shuffling 100 TB and shuffling 25 TB.
 * :func:`token_budget` — tokens/docs per (language × source) after
@@ -24,11 +25,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .dedup import keep_min_id
+from .profile import ident, sql_str
 from .text import (
-    detect_language,
-    fingerprint,
-    quality_score,
-    ws_token_count,
+    _let_sql,
+    detect_language_sql,
+    fingerprint_sql,
+    quality_score_sql,
+    tokens_sql,
+    ws_token_count_sql,
 )
 
 
@@ -48,26 +53,30 @@ def clean_corpus(
 
     Plan shape: one narrow projection (all signals, no UDF), one
     filter (pushed before the shuffle), one window shuffle on the
-    fingerprint. Nothing else.
+    fingerprint. Nothing else. The projection is one ``selectExpr``
+    of SQL text, so the plan is built in a handful of py4j round trips
+    (the Column-built form took about 1600).
     """
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    scored = df.select(
+    scored = df.selectExpr(
         "*",
-        ws_token_count(c).alias("n_tokens_ws"),
-        F.round(quality_score(c), 2).alias("quality_score"),
-        detect_language(c).alias("detected_lang"),
-        fingerprint(c).alias("fingerprint"),
+        f"{ws_token_count_sql(text_col)} AS n_tokens_ws",
+        f"round({quality_score_sql(text_col)}, 2) AS quality_score",
+        f"{detect_language_sql(text_col)} AS detected_lang",
+        f"{fingerprint_sql(text_col)} AS fingerprint",
     )
+    langs = ", ".join(sql_str(lang) for lang in languages) or "NULL"
     kept = scored.filter(
-        (F.col("quality_score") >= min_quality)
-        & F.col("detected_lang").isin(*languages)
+        f"quality_score >= CAST({sql_str(repr(float(min_quality)))} AS DOUBLE)"
+        f" AND detected_lang IN ({langs})"
     )
-    w = Window.partitionBy("fingerprint").orderBy(F.col(id_col).asc())
-    return (
-        kept.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return keep_min_id(kept, "fingerprint", id_col)
+
+
+def _id_bucket_sql(id_col: str, seed: str) -> str:
+    """The id's hash bucket in [0, 1e6): the first 15 hex digits of
+    md5(seed|id), base 10, mod 1e6."""
+    h = f"md5(concat({sql_str(seed + '|')}, CAST({ident(id_col)} AS STRING)))"
+    return f"CAST(conv(substring({h}, 1, 15), 16, 10) AS BIGINT) % 1000000"
 
 
 def assign_split(
@@ -88,25 +97,15 @@ def assign_split(
     """
     weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
     total = sum(weights.values())
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-    bucket = h % F.lit(1000000)
+    bucket = _id_bucket_sql(id_col, seed)
     names = list(weights)
-    expr = None
+    cases = ""
     cum = 0.0
     for name in names[:-1]:
         cum += weights[name] / total
-        cond = bucket < int(round(cum * 1000000))
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    expr = (
-        expr.otherwise(names[-1]) if expr is not None else F.lit(names[-1])
-    )
-    return df.withColumn(split_col, expr)
+        cases += f" WHEN {bucket} < {int(round(cum * 1000000))} THEN {sql_str(name)}"
+    label = f"CASE{cases} ELSE {sql_str(names[-1])} END" if cases else sql_str(names[-1])
+    return df.withColumn(split_col, F.expr(label))
 
 
 def stratified_split(
@@ -171,35 +170,44 @@ def chunk_documents(
     Pure per-row explode (narrow, no shuffle): at 100 TB this is a
     map-only stage whose output is larger than its input by
     ~overlap/chunk_tokens — the only operator here that grows data, so
-    run it AFTER filtering/dedup, never before.
+    run it AFTER filtering/dedup, never before. The token array is
+    bound once per document (see operators/text.py), not re-split per
+    chunk.
     """
-    from .text import tokens
-
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     step = chunk_tokens - overlap
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    toks = F.filter(tokens(c), lambda t: t != "")
-    starts = F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(step))
-    chunks = F.transform(
-        starts,
-        lambda s: F.struct(
-            F.concat_ws(" ", F.slice(toks, s, chunk_tokens)).alias("chunk_text"),
-            F.least(
-                F.lit(chunk_tokens), F.size(toks) - s + 1
-            ).cast("long").alias("n_tokens"),
-        ),
+    chunks = _let_sql(
+        f"filter({tokens_sql(text_col)}, x -> x != '')",
+        "__t",
+        f"transform(sequence(1, greatest(size(__t), 1), {step}), __s -> named_struct("
+        f"'chunk_text', concat_ws(' ', slice(__t, __s, {chunk_tokens})), "
+        f"'n_tokens', CAST(least({chunk_tokens}, size(__t) - __s + 1) AS BIGINT)))",
     )
     return (
-        df.select(id_col, F.posexplode(chunks).alias("chunk_id", "c"))
-        .filter(F.col("c.n_tokens") > 0)
-        .select(
-            id_col,
-            F.col("chunk_id").cast("long").alias("chunk_id"),
-            F.col("c.chunk_text").alias("chunk_text"),
-            F.col("c.n_tokens").alias("n_tokens"),
+        df.selectExpr(ident(id_col), f"posexplode({chunks}) AS (chunk_id, c)")
+        .filter("c.n_tokens > 0")
+        .selectExpr(
+            ident(id_col),
+            "CAST(chunk_id AS BIGINT) AS chunk_id",
+            "c.chunk_text AS chunk_text",
+            "c.n_tokens AS n_tokens",
         )
     )
+
+
+def chunk_count_sql(text_col: str, chunk_tokens: int, overlap: int) -> str:
+    """How many chunks :func:`chunk_documents` makes of one document,
+    as SQL text, without building them. With ``t`` non-empty tokens and
+    ``step = chunk_tokens - overlap`` the chunks start at tokens 1,
+    1 + step, … ≤ t: ``ceil(t / step)`` of them, 0 when t = 0. ``t``
+    is the number of ``\\S+`` runs in the text: the non-empty pieces of
+    a split on ``\\s+`` are exactly those runs, and lowercasing or
+    trimming spaces changes neither."""
+    step = chunk_tokens - overlap
+    runs = sql_str(r"\S+")
+    t = f"regexp_count(coalesce({ident(text_col)}, ''), {runs})"
+    return f"({t} + {step - 1}) div {step}"
 
 
 def sample_mix(
@@ -218,14 +226,7 @@ def sample_mix(
     retry, and per-group sample sizes concentrate tightly around
     fraction × group size. One narrow filter, no shuffle.
     """
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-    bucket = h % F.lit(1000000)
+    bucket = F.expr(_id_bucket_sql(id_col, seed))
     frac: Column | None = None
     for value, fraction in fractions.items():
         cond = F.col(group_col) == value
@@ -651,14 +652,7 @@ def temperature_mix(
         )
         for g in n
     }
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-    bucket = h % F.lit(1000000)
+    bucket = F.expr(_id_bucket_sql(id_col, seed))
     frac_expr: Column | None = None
     for g, fr in frac.items():
         cond = F.col(group_col) == g

@@ -91,8 +91,9 @@ def mask_value(value: Any, pii_type: str) -> Any:
 
 def mask_expr(col: str | Column, pii_type: str) -> Column:
     """Masking as a native Column expression (F2-F6) — JVM-side, no
-    UDF; fuses into whole-stage codegen."""
-    c = F.col(col) if isinstance(col, str) else col
+    UDF; fuses into whole-stage codegen. A ``str`` is a column name,
+    quoted (it may hold a dot, a backtick or a space)."""
+    c = F.col(ident(col)) if isinstance(col, str) else col
     if pii_type == "EMAIL":
         # keep first char, star the local part, keep the domain
         return F.when(
@@ -125,7 +126,7 @@ def scrub_text_expr(col: str | Column) -> Column:
     $1/$2 backreferences so adjacent characters survive. Pure
     regexp_replace chain — narrow, codegen-fused, no UDF.
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col(ident(col)) if isinstance(col, str) else col
     c = F.coalesce(c, F.lit(""))
     for pii_type in SCRUB_ORDER:
         pattern = PII_PATTERNS[pii_type]
@@ -164,12 +165,13 @@ def detect_pii_columns(
     string_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
     if not string_cols:
         return {}
+    quoted = [F.col(ident(c)) for c in string_cols]
     if sample_fraction is not None:
-        sample = df.select(*string_cols).sample(fraction=sample_fraction, seed=42)
+        sample = df.select(*quoted).sample(fraction=sample_fraction, seed=42)
     else:
-        sample = df.select(*string_cols).limit(sample_rows)
+        sample = df.select(*quoted).limit(sample_rows)
     aggs = [
-        F.count(F.when(F.col(c).rlike(pattern), 1)).alias(f"{c}__{pii_type}")
+        F.count(F.when(F.col(ident(c)).rlike(pattern), 1)).alias(f"{c}__{pii_type}")
         for c in string_cols
         for pii_type, pattern in PII_PATTERNS.items()
     ]

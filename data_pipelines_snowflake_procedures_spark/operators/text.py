@@ -5,22 +5,44 @@ Not present in the reference (its domain stops at DQ/PII); these are
 the north-star extensions called for by SURVEY.md §7 step 8, built for
 the ``documents`` harness table and any corpus with a text column.
 
-Everything here is a **native Column expression builder** — no Python
-UDFs, so the hot path stays inside whole-stage codegen and scales as a
-narrow (shuffle-free) projection over arbitrarily many partitions.
-Cross-engine determinism (for the DuckDB oracle gate) comes from
-md5-based hashing: Spark ``md5`` and DuckDB ``md5`` agree bit-for-bit,
-unlike xxhash64 which DuckDB lacks.
+Everything here is a **native expression** — no Python UDFs, so the
+hot path stays inside the JVM and scales as a narrow (shuffle-free)
+projection over arbitrarily many partitions. Cross-engine determinism
+(for the DuckDB oracle gate) comes from md5-based hashing: Spark
+``md5`` and DuckDB ``md5`` agree bit-for-bit, unlike xxhash64 which
+DuckDB lacks.
+
+**SQL text, not Column calls.** Each per-document signal has ONE
+definition: a ``*_sql`` generator returning a SQL expression string,
+with the text column's name quoted by :func:`profile.ident` (a dot, a
+backtick or a space in a name is data, not syntax). The Column form
+(``tokens``, ``quality_score``, …) wraps that string once in
+``F.expr``; plan builders such as ``corpus.clean_corpus`` and
+``dedup.minhash_lsh_pairs`` put the strings straight into one
+``selectExpr``. Each PySpark Column call is a py4j round trip to the
+JVM: the Column-built quality score, language ID and fingerprint took
+about 1600 round trips per ``clean_corpus`` plan, the SQL text takes
+a handful.
+
+**Why the lambdas stay.** A token array used k times in one
+expression is bound ONCE with ``transform(array(x), v -> body)[0]``
+(:func:`_let_sql`). Spark's common-subexpression elimination does not
+reach into lambda bodies or CASE branches, so an inlined array is
+re-split at every use (measured: the inlined quality score split each
+text 7×, score + language ID 22×); a lambda-free rewrite of the
+corpus pass measured slower (979 vs 752 ms warm) for that reason.
 
 At 100 TB: all per-document ops are embarrassingly parallel; the only
 caveat is very long documents inflating token arrays — cap with
-``F.slice`` before arrayful ops if documents exceed ~1 MB.
+``slice`` before arrayful ops if documents exceed ~1 MB.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .profile import ident, sql_str
 
 #: BPE-ish pre-tokenizer: alphanumeric runs or single non-space symbols
 #: (the classic GPT-2-style split, minus unicode categories).
@@ -40,223 +62,213 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 #: pretraining quality heuristics).
 QUALITY_STOPWORDS = LANG_STOPWORDS["en"]
 
+#: SQL literals of the whitespace and non-punctuation patterns.
+_WS_SQL = sql_str(r"\s+")
+_NOT_PUNCT_SQL = sql_str(r"[A-Za-z0-9\s]")
+
+
+def _sql(col: str | Column) -> str:
+    """``col`` as SQL text. A name is quoted with :func:`ident`; a
+    Column is rendered by the session's expression converter, which
+    quotes every name part (the Column's own ``node().sql()`` leaves a
+    backtick or a space bare on Spark 4.1)."""
+    if isinstance(col, str):
+        return ident(col)
+    return SparkSession.active()._jsparkSession.expression(col._jc).sql()
+
+
+def _text_sql(col: str | Column) -> str:
+    """The text with NULL read as empty text. NULL text is treated as
+    empty text everywhere in this module — otherwise NULLs propagate
+    through hit-count comparisons and flip downstream CASE chains to
+    their fallback branches (a NULL document would language-classify
+    as the last language checked)."""
+    return f"coalesce({_sql(col)}, '')"
+
+
+def _let_sql(value: str, var: str, body: str) -> str:
+    """Let-binding in SQL text: evaluate ``value`` ONCE per row and
+    evaluate ``body`` with it bound to ``var``. ``transform(array(x),
+    v -> f(v))[0] == f(x)`` for any x: the array is never null and the
+    lambda runs on exactly that element. See the module docstring for
+    why the binding is a lambda."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
 
 def _let(value: Column, body) -> Column:
-    """Let-binding for Column expressions: evaluate ``value`` ONCE per
-    row and apply ``body`` to the bound variable, via
-    ``transform(array(value), v -> body(v))[0]``.
-
-    Why (r11, guide §7.2 duplicated subtrees): Spark performs no
-    common-subexpression elimination on lambda-bearing expression
-    trees, so a token array referenced k times in one projection is
-    re-split k times per row (measured: quality_score alone evaluated
-    split() 7×; score+langid entries 22×). Binding through a
-    single-element array's lambda variable makes every reference hit
-    the one materialized value. Value-identical by construction:
-    ``transform(array(x), f)[0] == f(x)`` for any expression x (the
-    array is never null, the lambda is applied to exactly that
-    element)."""
+    """:func:`_let_sql` for Column expressions built in Python."""
     return F.transform(F.array(value), body)[0]
 
 
+def _words_sql(words: list[str]) -> str:
+    return "array(" + ", ".join(sql_str(w) for w in words) + ")"
+
+
+def tokens_sql(col: str | Column) -> str:
+    """Whitespace tokens of the lowercased, trimmed text."""
+    return f"split(lower(trim({_text_sql(col)})), {_WS_SQL})"
+
+
 def tokens(col: str | Column) -> Column:
-    """Whitespace tokens of the lowercased, trimmed text. NULL text is
-    treated as empty text everywhere in this module — otherwise NULLs
-    propagate through hit-count comparisons and flip downstream
-    CASE/when chains to their fallback branches (e.g. a NULL document
-    would language-classify as the last language checked)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.lower(F.trim(F.coalesce(c, F.lit("")))), r"\s+")
+    return F.expr(tokens_sql(col))
+
+
+def ws_token_count_sql(col: str | Column) -> str:
+    return f"CAST(size({tokens_sql(col)}) AS BIGINT)"
 
 
 def ws_token_count(col: str | Column) -> Column:
-    return F.size(tokens(col)).cast("long")
+    return F.expr(ws_token_count_sql(col))
 
 
 def bpe_token_count(col: str | Column) -> Column:
     """Count of BPE-ish pre-tokens (alnum runs + isolated symbols)."""
-    c = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_RE), F.lit(0))).cast("long")
+    return F.expr(
+        f"CAST(size(regexp_extract_all({_text_sql(col)}, {sql_str(BPE_TOKEN_RE)}, 0))"
+        " AS BIGINT)"
+    )
+
+
+def punct_ratio_sql(col: str | Column) -> str:
+    """Share of characters that are neither alphanumeric nor whitespace."""
+    c = _text_sql(col)
+    punct = f"length(regexp_replace({c}, {_NOT_PUNCT_SQL}, ''))"
+    return (
+        f"CASE WHEN length({c}) > 0 THEN CAST({punct} AS DOUBLE) / "
+        f"CAST(length({c}) AS DOUBLE) ELSE 0.0D END"
+    )
 
 
 def punct_ratio(col: str | Column) -> Column:
-    """Share of characters that are neither alphanumeric nor whitespace."""
-    c = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-    n = F.length(c)
-    punct = F.length(F.regexp_replace(c, r"[A-Za-z0-9\s]", ""))
-    return F.when(n > 0, punct.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
+    return F.expr(punct_ratio_sql(col))
 
 
-def _mean_token_length_of(toks: Column) -> Column:
-    """Mean token length over an already-bound token array."""
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)),
-        F.lit(0),
-        lambda acc, x: acc + x,
+def _mean_len_sql(toks: str) -> str:
+    """Mean token length over the bound token array ``toks``."""
+    total = f"aggregate(transform({toks}, x -> length(x)), 0, (acc, x) -> acc + x)"
+    return (
+        f"CASE WHEN size({toks}) > 0 THEN CAST({total} AS DOUBLE) / "
+        f"CAST(size({toks}) AS DOUBLE) ELSE 0.0D END"
     )
-    return F.when(
-        F.size(toks) > 0, total.cast("double") / F.size(toks).cast("double")
-    ).otherwise(F.lit(0.0))
 
 
 def mean_token_length(col: str | Column) -> Column:
-    return _let(tokens(col), _mean_token_length_of)
+    return F.expr(_let_sql(tokens_sql(col), "__t", _mean_len_sql("__t")))
+
+
+def _hits_sql(toks: str, words: list[str]) -> str:
+    """Distinct ``words`` present in the token array (set intersection
+    size — deterministic and cheap; frequency-weighted variants can use
+    explode + join when lexicons outgrow literal arrays)."""
+    return f"CAST(size(array_intersect({toks}, {_words_sql(words)})) AS BIGINT)"
 
 
 def stopword_hits(col: str | Column, words: list[str] | None = None) -> Column:
-    """Distinct stopwords present in the text (set intersection size —
-    deterministic and cheap; frequency-weighted variants can use
-    explode + join when lexicons outgrow literal arrays)."""
-    words = words or QUALITY_STOPWORDS
-    return F.size(
-        F.array_intersect(tokens(col), F.array(*[F.lit(w) for w in words]))
-    ).cast("long")
+    return F.expr(_hits_sql(tokens_sql(col), words or QUALITY_STOPWORDS))
 
 
-def _quality_indicators_of(c: Column, toks: Column) -> dict[str, Column]:
-    """The four gates over already-bound text + token-array columns."""
-    return {
-        "len_ok": (F.length(c) >= 50) & (F.length(c) <= 20000),
-        "tok_len_ok": _let(
-            _mean_token_length_of(toks), lambda m: (m >= 2.0) & (m <= 12.0)
-        ),
-        "stopword_ok": F.size(
-            F.array_intersect(
-                toks, F.array(*[F.lit(w) for w in QUALITY_STOPWORDS])
-            )
-        )
-        >= 1,
-        "punct_ok": punct_ratio(c) <= 0.2,
-    }
-
-
-def quality_indicators(col: str | Column) -> dict[str, Column]:
-    """Four pretraining-quality gates as boolean indicators. Indicator
-    (not continuous) scoring keeps the result exactly portable across
-    engines — no float-rounding edge cases at the pass boundary. Each
-    dict entry is an independent Column, so each binds its own token
-    array; :func:`quality_score` shares ONE binding across all four."""
-    c = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-    return {
-        k: _let(tokens(c), lambda toks, k=k: _quality_indicators_of(c, toks)[k])
-        if k in ("tok_len_ok", "stopword_ok")
-        else v
-        for k, v in _quality_indicators_of(c, tokens(c)).items()
-    }
+def quality_score_sql(col: str | Column) -> str:
+    """Four pretraining-quality gates as 0/1 indicators, averaged: in
+    [0, 1] steps of 0.25. Indicator (not continuous) scoring keeps the
+    result exactly portable across engines — no float-rounding edge
+    cases at the pass boundary. The gates: 50-20000 characters, mean
+    token length 2-12, at least one stopword, at most 20% punctuation.
+    The token array is bound once for the two token gates."""
+    c = _text_sql(col)
+    tok_len_ok = _let_sql(_mean_len_sql("__t"), "__m", "__m >= 2.0D AND __m <= 12.0D")
+    token_gates = (
+        f"CASE WHEN {tok_len_ok} THEN 1 ELSE 0 END + CASE WHEN "
+        f"size(array_intersect(__t, {_words_sql(QUALITY_STOPWORDS)})) >= 1 "
+        "THEN 1 ELSE 0 END"
+    )
+    return (
+        f"CAST(CASE WHEN length({c}) >= 50 AND length({c}) <= 20000 THEN 1 ELSE 0 END"
+        f" + {_let_sql(tokens_sql(col), '__t', token_gates)}"
+        f" + CASE WHEN {punct_ratio_sql(col)} <= 0.2D THEN 1 ELSE 0 END AS DOUBLE) / 4.0D"
+    )
 
 
 def quality_score(col: str | Column) -> Column:
-    """Mean of the four indicators, in [0, 1] steps of 0.25. The token
-    array is let-bound once for all indicators (r11 — the inlined form
-    re-split the text 7× per row)."""
-    c = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-
-    def body(toks: Column) -> Column:
-        total = None
-        for flag in _quality_indicators_of(c, toks).values():
-            term = F.when(flag, 1).otherwise(0)
-            total = term if total is None else total + term
-        return total.cast("double") / F.lit(4.0)
-
-    return _let(tokens(c), body)
+    return F.expr(quality_score_sql(col))
 
 
-def lang_hits(col: str | Column) -> dict[str, Column]:
-    return {
-        lang: stopword_hits(col, words) for lang, words in LANG_STOPWORDS.items()
-    }
+def detect_language_sql(col: str | Column) -> str:
+    """Stopword-hit argmax language ID with fixed tie order
+    en > es > fr > de; 'und' when nothing matches. The token array is
+    bound once for all four languages and the four hit counts once for
+    the whole CASE chain (inlined, the chain re-split the text 16× and
+    re-intersected each lexicon up to 4× per row)."""
+    hits = "named_struct(" + ", ".join(
+        f"{sql_str(lang)}, {_hits_sql('__t', words)}"
+        for lang, words in LANG_STOPWORDS.items()
+    ) + ")"
+    en, es, fr, de = (f"__h.{lang}" for lang in LANG_STOPWORDS)
+    argmax = (
+        f"CASE WHEN {en} = 0 AND {es} = 0 AND {fr} = 0 AND {de} = 0 THEN 'und' "
+        f"WHEN {en} >= {es} AND {en} >= {fr} AND {en} >= {de} THEN 'en' "
+        f"WHEN {es} >= {fr} AND {es} >= {de} THEN 'es' "
+        f"WHEN {fr} >= {de} THEN 'fr' ELSE 'de' END"
+    )
+    return _let_sql(tokens_sql(col), "__t", _let_sql(hits, "__h", argmax))
 
 
 def detect_language(col: str | Column) -> Column:
-    """Stopword-hit argmax language ID with fixed tie order
-    en > es > fr > de; 'und' when nothing matches. The token array is
-    let-bound once for all four languages and the four hit counts are
-    let-bound once for the whole CASE chain (r11 — fully inlined, the
-    chain re-split the text 16× and re-intersected each lexicon up to
-    4× per row)."""
+    return F.expr(detect_language_sql(col))
 
-    def argmax(s: Column) -> Column:
-        h = {lang: s[lang] for lang in LANG_STOPWORDS}
-        return (
-            F.when(
-                (h["en"] == 0) & (h["es"] == 0) & (h["fr"] == 0) & (h["de"] == 0),
-                F.lit("und"),
-            )
-            .when(
-                (h["en"] >= h["es"]) & (h["en"] >= h["fr"]) & (h["en"] >= h["de"]),
-                F.lit("en"),
-            )
-            .when((h["es"] >= h["fr"]) & (h["es"] >= h["de"]), F.lit("es"))
-            .when(h["fr"] >= h["de"], F.lit("fr"))
-            .otherwise(F.lit("de"))
-        )
 
-    def body(toks: Column) -> Column:
-        hits = F.struct(
-            *[
-                F.size(
-                    F.array_intersect(
-                        toks, F.array(*[F.lit(w) for w in words])
-                    )
-                )
-                .cast("long")
-                .alias(lang)
-                for lang, words in LANG_STOPWORDS.items()
-            ]
-        )
-        return _let(hits, argmax)
-
-    return _let(tokens(col), body)
+def fingerprint_sql(col: str | Column) -> str:
+    """Whole-document fingerprint: md5 of the whitespace-normalized,
+    lowercased text. Identical logical content → identical hash."""
+    return f"md5(concat_ws(' ', {tokens_sql(col)}))"
 
 
 def fingerprint(col: str | Column) -> Column:
-    """Whole-document fingerprint: md5 of the whitespace-normalized,
-    lowercased text. Identical logical content → identical hash."""
-    return F.md5(F.concat_ws(" ", tokens(col)))
+    return F.expr(fingerprint_sql(col))
 
 
-def positional_shingles(col: str | Column, n: int = 3) -> Column:
+def positional_shingles_sql(col: str | Column, n: int = 3) -> str:
     """ALL n-token shingles in document order (element ``i`` starts at
     token ``i``; duplicates kept — position matters). Empty array when
     the document has fewer than ``n`` tokens.
 
-    Built by zipping ``n`` shifted slices of the token array — NOT by
-    indexing a captured expression inside a transform lambda: Spark
-    does no common-subexpression elimination inside lambda bodies, so
-    ``slice(tokens(col), i, n)`` per position re-evaluates the whole
-    split per token, turning shingling O(L²) per document (measured
-    ~10× on the bigram-LM operator before the same fix)."""
-    def body(toks: Column) -> Column:
-        cnt = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-        zipped = F.arrays_zip(
-            *[F.slice(toks, i + 1, cnt).alias(f"t{i}") for i in range(n)]
-        )
-        return F.transform(
-            zipped,
-            lambda s: F.concat_ws(" ", *[s[f"t{i}"] for i in range(n)]),
-        )
+    The token array is bound once and each shingle reads its next
+    ``n - 1`` tokens by index from the bound array: indexing an
+    UNBOUND split inside the lambda would re-split the text per token,
+    turning shingling O(L²) per document (measured ~10× on the
+    bigram-LM operator before the same fix)."""
+    nxt = "".join(f", __t[__i + {k}]" for k in range(1, n))
+    body = (
+        f"transform(slice(__t, 1, greatest(size(__t) - {n - 1}, 0)), "
+        f"(__w, __i) -> concat_ws(' ', __w{nxt}))"
+    )
+    return _let_sql(tokens_sql(col), "__t", body)
 
-    # let-bind the token array: the n slices + the size reference it
-    # n+1 times (r11 — same no-CSE-under-lambdas rule as quality_score)
-    return _let(tokens(col), body)
+
+def positional_shingles(col: str | Column, n: int = 3) -> Column:
+    return F.expr(positional_shingles_sql(col, n))
+
+
+def shingles_sql(col: str | Column, n: int = 3) -> str:
+    """Distinct n-token shingles (set semantics — the Jaccard/MinHash
+    unit). See :func:`positional_shingles_sql` for the ordered form."""
+    return f"array_distinct({positional_shingles_sql(col, n)})"
 
 
 def shingles(col: str | Column, n: int = 3) -> Column:
-    """Distinct n-token shingles (set semantics — the Jaccard/MinHash
-    unit). See :func:`positional_shingles` for the ordered form and
-    the O(L) construction note."""
-    return F.array_distinct(positional_shingles(col, n))
+    return F.expr(shingles_sql(col, n))
 
 
 def min_shingle_fingerprint(col: str | Column, n: int = 3) -> Column:
     """Rolling-hash-style locality fingerprint: minimum md5 over the
     document's n-token shingles (a 1-permutation MinHash). Documents
     sharing their minimal shingle collide — cheap near-dup blocking."""
-    return _let(
-        shingles(col, n),
-        lambda sh: F.when(
-            F.size(sh) > 0, F.array_min(F.transform(sh, F.md5))
-        ).otherwise(F.md5(F.lit(""))),
+    return F.expr(
+        _let_sql(
+            shingles_sql(col, n),
+            "__s",
+            "CASE WHEN size(__s) > 0 THEN array_min(transform(__s, x -> md5(x))) "
+            "ELSE md5('') END",
+        )
     )
 
 
@@ -268,7 +280,7 @@ def trim_repeated_lines(col: str | Column) -> Column:
     (split → array_distinct → join); no Python, no shuffle — pairs
     with the cross-document detectors in operators/dedup.py, which
     never see within-doc repetition."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col(ident(col)) if isinstance(col, str) else col
     return F.array_join(F.array_distinct(F.split(c, "\n")), "\n")
 
 
@@ -286,7 +298,7 @@ def strip_markup(col: str | Column) -> Column:
     crawl-to-training-text pipeline. Pure regexp_replace chain
     (whole-stage codegen); patterns avoid lookarounds and ``\\b`` so
     Java and RE2 engines agree character-for-character."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col(ident(col)) if isinstance(col, str) else col
     for pat in MARKUP_PATTERNS:
         c = F.regexp_replace(c, pat, "")
     return F.trim(F.regexp_replace(c, r"\s+", " "))
@@ -331,7 +343,7 @@ def repetition_signals(
     would otherwise re-split the text per comparison (an extra O(L)
     factor on the already-quadratic counting).
     """
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col(ident(text_col)), F.lit(""))
     toks0 = _nonempty_tokens(c)
     n_big = F.greatest(F.size(toks0) - 1, F.lit(0))
     bound = df.select(
@@ -369,7 +381,7 @@ def repetition_signals(
         )
     )
     return bound.select(
-        id_col,
+        F.col(ident(id_col)),
         F.size(lines).cast("long").alias("n_lines"),
         F.when(
             F.size(lines) > 0,
@@ -399,17 +411,16 @@ def repetition_signals(
 def text_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """One-pass per-document text profile: counts, ratios, quality,
     language, fingerprints — a single narrow projection. NULL text
-    profiles as empty text (see :func:`tokens`)."""
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    profiles as empty text (see :func:`_text_sql`)."""
     return df.select(
-        id_col,
-        ws_token_count(c).alias("n_tokens_ws"),
-        bpe_token_count(c).alias("n_tokens_bpe"),
-        F.length(c).cast("long").alias("n_chars"),
-        F.round(mean_token_length(c), 4).alias("mean_token_len"),
-        F.round(punct_ratio(c), 4).alias("punct_ratio"),
-        F.round(quality_score(c), 2).alias("quality_score"),
-        detect_language(c).alias("detected_lang"),
-        fingerprint(c).alias("fingerprint"),
-        min_shingle_fingerprint(c).alias("min_shingle_fp"),
+        F.col(ident(id_col)),
+        ws_token_count(text_col).alias("n_tokens_ws"),
+        bpe_token_count(text_col).alias("n_tokens_bpe"),
+        F.expr(f"CAST(length({_text_sql(text_col)}) AS BIGINT)").alias("n_chars"),
+        F.round(mean_token_length(text_col), 4).alias("mean_token_len"),
+        F.round(punct_ratio(text_col), 4).alias("punct_ratio"),
+        F.round(quality_score(text_col), 2).alias("quality_score"),
+        detect_language(text_col).alias("detected_lang"),
+        fingerprint(text_col).alias("fingerprint"),
+        min_shingle_fingerprint(text_col).alias("min_shingle_fp"),
     )

@@ -44,9 +44,17 @@ def prepare_corpus(
     so the counts here and the caller's next stage scan it instead of
     rerunning the clean plan. ``chunks`` and ``budget`` are lazy
     DataFrames over it.
+
+    The chunk count comes from the same aggregate as the split counts:
+    each document adds ``ceil(t / (chunk_tokens - chunk_overlap))``
+    chunks, ``t`` its non-empty token count
+    (:func:`operators.corpus.chunk_count_sql`), so ``chunks`` is never
+    run here. A call is 6 Spark jobs; the plans are SQL text, a few
+    hundred py4j round trips in all.
     """
     from ..operators.corpus import (
         assign_split,
+        chunk_count_sql,
         chunk_documents,
         clean_corpus,
         token_budget,
@@ -67,12 +75,13 @@ def prepare_corpus(
             chunk_tokens=chunk_tokens, overlap=chunk_overlap,
         )
         budget = token_budget(split, group_cols=("detected_lang", "split"))
-        split_counts = {
-            r["split"]: r["n"]
-            for r in split.groupBy("split").agg(F.count("*").alias("n")).collect()
-        }
+        n_chunk = chunk_count_sql(text_col, chunk_tokens, chunk_overlap)
+        rows = split.groupBy("split").agg(
+            F.expr("count(1) AS n"), F.expr(f"sum({n_chunk}) AS n_chunks")
+        ).collect()
+        split_counts = {r["split"]: r["n"] for r in rows}
         n_clean = sum(split_counts.values())
-        n_chunks = chunks.count()
+        n_chunks = sum(r["n_chunks"] for r in rows)
         end = _dt.datetime.now(_dt.timezone.utc)
         return {
             "status": "SUCCESS",

@@ -37,6 +37,37 @@ def count_jobs(spark):
     return count
 
 
+@pytest.fixture
+def count_round_trips(spark):
+    """``count_round_trips(fn)`` runs ``fn`` and returns how many py4j
+    commands it sent to the JVM. py4j's memory commands (the deletes
+    Python's garbage collector sends for dead JVM references) are not
+    counted: when they run depends on the collector, not on ``fn``."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    memory = protocol.MEMORY_COMMAND_NAME
+
+    def count(fn) -> int:
+        sent = 0
+
+        def counting(self, command):
+            nonlocal sent
+            if not command.startswith(memory):
+                sent += 1
+            return send(self, command)
+
+        ClientServerConnection.send_command = counting
+        try:
+            fn()
+        finally:
+            ClientServerConnection.send_command = send
+        return sent
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

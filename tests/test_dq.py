@@ -333,7 +333,8 @@ def test_robust_outlier_approx_close_to_exact(spark, sf_dir):
 
 def test_profile_pass_quotes_odd_column_names(spark, tmp_path):
     """Column names holding a dot, a backtick or a space reach the
-    profile pass quoted: table DQ and a csv discovery both profile them."""
+    profile pass quoted: table DQ and a csv discovery both profile them,
+    and the PII masking report detects and masks them."""
     import datetime as dt
 
     from pyspark.sql import types as T
@@ -378,3 +379,21 @@ def test_profile_pass_quotes_odd_column_names(spark, tmp_path):
     assert results[("uniqueness", "a.b")] == 1.0
     assert results[("accuracy", "a.b")] == 1.0
     assert results[("consistency", "a.b->c`d")] == 1.0
+
+    from data_pipelines_snowflake_procedures_spark.operators.security import (
+        apply_pii_masking,
+        pii_masking_report,
+    )
+
+    pii = rows_frame(
+        spark,
+        [(f"user{i}@mail.com", f"call 555010{1000 + i}", f"v{i}") for i in range(5)],
+        "`a.b` STRING, `c``d` STRING, `e f` STRING",
+    )
+    report = pii_masking_report(spark, pii, "odd", save=False)
+    assert report["status"] == "SUCCESS"
+    assert report["masked_columns"] == {"a.b": "EMAIL", "c`d": "PHONE"}
+    masked = apply_pii_masking(pii)[0].collect()
+    assert masked[0]["a.b"] == "u***@mail.com"
+    assert masked[0]["c`d"] == "call ******1000"
+    assert masked[0]["e f"] == "v0"
