@@ -19,9 +19,18 @@ from __future__ import annotations
 import re
 
 #: Table-name detector over executed SQL text (reference F7/J3:
-#: Execution_Engine_Ingestion_Transformatio.sql:77).
+#: Execution_Engine_Ingestion_Transformatio.sql:77). ``IF [NOT] EXISTS``
+#: after ``TABLE`` is skipped, so ``DROP TABLE IF EXISTS t`` names ``t``,
+#: not a table called ``IF``.
 TABLE_NAME_RE = re.compile(
-    r"(?:from|join|into|update|table)\s+([a-zA-Z0-9_\.]+)", re.IGNORECASE
+    r"(?:from|join|into|update|table)\s+(?:if\s+(?:not\s+)?exists\s+)?"
+    r"([a-zA-Z0-9_\.]+)",
+    re.IGNORECASE,
+)
+
+#: ``DROP TABLE [IF EXISTS] name``; group 1 is the dropped table.
+DROP_TABLE_RE = re.compile(
+    r"\s*drop\s+table\s+(?:if\s+exists\s+)?([a-zA-Z0-9_\.]+)", re.IGNORECASE
 )
 
 _DDL_KEYWORDS = ("create", "drop", "alter", "truncate")
@@ -160,6 +169,12 @@ def extract_table_names(sql: str, limit: int = 5) -> list[str]:
         if len(seen) >= limit:
             break
     return seen
+
+
+def dropped_table(sql: str) -> str | None:
+    """The table a ``DROP TABLE`` statement drops, else ``None``."""
+    match = DROP_TABLE_RE.match(sql)
+    return match.group(1).rstrip(".") if match else None
 
 
 def is_ddl(sql: str) -> bool:

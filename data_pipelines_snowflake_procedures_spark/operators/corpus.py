@@ -134,9 +134,10 @@ def stratified_split(
     exclusive; choose per use."""
     weights = weights or {"train": 0.8, "val": 0.1, "test": 0.1}
     total = sum(weights.values())
-    h = F.md5(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string")))
-    w_rank = Window.partitionBy(strata_col).orderBy(h.asc(), F.col(id_col).asc())
-    w_n = Window.partitionBy(strata_col)
+    idc, stratum = F.col(ident(id_col)), F.col(ident(strata_col))
+    h = F.md5(F.concat(F.lit(f"{seed}|"), idc.cast("string")))
+    w_rank = Window.partitionBy(stratum).orderBy(h.asc(), idc.asc())
+    w_n = Window.partitionBy(stratum)
     ranked = df.withColumn("__rn", F.row_number().over(w_rank)).withColumn(
         "__n", F.count("*").over(w_n)
     )

@@ -279,7 +279,7 @@ def dup_span_profile(
 
     toks = tokens(text_col)
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col(ident(id_col)).alias("id"),
         F.size(toks).cast("long").alias("n_tokens"),
         positional_shingles(text_col, n).alias("grams"),
     )
@@ -386,7 +386,7 @@ def dup_span_dedup(
 
     toks = tokens(text_col)
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col(ident(id_col)).alias("id"),
         toks.alias("toks"),
         positional_shingles(text_col, n).alias("grams"),
     )
@@ -814,7 +814,7 @@ def simhash(
     # keeps the split (it refuses to duplicate non-cheap expressions),
     # leaving n_tok md5s + 32·n_tok integer bit tests per row.
     hashed = df.select(
-        F.col(id_col).alias("id"),
+        F.col(ident(id_col)).alias("id"),
         F.transform(
             F.array_distinct(tokens(text_col)), lambda t: token_hash(t)
         ).alias("__th"),
@@ -1040,9 +1040,9 @@ def embedding_near_dup_pairs(
     stays in Spark. Ids must be int64 (the similarity-module id
     contract); string-id corpora must map ids first."""
     normed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(emb_col).alias("emb"),
-        norm(F.col(emb_col)).alias("nrm"),
+        F.col(ident(id_col)).alias("id"),
+        F.col(ident(emb_col)).alias("emb"),
+        norm(F.col(ident(emb_col))).alias("nrm"),
         F.lit(0).alias("__blk"),
     )
     return (
@@ -1079,10 +1079,10 @@ def embedding_near_dup_blocked(
 
     planes = srp_hyperplanes(n_planes, dim, seed)
     normed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(emb_col).alias("emb"),
-        norm(F.col(emb_col)).alias("nrm"),
-        srp_bucket(F.col(emb_col), planes).alias("bucket"),
+        F.col(ident(id_col)).alias("id"),
+        F.col(ident(emb_col)).alias("emb"),
+        norm(F.col(ident(emb_col))).alias("nrm"),
+        srp_bucket(F.col(ident(emb_col)), planes).alias("bucket"),
     )
     if max_bucket_size is not None:
         # Size guard for the per-bucket kernel (VERDICT r10 #3): a hot
@@ -1322,9 +1322,9 @@ def embedding_near_dup_kmeans(
     normed = (
         kmeans_assign_df(df, cents, emb_col)
         .select(
-            F.col(id_col).alias("id"),
-            F.col(emb_col).alias("emb"),
-            norm(F.col(emb_col)).alias("nrm"),
+            F.col(ident(id_col)).alias("id"),
+            F.col(ident(emb_col)).alias("emb"),
+            norm(F.col(ident(emb_col))).alias("nrm"),
             F.col("__cl").alias("cluster"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)

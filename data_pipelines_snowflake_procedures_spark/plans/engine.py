@@ -15,7 +15,8 @@ Spark-first notes:
   which cannot work at 100 TB.
 * DDL/DML statements execute eagerly with no row transfer.
 * Previews are ``LIMIT``-bounded scans; on parquet these read one file
-  split, not the table.
+  split, not the table. A table the batch dropped (and did not create
+  again) is not previewed: the query would only fail analysis.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from ..functions.sqltools import extract_table_names, split_statements
+from ..functions.sqltools import dropped_table, extract_table_names, split_statements
 
 AGENT_NAME = "ExecutionEngineAgent"
 
@@ -67,6 +68,7 @@ def execute_sql_batch(
     statements = split_statements(sql_code)
     details: list[dict[str, Any]] = []
     preview_tables: list[str] = []
+    dropped: set[str] = set()  # lower-cased names gone at preview time
     successful = failed = 0
 
     for idx, stmt in enumerate(statements, start=1):
@@ -90,9 +92,16 @@ def execute_sql_batch(
             entry["status"] = "SUCCESS"
             successful += 1
             if preview:
-                for t in extract_table_names(stmt, PREVIEW_TABLE_CAP):
+                names = extract_table_names(stmt, PREVIEW_TABLE_CAP)
+                for t in names:
                     if t.lower() not in (p.lower() for p in preview_tables):
                         preview_tables.append(t)
+                gone = dropped_table(stmt)
+                if gone:
+                    dropped.add(gone.lower())
+                else:
+                    # a statement that succeeded on the name made it exist again
+                    dropped.difference_update(t.lower() for t in names)
         except Exception as exc:  # noqa: BLE001 — per-statement isolation
             entry["status"] = "FAILED"
             entry["error"] = str(exc)
@@ -102,7 +111,8 @@ def execute_sql_batch(
 
     previews: dict[str, Any] = {}
     if preview:
-        for t in preview_tables[:PREVIEW_TABLE_CAP]:
+        kept = [t for t in preview_tables if t.lower() not in dropped]
+        for t in kept[:PREVIEW_TABLE_CAP]:
             try:
                 rows = spark.sql(
                     f"SELECT * FROM {t} LIMIT {PREVIEW_ROWS}"  # noqa: S608

@@ -21,6 +21,21 @@ than snappy, and lz4_raw about the same as snappy. A session the
 caller built and passes in keeps its own codec, as it keeps every
 other builder setting here.
 
+Spark compiles each whole-stage-codegen class with Janino and caches
+the compiled class JVM-wide, keyed by its generated source, up to
+``spark.sql.codegen.cache.maxEntries`` classes (default 100). The cap
+is a static conf read once per JVM, at the first code generation, so
+it can only be set here in the builder. The agent's cycle of eight
+procedures needs about 150 distinct classes, so under the default cap
+each call evicted the classes the next one needed: on the benchmark's
+agent inputs (seed 502) the second cycle recompiled 148 classes, a
+file-DQ aggregate costing 55-111 ms of Janino time, and the fresh
+bytecode then ran interpreted until HotSpot compiled it again. With
+:data:`CODEGEN_CACHE_ENTRIES` the same cycle compiles 23 (14 of them
+SQL-batch classes whose per-cycle literals are inlined into the
+generated source). The corpus pass needs 68 classes and compiled none
+on a repeat pass under either cap.
+
 At cluster scale the same settings apply unchanged except
 ``master``/memory, which come from spark-submit; nothing here assumes
 local mode.
@@ -50,6 +65,14 @@ TESTDATA_TABLES = (
 )
 
 
+#: Entries in Spark's JVM-wide cache of compiled generated classes
+#: (``spark.sql.codegen.cache.maxEntries``, default 100). One agent
+#: cycle needs about 150 distinct classes, and its SQL batch adds about
+#: 14 new ones per cycle (literals are inlined into generated source);
+#: 1000 keeps that working set cached across dozens of cycles before
+#: the least recently used classes are evicted.
+CODEGEN_CACHE_ENTRIES = 1000
+
 #: Python-worker daemon with numpy/pandas/pyarrow preloaded (pydaemon.py).
 DAEMON_MODULE = "data_pipelines_snowflake_procedures_spark.pydaemon"
 
@@ -73,6 +96,13 @@ def get_spark(
     only through a session built by this call: the operators take a
     session and set no write conf, so a session the caller built and
     passes in keeps its own codec.
+
+    The codegen cache holds :data:`CODEGEN_CACHE_ENTRIES` compiled
+    classes instead of Spark's 100 (module docstring: one agent cycle
+    needs about 150, so the default evicted them every cycle and the
+    cycle recompiled 148 classes; now 23). A session the caller built
+    keeps its own cap, and so does any session in a JVM that has
+    already generated code: Spark sizes the cache once per JVM.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = str(shuffle_partitions or cpus)
@@ -109,6 +139,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # zstd at Spark's default level (3); see the module docstring
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # room for one agent cycle's generated classes; see get_spark
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if daemon_resolves(executor_pythonpath):
         builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)

@@ -68,6 +68,22 @@ def count_round_trips(spark):
     return count
 
 
+@pytest.fixture
+def count_compiles(spark):
+    """``count_compiles(fn)`` runs ``fn`` and returns how many generated
+    classes Spark compiled with Janino meanwhile (``CodegenMetrics``).
+    Compiled classes are cached JVM-wide, keyed by their source, so a
+    plan whose generated source is still cached compiles nothing."""
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def count(fn) -> int:
+        before = timer.getCount()
+        fn()
+        return timer.getCount() - before
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -7,6 +7,11 @@ Counts come from the ``count_jobs`` fixture (per job group, after the
 listener bus has delivered every job event). Driver-side rows must
 reach Spark as a ``LocalRelation``: a Python RDD (``ExistingRDD``)
 would fork Python workers on every job that reads it.
+
+Each procedure must also find its generated code still compiled when
+it is called again after other work (``count_compiles``): a Janino
+compile costs tens of milliseconds, and recompiled bytecode runs
+interpreted until HotSpot compiles it again.
 """
 
 from __future__ import annotations
@@ -15,7 +20,11 @@ import shutil
 
 import pytest
 
-from data_pipelines_snowflake_procedures_spark.session import load_table, rows_frame
+from data_pipelines_snowflake_procedures_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    load_table,
+    rows_frame,
+)
 
 
 def _analyzed(df) -> str:
@@ -230,3 +239,67 @@ def test_scd1_merge_write_job_budget(spark, sf_dir, count_jobs, tmp_path):
     )
     assert spark.read.parquet(out).count() == target.count()
     assert jobs <= 4
+
+
+def test_agent_procedures_reuse_generated_code(spark, sf_dir, count_compiles, tmp_path):
+    """Called again after more than 100 other generated classes (the
+    size of Spark's default codegen cache), each procedure compiles no
+    class, or at most the few it compiles on every repeat call: 2 for
+    the mask report and 1 for the glossary (as in the agent cycle), and
+    2 for table DQ on ``orders``. Its profile aggregates inline the
+    call's ``now`` (the future-date reference) into generated code, so
+    their source differs on every call of a table with a date column."""
+    from pyspark.sql import functions as F
+
+    from data_pipelines_snowflake_procedures_spark.operators.dq import run_table_dq
+    from data_pipelines_snowflake_procedures_spark.operators.scd import scd1_merge
+    from data_pipelines_snowflake_procedures_spark.operators.security import (
+        pii_masking_report,
+    )
+    from data_pipelines_snowflake_procedures_spark.pipelines.glossary import (
+        generate_business_glossary,
+    )
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+
+    for t in ("reuse_pii_MASKED", "reuse_nation", "REUSE_GLOSSARY"):
+        _drop_table(spark, t)
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    changed = customer.filter("c_custkey % 10 = 0")
+    increment = changed.withColumn("row_version", F.lit(1)).unionByName(
+        changed.withColumn("c_acctbal", F.col("c_acctbal") + 1).withColumn(
+            "row_version", F.lit(2)
+        )
+    )
+    pii = rows_frame(
+        spark,
+        [(i, f"user{i}@mail.com", f"note {i}") for i in range(20)],
+        "id BIGINT, email STRING, note STRING",
+    )
+    load_table(spark, sf_dir, "nation").write.saveAsTable("reuse_nation")
+    out = str(tmp_path / "scd1")
+    procedures = {
+        "table_dq": lambda: run_table_dq(orders, "orders"),
+        "mask_report": lambda: pii_masking_report(spark, pii, "reuse_pii", save=True),
+        "scd1_write": lambda: scd1_merge(customer, increment, ["c_custkey"], order_col="row_version")
+        .write.mode("overwrite")
+        .parquet(out),
+        "glossary": lambda: generate_business_glossary(spark, "reuse_nation", "REUSE_GLOSSARY"),
+    }
+    for call in procedures.values():
+        call()
+
+    def other_classes():
+        # distinct literals make distinct generated sources; planning
+        # for execution compiles each without running a job
+        for i in range(120):
+            df = spark.range(3).selectExpr(f"id * {i + 7919} AS x").filter(f"x > {i}")
+            df._jdf.queryExecution().executedPlan().execute()
+
+    assert count_compiles(other_classes) > 100
+    compiles = {name: count_compiles(call) for name, call in procedures.items()}
+    assert compiles["scd1_write"] == 0, compiles
+    assert compiles["table_dq"] <= 2 and compiles["mask_report"] <= 2, compiles
+    assert compiles["glossary"] <= 1, compiles

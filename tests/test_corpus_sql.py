@@ -22,10 +22,17 @@ from pyspark.sql import functions as F
 from data_pipelines_snowflake_procedures_spark.operators.corpus import (
     chunk_documents,
     clean_corpus,
+    stratified_split,
 )
 from data_pipelines_snowflake_procedures_spark.operators.dedup import (
+    dup_span_dedup,
+    dup_span_profile,
+    embedding_near_dup_blocked,
+    embedding_near_dup_pairs,
     lsh_bucket_stats,
     minhash_lsh_pairs,
+    simhash,
+    simhash_near_dup_pairs,
 )
 from data_pipelines_snowflake_procedures_spark.operators.profile import ident
 from data_pipelines_snowflake_procedures_spark.operators.text import (
@@ -186,3 +193,33 @@ def test_prepare_corpus_chunk_count_matches_chunks(spark, chunk_tokens, overlap)
     assert _rows(chunk_documents(plain, chunk_tokens=chunk_tokens, overlap=overlap)) == _rows(
         chunk_documents(odd, text_col=ODD_TEXT, id_col=ODD_ID, chunk_tokens=chunk_tokens, overlap=overlap)
     )
+
+
+def test_split_and_dedup_operators_quote_odd_names(spark):
+    """The stratified split and the span, SimHash and embedding dedup
+    operators give the same rows on odd column names as on plain ones."""
+    plain, _ = _edge_frames(spark)
+    plain = plain.withColumn("other", F.expr("CAST(doc_id % 3 AS STRING)"))
+    odd = plain.toDF(ODD_ID, ODD_TEXT, ODD_OTHER)
+    names = dict(text_col=ODD_TEXT, id_col=ODD_ID)
+    split = stratified_split(odd, id_col=ODD_ID, strata_col=ODD_OTHER)
+    assert split.columns == [ODD_ID, ODD_TEXT, ODD_OTHER, "split"]
+    assert _rows(split) == _rows(stratified_split(plain, strata_col="other"))
+    for op, kw in (
+        (dup_span_profile, dict(n=2)),
+        (dup_span_dedup, dict(n=2)),
+        (simhash, {}),
+        (simhash_near_dup_pairs, dict(max_hamming=3)),
+    ):
+        got = op(odd, **names, **kw)
+        assert _rows(got) == _rows(op(plain, **kw)), op.__name__
+    assert (7, 8, 0) in _rows(simhash_near_dup_pairs(odd, **names, max_hamming=3))
+    dims = 4
+    vectors = [(i, [float((i * 7 + d) % 5) + (i % 2) * 1e-3 for d in range(dims)]) for i in range(1, 9)]
+    plain = spark.createDataFrame(vectors, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    odd = plain.toDF(ODD_ID, ODD_TEXT)
+    names = dict(emb_col=ODD_TEXT, id_col=ODD_ID)
+    pairs = _rows(embedding_near_dup_pairs(odd, **names))
+    assert pairs and pairs == _rows(embedding_near_dup_pairs(plain))
+    blocked = embedding_near_dup_blocked(odd, **names, n_planes=2, dim=dims)
+    assert _rows(blocked) == _rows(embedding_near_dup_blocked(plain, n_planes=2, dim=dims))

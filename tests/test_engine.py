@@ -70,3 +70,32 @@ def test_ddl_insert_select_chain(spark, tmp_path):
     assert rep["details"][2]["rows"][0]["n"] == 2
     # DDL/DML statements carry no rows payload
     assert "rows" not in rep["details"][0]
+
+
+def test_no_preview_of_a_table_the_batch_dropped(spark):
+    """A table the batch dropped is not previewed (the query would fail
+    analysis); one it dropped and then created again is."""
+    import shutil
+
+    for t in ("engine_drop_t", "engine_recreate_t"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
+    register_views(spark, SF_SMOKE_DIR)
+    rep = execute_sql_batch(
+        spark,
+        """
+        DROP TABLE IF EXISTS engine_drop_t;
+        CREATE TABLE engine_drop_t USING parquet AS SELECT r_regionkey FROM region;
+        SELECT count(*) AS n FROM engine_drop_t;
+        DROP TABLE engine_drop_t;
+        DROP TABLE IF EXISTS engine_recreate_t;
+        CREATE TABLE engine_recreate_t USING parquet AS SELECT n_nationkey FROM nation;
+        SELECT count(*) AS n FROM nation;
+        """,
+    )
+    assert rep["status"] == "SUCCESS", rep
+    assert rep["details"][2]["rows"][0]["n"] == 5
+    previews = rep["table_previews"]
+    assert set(previews) == {"region", "engine_recreate_t", "nation"}
+    assert all(isinstance(rows, list) and len(rows) == 5 for rows in previews.values())
+    spark.sql("DROP TABLE engine_recreate_t")

@@ -53,6 +53,10 @@ assert spark.conf.get("spark.sql.parquet.compression.codec") == codec
 codecs = chunk_codecs(spark.table("vanilla_pii_MASKED").inputFiles())
 assert codecs == {codec.upper()}, (codec, codecs)
 print(f"codec:{codec}", flush=True)
+
+# ... and Spark's own codegen cache size (unset: the default of 100)
+assert spark.sparkContext.getConf().get("spark.sql.codegen.cache.maxEntries") is None
+print(f"codegen_cache:{spark.conf.get('spark.sql.codegen.cache.maxEntries')}", flush=True)
 spark.stop()
 """
 
@@ -190,3 +194,4 @@ def test_registry_runs_under_vanilla_session(tmp_path):
     assert "events_rollup_type_day:" in proc.stdout
     assert "pricing_summary:" in proc.stdout
     assert "codec:snappy" in proc.stdout  # stock Spark default, not ours
+    assert "codegen_cache:100" in proc.stdout
