@@ -28,11 +28,6 @@ TABLE_NAME_RE = re.compile(
     re.IGNORECASE,
 )
 
-#: ``DROP TABLE [IF EXISTS] name``; group 1 is the dropped table.
-DROP_TABLE_RE = re.compile(
-    r"\s*drop\s+table\s+(?:if\s+exists\s+)?([a-zA-Z0-9_\.]+)", re.IGNORECASE
-)
-
 _DDL_KEYWORDS = ("create", "drop", "alter", "truncate")
 
 
@@ -169,12 +164,6 @@ def extract_table_names(sql: str, limit: int = 5) -> list[str]:
         if len(seen) >= limit:
             break
     return seen
-
-
-def dropped_table(sql: str) -> str | None:
-    """The table a ``DROP TABLE`` statement drops, else ``None``."""
-    match = DROP_TABLE_RE.match(sql)
-    return match.group(1).rstrip(".") if match else None
 
 
 def is_ddl(sql: str) -> bool:

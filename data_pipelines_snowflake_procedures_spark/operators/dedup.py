@@ -1165,6 +1165,7 @@ def split_oversized_cells(
 
     out = assigned
     spark = assigned.sparkSession
+    cell_c, id_c, emb_c = (F.col(ident(c)) for c in (cluster_col, id_col, emb_col))
     # With unpersist_input=True the caller hands over responsibility
     # for ``assigned``'s cache: the first split round releases it once
     # the round's own persisted union materializes (if no cell needs a
@@ -1178,31 +1179,31 @@ def split_oversized_cells(
     next_label: int | None = None
     for _ in range(max_depth):
         sizes = (
-            out.groupBy(cluster_col)
+            out.groupBy(cell_c)
             .agg(F.count("*").alias("n"))
             .filter(F.col("n") > max_cell_size)
-            .orderBy(cluster_col)
+            .orderBy(cell_c)
             .collect()
         )
         if not sizes:
             break
         if next_label is None:
             next_label = (
-                out.agg(F.max(F.col(cluster_col)).alias("m")).collect()[0]["m"]
+                out.agg(F.max(cell_c).alias("m")).collect()[0]["m"]
                 or 0
             ) + 1
         big_ids = [r[cluster_col] for r in sizes]
-        keep = out.filter(~F.col(cluster_col).isin(big_ids))
-        big = out.filter(F.col(cluster_col).isin(big_ids))
+        keep = out.filter(~cell_c.isin(big_ids))
+        big = out.filter(cell_c.isin(big_ids))
 
         # grouped seeding: the k lowest-id rows of EVERY oversized cell
         # in one window pass — the same rows each per-cell
         # ``orderBy(id).limit(k)`` used to pick
-        w = Window.partitionBy(cluster_col).orderBy(id_col)
+        w = Window.partitionBy(cell_c).orderBy(id_c)
         seed_rows = (
             big.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
-            .select(cluster_col, "__rn", emb_col)
+            .select(cell_c, "__rn", emb_c)
             .collect()
         )
         cents: dict = {cid: [] for cid in big_ids}
@@ -1226,15 +1227,15 @@ def split_oversized_cells(
                 schema=cmat_schema,
             )
 
-        dists = _sq_dists_to_matrix(F.col(emb_col), "__km_matrix")
+        dists = _sq_dists_to_matrix(emb_c, "__km_matrix")
         argmin = (F.array_position(dists, F.array_min(dists)) - 1).cast("long")
 
         for _i in range(iters):  # grouped Lloyd update, all cells at once
             means = (
                 big.join(F.broadcast(cmat_df({})), cluster_col)
                 .withColumn("__cl", argmin)
-                .select(cluster_col, "__cl", F.posexplode(F.col(emb_col)))
-                .groupBy(cluster_col, "__cl", "pos")
+                .select(cell_c, "__cl", F.posexplode(emb_c))
+                .groupBy(cell_c, "__cl", "pos")
                 .agg(F.round(F.avg(F.col("col").cast("double")), 6).alias("m"))
                 .collect()
             )
@@ -1259,7 +1260,7 @@ def split_oversized_cells(
             .withColumn(
                 cluster_col, (F.col("__label_base") + F.col("__cl")).cast("long")
             )
-            .select(*out.columns)
+            .select(*(F.col(ident(c)) for c in out.columns))
         )
         out = keep.unionByName(split).persist(StorageLevel.MEMORY_AND_DISK)
         # Materialize the new round, then release the prior round's cached

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .dedup import dot_product, norm
+from .profile import ident
 
 
 def srp_hyperplanes(n_planes: int, dim: int, seed: str = "srp") -> list[list[int]]:
@@ -452,8 +453,14 @@ def _kmeans_assign_numpy(
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     mat = [[float(x) for x in c] for c in centroids]
+    # mapInPandas parses each input column's name, so the input rides
+    # under positional names and an odd caller name (``a.b``, ``c`d``)
+    # never reaches the parser; the output takes the names back.
+    names = df.columns
+    emb_key = f"_{names.index(emb_col)}"
+    flat = df.toDF(*(f"_{i}" for i in range(len(names))))
     schema = StructType(
-        list(df.schema.fields)
+        list(flat.schema.fields)
         + [
             StructField(cluster_col, LongType()),
             StructField(dist_col, DoubleType()),
@@ -468,7 +475,7 @@ def _kmeans_assign_numpy(
                 pdf[dist_col] = np.array([], dtype="float64")
                 yield pdf
                 continue
-            X = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf[emb_key].to_numpy()).astype(np.float64)
             # Per-dimension index-order accumulation from 0.0 — the
             # exact IEEE op sequence of the native zip_with fold, so
             # since r10 this kernel is BIT-IDENTICAL to the JVM
@@ -485,7 +492,7 @@ def _kmeans_assign_numpy(
             out[dist_col] = d2[np.arange(len(cl)), cl]
             yield out
 
-    return df.mapInPandas(assign, schema)
+    return flat.mapInPandas(assign, schema).toDF(*names, cluster_col, dist_col)
 
 
 def kmeans_assign_df(
@@ -510,7 +517,7 @@ def kmeans_assign_df(
             df, centroids, emb_col, cluster_col, dist_col
         )
     mat = _matrix_df(df.sparkSession, centroids, "__km_matrix")
-    dists = _sq_dists_to_matrix(F.col(emb_col), "__km_matrix")
+    dists = _sq_dists_to_matrix(F.col(ident(emb_col)), "__km_matrix")
     return (
         df.crossJoin(F.broadcast(mat))
         .withColumn(
@@ -540,10 +547,11 @@ def kmeans_fit(
     # the (id, embedding) projection across iterations — the same
     # handlePersistence MLlib's KMeans applies. MEMORY_AND_DISK: spills
     # instead of recomputing from source at 100 TB.
-    base = df.select(id_col, emb_col).persist(StorageLevel.MEMORY_AND_DISK)
+    id_c, emb_c = F.col(ident(id_col)), F.col(ident(emb_col))
+    base = df.select(id_c, emb_c).persist(StorageLevel.MEMORY_AND_DISK)
     # k lowest-id vectors seed the centroids (NOT "id < k": ids need not
     # be contiguous — e.g. corpora with planted/offset id spaces).
-    seed_rows = base.orderBy(id_col).limit(k).select(emb_col).collect()
+    seed_rows = base.orderBy(id_c).limit(k).select(emb_c).collect()
     cents = [[float(x) for x in r[emb_col]] for r in seed_rows]
     for _ in range(iters):
         # fit iterations always assign via the Arrow numpy kernel
@@ -553,7 +561,7 @@ def kmeans_fit(
         # dominant per-(point,centroid) JVM lambda cost at scale
         means = (
             _kmeans_assign_numpy(base, cents, emb_col, "__cl", "__dist")
-            .select("__cl", F.posexplode(F.col(emb_col)))
+            .select("__cl", F.posexplode(emb_c))
             .groupBy("__cl", "pos")
             .agg(F.round(F.avg(F.col("col").cast("double")), round_decimals).alias("m"))
             .collect()

@@ -15,8 +15,9 @@ Spark-first notes:
   which cannot work at 100 TB.
 * DDL/DML statements execute eagerly with no row transfer.
 * Previews are ``LIMIT``-bounded scans; on parquet these read one file
-  split, not the table. A table the batch dropped (and did not create
-  again) is not previewed: the query would only fail analysis.
+  split, not the table. A name the catalog does not hold when the batch
+  ends (a table the batch dropped) is not previewed: the query would
+  only fail analysis.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from ..functions.sqltools import dropped_table, extract_table_names, split_statements
+from ..functions.sqltools import extract_table_names, split_statements
 
 AGENT_NAME = "ExecutionEngineAgent"
 
@@ -68,7 +69,6 @@ def execute_sql_batch(
     statements = split_statements(sql_code)
     details: list[dict[str, Any]] = []
     preview_tables: list[str] = []
-    dropped: set[str] = set()  # lower-cased names gone at preview time
     successful = failed = 0
 
     for idx, stmt in enumerate(statements, start=1):
@@ -92,16 +92,9 @@ def execute_sql_batch(
             entry["status"] = "SUCCESS"
             successful += 1
             if preview:
-                names = extract_table_names(stmt, PREVIEW_TABLE_CAP)
-                for t in names:
+                for t in extract_table_names(stmt, PREVIEW_TABLE_CAP):
                     if t.lower() not in (p.lower() for p in preview_tables):
                         preview_tables.append(t)
-                gone = dropped_table(stmt)
-                if gone:
-                    dropped.add(gone.lower())
-                else:
-                    # a statement that succeeded on the name made it exist again
-                    dropped.difference_update(t.lower() for t in names)
         except Exception as exc:  # noqa: BLE001 — per-statement isolation
             entry["status"] = "FAILED"
             entry["error"] = str(exc)
@@ -111,9 +104,13 @@ def execute_sql_batch(
 
     previews: dict[str, Any] = {}
     if preview:
-        kept = [t for t in preview_tables if t.lower() not in dropped]
-        for t in kept[:PREVIEW_TABLE_CAP]:
+        for t in preview_tables:
+            if len(previews) == PREVIEW_TABLE_CAP:
+                break
             try:
+                # a catalog lookup, no job: skips what the batch dropped
+                if not spark.catalog.tableExists(t):
+                    continue
                 rows = spark.sql(
                     f"SELECT * FROM {t} LIMIT {PREVIEW_ROWS}"  # noqa: S608
                 ).collect()

@@ -31,9 +31,9 @@ each call evicted the classes the next one needed: on the benchmark's
 agent inputs (seed 502) the second cycle recompiled 148 classes, a
 file-DQ aggregate costing 55-111 ms of Janino time, and the fresh
 bytecode then ran interpreted until HotSpot compiled it again. With
-:data:`CODEGEN_CACHE_ENTRIES` the same cycle compiles 23 (14 of them
-SQL-batch classes whose per-cycle literals are inlined into the
-generated source). The corpus pass needs 68 classes and compiled none
+:data:`CODEGEN_CACHE_ENTRIES` a repeat cycle compiles about 20, most of
+them SQL-batch classes whose per-cycle literals are inlined into the
+generated source. The corpus pass needs 68 classes and compiled none
 on a repeat pass under either cap.
 
 At cluster scale the same settings apply unchanged except
@@ -67,11 +67,16 @@ TESTDATA_TABLES = (
 
 #: Entries in Spark's JVM-wide cache of compiled generated classes
 #: (``spark.sql.codegen.cache.maxEntries``, default 100). One agent
-#: cycle needs about 150 distinct classes, and its SQL batch adds about
-#: 14 new ones per cycle (literals are inlined into generated source);
-#: 1000 keeps that working set cached across dozens of cycles before
-#: the least recently used classes are evicted.
-CODEGEN_CACHE_ENTRIES = 1000
+#: cycle uses about 150 distinct classes; 256 holds them with about 100
+#: to spare. Its SQL batch also compiles about 14 one-off classes per
+#: cycle (literals are inlined into generated source); those are used
+#: once, so they are what least-recently-used eviction drops once the
+#: cache is full, and they bound the cache's extra memory at about 100
+#: classes (~0.12 MB each). Over a 360 s agent run (73 cycles, 4-core
+#: VM) the first cycle compiled 150 classes and every later one 16-23,
+#: with no rise after the one-off classes filled the cache around
+#: cycle 8.
+CODEGEN_CACHE_ENTRIES = 256
 
 #: Python-worker daemon with numpy/pandas/pyarrow preloaded (pydaemon.py).
 DAEMON_MODULE = "data_pipelines_snowflake_procedures_spark.pydaemon"
@@ -100,8 +105,8 @@ def get_spark(
     The codegen cache holds :data:`CODEGEN_CACHE_ENTRIES` compiled
     classes instead of Spark's 100 (module docstring: one agent cycle
     needs about 150, so the default evicted them every cycle and the
-    cycle recompiled 148 classes; now 23). A session the caller built
-    keeps its own cap, and so does any session in a JVM that has
+    cycle recompiled 148 classes; now about 20). A session the caller
+    built keeps its own cap, and so does any session in a JVM that has
     already generated code: Spark sizes the cache once per JVM.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))

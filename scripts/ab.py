@@ -1,16 +1,15 @@
 """Paired A/B runs of the benchmark: a parent commit against this checkout.
 
     python3 scripts/ab.py --parent HEAD~1 --seeds 600-609
-    python3 scripts/ab.py --parent main --seeds 600-603 --workloads agent_session
 
 Run from the repository root. The parent ref's committed files are
 extracted (``git archive``) into a fresh directory, so the parent side
 runs exactly what the commit holds; the change side is this checkout.
-For every seed and workload the script runs ``BENCHMARK.json``'s
-command (its ``run_seconds``, ``--trace 0``) once in each checkout,
-one after the other (the parent first on even seeds, the change first
-on odd ones), so host load falls on both sides alike. Nothing else is
-started while a run is going.
+For every seed and every workload in ``BENCHMARK.json`` the script
+runs its command (its ``run_seconds``, ``--trace 0``) once in each
+checkout, one after the other (the parent first on even seeds, the
+change first on odd ones), so host load falls on both sides alike.
+Nothing else is started while a run is going.
 
 Each run's JSON line and its median CPU ms per call kind are appended
 to ``<out>/runs.jsonl`` as they finish. At the end, for each workload
@@ -127,13 +126,12 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="git ref of the parent side")
     ap.add_argument("--seeds", required=True, help="e.g. 600-609 or 600,601")
-    ap.add_argument("--workloads", nargs="*", help="default: every workload in BENCHMARK.json")
     ap.add_argument("--out", help="directory for the parent checkout and runs.jsonl (default: a new temporary one)")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    workloads = args.workloads or [w["name"] for w in bench["workloads"]]
+    workloads = [w["name"] for w in bench["workloads"]]
     out_dir = args.out or tempfile.mkdtemp(prefix="ab-")
     os.makedirs(out_dir, exist_ok=True)
     parent = os.path.join(out_dir, "parent")

@@ -28,11 +28,13 @@ from data_pipelines_snowflake_procedures_spark.operators.dedup import (
     dup_span_dedup,
     dup_span_profile,
     embedding_near_dup_blocked,
+    embedding_near_dup_kmeans,
     embedding_near_dup_pairs,
     lsh_bucket_stats,
     minhash_lsh_pairs,
     simhash,
     simhash_near_dup_pairs,
+    split_oversized_cells,
 )
 from data_pipelines_snowflake_procedures_spark.operators.profile import ident
 from data_pipelines_snowflake_procedures_spark.operators.text import (
@@ -196,8 +198,9 @@ def test_prepare_corpus_chunk_count_matches_chunks(spark, chunk_tokens, overlap)
 
 
 def test_split_and_dedup_operators_quote_odd_names(spark):
-    """The stratified split and the span, SimHash and embedding dedup
-    operators give the same rows on odd column names as on plain ones."""
+    """The stratified split and the span, SimHash, embedding and k-means
+    dedup operators give the same rows on odd column names as on plain
+    ones."""
     plain, _ = _edge_frames(spark)
     plain = plain.withColumn("other", F.expr("CAST(doc_id % 3 AS STRING)"))
     odd = plain.toDF(ODD_ID, ODD_TEXT, ODD_OTHER)
@@ -223,3 +226,11 @@ def test_split_and_dedup_operators_quote_odd_names(spark):
     assert pairs and pairs == _rows(embedding_near_dup_pairs(plain))
     blocked = embedding_near_dup_blocked(odd, **names, n_planes=2, dim=dims)
     assert _rows(blocked) == _rows(embedding_near_dup_blocked(plain, n_planes=2, dim=dims))
+    kmeans = embedding_near_dup_kmeans(odd, **names, k=2, max_cell_size=3)
+    assert _rows(kmeans) == _rows(embedding_near_dup_kmeans(plain, k=2, max_cell_size=3))
+    one_cell = plain.withColumn("cluster", F.lit(0).cast("long"))
+    cells = split_oversized_cells(
+        one_cell.toDF(ODD_ID, ODD_OTHER, ODD_TEXT), 3, k=2, emb_col=ODD_OTHER, id_col=ODD_ID, cluster_col=ODD_TEXT
+    )
+    assert cells.columns == [ODD_ID, ODD_OTHER, ODD_TEXT]
+    assert _rows(cells) == _rows(split_oversized_cells(one_cell, 3, k=2, emb_col="embedding", id_col="vec_id"))

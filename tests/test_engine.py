@@ -73,13 +73,15 @@ def test_ddl_insert_select_chain(spark, tmp_path):
 
 
 def test_no_preview_of_a_table_the_batch_dropped(spark):
-    """A table the batch dropped is not previewed (the query would fail
-    analysis); one it dropped and then created again is."""
+    """A table the batch dropped, or renamed away, is not previewed (the
+    query would fail analysis). A name the batch dropped and brought back,
+    by a view or by a rename, is."""
     import shutil
 
-    for t in ("engine_drop_t", "engine_recreate_t"):
+    for t in ("engine_drop_t", "engine_src_t", "engine_renamed_t"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
+    spark.sql("DROP VIEW IF EXISTS engine_view_t")
     register_views(spark, SF_SMOKE_DIR)
     rep = execute_sql_batch(
         spark,
@@ -88,14 +90,17 @@ def test_no_preview_of_a_table_the_batch_dropped(spark):
         CREATE TABLE engine_drop_t USING parquet AS SELECT r_regionkey FROM region;
         SELECT count(*) AS n FROM engine_drop_t;
         DROP TABLE engine_drop_t;
-        DROP TABLE IF EXISTS engine_recreate_t;
-        CREATE TABLE engine_recreate_t USING parquet AS SELECT n_nationkey FROM nation;
-        SELECT count(*) AS n FROM nation;
+        DROP TABLE IF EXISTS engine_view_t;
+        CREATE TEMPORARY VIEW engine_view_t AS SELECT n_nationkey FROM nation;
+        DROP TABLE IF EXISTS engine_renamed_t;
+        CREATE TABLE engine_src_t USING parquet AS SELECT r_name FROM region;
+        ALTER TABLE engine_src_t RENAME TO engine_renamed_t;
         """,
     )
     assert rep["status"] == "SUCCESS", rep
     assert rep["details"][2]["rows"][0]["n"] == 5
     previews = rep["table_previews"]
-    assert set(previews) == {"region", "engine_recreate_t", "nation"}
+    assert set(previews) == {"region", "engine_view_t", "nation", "engine_renamed_t"}
     assert all(isinstance(rows, list) and len(rows) == 5 for rows in previews.values())
-    spark.sql("DROP TABLE engine_recreate_t")
+    spark.sql("DROP TABLE engine_renamed_t")
+    spark.sql("DROP VIEW engine_view_t")

@@ -1,5 +1,4 @@
 from data_pipelines_snowflake_procedures_spark.functions.sqltools import (
-    dropped_table,
     escape_sql_literal,
     extract_table_names,
     is_ddl,
@@ -54,10 +53,6 @@ def test_extract_table_names_dedup_and_cap():
 def test_table_names_skip_if_exists():
     assert extract_table_names("DROP TABLE IF EXISTS t1") == ["t1"]
     assert extract_table_names("create table if not exists s.t2 AS SELECT 1") == ["s.t2"]
-    assert dropped_table("  drop table if exists T3") == "T3"
-    assert dropped_table("DROP TABLE db.t4") == "db.t4"
-    assert dropped_table("DROP VIEW v") is None
-    assert dropped_table("SELECT * FROM t5") is None
 
 
 def test_is_ddl():
