@@ -1,6 +1,10 @@
 """Five-pillar data-quality rule engine (reference Q1-Q6, SURVEY.md §2.10).
 
-Two engines, mirroring the reference:
+Two engines, mirroring the reference: two rule sets, each computed from
+one profile pass (operators/profile.py). Each rule is computed once, on
+the driver from that pass's row or by the one stacked aggregate below;
+the ``*_long`` frames the registry checks are those records, not a
+second Column-expression copy of the arithmetic.
 
 * **Table engine** (``run_table_dq``) — parity with
   ``DISCOVER_AND_RUN_DQ_AUTO_RULES`` (Data_Quality_Table.sql:106-189):
@@ -9,11 +13,12 @@ Two engines, mirroring the reference:
   ratio for date-like columns, consistency hardcoded 1.0 (the
   reference's stub, kept faithfully), column score = mean of the five
   *unrounded* pillar values rounded to 3 decimals, table score = mean
-  of rounded column scores rounded to 3.
+  of rounded column scores rounded to 3. Rounding is HALF_UP
+  (``round_half_up``), as in Spark and DuckDB.
 
-* **File engine** (``*_long`` rule frames, swept by
-  sources/discovery.py ``run_file_dq_distributed``) — parity with
-  ``DQ_DISCOVERY_AND_CHECKS`` (Data_Discovery_File.sql:97-313):
+* **File engine** (:func:`file_profile` + :func:`per_value_rules`,
+  swept by sources/discovery.py ``run_file_dq_distributed``) — parity
+  with ``DQ_DISCOVERY_AND_CHECKS`` (Data_Discovery_File.sql:97-313):
   pass/fail at 0.95 thresholds, numeric z-score(>3σ) outlier accuracy,
   string rare-value (<1% frequency) accuracy, pairwise
   functional-dependency consistency. Divergences from the reference
@@ -22,20 +27,18 @@ Two engines, mirroring the reference:
   string column with no non-null value gets no rare-value record.
 
 Scale design: every full-column statistic comes from the single-pass
-profile (operators/profile.py). The z-score, rare-value and FD rules
-are all answered by one stacked two-level aggregate
-(:func:`per_value_rules`) instead of the reference's O(cols) / O(cols²)
-separate scans: each row is copied once per checked column, grouped
-by (column, value), and one global aggregate of conditional sums reads
-every rule off those groups, fed the profile's mean, stddev and
-non-null counts. The FD pair list is capped (``max_pairs``) for wide
-tables.
+profile. The z-score, rare-value and FD rules are all answered by one
+stacked two-level aggregate (:func:`per_value_rules`) instead of the
+reference's O(cols) / O(cols²) separate scans: each row is copied once
+per checked column, grouped by (column, value), and one global
+aggregate of conditional sums reads every rule off those groups, fed
+the profile's mean, stddev and non-null counts.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,8 +50,8 @@ from .profile import (
     is_numeric,
     profile_aggregates,
     profile_table,
+    round_half_up,
     sql_str,
-    stat,
 )
 
 PASS_THRESHOLD = 0.95
@@ -61,11 +64,23 @@ ZSCORE = 3.0
 # --------------------------------------------------------------------------
 
 
+#: The table engine's pillars and their rule text.
+_TABLE_RULES = {
+    "completeness": "{} should have minimal nulls",
+    "uniqueness": "{} values should be unique or diverse",
+    "validity": "{} must be within valid value ranges",
+    "accuracy": "{} values should be correct (e.g., no future dates)",
+    "consistency": "{} should align consistently with related columns",
+}
+
+
 def score_table_pillars(
-    prof: dict[str, Any], dtype_numeric: bool, dtype_datelike: bool
+    prof: dict[str, Any], dtype_numeric: bool, dtype_datelike: bool, consistency: float
 ) -> dict[str, float]:
-    """Pillar scores for one column from its profile (pure arithmetic,
-    unit-testable; mirrors Data_Quality_Table.sql:109-173)."""
+    """Unrounded pillar scores for one column from its profile (pure
+    arithmetic, unit-testable; mirrors Data_Quality_Table.sql:109-173).
+    ``consistency`` is the reference's 1.0 stub unless the caller
+    measured referential integrity."""
     completeness = 1.0 - prof["null_ratio"]
     uniqueness = prof["distinct_ratio"]
     if dtype_numeric and prof.get("numeric_stats"):
@@ -79,7 +94,6 @@ def score_table_pillars(
         accuracy = 1.0 - (prof["count_future"] / total if total > 0 else 0.0)
     else:
         accuracy = 1.0
-    consistency = 1.0
     column_score = (completeness + uniqueness + validity + accuracy + consistency) / 5
     return {
         "completeness": completeness,
@@ -127,41 +141,17 @@ def run_table_dq(
     dq_results: dict[str, Any] = {}
     for col, prof in profiling.items():
         pillars = score_table_pillars(
-            prof, is_numeric(schema[col]), is_datelike(schema[col])
+            prof,
+            is_numeric(schema[col]),
+            is_datelike(schema[col]),
+            integrity.get(col, 1.0),
         )
-        if col in integrity:
-            pillars["consistency"] = integrity[col]
-            pillars["column_score"] = (
-                pillars["completeness"]
-                + pillars["uniqueness"]
-                + pillars["validity"]
-                + pillars["accuracy"]
-                + pillars["consistency"]
-            ) / 5
         dq_results[col] = {
-            "completeness": {
-                "rule": f"{col} should have minimal nulls",
-                "score": round(pillars["completeness"], 3),
-            },
-            "uniqueness": {
-                "rule": f"{col} values should be unique or diverse",
-                "score": round(pillars["uniqueness"], 3),
-            },
-            "validity": {
-                "rule": f"{col} must be within valid value ranges",
-                "score": round(pillars["validity"], 3),
-            },
-            "accuracy": {
-                "rule": f"{col} values should be correct (e.g., no future dates)",
-                "score": round(pillars["accuracy"], 3),
-            },
-            "consistency": {
-                "rule": f"{col} should align consistently with related columns",
-                "score": round(pillars["consistency"], 3),
-            },
-            "column_score": round(pillars["column_score"], 3),
+            pillar: {"rule": text.format(col), "score": round_half_up(pillars[pillar], 3)}
+            for pillar, text in _TABLE_RULES.items()
         }
-    col_scores = [dq_results[c]["column_score"] for c in dq_results]
+        dq_results[col]["column_score"] = round_half_up(pillars["column_score"], 3)
+    col_scores = [r["column_score"] for r in dq_results.values()]
     table_score = sum(col_scores) / len(col_scores) if col_scores else 0.0
     return {
         "target_table": table_name,
@@ -175,53 +165,27 @@ def run_table_dq(
         ],
         "profiling": profiling,
         "dq_results": dq_results,
-        "table_score": round(table_score, 3),
+        "table_score": round_half_up(table_score, 3),
     }
 
 
+#: Row schema of :func:`table_dq_long`.
+_TABLE_DQ_ROWS = (
+    "column_name STRING, completeness DOUBLE, uniqueness DOUBLE, "
+    "validity DOUBLE, accuracy DOUBLE, consistency DOUBLE, column_score DOUBLE"
+)
+
+
 def table_dq_long(df: DataFrame, now: str) -> DataFrame:
-    """Table-engine pillar scores as a pure DataFrame plan: one row per
+    """:func:`run_table_dq`'s 3-decimal scores as a frame, one row per
     column ``(column_name, completeness, uniqueness, validity,
-    accuracy, consistency, column_score)``, all 3-decimal. Single-pass
-    wide aggregate exploded into per-column structs — no driver-side
-    arithmetic, so it is directly oracle-comparable."""
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    cols = df.columns
-    wide = df.selectExpr(*profile_aggregates(df, cols, now=now))
-    total = F.greatest(F.col("count_all"), F.lit(1)).cast("double")
-    structs = []
-    for c in cols:
-        completeness = 1.0 - stat(c, "count_nulls") / total
-        uniqueness = stat(c, "count_distinct") / total
-        if is_numeric(schema[c]):
-            validity = F.when(
-                F.coalesce(stat(c, "avg"), F.lit(0.0)) >= 0, F.lit(1.0)
-            ).otherwise(F.lit(0.5))
-        else:
-            validity = F.lit(1.0)
-        if is_datelike(schema[c]):
-            accuracy = F.when(
-                F.col("count_all") > 0,
-                1.0 - stat(c, "count_future") / F.col("count_all").cast("double"),
-            ).otherwise(F.lit(1.0))
-        else:
-            accuracy = F.lit(1.0)
-        consistency = F.lit(1.0)
-        column_score = (
-            completeness + uniqueness + validity + accuracy + consistency
-        ) / F.lit(5.0)
-        structs.append(
-            F.struct(
-                F.lit(c).alias("column_name"),
-                F.round(completeness, 3).alias("completeness"),
-                F.round(uniqueness, 3).alias("uniqueness"),
-                F.round(validity, 3).alias("validity"),
-                F.round(accuracy, 3).alias("accuracy"),
-                F.round(consistency, 3).alias("consistency"),
-                F.round(column_score, 3).alias("column_score"),
-            )
-        )
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    accuracy, consistency, column_score)``."""
+    results = run_table_dq(df, now=now)["dq_results"]
+    rows = [
+        (c, *(r[p]["score"] for p in _TABLE_RULES), r["column_score"])
+        for c, r in results.items()
+    ]
+    return rows_frame(df.sparkSession, rows, _TABLE_DQ_ROWS)
 
 
 # --------------------------------------------------------------------------
@@ -229,29 +193,56 @@ def table_dq_long(df: DataFrame, now: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def completeness_uniqueness_long(df: DataFrame) -> DataFrame:
-    """File-engine completeness + uniqueness rule rows
-    ``(column_name, pillar, result, status)`` — one aggregate pass
-    (Data_Discovery_File.sql:217-273 semantics, 0.95 threshold)."""
-    cols = df.columns
-    wide = df.selectExpr(*profile_aggregates(df, cols))
-    total = F.greatest(F.col("count_all"), F.lit(1)).cast("double")
-    structs = []
+class ColumnStats(NamedTuple):
+    """A column's statistics from :func:`file_profile`."""
+
+    mean: Any  # None for a non-numeric column
+    std: Any  # sample standard deviation; None for a non-numeric column
+    nonnull: int
+    unique: bool  # its non-null values are all distinct
+
+
+def file_profile(
+    df: DataFrame, cols: list[str]
+) -> tuple[int, dict[str, ColumnStats], list[dict[str, Any]]]:
+    """The file engine's profile pass, one Spark job: the frame's row
+    count, each column's :class:`ColumnStats`, and the completeness and
+    uniqueness rule records (Data_Discovery_File.sql:217-273; 0.95
+    threshold, results rounded to 6 decimals). Every full-column
+    statistic the file-engine rules read comes from here."""
+    row = df.selectExpr(*profile_aggregates(df, cols)).collect()[0].asDict()
+    count_all = int(row["count_all"])
+    total = max(count_all, 1)
+    stats: dict[str, ColumnStats] = {}
+    records: list[dict[str, Any]] = []
     for c in cols:
-        completeness = (F.col("count_all") - stat(c, "count_nulls")) / total
-        uniqueness = stat(c, "count_distinct") / total
-        for pillar, result in (("completeness", completeness), ("uniqueness", uniqueness)):
-            structs.append(
-                F.struct(
-                    F.lit(c).alias("column_name"),
-                    F.lit(pillar).alias("pillar"),
-                    F.round(result, 6).alias("result"),
-                    F.when(result >= PASS_THRESHOLD, F.lit("passed"))
-                    .otherwise(F.lit("failed"))
-                    .alias("status"),
-                )
+        nonnull = count_all - int(row[f"{c}__count_nulls"])
+        distinct = int(row[f"{c}__count_distinct"])
+        stats[c] = ColumnStats(
+            row.get(f"{c}__avg"), row.get(f"{c}__stddev"), nonnull, distinct == nonnull
+        )
+        for pillar, n in (("completeness", nonnull), ("uniqueness", distinct)):
+            records.append(
+                {
+                    "pillar": pillar,
+                    "column": c,
+                    "result": round_half_up(n / total, 6),
+                    "rule": f"{pillar.capitalize()} of {c}",
+                    "status": "passed" if n / total >= PASS_THRESHOLD else "failed",
+                }
             )
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    return count_all, stats, records
+
+
+def completeness_uniqueness_long(df: DataFrame) -> DataFrame:
+    """:func:`file_profile`'s completeness and uniqueness records as a
+    frame ``(column_name, pillar, result, status)``."""
+    records = file_profile(df, df.columns)[2]
+    return rows_frame(
+        df.sparkSession,
+        [(r["column"], r["pillar"], r["result"], r["status"]) for r in records],
+        "column_name STRING, pillar STRING, result DOUBLE, status STRING",
+    )
 
 
 #: Row schema of :func:`per_value_rules`.
@@ -406,96 +397,43 @@ def per_value_rules(
     )
 
 
-def zscore_accuracy_long(
-    df: DataFrame,
-    cols: list[str] | None = None,
-    stats: dict[str, tuple[float | None, float | None, int]] | None = None,
-) -> DataFrame:
+def zscore_accuracy_long(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Numeric accuracy ``(column_name, result, status)``: share of
     values within 3 sample-stddevs of the mean
     (Data_Discovery_File.sql:147-183), the z-score rows of
-    :func:`per_value_rules`.
-
-    ``stats`` lets a caller that already profiled the table supply
-    ``{col: (mean, std, n)}``; otherwise one aggregate job computes it.
-    """
+    :func:`per_value_rules` fed :func:`file_profile`'s statistics."""
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = cols or [c for c in df.columns if is_numeric(schema[c])]
-    if stats is None:
-        row = df.agg(
-            *[
-                agg
-                for i, c in enumerate(cols)
-                for agg in (
-                    F.avg(c).alias(f"__m{i}"),
-                    F.stddev(c).alias(f"__s{i}"),
-                    F.count(F.col(c)).alias(f"__n{i}"),
-                )
-            ]
-        ).collect()[0]
-        stats = {
-            c: (row[f"__m{i}"], row[f"__s{i}"], row[f"__n{i}"])
-            for i, c in enumerate(cols)
-        }
-    return per_value_rules(df, zscore={c: stats[c] for c in cols}).select(
-        "column_name", "result", "status"
-    )
+    stats = file_profile(df, cols)[1]
+    return per_value_rules(
+        df, zscore={c: (stats[c].mean, stats[c].std, stats[c].nonnull) for c in cols}
+    ).select("column_name", "result", "status")
 
 
 def rare_value_accuracy_long(df: DataFrame, cols: list[str]) -> DataFrame:
     """String accuracy ``(column_name, result, status)``: 1 - the share
     of non-null rows holding a value rarer than 1%
     (Data_Discovery_File.sql:185-211; pandas ``value_counts``
-    frequencies), the rare-value rows of :func:`per_value_rules`. One
-    aggregate job counts each column's non-null values first."""
-    row = df.agg(
-        *[F.count(F.col(c)).alias(f"__n{i}") for i, c in enumerate(cols)]
-    ).collect()[0]
-    return per_value_rules(
-        df, rare={c: row[f"__n{i}"] for i, c in enumerate(cols)}
-    ).select("column_name", "result", "status")
+    frequencies), the rare-value rows of :func:`per_value_rules` fed
+    :func:`file_profile`'s non-null counts."""
+    stats = file_profile(df, cols)[1]
+    return per_value_rules(df, rare={c: stats[c].nonnull for c in cols}).select(
+        "column_name", "result", "status"
+    )
 
 
-def fd_consistency_long(
-    df: DataFrame,
-    cols: list[str] | None = None,
-    max_pairs: int | None = None,
-    known_unique_cols: set[str] | None = None,
-    profile_keylike: bool = False,
-) -> DataFrame:
+def fd_consistency_long(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Pairwise functional-dependency consistency
     (Data_Discovery_File.sql:97-143): for every ordered column pair
     (c1, c2), passed iff no c1 value maps to more than one distinct
     non-null c2 value. Output ``(pair, inconsistent_keys, result,
     status)``, the FD rows of :func:`per_value_rules`: every pair in one
-    plan instead of the reference's O(cols²) scans. ``max_pairs`` caps
-    the pair list on wide tables.
-
-    **Key-like pre-filter** (SURVEY §4): a pair whose determinant is
-    unique over its non-null rows passes with certainty and costs no
-    scan work. Callers that already profiled the table pass the proven
-    set via ``known_unique_cols``; ``profile_keylike=True`` derives it
-    here with one extra count/countDistinct pass. Answers are identical
-    either way: the skip is exact, not a heuristic."""
+    plan instead of the reference's O(cols²) scans. A determinant
+    :func:`file_profile` finds unique skips its scan (SURVEY §4)."""
     cols = cols or df.columns
-    pairs = [(c1, c2) for c1 in cols for c2 in cols if c1 != c2]
-    if max_pairs is not None:
-        pairs = pairs[:max_pairs]
-    unique_cols = set(known_unique_cols or ())
-    if profile_keylike and known_unique_cols is None and pairs:
-        determinants = sorted({c1 for c1, _ in pairs})
-        prow = df.agg(
-            *[F.count(F.col(c)).alias(f"__n_{i}") for i, c in enumerate(determinants)],
-            *[
-                F.countDistinct(F.col(c)).alias(f"__d_{i}")
-                for i, c in enumerate(determinants)
-            ],
-        ).collect()[0]
-        unique_cols = {
-            c
-            for i, c in enumerate(determinants)
-            if prow[f"__n_{i}"] == prow[f"__d_{i}"]
-        }
-    return per_value_rules(df, fd_pairs=pairs, known_unique_cols=unique_cols).select(
-        F.col("column_name").alias("pair"), "inconsistent_keys", "result", "status"
-    )
+    stats = file_profile(df, cols)[1]
+    return per_value_rules(
+        df,
+        fd_pairs=[(c1, c2) for c1 in cols for c2 in cols if c1 != c2],
+        known_unique_cols={c for c, s in stats.items() if s.unique},
+    ).select(F.col("column_name").alias("pair"), "inconsistent_keys", "result", "status")

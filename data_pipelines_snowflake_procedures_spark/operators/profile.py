@@ -21,11 +21,13 @@ profiling, where ratios feed 3-decimal-rounded scores anyway.
 from __future__ import annotations
 
 import datetime as _dt
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..session import rows_frame
 
 NUMERIC_TYPES = (
     T.ByteType,
@@ -60,9 +62,12 @@ def sql_str(text: str) -> str:
     return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def stat(c: str, name: str) -> Column:
-    """Column ``<c>__<name>`` of a profile pass's row."""
-    return F.col(ident(f"{c}__{name}"))
+def round_half_up(x: float, places: int) -> float:
+    """``x`` rounded to ``places`` decimals, halves away from zero, as
+    Spark's and DuckDB's ``round`` do (Python's ``round`` rounds halves
+    to even). Every score and ratio a profile or DQ record carries is
+    rounded here."""
+    return float(Decimal(str(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP))
 
 
 def _timestamp_sql(now: _dt.datetime | str) -> str:
@@ -156,31 +161,29 @@ def profile_table(
     return out
 
 
+#: Row schema of :func:`profile_long`.
+_PROFILE_ROWS = (
+    "column_name STRING, count_all BIGINT, count_distinct BIGINT, "
+    "count_nulls BIGINT, null_ratio DOUBLE, distinct_ratio DOUBLE"
+)
+
+
 def profile_long(
     df: DataFrame, cols: list[str] | None = None, approx: bool = False
 ) -> DataFrame:
-    """Long-format profile as a pure DataFrame plan (no driver math):
-    one row per column with counts + ratios. Built as the single-pass
-    wide aggregate exploded over an array of per-column structs, so the
-    whole thing stays one Spark job and is oracle-comparable.
-    """
-    cols = cols or df.columns
-    wide = df.selectExpr(*profile_aggregates(df, cols))
-    total = F.col("count_all")
-    structs = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            total.cast("long").alias("count_all"),
-            stat(c, "count_distinct").cast("long").alias("count_distinct"),
-            stat(c, "count_nulls").cast("long").alias("count_nulls"),
-            F.round(
-                stat(c, "count_nulls") / F.greatest(total, F.lit(1)), 6
-            ).alias("null_ratio"),
-            F.round(
-                stat(c, "count_distinct") / F.greatest(total, F.lit(1)), 6
-            ).alias("distinct_ratio"),
+    """:func:`profile_table`'s counts and ratios as a frame, one row per
+    column, ratios rounded to 6 decimals (an Arrow ``LocalRelation``;
+    the profile pass is the one Spark job)."""
+    prof = profile_table(df, cols, approx=approx)
+    rows = [
+        (
+            c,
+            p["count_all"],
+            p["count_distinct"],
+            p["count_nulls"],
+            round_half_up(p["null_ratio"], 6),
+            round_half_up(p["distinct_ratio"], 6),
         )
-        for c in cols
+        for c, p in prof.items()
     ]
-    return wide.select(F.explode(F.array(*structs)).alias("p")).select("p.*")
-
+    return rows_frame(df.sparkSession, rows, _PROFILE_ROWS)

@@ -23,6 +23,7 @@ import hashlib
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
 from pyspark.sql.window import Window
 
 from .dedup import dot_product, norm
@@ -342,23 +343,6 @@ def knn_lsh(
 # ---------------------------------------------------------------------------
 
 
-def _l2sq_to_lit(emb_col: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance from an embedding column to a LITERAL
-    centroid — a pure narrow expression (stays in codegen, no join, no
-    UDF). (x-y)*(x-y) instead of pow() keeps the arithmetic identical
-    across engines."""
-    arr = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(
-            emb_col,
-            arr,
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def kmeans_assign_expr(
     emb_col: Column, centroids: list[list[float]]
 ) -> tuple[Column, Column]:
@@ -437,6 +421,65 @@ def _sq_dists_to_matrix(emb: Column, matrix_col: str) -> Column:
 NUMPY_ASSIGN_MIN_K = 32
 
 
+def _map_nearest(
+    df: DataFrame,
+    emb_cols: list[str],
+    books: list[list[list[float]]],
+    out: list[tuple[str, DataType]],
+    emit,
+) -> DataFrame:
+    """All of ``df`` plus the ``out`` columns (name, type), computed in
+    Arrow batches through ``mapInPandas`` from each column of
+    ``emb_cols`` and its nearest row of the matching matrix of
+    ``books``: the one numpy nearest-centroid kernel of k-means, PQ and
+    IVF.
+
+    Per column ``j`` a batch holds ``X`` (rows × dim, float64), the
+    squared distances ``d2`` to every row of ``books[j]`` and their
+    argmin ``cl``; ``emit(Xs, cls, d2s)`` returns the ``out`` columns'
+    values in order. Distances accumulate per dimension in index order
+    from 0.0, the exact IEEE op sequence of the native ``zip_with``
+    fold, and numpy's argmin takes the first minimum (the lowest index,
+    as ``array_position(array_min)``): codes and distances are
+    bit-identical to the JVM form.
+
+    mapInPandas parses each input column's name, so the input rides
+    under positional names and an odd caller name (``a.b``, ``c`d``)
+    never reaches the parser; the output takes the names back. The
+    kernel is nested and uses no module-level name of this package, so
+    it ships by value to workers that cannot import it."""
+    names = df.columns
+    keys = [f"_{names.index(c)}" for c in emb_cols]
+    mats = [[[float(x) for x in row] for row in b] for b in books]
+    flat = df.toDF(*(f"_{i}" for i in range(len(names))))
+    schema = StructType(
+        flat.schema.fields + [StructField(f"_o{j}", t) for j, (_, t) in enumerate(out)]
+    )
+
+    def run(batches):
+        import numpy as np
+
+        Cs = [np.asarray(m, dtype=np.float64) for m in mats]
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            Xs, cls, d2s = [], [], []
+            for key, C in zip(keys, Cs):
+                X = np.stack(pdf[key].to_numpy()).astype(np.float64)
+                d2 = np.zeros((len(X), C.shape[0]), dtype=np.float64)
+                for d in range(X.shape[1]):
+                    diff = X[:, d][:, None] - C[None, :, d]
+                    d2 += diff * diff
+                Xs.append(X)
+                cls.append(d2.argmin(axis=1))
+                d2s.append(d2)
+            for j, values in enumerate(emit(Xs, cls, d2s)):
+                pdf[f"_o{j}"] = values
+            yield pdf
+
+    return flat.mapInPandas(run, schema).toDF(*names, *(name for name, _ in out))
+
+
 def _kmeans_assign_numpy(
     df: DataFrame,
     centroids: list[list[float]],
@@ -444,55 +487,20 @@ def _kmeans_assign_numpy(
     cluster_col: str,
     dist_col: str,
 ) -> DataFrame:
-    """Arrow-batched vectorized assignment, argmin ties to the lowest
-    centroid id (numpy argmin takes the first minimum — the same
-    tie-break as the native kernel). Since r10 the distances accumulate
-    per dimension in index order, making the kernel bit-identical to
-    the native fold (see the inline comment)."""
-    import numpy as np
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    """Arrow-batched vectorized assignment (:func:`_map_nearest`),
+    bit-identical to the native fold: same distances, same lowest-id
+    tie-break, same ``dist_col`` values."""
+    from pyspark.sql.types import DoubleType, LongType
 
-    mat = [[float(x) for x in c] for c in centroids]
-    # mapInPandas parses each input column's name, so the input rides
-    # under positional names and an odd caller name (``a.b``, ``c`d``)
-    # never reaches the parser; the output takes the names back.
-    names = df.columns
-    emb_key = f"_{names.index(emb_col)}"
-    flat = df.toDF(*(f"_{i}" for i in range(len(names))))
-    schema = StructType(
-        list(flat.schema.fields)
-        + [
-            StructField(cluster_col, LongType()),
-            StructField(dist_col, DoubleType()),
-        ]
+    def emit(Xs, cls, d2s):
+        import numpy as np
+
+        (cl,), (d2,) = cls, d2s
+        return cl.astype("int64"), d2[np.arange(len(cl)), cl]
+
+    return _map_nearest(
+        df, [emb_col], [centroids], [(cluster_col, LongType()), (dist_col, DoubleType())], emit
     )
-
-    def assign(batches):
-        C = np.asarray(mat, dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[cluster_col] = np.array([], dtype="int64")
-                pdf[dist_col] = np.array([], dtype="float64")
-                yield pdf
-                continue
-            X = np.stack(pdf[emb_key].to_numpy()).astype(np.float64)
-            # Per-dimension index-order accumulation from 0.0 — the
-            # exact IEEE op sequence of the native zip_with fold, so
-            # since r10 this kernel is BIT-IDENTICAL to the JVM
-            # assignment (not merely ulp-close as the earlier
-            # |x|²−2xCᵀ+|C|² matmul form was): same distances, same
-            # first-minimum tie-break, same __dist values.
-            d2 = np.zeros((len(X), C.shape[0]), dtype=np.float64)
-            for d in range(X.shape[1]):
-                diff = X[:, d][:, None] - C[None, :, d]
-                d2 += diff * diff
-            cl = d2.argmin(axis=1)
-            out = pdf.copy()
-            out[cluster_col] = cl.astype("int64")
-            out[dist_col] = d2[np.arange(len(cl)), cl]
-            yield out
-
-    return flat.mapInPandas(assign, schema).toDF(*names, cluster_col, dist_col)
 
 
 def kmeans_assign_df(
@@ -881,38 +889,21 @@ def _pq_assign_all_numpy(
     code_prefix: str = "code_",
 ) -> DataFrame:
     """Every subspace's argmin code in one Arrow pass — the numpy twin
-    of :func:`_pq_assign_all` for fit-internal use: per-dimension
-    index-order distance accumulation (the native fold's exact IEEE op
-    sequence) and numpy's first-minimum argmin (the lowest-code
-    tie-break), so codes are bit-identical to the JVM projection."""
-    import numpy as np
-    from pyspark.sql.types import LongType, StructField, StructType
+    of :func:`_pq_assign_all` for fit-internal use: ``sub_cols[j]``
+    against book ``j`` through :func:`_map_nearest`, so codes are
+    bit-identical to the JVM projection."""
+    from pyspark.sql.types import LongType
 
-    books = [
-        np.asarray([[float(x) for x in c] for c in b], dtype=np.float64)
-        for b in codebooks
-    ]
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField(f"{code_prefix}{j}", LongType()) for j in range(len(books))]
+    def emit(Xs, cls, d2s):
+        return [cl.astype("int64") for cl in cls]
+
+    return _map_nearest(
+        df,
+        sub_cols,
+        codebooks,
+        [(f"{code_prefix}{j}", LongType()) for j in range(len(codebooks))],
+        emit,
     )
-
-    def assign(batches):
-        for pdf in batches:
-            out = pdf.copy()
-            for j, B in enumerate(books):
-                if len(pdf) == 0:
-                    out[f"{code_prefix}{j}"] = np.array([], dtype="int64")
-                    continue
-                X = np.stack(pdf[sub_cols[j]].to_numpy()).astype(np.float64)
-                d2 = np.zeros((len(X), B.shape[0]), dtype=np.float64)
-                for d in range(X.shape[1]):
-                    diff = X[:, d][:, None] - B[None, :, d]
-                    d2 += diff * diff
-                out[f"{code_prefix}{j}"] = d2.argmin(axis=1).astype("int64")
-            yield out
-
-    return df.mapInPandas(assign, schema)
 
 
 def pq_fit(
@@ -937,13 +928,14 @@ def pq_fit(
     spends its wall-clock on 48 job launches, not on data. Returns
     ``m × k × (dim/m)`` floats — driver-metadata-sized."""
     sub = dim // m
+    id_c = F.col(ident(id_col))
     slices = [
-        F.slice(F.col(emb_col), j * sub + 1, sub).alias(f"__s{j}")
+        F.slice(F.col(ident(emb_col)), j * sub + 1, sub).alias(f"__s{j}")
         for j in range(m)
     ]
-    base = df.select(id_col, *slices).persist(StorageLevel.MEMORY_AND_DISK)
+    base = df.select(id_c, *slices).persist(StorageLevel.MEMORY_AND_DISK)
     # k lowest-id rows carry every subspace's seed slice — one collect.
-    seed_rows = base.orderBy(id_col).limit(k).collect()
+    seed_rows = base.orderBy(id_c).limit(k).collect()
     books = [
         [[float(x) for x in r[f"__s{j}"]] for r in seed_rows]
         for j in range(m)
@@ -1006,7 +998,7 @@ def pq_encode(
     # the per-(point,codeword) JVM lambda cost at scale: the encode of
     # a 100k-vector corpus was ~8 s of fold time at sf1)
     slices = [
-        F.slice(F.col(emb_col), j * sub + 1, sub).alias(f"__pqs{j}")
+        F.slice(F.col(ident(emb_col)), j * sub + 1, sub).alias(f"__pqs{j}")
         for j in range(m)
     ]
     tmp = df.select("*", *slices)
@@ -1234,41 +1226,21 @@ def ivf_residuals(
     accumulation, first-minimum tie-break), and the residual is a
     per-element subtraction (no accumulation, exact either way). The
     JVM form cost ~4 s of fold time per 100k vectors at sf1."""
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, StructField, StructType,
+    from pyspark.sql.types import ArrayType, DoubleType, LongType
+
+    def emit(Xs, cls, d2s):
+        import numpy as np
+
+        (X,), (cl,) = Xs, cls
+        return cl.astype("int64"), list(X - np.asarray(centroids, dtype=np.float64)[cl])
+
+    return _map_nearest(
+        df,
+        [emb_col],
+        [centroids],
+        [(cell_col, LongType()), (res_col, ArrayType(DoubleType()))],
+        emit,
     )
-
-    C = [[float(x) for x in c] for c in centroids]
-    schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField(cell_col, LongType()),
-            StructField(res_col, ArrayType(DoubleType())),
-        ]
-    )
-
-    def assign(batches):
-        Cm = np.asarray(C, dtype=np.float64)
-        for pdf in batches:
-            out = pdf.copy()
-            if len(pdf) == 0:
-                out[cell_col] = np.array([], dtype="int64")
-                out[res_col] = []
-                yield out
-                continue
-            X = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-            d2 = np.zeros((len(X), Cm.shape[0]), dtype=np.float64)
-            for d in range(X.shape[1]):
-                diff = X[:, d][:, None] - Cm[None, :, d]
-                d2 += diff * diff
-            cl = d2.argmin(axis=1)
-            R = X - Cm[cl]
-            out[cell_col] = cl.astype("int64")
-            out[res_col] = list(R)
-            yield out
-
-    return df.mapInPandas(assign, schema)
 
 
 def ivfpq_index(

@@ -311,8 +311,9 @@ def _profile_oracle(table: str, cols: list[str]) -> str:
 @register(
     "profile_customer",
     _profile_oracle("customer", _PROFILE_CUSTOMER_COLS),
-    doc="Q7 column profile of customer as one single-pass wide aggregate "
-    "exploded to long format (vs the reference's query-per-column at "
+    doc="Q7 column profile of customer: profile_table's counts and "
+    "6-decimal ratios, one row per column, from one single-pass wide "
+    "aggregate (vs the reference's query-per-column at "
     "Data_Quality_Table.sql:70-77).",
 )
 def profile_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,8 +374,8 @@ def _table_dq_oracle(table: str, cols: list[tuple[str, str]], now: str) -> str:
     _table_dq_oracle("orders", _ORDERS_COLS, _DQ_NOW),
     doc="Table-engine five-pillar DQ scores (Data_Quality_Table.sql:106-173) "
     "for orders, future-date accuracy pinned to 1995-06-01 so the rule is "
-    "non-trivial on TPC-H-dated data. Single-pass; consistency is the "
-    "reference's 1.0 stub.",
+    "non-trivial on TPC-H-dated data: run_table_dq's own scores, one row "
+    "per column. Single-pass; consistency is the reference's 1.0 stub.",
 )
 def dq_table_scores_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dq import table_dq_long
@@ -427,7 +428,8 @@ def _cu_oracle(table: str, cols: list[str]) -> str:
     "dq_file_completeness_uniqueness_customer",
     _cu_oracle("customer", _PROFILE_CUSTOMER_COLS),
     doc="File-engine completeness + uniqueness rules with 0.95 pass/fail "
-    "status (Data_Discovery_File.sql:217-273), one aggregate pass.",
+    "status (Data_Discovery_File.sql:217-273): the records of the file "
+    "sweep's own profile pass.",
 )
 def dq_file_cu_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dq import completeness_uniqueness_long
@@ -465,8 +467,8 @@ def _zscore_oracle(table: str, cols: list[str]) -> str:
     "dq_zscore_accuracy_supplier",
     _zscore_oracle("supplier", _SUPPLIER_NUMERIC),
     doc="File-engine numeric accuracy: values beyond 3 sample-stddevs "
-    "(Data_Discovery_File.sql:147-183). Two aggregate passes (stats, then "
-    "outlier counts) instead of per-column scans.",
+    "(Data_Discovery_File.sql:147-183). Two aggregate passes (the file "
+    "sweep's profile, then outlier counts) instead of per-column scans.",
 )
 def dq_zscore_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dq import zscore_accuracy_long

@@ -182,17 +182,15 @@ def file_metadata(path: str, df: DataFrame, row_count: int | None = None) -> dic
     }
 
 
-def run_file_dq_distributed(
-    df: DataFrame, max_pairs: int | None = None
-) -> tuple[list[dict[str, Any]], int]:
+def run_file_dq_distributed(df: DataFrame) -> tuple[list[dict[str, Any]], int]:
     """Five-pillar DQ sweep on a Spark DataFrame, returning the
     reference's flat rule records (Data_Discovery_File.sql:217-313) and
     the frame's row count, in two Spark actions whatever the column
     count:
 
-    1. one fused profiling pass: null and distinct counts for
-       completeness/uniqueness, plus each numeric column's mean and
-       sample stddev;
+    1. one fused profiling pass (operators/dq.py ``file_profile``):
+       null and distinct counts for completeness/uniqueness, plus each
+       numeric column's mean and sample stddev;
     2. one stacked two-level aggregate (operators/dq.py
        ``per_value_rules``) for the z-score, rare-value and
        functional-dependency rules, fed the profile's mean, stddev,
@@ -203,38 +201,13 @@ def run_file_dq_distributed(
     palette (VARIANT → failed, mirroring the reference's "values must
     match the inferred type" intent on data Spark could not type).
     """
-    from decimal import ROUND_HALF_UP, Decimal
+    from ..operators.dq import file_profile, per_value_rules
+    from ..operators.profile import is_numeric
 
-    from ..operators.dq import PASS_THRESHOLD, per_value_rules
-    from ..operators.profile import is_numeric, profile_aggregates
-
-    def _round6(x: float) -> float:
-        # Spark's round() is HALF_UP; Python's round() is banker's —
-        # match Spark so driver-side records agree with the engines.
-        return float(Decimal(str(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
-    results: list[dict[str, Any]] = []
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = df.columns
-
     # Action 1 (fused): null/distinct counts + numeric mean/std in ONE pass.
-    prow = df.selectExpr(*profile_aggregates(df, cols)).collect()[0]
-    count_all = int(prow["count_all"])
-    total = float(max(count_all, 1))
-    nonnull = {c: count_all - int(prow[f"{c}__count_nulls"]) for c in cols}
-    for c in cols:
-        completeness = nonnull[c] / total
-        uniqueness = prow[f"{c}__count_distinct"] / total
-        for pillar, result in (("completeness", completeness), ("uniqueness", uniqueness)):
-            results.append(
-                {
-                    "pillar": pillar,
-                    "column": c,
-                    "result": _round6(result),
-                    "rule": f"{pillar.capitalize()} of {c}",
-                    "status": "passed" if result >= PASS_THRESHOLD else "failed",
-                }
-            )
+    count_all, stats, results = file_profile(df, cols)
     for col, dtype in schema.items():
         valid = map_type_to_palette(dtype) != "VARIANT"
         results.append(
@@ -246,20 +219,15 @@ def run_file_dq_distributed(
                 "status": "passed" if valid else "failed",
             }
         )
-    pairs = [(c1, c2) for c1 in cols for c2 in cols if c1 != c2]
     # Action 2: every per-value rule from one stacked aggregate.
     rules = per_value_rules(
         df,
         zscore={
-            c: (prow[f"{c}__avg"], prow[f"{c}__stddev"], nonnull[c])
-            for c, t in schema.items()
-            if is_numeric(t)
+            c: (s.mean, s.std, s.nonnull) for c, s in stats.items() if is_numeric(schema[c])
         },
-        rare={c: nonnull[c] for c, t in schema.items() if isinstance(t, T.StringType)},
-        fd_pairs=pairs[:max_pairs],
-        known_unique_cols={
-            c for c in cols if int(prow[f"{c}__count_distinct"]) == nonnull[c]
-        },
+        rare={c: s.nonnull for c, s in stats.items() if isinstance(schema[c], T.StringType)},
+        fd_pairs=[(c1, c2) for c1 in cols for c2 in cols if c1 != c2],
+        known_unique_cols={c for c, s in stats.items() if s.unique},
     ).collect()
     rule_text = {
         "zscore": ("accuracy", "Outlier check on {} (z-score > 3)"),
@@ -294,10 +262,7 @@ def summarize_rules(results: list[dict[str, Any]]) -> dict[str, Any]:
 
 
 def discover_and_run_dq(
-    spark: SparkSession,
-    file_path: str,
-    fmt: str | None = None,
-    max_pairs: int | None = None,
+    spark: SparkSession, file_path: str, fmt: str | None = None
 ) -> dict[str, Any]:
     """End-to-end `DQ_DISCOVERY_AND_CHECKS` parity
     (Data_Discovery_File.sql:353-433): read → metadata → DQ sweep →
@@ -305,7 +270,7 @@ def discover_and_run_dq(
     start = _dt.datetime.now(_dt.timezone.utc)
     try:
         df = read_any(spark, file_path, fmt=fmt)
-        rules, row_count = run_file_dq_distributed(df, max_pairs=max_pairs)
+        rules, row_count = run_file_dq_distributed(df)
         definition = file_metadata(file_path, df, row_count=row_count)
         end = _dt.datetime.now(_dt.timezone.utc)
         return {

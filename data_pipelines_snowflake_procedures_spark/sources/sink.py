@@ -1,5 +1,6 @@
-"""Table sinks for the 100 TB layout: partitioned/bucketed parquet
-writes and compaction guidance.
+"""Table sinks for the 100 TB layout: partitioned parquet writes, a
+Morton (Z-order) key for clustering, a storage report, and the atomic
+stage-and-swap commit.
 
 The reference's only sinks were whole-table overwrites and per-row
 INSERTs (SURVEY.md §2.1 S9/S11). At scale, layout is the difference
@@ -9,10 +10,6 @@ between scanning 100 TB and scanning one partition:
   predicates columns (date, event_type, source) → partition pruning
   eliminates directories before any I/O (visible as
   ``PartitionFilters`` in the scan node).
-* **Bucketing** (``bucketBy`` on join keys) pre-shuffles data at write
-  time: bucketed joins/aggs on the bucket key skip the exchange
-  entirely. Requires ``saveAsTable`` (bucket metadata lives in the
-  catalog).
 * **File sizing**: aim for 128 MB - 1 GB files; ``repartition`` on the
   partition columns before writing prevents the small-files problem
   (one file per task per partition).
@@ -23,13 +20,13 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def commit_swap(staging: str, target: str) -> None:
     """Atomically promote a fully-written staging directory to
     ``target`` (the parquet stand-in for a transactional MERGE/REPLACE,
-    used by compaction and the streaming SCD1 upsert).
+    used by the streaming SCD1 upsert and its state store).
 
     Refuses to promote unless the staging write finished (Spark's
     ``_SUCCESS`` marker). The swap is two atomic directory renames —
@@ -91,23 +88,6 @@ def write_partitioned(
     out.write.mode(mode).partitionBy(*partition_by).parquet(path)
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_by: Sequence[str],
-    n_buckets: int,
-    sort_by: Sequence[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a bucketed (and optionally sorted) managed table: joins
-    and aggregations on the bucket key read co-located data with no
-    exchange."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_by)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.saveAsTable(table)
-
-
 def table_storage_report(path: str) -> dict:
     """Storage-layout report from parquet footers (no data read):
     file count, bytes, rows, row groups, and the small-files flag that
@@ -142,18 +122,6 @@ def table_storage_report(path: str) -> dict:
     }
 
 
-def scan_is_pruned(spark: SparkSession, df: DataFrame, partition_col: str) -> bool:
-    """True when the physical plan prunes on ``partition_col`` (the
-    predicate reached PartitionFilters instead of a post-scan filter)."""
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    for line in plan.splitlines():
-        if "PartitionFilters" in line and partition_col in line:
-            return True
-    return False
-
-
 def zorder_key(cols_with_bounds: dict, bits: int = 16):
     """Morton (Z-order) key from 2+ numeric columns: each value is
     normalized to a ``bits``-bit rank within its [min, max] bounds,
@@ -186,130 +154,3 @@ def zorder_key(cols_with_bounds: dict, bits: int = 16):
                 F.shiftright(rank, bit).bitwiseAND(F.lit(1)), bit * n + d
             )
     return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    n_files: int = 16,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet clustered on the Z-order curve of ``cols``:
-    compute per-column bounds (one 1-row aggregate), range-partition on
-    the Morton key into ``n_files`` tasks, sort within partitions, and
-    write — every output file covers a tight hyper-rectangle, so
-    row-group min/max stats prune selective queries on any clustered
-    column. One extra shuffle vs a plain write; at 100 TB run it as
-    the compaction/OPTIMIZE pass, not on the ingest hot path."""
-    from pyspark.sql import functions as F
-
-    bounds_row = df.agg(
-        *[F.min(c).alias(f"{c}_min") for c in cols],
-        *[F.max(c).alias(f"{c}_max") for c in cols],
-    ).collect()[0]
-    bounds = {c: (bounds_row[f"{c}_min"], bounds_row[f"{c}_max"]) for c in cols}
-    (
-        df.withColumn("__zkey", zorder_key(bounds, bits))
-        .repartitionByRange(n_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def files_pruned_by_stats(path: str, col: str, lo, hi) -> tuple[int, int]:
-    """Data-skipping measurement: (files whose [min,max] for ``col``
-    intersects [lo, hi], total files) from parquet footers only — the
-    fraction a stats-aware reader must scan for that predicate."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    hit = total = 0
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        total += 1
-        md = pq.ParquetFile(os.path.join(path, name)).metadata
-        fmin = fmax = None
-        for rg in range(md.num_row_groups):
-            rgmd = md.row_group(rg)
-            for ci in range(rgmd.num_columns):
-                c = rgmd.column(ci)
-                if c.path_in_schema == col and c.statistics is not None:
-                    s = c.statistics
-                    fmin = s.min if fmin is None else min(fmin, s.min)
-                    fmax = s.max if fmax is None else max(fmax, s.max)
-        if fmin is None or (fmax >= lo and fmin <= hi):
-            hit += 1
-    return hit, total
-
-
-def read_with_schema_evolution(spark, paths: Sequence[str]):
-    """Read parquet written under EVOLVING schemas as one frame:
-    ``mergeSchema`` unions the footers' schemas (new columns become
-    nullable, missing values NULL) — the ingest-side contract for a
-    pipeline whose upstream adds columns over time. Schema merging
-    reads every footer (driver-side); at 100 TB of files keep
-    partition-level schema commonality or a table format (Delta/
-    Iceberg) that tracks schema centrally — this reader is the
-    raw-parquet fallback."""
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_mb: int = 128,
-    sort_within_by: Sequence[str] | None = None,
-) -> int:
-    """Small-file compaction (storage maintenance): rewrite a parquet
-    directory into ~``target_mb``-sized files — thousands of tiny
-    files cost a task per file at read time and dominate scan
-    scheduling at scale. File count derives from current on-disk
-    bytes; optional ``sort_within_by`` restores clustering (min/max
-    stats) while rewriting. Stage-and-swap like the streaming upsert:
-    never leaves the directory half-written. Returns the new file
-    count."""
-    total = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, total // (target_mb * 1024 * 1024) + 1)
-    df = spark.read.parquet(path)
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    staging = path + ".compacting"
-    out.write.mode("overwrite").parquet(staging)
-    commit_swap(staging, path)
-    return n_files
-
-
-def schema_diff(spark, before, after):
-    """Schema-level drift report between two frames (the DDL-side
-    companion of the CDC row diff): one row per column that was
-    ADDED, REMOVED, or TYPE_CHANGED, with both type renderings.
-    Nested types compare by their full simpleString (a struct field
-    change IS a type change — positional element identity is exactly
-    what parquet readers care about). Pure metadata — no data is
-    read, so the check is free to run before every ingest and gate
-    mergeSchema reads (read_with_schema_evolution) on an explicit
-    allow-list of expected changes."""
-    a = {f.name: f.dataType.simpleString() for f in before.schema.fields}
-    b = {f.name: f.dataType.simpleString() for f in after.schema.fields}
-    rows = []
-    for name in sorted(set(a) | set(b)):
-        if name not in b:
-            rows.append((name, "REMOVED", a[name], None))
-        elif name not in a:
-            rows.append((name, "ADDED", None, b[name]))
-        elif a[name] != b[name]:
-            rows.append((name, "TYPE_CHANGED", a[name], b[name]))
-    return spark.createDataFrame(
-        rows, "column STRING, status STRING, type_before STRING, type_after STRING"
-    )

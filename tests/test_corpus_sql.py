@@ -37,6 +37,10 @@ from data_pipelines_snowflake_procedures_spark.operators.dedup import (
     split_oversized_cells,
 )
 from data_pipelines_snowflake_procedures_spark.operators.profile import ident
+from data_pipelines_snowflake_procedures_spark.operators.similarity import (
+    ivf_residuals,
+    pq_fit,
+)
 from data_pipelines_snowflake_procedures_spark.operators.text import (
     detect_language,
     fingerprint,
@@ -198,9 +202,9 @@ def test_prepare_corpus_chunk_count_matches_chunks(spark, chunk_tokens, overlap)
 
 
 def test_split_and_dedup_operators_quote_odd_names(spark):
-    """The stratified split and the span, SimHash, embedding and k-means
-    dedup operators give the same rows on odd column names as on plain
-    ones."""
+    """The stratified split, the span, SimHash, embedding and k-means
+    dedup operators, the PQ codebook fit and the IVF residuals give the
+    same rows on odd column names as on plain ones."""
     plain, _ = _edge_frames(spark)
     plain = plain.withColumn("other", F.expr("CAST(doc_id % 3 AS STRING)"))
     odd = plain.toDF(ODD_ID, ODD_TEXT, ODD_OTHER)
@@ -234,3 +238,9 @@ def test_split_and_dedup_operators_quote_odd_names(spark):
     )
     assert cells.columns == [ODD_ID, ODD_OTHER, ODD_TEXT]
     assert _rows(cells) == _rows(split_oversized_cells(one_cell, 3, k=2, emb_col="embedding", id_col="vec_id"))
+    books = pq_fit(odd, m=2, k=2, dim=dims, **names)
+    assert books == pq_fit(plain, m=2, k=2, dim=dims)
+    coarse = [[0.0] * dims, [4.0] * dims]
+    residuals = ivf_residuals(odd, coarse, **names)
+    assert residuals.columns == [ODD_ID, ODD_TEXT, "cell", "remb"]
+    assert _rows(residuals) == _rows(ivf_residuals(plain, coarse))

@@ -40,7 +40,7 @@ def test_score_table_pillars_arithmetic():
         "count_future": 10,
         "numeric_stats": {"AVG_VAL": "-5.0"},
     }
-    s = score_table_pillars(prof, dtype_numeric=True, dtype_datelike=True)
+    s = score_table_pillars(prof, dtype_numeric=True, dtype_datelike=True, consistency=1.0)
     assert abs(s["completeness"] - 0.9) < 1e-12
     assert abs(s["uniqueness"] - 0.5) < 1e-12
     assert s["validity"] == 0.5  # negative average
@@ -60,6 +60,27 @@ def test_run_table_dq_report_shape(spark, sf_dir):
     # o_orderdate: some orders are after 1995-06-01 → accuracy < 1
     assert rep["dq_results"]["o_orderdate"]["accuracy"]["score"] < 1.0
     assert 0 < rep["table_score"] <= 1.0
+
+
+def test_table_dq_rounds_half_up_like_its_oracle(spark, duck):
+    """A 16-row frame with a constant string column has uniqueness
+    1/16 = 0.0625 and column score 0.8125: both are halves at 3
+    decimals. run_table_dq rounds them up, as table_dq_long's rows and
+    DuckDB's round do."""
+    from data_pipelines_snowflake_procedures_spark.operators.dq import table_dq_long
+    from data_pipelines_snowflake_procedures_spark.session import rows_frame
+
+    df = rows_frame(spark, [(i, "same") for i in range(16)], "k BIGINT, s STRING")
+    now = "1995-06-01 00:00:00"
+    s = run_table_dq(df, now=now)["dq_results"]["s"]
+    assert s["uniqueness"]["score"] == 0.063
+    assert s["column_score"] == 0.813
+    rows = {r["column_name"]: r for r in table_dq_long(df, now=now).collect()}
+    assert rows["s"]["uniqueness"] == 0.063 and rows["s"]["column_score"] == 0.813
+    assert rows["k"]["uniqueness"] == 1.0 and rows["k"]["column_score"] == 1.0
+    assert duck.execute(
+        "SELECT round(1 / 16, 3), round((1.0 + 1 / 16 + 1.0 + 1.0 + 1.0) / 5, 3)"
+    ).fetchone() == (0.063, 0.813)
 
 
 def _file_dq(spark, rows, schema):
@@ -121,6 +142,11 @@ def test_approx_profile_within_tolerance(spark, sf_dir):
     for col, ex in exact.items():
         ap = approx[col]
         assert abs(ap - ex) <= max(0.06 * ex, 2), (col, ex, ap)
+    # approx=True reaches the sketch: 100000 distinct ids are estimated,
+    # not counted
+    (ids,) = profile_long(spark.range(100000), approx=True).collect()
+    assert ids["count_distinct"] != 100000
+    assert abs(ids["count_distinct"] - 100000) <= 0.06 * 100000
 
 
 def _duckdb_file_dq(con, table, cols):
@@ -256,9 +282,9 @@ def test_file_dq_matches_duckdb(spark, duck):
 def test_fd_keylike_prefilter_skips_exactly_and_identically(spark):
     """VERDICT r3 #7: pairs whose determinant is unique are emitted as
     literal passed rows — answers bit-identical to the full sweep, with
-    the unique column's (N-1) grouped-agg subplans gone from the plan."""
+    the unique column's value slot gone from the plan."""
     from data_pipelines_snowflake_procedures_spark.operators.dq import (
-        fd_consistency_long,
+        per_value_rules,
     )
 
     df = spark.createDataFrame(
@@ -270,19 +296,20 @@ def test_fd_keylike_prefilter_skips_exactly_and_identically(spark):
         ],
         "id BIGINT, cat STRING, sub STRING, price BIGINT",
     )
+    pairs = [(c1, c2) for c1 in df.columns for c2 in df.columns if c1 != c2]
 
     def as_map(frame):
         return {
-            r["pair"]: (r["inconsistent_keys"], r["result"], r["status"])
+            r["column_name"]: (r["inconsistent_keys"], r["result"], r["status"])
             for r in frame.collect()
         }
 
-    full = as_map(fd_consistency_long(df))
-    fast = fd_consistency_long(df, profile_keylike=True)
-    assert as_map(fast) == full
+    full = per_value_rules(df, fd_pairs=pairs)
+    fast = per_value_rules(df, fd_pairs=pairs, known_unique_cols={"id"})
+    assert as_map(fast) == as_map(full)
     # id is unique -> id->* trivially passes; cat->sub genuinely fails
-    assert full["id->cat"] == (0, 1.0, "passed")
-    assert full["cat->sub"][2] == "failed"
+    assert as_map(full)["id->cat"] == (0, 1.0, "passed")
+    assert as_map(full)["cat->sub"][2] == "failed"
     # the skipped determinant is not stacked: the level-1 aggregate
     # groups one value slot per scanned determinant, 4 in the full sweep
     # and 3 once id is known unique
@@ -290,12 +317,8 @@ def test_fd_keylike_prefilter_skips_exactly_and_identically(spark):
         plan = frame._jdf.queryExecution().optimizedPlan().toString()
         return len(set(re.findall(r"__v\d+", plan)))
 
-    assert value_slots(fd_consistency_long(df)) == 4
+    assert value_slots(full) == 4
     assert value_slots(fast) == 3
-    # passing a pre-proven set (the run_file_dq_distributed path) gives
-    # the same answers with zero extra profiling action
-    pre = as_map(fd_consistency_long(df, known_unique_cols={"id"}))
-    assert pre == full
 
 
 def test_robust_outlier_approx_close_to_exact(spark, sf_dir):

@@ -439,6 +439,55 @@ def test_connected_components_kernel_ships_by_value(spark, monkeypatch, tmp_path
     assert proc.stdout.decode().strip() == "[(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]"
 
 
+def test_nearest_kernel_ships_by_value(spark, monkeypatch, tmp_path):
+    """The k-means/PQ/IVF nearest-centroid kernel runs in a Python
+    process that cannot import this package, like the union-find
+    kernel above, and returns codes and residuals on a positional-name
+    batch."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from data_pipelines_snowflake_procedures_spark.operators.similarity import (
+        ivf_residuals,
+    )
+
+    df = spark.createDataFrame([(1, [0.0, 1.0])], "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    kernels = []
+    map_in_pandas = type(df).mapInPandas
+
+    def spy(self, fn, *args, **kwargs):
+        kernels.append(fn)
+        return map_in_pandas(self, fn, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "mapInPandas", spy)
+    ivf_residuals(df, [[0.0, 0.0], [1.0, 1.0]])
+    script = (
+        "import json, pickle, sys, pandas as pd\n"
+        "kernel = pickle.loads(sys.stdin.buffer.read())\n"
+        "b = pd.DataFrame({'_0': [1, 2], '_1': [[0.0, 1.0], [0.9, 0.8]]})\n"
+        "(out,) = kernel(iter([b]))\n"
+        "print(json.dumps([out['_o0'].tolist(), [r.tolist() for r in out['_o1']]]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        input=cloudpickle.dumps(kernels[0]),
+        capture_output=True,
+        cwd=tmp_path,
+        env=env,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
+    cells, residuals = json.loads(proc.stdout.decode())
+    assert cells == [0, 1]
+    assert residuals[0] == [0.0, 1.0]
+    assert [round(x, 9) for x in residuals[1]] == [-0.1, -0.2]
+
+
 def test_connected_components_job_count_is_fixed(spark, count_jobs):
     """The same Spark job count, at most 2, on the 8-edge fixture and on
     a 3000-node chain (counted per job group after the listener bus has
