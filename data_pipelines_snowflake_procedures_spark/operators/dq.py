@@ -169,13 +169,6 @@ def run_table_dq(
     }
 
 
-#: Row schema of :func:`table_dq_long`.
-_TABLE_DQ_ROWS = (
-    "column_name STRING, completeness DOUBLE, uniqueness DOUBLE, "
-    "validity DOUBLE, accuracy DOUBLE, consistency DOUBLE, column_score DOUBLE"
-)
-
-
 def table_dq_long(df: DataFrame, now: str) -> DataFrame:
     """:func:`run_table_dq`'s 3-decimal scores as a frame, one row per
     column ``(column_name, completeness, uniqueness, validity,
@@ -185,7 +178,12 @@ def table_dq_long(df: DataFrame, now: str) -> DataFrame:
         (c, *(r[p]["score"] for p in _TABLE_RULES), r["column_score"])
         for c, r in results.items()
     ]
-    return rows_frame(df.sparkSession, rows, _TABLE_DQ_ROWS)
+    return rows_frame(
+        df.sparkSession,
+        rows,
+        "column_name STRING, completeness DOUBLE, uniqueness DOUBLE, validity DOUBLE, "
+        "accuracy DOUBLE, consistency DOUBLE, column_score DOUBLE",
+    )
 
 
 # --------------------------------------------------------------------------

@@ -161,13 +161,6 @@ def profile_table(
     return out
 
 
-#: Row schema of :func:`profile_long`.
-_PROFILE_ROWS = (
-    "column_name STRING, count_all BIGINT, count_distinct BIGINT, "
-    "count_nulls BIGINT, null_ratio DOUBLE, distinct_ratio DOUBLE"
-)
-
-
 def profile_long(
     df: DataFrame, cols: list[str] | None = None, approx: bool = False
 ) -> DataFrame:
@@ -186,4 +179,9 @@ def profile_long(
         )
         for c, p in prof.items()
     ]
-    return rows_frame(df.sparkSession, rows, _PROFILE_ROWS)
+    return rows_frame(
+        df.sparkSession,
+        rows,
+        "column_name STRING, count_all BIGINT, count_distinct BIGINT, "
+        "count_nulls BIGINT, null_ratio DOUBLE, distinct_ratio DOUBLE",
+    )
