@@ -28,9 +28,6 @@ TABLE_NAME_RE = re.compile(
     re.IGNORECASE,
 )
 
-_DDL_KEYWORDS = ("create", "drop", "alter", "truncate")
-
-
 def strip_comments(sql_code: str) -> str:
     """Remove ``--`` line comments, ``/* */`` block comments, and blank
     lines while preserving comment-like text inside string literals.
@@ -164,16 +161,3 @@ def extract_table_names(sql: str, limit: int = 5) -> list[str]:
         if len(seen) >= limit:
             break
     return seen
-
-
-def is_ddl(sql: str) -> bool:
-    """True for statements whose results are not previewable rows."""
-    head = sql.lstrip().split(None, 1)
-    return bool(head) and head[0].lower() in _DDL_KEYWORDS
-
-
-def escape_sql_literal(value: str) -> str:
-    """``'`` → ``''`` for embedding into generated SQL literals
-    (reference F10, Business_Glossory.sql:11-12). Prefer parameterized
-    statements in new code; kept for generated-SQL parity."""
-    return value.replace("'", "''")

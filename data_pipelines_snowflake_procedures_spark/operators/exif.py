@@ -209,34 +209,3 @@ def insert_app1(jpeg_payload: bytes, app1: bytes) -> bytes:
     if jpeg_payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     return jpeg_payload[:2] + app1 + jpeg_payload[2:]
-
-
-def apply_exif_orientation(pixels: "Any", orientation: int) -> "Any":
-    """Normalize pixels to orientation 1 (the curation step after
-    :func:`extract_exif` — train on upright images, not on whatever
-    the camera sensor wrote). The 8 EXIF orientation cases map to
-    numpy flips/rotations (TIFF/EXIF spec, tag 0x0112):
-
-    1 identity · 2 mirror-H · 3 rotate-180 · 4 mirror-V ·
-    5 transpose · 6 rotate-90-CW · 7 transverse · 8 rotate-90-CCW
-
-    Unknown values return the input unchanged (defensive, same as
-    the parser)."""
-    import numpy as np
-
-    px = np.asarray(pixels)
-    if orientation == 2:
-        return px[:, ::-1]
-    if orientation == 3:
-        return px[::-1, ::-1]
-    if orientation == 4:
-        return px[::-1, :]
-    if orientation == 5:
-        return np.swapaxes(px, 0, 1)
-    if orientation == 6:
-        return np.swapaxes(px, 0, 1)[:, ::-1]
-    if orientation == 7:
-        return np.swapaxes(px, 0, 1)[::-1, ::-1]
-    if orientation == 8:
-        return np.swapaxes(px, 0, 1)[::-1, :]
-    return px

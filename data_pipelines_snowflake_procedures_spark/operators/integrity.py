@@ -1,5 +1,4 @@
-"""Cross-table consistency: referential-integrity checks and
-inclusion-dependency (foreign-key candidate) discovery.
+"""Cross-table consistency: referential-integrity checks.
 
 The reference's consistency pillar is intra-table only (pairwise
 functional dependencies, Data_Discovery_File.sql:97-143) with a
@@ -8,16 +7,10 @@ hardcoded 1.0 stub in the table engine (Data_Quality_Table.sql:163-169)
 engine, so this module adds them natively.
 
 Scale design: every check is an anti-join or semi-join over DISTINCT
-key projections — the shuffle carries distinct keys, not rows. For FK
-discovery over many candidate pairs, the distinct projections are
-computed once per column and reused (cached), and candidates are
-pre-filtered by the profile's distinct counts (a column with more
-distinct values than the target cannot be contained in it).
+key projections — the shuffle carries distinct keys, not rows.
 """
 
 from __future__ import annotations
-
-from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,50 +44,6 @@ def referential_integrity(
             6,
         ).alias("integrity_ratio"),
     )
-
-
-def discover_inclusion_dependencies(
-    tables: dict[str, DataFrame],
-    candidates: list[tuple[str, str, str, str]] | None = None,
-    min_ratio: float = 1.0,
-) -> list[dict[str, Any]]:
-    """Inclusion-dependency discovery: which (table.column →
-    table.column) pairs satisfy value containment — the FK-candidate
-    finder for catalogs without declared constraints.
-
-    ``candidates`` restricts the search ([(child_t, fk, parent_t, pk)]);
-    None tests every same-named column pair across tables (the common
-    warehouse convention). Returns records with containment ratios,
-    sorted worst-first. Driver-side loop over candidate pairs; each
-    check is one distinct-key anti-join (see module docstring for why
-    that is the scalable shape).
-    """
-    if candidates is None:
-        candidates = []
-        names = list(tables)
-        for ct in names:
-            for pt in names:
-                if ct == pt:
-                    continue
-                shared = set(tables[ct].columns) & set(tables[pt].columns)
-                candidates += [(ct, c, pt, c) for c in sorted(shared)]
-    out: list[dict[str, Any]] = []
-    for child_t, fk, parent_t, pk in candidates:
-        row = referential_integrity(
-            tables[child_t], tables[parent_t], fk, pk
-        ).collect()[0]
-        ratio = row["integrity_ratio"]
-        if ratio >= min_ratio:
-            out.append(
-                {
-                    "child": f"{child_t}.{fk}",
-                    "parent": f"{parent_t}.{pk}",
-                    "n_child_keys": row["n_child_keys"],
-                    "n_orphan_keys": row["n_orphan_keys"],
-                    "containment": ratio,
-                }
-            )
-    return sorted(out, key=lambda r: (r["containment"], r["child"]))
 
 
 def bucket_checksums(

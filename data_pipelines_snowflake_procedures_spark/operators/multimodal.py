@@ -1679,16 +1679,6 @@ def groupwise_zscore_window(
     )
 
 
-def frame_sample_plan(
-    df: DataFrame, every_n: int = 10, id_col: str = "doc_id"
-) -> DataFrame:
-    """Deterministic frame/segment sampling plan: keep every Nth item
-    by id (for media, every Nth frame index). Pure Column expression —
-    the decode of sampled frames happens later in ``extract_features``-
-    style batches, so the expensive Python step runs on 1/N of rows."""
-    return df.filter((F.col(id_col) % every_n) == 0)
-
-
 def image_vdhash(pixels: "Any") -> tuple[int, int]:
     """Vertical difference-hash of an H×W×3 image at its native
     width (the perceptual-hash primitive behind image near-dup
@@ -2062,54 +2052,3 @@ _DECODERS["video/x-flic"] = decode_flc
 # find set_decoder() overrides to ship with the closure — the enforced
 # half of the SCALING.md native-swap contract.
 _DEFAULT_DECODERS: dict[str, Callable[[bytes], Any]] = dict(_DECODERS)
-
-
-def attach_flc_video(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    speed_ms: int = 40,
-) -> DataFrame:
-    """FLIC leg of the binary-attach family: each document's utf-8
-    bytes become 8×8 indexed frames under an identity-gray palette in
-    a VALID FLC stream (:func:`encode_flc` — BRUN keyframe + true
-    inter-frame DELTA_FLC chunks, so consecutive text chunks that
-    share bytes genuinely compress). Same MEDIA_SCHEMA contract as
-    :func:`attach_video`, mime ``video/x-flic``."""
-
-    def per_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        palette = [(i, i, i) for i in range(256)]
-        for pdf in batches:
-            payloads = []
-            for text in pdf["__text"]:
-                data = (text or "").encode("utf-8")
-                nf = max(-(-len(data) // 64), 1)
-                buf = np.zeros(nf * 64, dtype=np.uint8)
-                buf[: len(data)] = np.frombuffer(data, dtype=np.uint8)
-                frames = list(buf.reshape(nf, 8, 8))
-                payloads.append(
-                    encode_flc(frames, palette, speed_ms=speed_ms)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "video/x-flic",
-                }
-            )
-
-    rendered = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).alias("__text"),
-    ).mapInPandas(per_batches, "doc_id BIGINT, payload BINARY, mime STRING")
-    return rendered.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.col("mime"),
-            F.length("payload").cast("long").alias("n_bytes"),
-        ).alias("media_meta"),
-    )

@@ -136,8 +136,10 @@ def profile_table(
     total = row["count_all"]
     out: dict[str, Any] = {}
     for c in cols:
-        distinct = int(row[f"{c}__count_distinct"])
         nulls = int(row[f"{c}__count_nulls"])
+        # HyperLogLog can overshoot; no column has more distinct values
+        # than non-null rows (the exact count never reaches the clamp)
+        distinct = min(int(row[f"{c}__count_distinct"]), int(total) - nulls)
         prof: dict[str, Any] = {
             "count_all": int(total),
             "count_distinct": distinct,

@@ -23,7 +23,6 @@ strings work in Spark ``rlike``, DuckDB ``regexp_matches``, and Python
 
 from __future__ import annotations
 
-import re
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -61,45 +60,18 @@ DETECTION_SAMPLE_ROWS = 1000
 SCRUB_ORDER = ("EMAIL", "CREDIT_CARD", "AADHAAR", "PHONE")
 
 
-def detect_pii_types(value: Any) -> str | None:
-    """First matching PII type for one value (driver-side helper,
-    mirrors Data_Security.sql:35-41 semantics)."""
-    if not isinstance(value, str):
-        return None
-    for pii_type, pattern in PII_PATTERNS.items():
-        if re.search(pattern, value):
-            return pii_type
-    return None
-
-
-def mask_value(value: Any, pii_type: str) -> Any:
-    """Driver-side masking (parity with Data_Security.sql:20-33);
-    the distributed path uses :func:`mask_expr` instead."""
-    if value is None:
-        return None
-    s = str(value)
-    if pii_type == "EMAIL" and "@" in s:
-        return s[0] + "***@" + s.split("@", 1)[1]
-    if pii_type == "PHONE":
-        return re.sub(r"\d(?=\d{4})", "*", s)
-    if pii_type == "AADHAAR":
-        return "XXXX XXXX " + s[-4:]
-    if pii_type == "CREDIT_CARD":
-        return "XXXX-XXXX-XXXX-" + s[-4:]
-    return "*****"
-
-
 def mask_expr(col: str | Column, pii_type: str) -> Column:
     """Masking as a native Column expression (F2-F6) — JVM-side, no
     UDF; fuses into whole-stage codegen. A ``str`` is a column name,
-    quoted (it may hold a dot, a backtick or a space)."""
+    quoted (it may hold a dot, a backtick or a space). A NULL stays
+    NULL under every mask."""
     c = F.col(ident(col)) if isinstance(col, str) else col
     if pii_type == "EMAIL":
         # keep first char, star the local part, keep the domain
         return F.when(
             c.contains("@"),
             F.concat(F.substring(c, 1, 1), F.lit("***@"), F.element_at(F.split(c, "@", 2), 2)),
-        ).otherwise(F.lit("*****"))
+        ).when(c.isNotNull(), F.lit("*****"))
     if pii_type == "PHONE":
         # star every digit except the last four, preserving separators
         return F.regexp_replace(c, r"\d(?=\d{4})", "*")
@@ -107,7 +79,7 @@ def mask_expr(col: str | Column, pii_type: str) -> Column:
         return F.concat(F.lit("XXXX XXXX "), F.substring(c, -4, 4))
     if pii_type == "CREDIT_CARD":
         return F.concat(F.lit("XXXX-XXXX-XXXX-"), F.substring(c, -4, 4))
-    return F.lit("*****")
+    return F.when(c.isNotNull(), F.lit("*****"))
 
 
 def scrub_text_expr(col: str | Column) -> Column:

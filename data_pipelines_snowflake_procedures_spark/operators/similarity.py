@@ -3,10 +3,10 @@
 scale path). North-star extension per SURVEY.md §7 step 8, over the
 ``embeddings`` harness table (``array<float>`` of dim 64).
 
-Scale design: brute-force is one broadcast of the (small) query set
-against the corpus — a narrow map over corpus partitions followed by a
-per-query top-k (TakeOrdered-style: per-partition heads then a tiny
-final reduce; never a global sort). SRP-LSH replaces the full scan
+Scale design: brute-force, SQ, PQ and IVF-PQ share one scan of the
+corpus against the collected (small) query set — a narrow map over
+corpus partitions that emits per-batch top-k heads, then one per-query
+ranking window over those candidates (never a global sort). SRP-LSH replaces the full scan
 with a bucket equi-join: only vectors sharing a signature bucket are
 compared, trading recall for a ~(corpus/buckets) scan reduction;
 multi-probe (xor-ing single bits) recovers recall at the margin.
@@ -66,6 +66,53 @@ def srp_bucket(
     return value
 
 
+def _vectors(df: DataFrame, side: str, id_col: str, emb_col: str, *extra: Column) -> DataFrame:
+    """The query side ``(query_id, q_emb, q_nrm)`` of a search for
+    ``side="q"``, or the corpus side ``(neighbor_id, c_emb, c_nrm)`` for
+    ``side="c"``, then ``extra``: the one projection of every cosine
+    search, with ``id_col`` and ``emb_col`` quoted so any name works."""
+    emb = F.col(ident(emb_col))
+    return df.select(
+        F.col(ident(id_col)).alias("query_id" if side == "q" else "neighbor_id"),
+        emb.alias(f"{side}_emb"),
+        norm(emb).alias(f"{side}_nrm"),
+        *extra,
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """``scored`` (query_id, neighbor_id, cosine) plus ``rank``, the
+    first ``k`` rows per query by cosine desc then neighbor_id asc
+    (a NULL cosine sorts last): the one ranking window of the kNN
+    searches."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _cosine(q_emb: Column, q_nrm: Column, c_emb: Column, c_nrm: Column) -> Column:
+    """The ordered-fold cosine rounded to 6 decimals; NULL (sorting
+    after every real score) when a norm is 0, where the division would
+    raise DIVIDE_BY_ZERO under ANSI mode."""
+    return F.when(
+        (q_nrm * c_nrm) > 0, F.round(dot_product(q_emb, c_emb) / (q_nrm * c_nrm), 6)
+    )
+
+
+def _join_cosines(c: DataFrame, q: DataFrame, on: str) -> DataFrame:
+    """(query_id, neighbor_id, cosine) for every corpus row of ``c``
+    and broadcast query row of ``q`` sharing the key ``on`` (an IVF cell
+    or an SRP bucket), a query never its own neighbor."""
+    return (
+        c.join(F.broadcast(q), on=on)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            _cosine(F.col("q_emb"), F.col("q_nrm"), F.col("c_emb"), F.col("c_nrm")).alias("cosine"),
+        )
+    )
+
+
 def knn_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -73,104 +120,25 @@ def knn_bruteforce(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast the query set against the corpus,
-    rank per query. Output (query_id, neighbor_id, cosine, rank).
+    """Exact cosine top-k. Output (query_id, neighbor_id, cosine, rank).
 
-    The join is a broadcast nested loop over corpus partitions (query
-    sets are small by definition); ranking is a per-query window over
-    k·|queries| candidate rows after AQE's partial top-k pushdown."""
-    import numpy as np
-
-    # r10: the full scan runs as one Arrow numpy kernel emitting each
-    # batch's margin superset of the per-query top-k on RAW cosines
-    # (see _approx_scan_candidates); the exact 6-decimal rounding and
-    # the (cosine desc, neighbor_id) window stay in Spark, so the
-    # ranked output is identical to the old per-pair JVM fold scan.
-    # The query side was broadcast before — collecting it keeps the
-    # JVM-computed q_nrm so nothing is re-derived.
-    q_rows = [
-        (int(r["query_id"]), np.asarray(r["q_emb"], dtype=np.float64),
-         float(r["q_nrm"]))
-        for r in queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(emb_col).alias("q_emb"),
-            norm(F.col(emb_col)).alias("q_nrm"),
-        ).collect()
-    ]
-
-    def score(pdf, qr):
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        X = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-        # norm fold: sequential sum of squares, then sqrt — the exact
-        # op sequence of norm()
-        acc = np.zeros(len(ids), dtype=np.float64)
-        for d in range(X.shape[1]):
-            acc += X[:, d] * X[:, d]
-        c_nrm = np.sqrt(acc)
-        for qid, qe, qn in qr:
-            dots = _np_seq_dot(qe[None, :], X)[0]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c = dots / (qn * c_nrm)  # plain division, like the old /
-            mask = ids != qid
-            yield qid, ids[mask], c[mask]
-
-    cand_raw = _approx_scan_candidates(
-        score, corpus.select(id_col, emb_col), q_rows, k
-    )
-    scored = cand_raw.select(
-        "query_id",
-        "neighbor_id",
-        # NaN (zero-norm vector: 0/0 in the kernel) maps back to NULL so
-        # it sorts LAST under desc, like the pre-kernel Spark `/` did —
-        # raw NaN would sort ABOVE every real double (the knn_pq guard).
-        F.when(~F.isnan("c_raw"), F.round("c_raw", 6)).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    The corpus is scanned once by :func:`_cosine_scan` against the
+    collected query set (small by definition), which emits each
+    batch's margin superset of the per-query top-k; the 6-decimal
+    rounding and the per-query window run in Spark over those
+    candidates only."""
+    return _top_k(
+        _cosine_scan(
+            corpus.select(F.col(ident(id_col)), F.col(ident(emb_col))),
+            _vectors(queries, "q", id_col, emb_col),
+            k,
+            lambda X: (X, None),
+        ),
+        k,
     )
 
 
 def ivf_assign(
-    df: DataFrame,
-    centroids: DataFrame,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_id: str = "centroid_id",
-) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its
-    highest-cosine centroid (ties broken by centroid id). Centroids
-    broadcast (there are k of them); assignment is a narrow
-    broadcast-join + per-vector top-1 — no shuffle of the corpus.
-
-    Centroid choice is the caller's: k-means, or any deterministic
-    seed set (tests use the first k vectors). Output: all input
-    columns + ``centroid_id``."""
-    cents = centroids.select(
-        F.col(centroid_id), F.col(emb_col).alias("__c_emb"),
-        norm(F.col(emb_col)).alias("__c_nrm"),
-    )
-    scored = (
-        df.withColumn("__v_nrm", norm(F.col(emb_col)))
-        .join(F.broadcast(cents))
-        .withColumn(
-            "__sim",
-            dot_product(F.col(emb_col), F.col("__c_emb"))
-            / (F.col("__v_nrm") * F.col("__c_nrm")),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc(centroid_id))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__c_emb", "__c_nrm", "__v_nrm", "__sim", "__rn")
-    )
-
-
-def ivf_assign_multi(
     df: DataFrame,
     centroids: DataFrame,
     nprobe: int,
@@ -178,25 +146,35 @@ def ivf_assign_multi(
     id_col: str = "vec_id",
     centroid_id: str = "centroid_id",
 ) -> DataFrame:
-    """Assign every vector to its ``nprobe`` highest-cosine centroids
-    (one output row per (vector, probed cell)). The recall lever for
-    IVF search: querying the 2nd/3rd-closest cells recovers neighbors
-    that sit just across a cell boundary, at nprobe× the scan cost.
-    Same broadcast + window shape as :func:`ivf_assign`."""
+    """IVF coarse quantization: assign every vector to its ``nprobe``
+    highest-cosine centroids (ties broken by centroid id; one output
+    row per (vector, probed cell)): all input columns +
+    ``centroid_id``. A corpus takes one cell; a query probing the
+    2nd/3rd-closest cells too recovers neighbors that sit just across a
+    cell boundary, at nprobe× the scan cost. Centroids broadcast (there
+    are k of them), so assignment is a narrow broadcast-join +
+    per-vector top-``nprobe`` window — no shuffle of the corpus.
+
+    Centroid choice is the caller's: k-means, or any deterministic
+    seed set (tests use the first k vectors)."""
+    emb = F.col(ident(emb_col))
     cents = centroids.select(
-        F.col(centroid_id), F.col(emb_col).alias("__c_emb"),
-        norm(F.col(emb_col)).alias("__c_nrm"),
+        F.col(ident(centroid_id)), emb.alias("__c_emb"), norm(emb).alias("__c_nrm"),
     )
     scored = (
-        df.withColumn("__v_nrm", norm(F.col(emb_col)))
+        df.withColumn("__v_nrm", norm(emb))
         .join(F.broadcast(cents))
         .withColumn(
             "__sim",
-            dot_product(F.col(emb_col), F.col("__c_emb"))
-            / (F.col("__v_nrm") * F.col("__c_nrm")),
+            F.when(
+                (F.col("__v_nrm") * F.col("__c_nrm")) > 0,
+                dot_product(emb, F.col("__c_emb")) / (F.col("__v_nrm") * F.col("__c_nrm")),
+            ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc(centroid_id))
+    w = Window.partitionBy(F.col(ident(id_col))).orderBy(
+        F.desc("__sim"), F.asc(F.col(ident(centroid_id)))
+    )
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= nprobe)
@@ -221,42 +199,24 @@ def knn_ivf(
     scan cost for recall. At scale the corpus is pre-partitioned (and
     pre-written bucketed) by centroid_id, so a query touches
     ~nprobe/k_cells of the data. Pass ``assigned`` (an
-    :func:`ivf_assign` frame, ideally persisted) to share the
+    :func:`ivf_assign` frame with one probe, ideally persisted) to share the
     query-independent corpus assignment across searches with different
     nprobe — values identical by construction."""
     c_assigned = (
         assigned
         if assigned is not None
-        else ivf_assign(corpus, centroids, emb_col, id_col)
+        else ivf_assign(corpus, centroids, 1, emb_col, id_col)
     )
-    q_assigned = ivf_assign_multi(queries, centroids, nprobe, emb_col, id_col)
-    q = q_assigned.select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("q_emb"),
-        norm(F.col(emb_col)).alias("q_nrm"),
-        "centroid_id",
+    q_assigned = ivf_assign(queries, centroids, nprobe, emb_col, id_col)
+    cell = F.col("centroid_id")
+    return _top_k(
+        _join_cosines(
+            _vectors(c_assigned, "c", id_col, emb_col, cell),
+            _vectors(q_assigned, "q", id_col, emb_col, cell),
+            "centroid_id",
+        ),
+        k,
     )
-    c = c_assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("c_emb"),
-        norm(F.col(emb_col)).alias("c_nrm"),
-        "centroid_id",
-    )
-    scored = (
-        c.join(F.broadcast(q), on="centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_product(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_nrm") * F.col("c_nrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def knn_lsh(
@@ -284,7 +244,7 @@ def knn_lsh(
     keep one bucket, so each (query, neighbor) candidate appears at
     most once."""
     planes = srp_hyperplanes(n_planes, dim, seed)
-    q_bucket = srp_bucket(F.col(emb_col), planes)
+    q_bucket = srp_bucket(F.col(ident(emb_col)), planes)
     if multiprobe:
         probe = F.explode(
             F.array(
@@ -297,45 +257,16 @@ def knn_lsh(
         )
     else:
         probe = q_bucket
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("q_emb"),
-        norm(F.col(emb_col)).alias("q_nrm"),
-        probe.alias("bucket"),
-    )
     # corpus side is query-independent and identical for the plain and
     # multiprobe variants (multiprobe only widens the QUERY probes):
     # share it via corpus_hashed across searches
     c = (
         corpus_hashed
         if corpus_hashed is not None
-        else corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(emb_col).alias("c_emb"),
-            norm(F.col(emb_col)).alias("c_nrm"),
-            srp_bucket(F.col(emb_col), planes).alias("bucket"),
-        )
+        else _vectors(corpus, "c", id_col, emb_col, q_bucket.alias("bucket"))
     )
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_product(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_nrm") * F.col("c_nrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    q = _vectors(queries, "q", id_col, emb_col, probe.alias("bucket"))
+    return _top_k(_join_cosines(c, q, "bucket"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -614,7 +545,7 @@ def kmeans_lloyd(
     """
     cents = kmeans_fit(df, k, iters, emb_col, id_col, round_decimals)
     return kmeans_assign_df(df, cents, emb_col).select(
-        F.col(id_col),
+        F.col(ident(id_col)),
         F.col("__cl").alias("cluster"),
         F.round(F.col("__dist"), 6).alias("dist"),
     )
@@ -627,7 +558,7 @@ def sq_bounds(
     codebook. One posexplode + groupBy(pos) min/max (exact,
     order-independent), collected to the driver (dim rows)."""
     rows = (
-        df.select(F.posexplode(F.col(emb_col)))
+        df.select(F.posexplode(F.col(ident(emb_col))))
         .groupBy("pos")
         .agg(
             F.min(F.col("col").cast("double")).alias("lo"),
@@ -677,59 +608,150 @@ def sq_dequantized_expr(
     )
 
 
-def _candidates_exact_rerank(
-    cand: DataFrame,
+#: Margin used by the scan kernel when pre-pruning candidates on RAW
+#: cosine before Spark applies the exact 6-decimal rounding: two reals
+#: more than 1e-6 apart cannot round to the same 6-decimal value, so
+#: rows more than 2e-6 below a batch's keep-th best raw score are
+#: strictly below it after rounding and can never enter the top-keep
+#: set under any tie-break.
+_SCAN_PRUNE_MARGIN = 2e-6
+
+
+def _cosine_scan(side: DataFrame, queries: DataFrame, keep: int, decode) -> DataFrame:
+    """(query_id, neighbor_id, cosine) candidates of one corpus scan
+    against the collected ``queries`` (a :func:`_vectors` query side,
+    broadcast-small by every caller's contract, with its JVM-computed
+    ``q_nrm``): the one cosine scan kernel of the exact, SQ, PQ and
+    IVF-PQ searches.
+
+    ``side`` holds an integer id, then (IVF-PQ only, when ``queries``
+    has a ``cell`` column) the vector's cell, then the columns
+    ``decode`` reads. Per Arrow batch, ``decode(X, *rest)`` turns the
+    stacked first of them ``X`` (rows × dim, float64) and the rest into
+    the scored vectors and their norms (``None``: folded here). Dots
+    and norms accumulate per dimension in index order from 0.0, the
+    IEEE op sequence of ``dot_product``/``norm``, so raw cosines are
+    bit-identical to the JVM fold; a zero denominator gives NaN, which
+    maps to a NULL cosine that sorts after every real one. A query
+    scores only the rows of its own cells (IVF-PQ's probes), never
+    itself, and each batch emits only the margin superset of its
+    per-query top ``keep`` (:data:`_SCAN_PRUNE_MARGIN`) plus every
+    NaN row, so ranking the rounded cosines in Spark selects the same
+    set as a window over the full scan.
+
+    Ids are read as int64: the searches need an integer ``id_col``
+    (the embeddings' vec_id is int64); a string-id corpus must map its
+    ids to longs first, or use :func:`knn_lsh`/:func:`knn_ivf`. The
+    input rides under positional names, so an odd caller name never
+    reaches mapInPandas's parser. The kernel is nested and uses no
+    module-level name of this package, so it ships by value to workers
+    that cannot import it."""
+    import numpy as np
+
+    cells = "cell" in queries.columns
+    q_list, by_id = [], {}
+    for r in queries.collect():
+        qid = int(r["query_id"])
+        if cells and qid in by_id:
+            by_id[qid][3].append(int(r["cell"]))
+            continue
+        by_id[qid] = (
+            qid,
+            np.asarray(r["q_emb"], dtype=np.float64),
+            float(r["q_nrm"]),
+            [int(r["cell"])] if cells else None,
+        )
+        q_list.append(by_id[qid])
+    margin = _SCAN_PRUNE_MARGIN
+
+    def scan(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            cols = [pdf[c] for c in pdf.columns]
+            ids = cols[0].to_numpy(dtype=np.int64)
+            cell = cols[1].to_numpy(dtype=np.int64) if cells else None
+            payload = cols[1 + cells:]
+            X = np.stack(payload[0].to_numpy()).astype(np.float64)
+            C, c_nrm = decode(X, *payload[1:])
+            if c_nrm is None:
+                acc = np.zeros(len(C), dtype=np.float64)
+                for d in range(C.shape[1]):
+                    acc += C[:, d] * C[:, d]
+                c_nrm = np.sqrt(acc)
+            out_q, out_i, out_c = [], [], []
+            for qid, qe, qn, qcells in q_list:
+                rows = slice(None) if qcells is None else np.isin(cell, qcells)
+                Cq, iq = C[rows], ids[rows]
+                dots = np.zeros(len(iq), dtype=np.float64)
+                for d in range(len(qe)):
+                    dots += qe[d] * Cq[:, d]
+                denom = qn * c_nrm[rows]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    c = np.where(denom == 0.0, np.nan, dots / denom)
+                other = iq != qid
+                iq, c = iq[other], c[other]
+                real = ~np.isnan(c)
+                nr = int(real.sum())
+                if nr > keep:
+                    kth = np.partition(c[real], nr - keep)[nr - keep]
+                    top = (c >= kth - margin) | ~real
+                    iq, c = iq[top], c[top]
+                out_q.append(np.full(len(iq), qid, dtype=np.int64))
+                out_i.append(iq)
+                out_c.append(c)
+            if out_q:
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.concatenate(out_q),
+                        "neighbor_id": np.concatenate(out_i),
+                        "c_raw": np.concatenate(out_c),
+                    }
+                )
+
+    flat = side.toDF(*(f"_{i}" for i in range(len(side.columns))))
+    raw = flat.mapInPandas(scan, "query_id LONG, neighbor_id LONG, c_raw DOUBLE")
+    return raw.select(
+        "query_id",
+        "neighbor_id",
+        F.when(~F.isnan("c_raw"), F.round("c_raw", 6)).alias("cosine"),
+    )
+
+
+def _exact_rerank(
+    approx: DataFrame,
+    n: int,
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
     emb_col: str,
     id_col: str,
 ) -> DataFrame:
-    """Exact-cosine re-rank of an approximate candidate set — the
-    candidates-only fetch half of every quantized ANN rung (VERDICT r5
-    wrong-list #2): ``cand`` carries ONLY (query_id, neighbor_id), and
-    the true embeddings enter here, after candidate selection, via a
-    join back to the corpus on neighbor_id. ``cand`` is bounded by
-    |queries|·rerank·k rows, so it broadcasts and the corpus side of
-    the join never shuffles; the queries (already broadcast-small in
-    every caller) ride in the same way. The approximate scan therefore
-    reads codes only — m bytes (PQ) or dequantized int8 (SQ) per
-    vector — and exact floats are read once per CANDIDATE, not per
-    scanned vector."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("qx_emb"),
-        norm(F.col(emb_col)).alias("qx_nrm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("cx_emb"),
-        norm(F.col(emb_col)).alias("cx_nrm"),
-    )
+    """Exact-cosine top-``k`` of the top-``n`` candidates per query of
+    an approximate scan — the candidates-only fetch half of every
+    quantized ANN rung: the candidates carry ONLY (query_id,
+    neighbor_id), and the true embeddings enter here, after candidate
+    selection, via a join back to the corpus on neighbor_id. The
+    candidates are bounded by |queries|·n rows, so they broadcast and
+    the corpus side of the join never shuffles; the queries
+    (broadcast-small in every caller) ride in the same way. The
+    approximate scan therefore reads codes only — m bytes (PQ) or
+    dequantized int8 (SQ) per vector — and exact floats are read once
+    per CANDIDATE, not per scanned vector."""
+    cand = _top_k(approx, n).select("query_id", "neighbor_id")
     exact = (
-        c.join(F.broadcast(cand.select("query_id", "neighbor_id")), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
+        _vectors(corpus, "c", id_col, emb_col)
+        .join(F.broadcast(cand), "neighbor_id")
+        .join(F.broadcast(_vectors(queries, "q", id_col, emb_col)), "query_id")
         .select(
             "query_id",
             "neighbor_id",
-            # zero-norm guard (r11, with the scan-stage guards): IEEE
-            # 0/0 is NaN and Spark sorts NaN above every real double
-            # under desc; NULL sorts last — the consistent "worst
-            # match" placement across all four scans.
-            F.when(
-                (F.col("qx_nrm") * F.col("cx_nrm")) > 0,
-                F.round(
-                    dot_product(F.col("qx_emb"), F.col("cx_emb"))
-                    / (F.col("qx_nrm") * F.col("cx_nrm")),
-                    6,
-                ),
-            ).alias("cosine"),
+            _cosine(F.col("q_emb"), F.col("q_nrm"), F.col("c_emb"), F.col("c_nrm")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(exact, k)
 
 
 def knn_sq(
@@ -748,73 +770,32 @@ def knn_sq(
     the exact float cosine. Recall loss happens only when quantization
     error reorders a true top-k neighbor past position rerank·k.
 
-    Same broadcast-query / narrow-scan shape as knn_bruteforce. The
-    approximate stage projects (query_id, neighbor_id, approx_cosine)
-    ONLY — no exact embedding rides through the scan or the candidate
-    window — and :func:`_candidates_exact_rerank` joins the top
-    rerank·k ids back to the corpus for the float pass, so the first
-    pass really is codes-bound I/O and exact embeddings are fetched
-    only for candidates."""
+    The approximate stage is :func:`_cosine_scan` on the dequantized
+    vectors and projects (query_id, neighbor_id, approx cosine) ONLY —
+    no exact embedding rides through the scan or the candidate window —
+    and :func:`_exact_rerank` joins the top rerank·k ids back to the
+    corpus for the float pass, so the first pass really is codes-bound
+    I/O and exact embeddings are fetched only for candidates."""
     import numpy as np
 
-    # r10: the dequantize+scan runs as one Arrow numpy kernel (margin
-    # superset of the per-query top rerank*k on raw cosines; exact
-    # round+window stay in Spark — see _approx_scan_candidates). The
-    # dequantization replicates sq_dequantized_expr op for op:
-    # scaled = round((x-lo)/span*(levels-1)) with Spark's HALF_UP
-    # (x >= lo always, so the positive-value floor+frac rule is exact),
-    # clamped, then deq = lo + (code*span)/(levels-1); norm and dot
-    # accumulate per dimension in index order.
-    q_rows = [
-        (int(r["query_id"]), np.asarray(r["q_emb"], dtype=np.float64),
-         float(r["q_nrm"]))
-        for r in queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(emb_col).alias("q_emb"),
-            norm(F.col(emb_col)).alias("q_nrm"),
-        ).collect()
-    ]
     lo = np.asarray([b[0] for b in bounds], dtype=np.float64)
     hi = np.asarray([b[1] for b in bounds], dtype=np.float64)
     span = np.where(hi > lo, hi - lo, 1.0)
     n_levels = float(256 - 1)
 
-    def score(pdf, qr):
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        X = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
+    def dequantize(X):
+        # sq_dequantized_expr op for op: scaled = round((x-lo)/span *
+        # (levels-1)) with Spark's HALF_UP (x >= lo always, so the
+        # positive-value floor+frac rule is exact), clamped, then
+        # lo + (code*span)/(levels-1)
         v = (X - lo[None, :]) / span[None, :] * n_levels
         ip = np.floor(v)
-        code = ip + (v - ip >= 0.5)  # Spark round(double, 0) HALF_UP
-        code = np.minimum(np.maximum(code, 0.0), n_levels)
-        C = lo[None, :] + (code * span[None, :]) / n_levels
-        acc = np.zeros(len(ids), dtype=np.float64)
-        for d in range(C.shape[1]):
-            acc += C[:, d] * C[:, d]
-        c_nrm = np.sqrt(acc)
-        for qid, qe, qn in qr:
-            dots = _np_seq_dot(qe[None, :], C)[0]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c = dots / (qn * c_nrm)
-            mask = ids != qid
-            yield qid, ids[mask], c[mask]
+        code = np.minimum(np.maximum(ip + (v - ip >= 0.5), 0.0), n_levels)
+        return lo[None, :] + (code * span[None, :]) / n_levels, None
 
-    cand_raw = _approx_scan_candidates(
-        score, corpus.select(id_col, emb_col), q_rows, rerank * k
-    )
-    approx = cand_raw.select(
-        "query_id",
-        "neighbor_id",
-        # NaN→NULL so zero-norm vectors sort last under desc (knn_pq's
-        # guard; plain NaN sorts above every real double in Spark).
-        F.when(~F.isnan("c_raw"), F.round("c_raw", 6)).alias("approx_cosine"),
-    )
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("neighbor_id")
-    )
-    cand = approx.withColumn("__arn", F.row_number().over(w_a)).filter(
-        F.col("__arn") <= rerank * k
-    )
-    return _candidates_exact_rerank(cand, corpus, queries, k, emb_col, id_col)
+    side = corpus.select(F.col(ident(id_col)), F.col(ident(emb_col)))
+    approx = _cosine_scan(side, _vectors(queries, "q", id_col, emb_col), rerank * k, dequantize)
+    return _exact_rerank(approx, rerank * k, corpus, queries, k, emb_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1019,105 +1000,6 @@ def pq_reconstruct_expr(codebooks: list[list[list[float]]]) -> Column:
     return F.concat(*parts)
 
 
-#: Margin used by the vectorized approximate-scan kernels when
-#: pre-pruning candidates on RAW cosine before Spark applies the exact
-#: 6-decimal rounding: two reals more than 1e-6 apart cannot round to
-#: the same 6-decimal value, so rows more than 2e-6 below a batch's
-#: rerank_k-th best raw score are strictly below it after rounding and
-#: can never enter the top-rerank_k set under any tie-break.
-_SCAN_PRUNE_MARGIN = 2e-6
-
-
-def _approx_scan_candidates(
-    scored_batches_fn,
-    corpus_side: DataFrame,
-    q_rows: list,
-    rerank_k: int,
-):
-    """Shared mapInPandas wrapper for the PQ/IVF-PQ approximate scans
-    (optimization r10): ``scored_batches_fn(pdf, q_rows)`` returns,
-    per batch, an iterable of (query_id, ids_array, c_raw_array) with
-    RAW cosines whose arithmetic is bit-identical to the old JVM fold
-    (per-dimension index-order accumulation, multiply-then-divide).
-    Each batch emits only the margin superset of its per-query top
-    ``rerank_k`` (see :data:`_SCAN_PRUNE_MARGIN`) plus every
-    NaN-scored row (zero denominator — the old ``try_divide`` NULLs,
-    which sort after all real scores and matter only when a query has
-    fewer than rerank_k real candidates); the caller applies the exact
-    ``round(c,6)`` ordering in Spark, so the selected candidate SET is
-    identical to the old full-scan window.
-
-    Id contract (ADVICE r10): the emitted schema is ``query_id LONG,
-    neighbor_id LONG`` and callers coerce ids via int()/np.int64 — the
-    public knn_* scans therefore require an integer-typed ``id_col``
-    (the harness embeddings' vec_id is int64). A string-id corpus must
-    map ids to longs before the scan (or use knn_lsh/knn_ivf, which
-    keep the join form)."""
-    import numpy as np
-    import pandas as pd
-
-    def scan(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_q: list = []
-            out_i: list = []
-            out_c: list = []
-            for qid, ids, c in scored_batches_fn(pdf, q_rows):
-                n = len(ids)
-                if n == 0:
-                    continue
-                real = ~np.isnan(c)
-                nr = int(real.sum())
-                if nr > rerank_k:
-                    creal = c[real]
-                    kth = np.partition(creal, nr - rerank_k)[nr - rerank_k]
-                    keep = (c >= kth - _SCAN_PRUNE_MARGIN) | ~real
-                else:
-                    keep = np.ones(n, dtype=bool)
-                out_q.append(np.full(int(keep.sum()), qid, dtype=np.int64))
-                out_i.append(ids[keep])
-                out_c.append(c[keep])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_i),
-                        "c_raw": np.concatenate(out_c),
-                    }
-                )
-
-    return corpus_side.mapInPandas(
-        scan, schema="query_id LONG, neighbor_id LONG, c_raw DOUBLE"
-    )
-
-
-def _np_seq_sq_dists(Xsub, book):
-    """Squared distances of every row of ``Xsub`` (n×sub float64) to
-    every book entry, accumulated per dimension in index order from
-    0.0 — the exact IEEE op sequence of the JVM
-    ``aggregate(zip_with(...))`` fold."""
-    import numpy as np
-
-    B = np.asarray(book, dtype=np.float64)
-    acc = np.zeros((Xsub.shape[0], B.shape[0]), dtype=np.float64)
-    for d in range(Xsub.shape[1]):
-        diff = Xsub[:, d][:, None] - B[None, :, d]
-        acc += diff * diff
-    return acc
-
-
-def _np_seq_dot(Q, C):
-    """Q (q×dim) · C (n×dim) accumulated per dimension in index order
-    from 0.0 (the JVM dot_product fold's op sequence); returns q×n."""
-    import numpy as np
-
-    acc = np.zeros((Q.shape[0], C.shape[0]), dtype=np.float64)
-    for d in range(Q.shape[1]):
-        acc += Q[:, d][:, None] * C[None, :, d]
-    return acc
-
-
 def knn_pq(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1132,69 +1014,34 @@ def knn_pq(
     against the PQ-RECONSTRUCTED corpus vector (asymmetric distance).
     Recall loss occurs only when quantization error pushes a true
     top-k neighbor past position rerank·k. The approximate stage
-    projects (query_id, neighbor_id, approx_cosine) only, so at 100 TB
+    projects (query_id, neighbor_id, approx cosine) only, so at 100 TB
     the first pass reads m bytes per vector (vs 4·dim for floats);
-    exact embeddings enter via :func:`_candidates_exact_rerank`'s
-    join-back, touched once per candidate."""
+    exact embeddings enter via :func:`_exact_rerank`'s join-back,
+    touched once per candidate."""
     import numpy as np
 
-    # The query side is broadcast-small by this operator's existing
-    # contract (the old plan broadcast it); collecting it keeps the
-    # JVM-computed q_nrm values so nothing is re-derived.
-    q_rows = [
-        (int(r["query_id"]), np.asarray(r["q_emb"], dtype=np.float64),
-         float(r["q_nrm"]))
-        for r in queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(emb_col).alias("q_emb"),
-            norm(F.col(emb_col)).alias("q_nrm"),
-        ).collect()
-    ]
     books = [
         np.asarray([[float(x) for x in c] for c in b], dtype=np.float64)
         for b in codebooks
     ]
     sub = books[0].shape[1]
 
-    def score(pdf, qr):
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        X = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-        # encode + reconstruct (bit-identical to _pq_assign_all +
-        # pq_reconstruct_expr: same ordered fold, argmin first-min)
+    def reconstruct(X):
+        # encode + reconstruct, bit-identical to pq_encode +
+        # pq_reconstruct_expr: the same index-order squared-distance
+        # fold, first-minimum argmin
         C = np.empty_like(X)
         for j, B in enumerate(books):
-            d2 = _np_seq_sq_dists(X[:, j * sub:(j + 1) * sub], B)
+            d2 = np.zeros((len(X), len(B)), dtype=np.float64)
+            for d in range(sub):
+                diff = X[:, j * sub + d][:, None] - B[None, :, d]
+                d2 += diff * diff
             C[:, j * sub:(j + 1) * sub] = B[d2.argmin(axis=1)]
-        # norm fold: sequential sum of squares, then sqrt
-        acc = np.zeros(len(ids), dtype=np.float64)
-        for d in range(C.shape[1]):
-            acc += C[:, d] * C[:, d]
-        c_nrm = np.sqrt(acc)
-        for qid, qe, qn in qr:
-            dots = _np_seq_dot(qe[None, :], C)[0]
-            denom = qn * c_nrm
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c = np.where(denom == 0.0, np.nan, dots / denom)
-            mask = ids != qid
-            yield qid, ids[mask], c[mask]
+        return C, None
 
-    cand_raw = _approx_scan_candidates(
-        score, corpus.select(id_col, emb_col), q_rows, rerank * k
-    )
-    approx = cand_raw.select(
-        "query_id",
-        "neighbor_id",
-        # NaN (zero denominator) maps back to the old try_divide NULL
-        # so desc ordering still puts it after every real score
-        F.when(~F.isnan("c_raw"), F.round("c_raw", 6)).alias("approx_cosine"),
-    )
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("neighbor_id")
-    )
-    cand = approx.withColumn("__arn", F.row_number().over(w_a)).filter(
-        F.col("__arn") <= rerank * k
-    )
-    return _candidates_exact_rerank(cand, corpus, queries, k, emb_col, id_col)
+    side = corpus.select(F.col(ident(id_col)), F.col(ident(emb_col)))
+    approx = _cosine_scan(side, _vectors(queries, "q", id_col, emb_col), rerank * k, reconstruct)
+    return _exact_rerank(approx, rerank * k, corpus, queries, k, emb_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1278,7 +1125,7 @@ def ivfpq_index(
     return (
         enc.crossJoin(F.broadcast(rmat))
         .select(
-            F.col(id_col).alias("neighbor_id"),
+            F.col(ident(id_col)).alias("neighbor_id"),
             "cell",
             recon.alias("c_recon"),
         )
@@ -1340,11 +1187,7 @@ def knn_ivfpq(
     # matrix (the shared assignment kernel — never a literal tree)
     qmat = _matrix_df(spark, coarse, "__ivf_matrix")
     qd = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(emb_col).alias("q_emb"),
-            norm(F.col(emb_col)).alias("q_nrm"),
-        )
+        _vectors(queries, "q", id_col, emb_col)
         .crossJoin(F.broadcast(qmat))
         .select(
             "query_id",
@@ -1370,58 +1213,11 @@ def knn_ivfpq(
             corpus, coarse, codebooks, emb_col, id_col, residuals=residuals
         )
     )
-    import numpy as np
-
-    # Probe rows are |queries| x nprobe — broadcast-small by the
-    # operator's contract (the old plan broadcast them); collecting
-    # keeps the JVM-computed q_nrm, so nothing is re-derived.
-    probe_rows = probes.collect()
-    by_q: dict = {}
-    for r in probe_rows:
-        qid = int(r["query_id"])
-        if qid not in by_q:
-            by_q[qid] = (
-                np.asarray(r["q_emb"], dtype=np.float64),
-                float(r["q_nrm"]),
-                set(),
-            )
-        by_q[qid][2].add(int(r["cell"]))
-    q_list = [(qid, qe, qn, cells) for qid, (qe, qn, cells) in by_q.items()]
-
-    def score(pdf, qr):
-        ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-        cells = pdf["cell"].to_numpy(dtype=np.int64)
-        C = np.stack(pdf["c_recon"].to_numpy()).astype(np.float64)
-        c_nrm = pdf["c_recon_nrm"].to_numpy(dtype=np.float64)
-        for qid, qe, qn, qcells in qr:
-            mask = np.isin(cells, list(qcells)) & (ids != qid)
-            if not mask.any():
-                continue
-            Cm = C[mask]
-            dots = _np_seq_dot(qe[None, :], Cm)[0]
-            denom = qn * c_nrm[mask]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cs = np.where(denom == 0.0, np.nan, dots / denom)
-            yield qid, ids[mask], cs
-
-    cand_raw = _approx_scan_candidates(
-        score,
-        c.select("neighbor_id", "cell", "c_recon", "c_recon_nrm"),
-        q_list,
-        rerank * k,
+    side = c.select("neighbor_id", "cell", "c_recon", "c_recon_nrm")
+    approx = _cosine_scan(
+        side, probes, rerank * k, lambda X, nrm: (X, nrm.to_numpy(dtype="float64"))
     )
-    approx = cand_raw.select(
-        "query_id",
-        "neighbor_id",
-        F.when(~F.isnan("c_raw"), F.round("c_raw", 6)).alias("approx_cosine"),
-    )
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("neighbor_id")
-    )
-    cand = approx.withColumn("__arn", F.row_number().over(w_a)).filter(
-        F.col("__arn") <= rerank * k
-    )
-    return _candidates_exact_rerank(cand, corpus, queries, k, emb_col, id_col)
+    return _exact_rerank(approx, rerank * k, corpus, queries, k, emb_col, id_col)
 
 
 def mmr_rerank(
@@ -1464,13 +1260,8 @@ def mmr_rerank(
         .select("query_id", "neighbor_id", F.col("cosine").alias("rel"), "rank")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    ce = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("__e"),
-        norm(F.col(emb_col)).alias("__n"),
-    )
-    with_emb = cands.join(ce, "neighbor_id").select(
-        "query_id", "neighbor_id", "__e", "__n"
+    with_emb = cands.join(_vectors(corpus, "c", id_col, emb_col), "neighbor_id").select(
+        "query_id", "neighbor_id", "c_emb", "c_nrm"
     )
     a, b = with_emb.alias("a"), with_emb.alias("b")
     pairs = (
@@ -1483,11 +1274,7 @@ def mmr_rerank(
             F.col("a.query_id").alias("query_id"),
             F.col("a.neighbor_id").alias("ca"),
             F.col("b.neighbor_id").alias("cb"),
-            F.round(
-                dot_product(F.col("a.__e"), F.col("b.__e"))
-                / (F.col("a.__n") * F.col("b.__n")),
-                6,
-            ).alias("psim"),
+            _cosine(F.col("a.c_emb"), F.col("a.c_nrm"), F.col("b.c_emb"), F.col("b.c_nrm")).alias("psim"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

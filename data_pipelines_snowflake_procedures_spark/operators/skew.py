@@ -89,35 +89,3 @@ def heavy_hitters(
         .limit(k)
         .select("value", "n_rows", "share")
     )
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_source: str,
-    buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Hot-key equi-join: replicate the small side across every salt
-    bucket (explode) and join on (key, salt), so one hot key's rows
-    spread over ``buckets`` tasks instead of one. For inner/left joins
-    the results are identical to the unsalted join — salt participates
-    only in routing. Use when the small side is over the broadcast
-    threshold but the key distribution is pathological.
-
-    ``how`` is restricted to inner/left/left_semi/left_anti: the small
-    side is replicated ``buckets``×, so any join that emits unmatched
-    SMALL-side rows (right/full) would duplicate them once per salt
-    bucket — not semantics-preserving."""
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_broadcast_join: how={how!r} is not semantics-preserving "
-            f"(replicated small side duplicates unmatched rows); use one of {sorted(allowed)}"
-        )
-    small_rep = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
-    )
-    big_salted = big.withColumn("__salt", salt_column(salt_source, buckets))
-    return big_salted.join(small_rep, on=[key, "__salt"], how=how).drop("__salt")

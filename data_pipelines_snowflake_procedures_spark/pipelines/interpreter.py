@@ -33,9 +33,6 @@ AGENT_NAME = "ObjectiveInterpreterAgent"
 #: (Obj_Interpreter.sql:24 list).
 NUMERIC_KEYWORDS = {"SUM", "AVG", "COUNT", "AMOUNT", "PRICE", "QUANTITY", "TOTAL"}
 
-_NUMERIC_TYPES = re.compile(r"int|long|short|byte|float|double|decimal", re.I)
-
-
 def fetch_catalog_metadata(
     spark: SparkSession, database: str | None = None
 ) -> list[dict[str, Any]]:

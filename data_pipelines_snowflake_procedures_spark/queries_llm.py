@@ -2932,7 +2932,7 @@ def knn_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-side structures shared across variant pairs: the IVF cell
     # assignment (both nprobe settings) and the SRP-hashed corpus
     # (plain + multiprobe differ only on the query side)
-    assigned = ivf_assign(emb, centroids).persist()
+    assigned = ivf_assign(emb, centroids, 1).persist()
     planes = srp_hyperplanes(8, 64, "srp")
     hashed = emb.select(
         F.col("vec_id").alias("neighbor_id"),

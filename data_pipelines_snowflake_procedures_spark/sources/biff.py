@@ -29,8 +29,6 @@ from typing import Any
 _CFB_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 _FREESECT = 0xFFFFFFFF
 _ENDOFCHAIN = 0xFFFFFFFE
-_FATSECT = 0xFFFFFFFD
-_DIFSECT = 0xFFFFFFFC
 
 
 def _cfb_stream(data: bytes, names: tuple[str, ...] = ("Workbook", "Book")) -> bytes:

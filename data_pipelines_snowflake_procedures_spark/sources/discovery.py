@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator
 from dataclasses import dataclass
 from typing import Any
 
@@ -136,33 +136,6 @@ def read_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
             return read_arrow_ipc(spark, path)  # batch-parallel
         return read_arrow_stream(spark, path)  # no footer: driver-side
     raise ValueError(f"Unsupported file format: {ext!r} ({path})")
-
-
-def write_any(
-    df: DataFrame, path: str, fmt: str | None = None, mode: str = "overwrite"
-) -> None:
-    """S1-S5 write-side counterpart of :func:`read_any`: csv (with
-    header), json (ndjson), parquet, orc, text — distributed writers;
-    Excel/XML are read-only formats here (nothing at 100 TB should be
-    written as either; export small results via
-    ``.toPandas().to_excel``)."""
-    ext = (fmt or os.path.splitext(path)[1].lstrip(".")).lower()
-    if ext == "csv":
-        df.write.mode(mode).option("header", True).csv(path)
-        return
-    if ext in ("json", "ndjson", "jsonl"):
-        df.write.mode(mode).json(path)
-        return
-    if ext == "parquet":
-        df.write.mode(mode).parquet(path)
-        return
-    if ext == "orc":
-        df.write.mode(mode).orc(path)
-        return
-    if ext in ("txt", "text"):
-        df.write.mode(mode).text(path)  # single string column required
-        return
-    raise ValueError(f"Unsupported write format: {ext!r} ({path})")
 
 
 def file_metadata(path: str, df: DataFrame, row_count: int | None = None) -> dict:
@@ -405,51 +378,3 @@ def quarantine_report(
         "corrupt_fraction": round(n_corrupt / total, 6) if total else 0.0,
         "samples": bad_rows,
     }
-
-
-def read_fixed_width(
-    spark: SparkSession,
-    path: str,
-    colspecs: Sequence[tuple[str, int, int, str]],
-) -> DataFrame:
-    """Fixed-width text reader (the mainframe/COBOL export format the
-    reference's file-discovery surface never reached): each spec is
-    ``(name, start_1based, length, spark_type)``; fields are sliced
-    with ``substring``, trimmed, empty→NULL, and cast — all native
-    Column expressions over a distributed ``spark.read.text`` scan, so
-    a 100 TB fixed-width dump parses with whole-stage codegen and no
-    Python. Rows shorter than a field's window yield NULL for that
-    field (substring past end is empty), never an error — quarantine
-    by ``WHERE col IS NULL`` if strictness is needed."""
-    raw = spark.read.text(path)
-    cols = [
-        F.nullif(F.trim(F.substring(F.col("value"), start, length)), F.lit(""))
-        .cast(dtype)
-        .alias(name)
-        for name, start, length, dtype in colspecs
-    ]
-    return raw.select(*cols)
-
-
-def write_fixed_width(
-    df: DataFrame,
-    path: str,
-    widths: Sequence[tuple[str, int]],
-    mode: str = "overwrite",
-) -> None:
-    """Fixed-width writer: each column renders via ``rpad`` to its
-    width (left-aligned, the common convention; values longer than the
-    window are truncated explicitly rather than corrupting downstream
-    offsets) and concatenates into one text column — a distributed
-    ``text`` write, the round-trip partner of :func:`read_fixed_width`."""
-    rendered = F.concat(
-        *[
-            F.rpad(
-                F.substring(F.coalesce(F.col(c).cast("string"), F.lit("")), 1, w),
-                w,
-                " ",
-            )
-            for c, w in widths
-        ]
-    ).alias("value")
-    df.select(rendered).write.mode(mode).text(path)

@@ -120,37 +120,3 @@ def table_storage_report(path: str) -> dict:
         # < 8 MB average is the classic small-files smell
         "small_files": bool(files) and avg < 8 * 1024 * 1024,
     }
-
-
-def zorder_key(cols_with_bounds: dict, bits: int = 16):
-    """Morton (Z-order) key from 2+ numeric columns: each value is
-    normalized to a ``bits``-bit rank within its [min, max] bounds,
-    then the ranks' bits are interleaved. Rows close on the curve are
-    close in EVERY dimension, so sorting by the key clusters
-    multi-dimensional locality into files — min/max row-group stats
-    then prune point/range queries on ANY of the columns, not just the
-    leading sort column (the OPTIMIZE ZORDER technique).
-
-    ``cols_with_bounds`` maps column name → (min, max) (from a prior
-    1-row aggregate). Pure integer Column arithmetic — JVM-side,
-    whole-stage-codegen'd, no UDF.
-    """
-    from pyspark.sql import functions as F
-
-    n = len(cols_with_bounds)
-    ranks = []
-    for col, (lo, hi) in cols_with_bounds.items():
-        span = float(hi - lo) if hi > lo else 1.0
-        scaled = (F.col(col).cast("double") - float(lo)) / span * ((1 << bits) - 1)
-        rank = F.least(
-            F.greatest(F.floor(scaled).cast("long"), F.lit(0)),
-            F.lit((1 << bits) - 1),
-        )
-        ranks.append(rank)
-    key = F.lit(0).cast("long")
-    for bit in range(bits):
-        for d, rank in enumerate(ranks):
-            key = key + F.shiftleft(
-                F.shiftright(rank, bit).bitwiseAND(F.lit(1)), bit * n + d
-            )
-    return key

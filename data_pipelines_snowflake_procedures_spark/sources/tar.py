@@ -32,7 +32,6 @@ import os
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _BLOCK = 512
 
@@ -224,18 +223,3 @@ def read_tar(spark: SparkSession, path: str, parallelism: int = 64) -> DataFrame
         idx, "shard STRING, name STRING, off BIGINT, size BIGINT"
     ).repartition(min(len(idx), parallelism))
     return frame.mapInPandas(read_members, schema=_TAR_SCHEMA)
-
-
-def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
-    """One row per WebDataset sample: key + map<ext, payload>, entries
-    sorted by ext so the map layout is deterministic."""
-    members = read_tar(spark, path)
-    return members.groupBy("sample_key").agg(
-        F.map_from_entries(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("ext"), F.col("payload")))
-            )
-        ).alias("parts"),
-        F.count("*").cast("long").alias("n_parts"),
-        F.sum("size").cast("long").alias("total_bytes"),
-    )

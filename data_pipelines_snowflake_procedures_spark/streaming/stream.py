@@ -328,58 +328,6 @@ def run_to_memory(
     return spark.table(name)
 
 
-def scd1_upsert_stream(
-    spark: SparkSession,
-    source_stream: DataFrame,
-    target_path: str,
-    keys: list[str],
-    order_col: str,
-    tiebreakers: list[str] | None = None,
-) -> "object":
-    """Streaming SCD1 upsert: every micro-batch MERGEs into a parquet
-    target via ``foreachBatch`` + the batch :func:`~..operators.scd.
-    scd1_merge` plan — the standard pattern for maintaining an
-    up-to-date dimension from a change stream when the sink has no
-    native MERGE (parquet; swap the body for ``scd1_merge_delta`` on
-    Delta and the stream code does not change).
-
-    foreachBatch hands each micro-batch to BATCH code, so the exact
-    merge plan (latest-per-key window on the increment + anti-join
-    against the target) is reused — no dual implementation to drift.
-    The target rewrite is the parquet-fallback cost; at 100 TB the
-    Delta path's file-level pruning replaces it. Returns the streaming
-    query handle (caller awaits termination).
-    """
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from ..operators.scd import scd1_merge
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        try:
-            target = spark.read.parquet(target_path)
-        except Exception:
-            target = batch_df.limit(0)
-        merged = scd1_merge(
-            target, batch_df, keys, order_col, tuple(tiebreakers or ())
-        )
-        # parquet has no transactional MERGE: stage the new version, then
-        # promote it with an atomic rename swap (commit_swap) — the target
-        # is only ever fully old or fully new, and the data is written once
-        from ..sources.sink import commit_swap
-
-        merged.write.mode("overwrite").parquet(target_path + ".staging")
-        commit_swap(target_path + ".staging", target_path)
-
-    return (
-        source_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", target_path + ".checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def rollup_maintain_stream(
     spark: SparkSession,
     source_stream: DataFrame,

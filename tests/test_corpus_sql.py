@@ -39,7 +39,14 @@ from data_pipelines_snowflake_procedures_spark.operators.dedup import (
 from data_pipelines_snowflake_procedures_spark.operators.profile import ident
 from data_pipelines_snowflake_procedures_spark.operators.similarity import (
     ivf_residuals,
+    knn_bruteforce,
+    knn_ivf,
+    knn_ivfpq,
+    knn_lsh,
+    knn_pq,
+    knn_sq,
     pq_fit,
+    sq_bounds,
 )
 from data_pipelines_snowflake_procedures_spark.operators.text import (
     detect_language,
@@ -203,8 +210,9 @@ def test_prepare_corpus_chunk_count_matches_chunks(spark, chunk_tokens, overlap)
 
 def test_split_and_dedup_operators_quote_odd_names(spark):
     """The stratified split, the span, SimHash, embedding and k-means
-    dedup operators, the PQ codebook fit and the IVF residuals give the
-    same rows on odd column names as on plain ones."""
+    dedup operators, the PQ codebook fit, the IVF residuals and the six
+    kNN searches give the same rows on odd column names as on plain
+    ones."""
     plain, _ = _edge_frames(spark)
     plain = plain.withColumn("other", F.expr("CAST(doc_id % 3 AS STRING)"))
     odd = plain.toDF(ODD_ID, ODD_TEXT, ODD_OTHER)
@@ -244,3 +252,17 @@ def test_split_and_dedup_operators_quote_odd_names(spark):
     residuals = ivf_residuals(odd, coarse, **names)
     assert residuals.columns == [ODD_ID, ODD_TEXT, "cell", "remb"]
     assert _rows(residuals) == _rows(ivf_residuals(plain, coarse))
+    bounds = sq_bounds(plain)
+    assert sq_bounds(odd, emb_col=ODD_TEXT) == bounds
+    centroids = plain.filter(F.col("vec_id") <= 2).toDF("centroid_id", "embedding")
+    searches = (
+        (knn_bruteforce, dict(k=3), {}),
+        (knn_ivf, dict(k=3, nprobe=2, centroids=centroids), dict(centroids=centroids.toDF("centroid_id", ODD_TEXT))),
+        (knn_lsh, dict(k=3, n_planes=2, dim=dims), {}),
+        (knn_sq, dict(k=3, rerank=2, bounds=bounds), {}),
+        (knn_pq, dict(k=3, rerank=2, codebooks=books), {}),
+        (knn_ivfpq, dict(k=3, nprobe=2, rerank=2, coarse=coarse, codebooks=books), {}),
+    )
+    for op, kw, odd_kw in searches:
+        got = _rows(op(odd, odd.filter(F.col(ident(ODD_ID)) < 4), **names, **{**kw, **odd_kw}))
+        assert got and got == _rows(op(plain, plain.filter(F.col("vec_id") < 4), **kw)), op.__name__

@@ -573,26 +573,29 @@ def test_xls_multi_sheet_tab_order_and_dq(spark, tmp_path):
 
 
 def test_write_any_round_trip(spark, sf_dir, tmp_path):
-    from data_pipelines_snowflake_procedures_spark.sources.discovery import (
-        write_any,
-    )
+    """Every format Spark's own writers produce (csv with header, json,
+    parquet, orc, text) reads back through read_any."""
     from data_pipelines_snowflake_procedures_spark.session import load_table
 
     src = load_table(spark, sf_dir, "region")
-    for fmt in ("csv", "json", "parquet", "orc"):
+    writers = {
+        "csv": lambda w, path: w.option("header", True).csv(path),
+        "json": lambda w, path: w.json(path),
+        "parquet": lambda w, path: w.parquet(path),
+        "orc": lambda w, path: w.orc(path),
+    }
+    for fmt, write in writers.items():
         path = str(tmp_path / f"out_{fmt}")
-        write_any(src, path, fmt=fmt)
+        write(src.write, path)
         back = read_any(spark, path, fmt=fmt)
         assert back.count() == 5
         assert set(back.columns) == set(src.columns)
     # text: one string column in, "value" column out (raw-corpus path)
     txt = str(tmp_path / "out_txt")
-    write_any(src.select("r_name"), txt, fmt="txt")
+    src.select("r_name").write.text(txt)
     back = read_any(spark, txt, fmt="txt")
     assert back.count() == 5
     assert back.columns == ["value"]
-    with pytest.raises(ValueError, match="Unsupported write"):
-        write_any(src, str(tmp_path / "x.avro"))
 
 
 def _write_xlsx_generic(path: str, header: list[str], rows: list[list]) -> None:
@@ -1050,48 +1053,6 @@ def test_quarantine_corrupt_json_and_csv(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="quarantine split"):
         read_with_quarantine(spark, "whatever.parquet")
-
-
-def test_fixed_width_round_trip_and_edges(spark, tmp_path):
-    """Fixed-width writer -> reader round trip; short rows NULL-pad,
-    overlong values truncate at their window (offsets never corrupt),
-    empty fields read as NULL, numerics cast."""
-    from data_pipelines_snowflake_procedures_spark.sources.discovery import (
-        read_fixed_width,
-        write_fixed_width,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "alpha", 12.5), (2, "a-very-long-name", 7.25), (3, None, None)],
-        ["id", "name", "score"],
-    )
-    out = str(tmp_path / "fw")
-    write_fixed_width(df, out, [("id", 4), ("name", 8), ("score", 8)])
-    back = read_fixed_width(
-        spark,
-        out,
-        [
-            ("id", 1, 4, "long"),
-            ("name", 5, 8, "string"),
-            ("score", 13, 8, "double"),
-        ],
-    )
-    rows = {r["id"]: r for r in back.collect()}
-    assert rows[1]["name"] == "alpha" and rows[1]["score"] == 12.5
-    # overlong name truncated to its 8-char window
-    assert rows[2]["name"] == "a-very-l" and rows[2]["score"] == 7.25
-    assert rows[3]["name"] is None and rows[3]["score"] is None
-    # short physical row: fields past the end read as NULL
-    (tmp_path / "short.txt").write_text("   7\n")
-    short = read_fixed_width(
-        spark,
-        str(tmp_path / "short.txt"),
-        [("id", 1, 4, "long"), ("name", 5, 8, "string")],
-    ).collect()
-    assert short[0]["id"] == 7 and short[0]["name"] is None
-    # the parse is pure Column expressions — no Python on executors
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
 
 
 def test_read_any_arrow_ipc_file_batch_parallel(spark, tmp_path):

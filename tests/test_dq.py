@@ -143,10 +143,26 @@ def test_approx_profile_within_tolerance(spark, sf_dir):
         ap = approx[col]
         assert abs(ap - ex) <= max(0.06 * ex, 2), (col, ex, ap)
     # approx=True reaches the sketch: 100000 distinct ids are estimated,
-    # not counted
-    (ids,) = profile_long(spark.range(100000), approx=True).collect()
+    # not counted. Each id appears twice, so the clamp to the non-null
+    # rows (200000) cannot turn an overestimate into the exact count.
+    twice = spark.range(200000).selectExpr("id % 100000 AS id")
+    (ids,) = profile_long(twice, approx=True).collect()
     assert ids["count_distinct"] != 100000
     assert abs(ids["count_distinct"] - 100000) <= 0.06 * 100000
+
+
+def test_approx_profile_never_counts_more_distinct_than_rows(spark, sf_dir):
+    """HyperLogLog overshoots some sf0.01 lineitem columns (an
+    unclamped l_extendedprice estimate read 60505 distinct values in
+    60000 rows); the profile clamps the estimate to the non-null rows,
+    so no distinct_ratio, and no uniqueness score built on it, exceeds 1."""
+    from data_pipelines_snowflake_procedures_spark.queries import REGISTRY
+
+    rows = REGISTRY["profile_lineitem_approx"].spark_fn(spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert r["count_distinct"] <= r["count_all"] - r["count_nulls"], r
+        assert r["distinct_ratio"] <= 1.0, r
 
 
 def _duckdb_file_dq(con, table, cols):

@@ -79,28 +79,3 @@ def test_exif_ignored_after_sos():
     sos = j.index(b"\xff\xda")
     frankenstein = j[:sos] + j[sos:] + app1  # appended after EOI
     assert extract_exif(frankenstein) == {}
-
-
-def test_apply_orientation_all_cases_and_involutions():
-    import numpy as np
-
-    from data_pipelines_snowflake_procedures_spark.operators.exif import (
-        apply_exif_orientation as ap,
-    )
-
-    img = np.arange(24).reshape(2, 4, 3)
-    # rotating 6 (90 CW) then 8 (90 CCW) round-trips
-    assert np.array_equal(ap(ap(img, 6), 8), img)
-    # 2, 3, 4 are involutions
-    for o in (2, 3, 4):
-        assert np.array_equal(ap(ap(img, o), o), img)
-    # 5 and 7 are transpositions (self-inverse)
-    for o in (5, 7):
-        assert np.array_equal(ap(ap(img, o), o), img)
-    # 6 rotates 90 CW: top-left pixel moves to top-right
-    r = ap(img, 6)
-    assert r.shape == (4, 2, 3)
-    assert np.array_equal(r[0, -1], img[0, 0])
-    # unknown orientation: unchanged
-    assert np.array_equal(ap(img, 0), img)
-    assert np.array_equal(ap(img, 9), img)

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from data_pipelines_snowflake_procedures_spark.operators.integrity import (
-    discover_inclusion_dependencies,
     referential_integrity,
 )
 
@@ -17,30 +16,6 @@ def test_referential_integrity_with_orphans(spark):
     assert row["n_child_keys"] == 3  # distinct non-null
     assert row["n_orphan_keys"] == 1  # 99
     assert abs(row["integrity_ratio"] - (1 - 1 / 3)) < 1e-6
-
-
-def test_discover_inclusion_dependencies(spark, sf_dir):
-    from data_pipelines_snowflake_procedures_spark.session import load_table
-
-    tables = {
-        "orders": load_table(spark, sf_dir, "orders"),
-        "customer": load_table(spark, sf_dir, "customer"),
-        "nation": load_table(spark, sf_dir, "nation"),
-    }
-    found = discover_inclusion_dependencies(
-        tables,
-        candidates=[
-            ("orders", "o_custkey", "customer", "c_custkey"),
-            ("customer", "c_nationkey", "nation", "n_nationkey"),
-            ("customer", "c_custkey", "nation", "n_nationkey"),  # not contained
-        ],
-        min_ratio=1.0,
-    )
-    names = {(r["child"], r["parent"]) for r in found}
-    assert ("orders.o_custkey", "customer.c_custkey") in names
-    assert ("customer.c_nationkey", "nation.n_nationkey") in names
-    assert ("customer.c_custkey", "nation.n_nationkey") not in names
-    assert all(r["n_orphan_keys"] == 0 for r in found)
 
 
 def test_run_table_dq_with_related_tables(spark, sf_dir):

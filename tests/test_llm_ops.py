@@ -488,6 +488,73 @@ def test_nearest_kernel_ships_by_value(spark, monkeypatch, tmp_path):
     assert [round(x, 9) for x in residuals[1]] == [-0.1, -0.2]
 
 
+def test_cosine_scan_kernel_ships_by_value(spark, monkeypatch, tmp_path):
+    """The one cosine scan kernel of the exact, SQ, PQ and IVF-PQ
+    searches runs in a Python process that cannot import this package,
+    on a positional-name batch, and emits there what it emits here."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from data_pipelines_snowflake_procedures_spark.operators.similarity import (
+        knn_ivfpq,
+        knn_pq,
+        knn_sq,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, [0.9, 0.8]), (3, [0.2, 0.1])],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    q = df.filter(F.col("vec_id") == 1)
+    books = [[[0.0, 0.5], [0.5, 0.0]]]
+    vectors = [[0.0, 1.0], [0.9, 0.8], [0.2, 0.1]]
+    searches = {
+        "bruteforce": (lambda: knn_bruteforce(df, q, k=1), {"_1": vectors}),
+        "sq": (lambda: knn_sq(df, q, [(0.0, 1.0), (0.0, 1.0)], k=1, rerank=1), {"_1": vectors}),
+        "pq": (lambda: knn_pq(df, q, books, k=1, rerank=1), {"_1": vectors}),
+        "ivfpq": (
+            lambda: knn_ivfpq(df, q, [[0.0, 0.0], [1.0, 1.0]], books, k=1, nprobe=2, rerank=1),
+            {"_1": [0, 1, 0], "_2": vectors, "_3": [1.0, 1.2, 0.3]},
+        ),
+    }
+    map_in_pandas = type(df).mapInPandas
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    script = (
+        "import json, pickle, sys, pandas as pd\n"
+        "kernel, batch = pickle.loads(sys.stdin.buffer.read())\n"
+        "(out,) = kernel(iter([pd.DataFrame(batch)]))\n"
+        "print(json.dumps([out[c].tolist() for c in out.columns]))\n"
+    )
+    for name, (search, payload) in searches.items():
+        kernels = []
+
+        def spy(self, fn, *args, **kwargs):
+            kernels.append(fn)
+            return map_in_pandas(self, fn, *args, **kwargs)
+
+        monkeypatch.setattr(type(df), "mapInPandas", spy)
+        search()
+        monkeypatch.undo()
+        batch = {"_0": [1, 2, 3], **payload}
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            input=cloudpickle.dumps((kernels[-1], batch)),
+            capture_output=True,
+            cwd=tmp_path,
+            env=env,
+            timeout=120,
+        )
+        assert proc.returncode == 0, (name, proc.stderr.decode()[-2000:])
+        (here,) = kernels[-1](iter([pd.DataFrame(batch)]))
+        assert list(here.columns) == ["query_id", "neighbor_id", "c_raw"], name
+        assert json.loads(proc.stdout.decode()) == [here[c].tolist() for c in here.columns], name
+
+
 def test_connected_components_job_count_is_fixed(spark, count_jobs):
     """The same Spark job count, at most 2, on the 8-edge fixture and on
     a 3000-node chain (counted per job group after the listener bus has
@@ -1926,8 +1993,10 @@ def test_knn_scans_zero_norm_vector_sorts_last(spark):
     0/0 = NaN in the numpy scan kernels; Spark orders NaN ABOVE every
     real double, so without the NaN->NULL guard it would surface as
     the #1 neighbor. It must sort LAST (NULL) like the pre-kernel
-    Spark division did — i.e. rank after every real-scored neighbor."""
+    Spark division did — i.e. rank after every real-scored neighbor —
+    in every search."""
     from data_pipelines_snowflake_procedures_spark.operators.similarity import (
+        knn_ivf,
         knn_sq,
         sq_bounds,
     )
@@ -1953,6 +2022,17 @@ def test_knn_scans_zero_norm_vector_sorts_last(spark):
     # the exact re-rank stage is guarded too: the zero-norm candidate
     # lands last with a NULL cosine, never first with NaN
     assert sq_rank[3]["neighbor_id"] == 4 and sq_rank[3]["cosine"] is None
+
+    # the join searches rank it last too, where the division raised
+    # DIVIDE_BY_ZERO under ANSI mode
+    cents = vecs.filter(F.col("vec_id") <= 2).withColumnRenamed("vec_id", "centroid_id")
+    for out_j in (
+        knn_lsh(vecs, q, k=3, n_planes=0, dim=4).collect(),
+        knn_ivf(vecs, q, cents, k=3, nprobe=2).collect(),
+    ):
+        j_rank = {r["rank"]: r for r in out_j}
+        assert [j_rank[i]["neighbor_id"] for i in (1, 2, 3)] == [2, 3, 4]
+        assert j_rank[3]["cosine"] is None
 
 
 @pytest.mark.slowtier

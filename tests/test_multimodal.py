@@ -11,7 +11,6 @@ from data_pipelines_snowflake_procedures_spark.operators.multimodal import (
     attach_binary,
     decode,
     extract_features,
-    frame_sample_plan,
     set_decoder,
 )
 
@@ -182,11 +181,6 @@ def test_extract_features_decodes_ppm_payloads(spark):
     # text/plain payloads keep NULL image stats
     plain = extract_features(attach_binary(docs)).collect()
     assert all(r["width"] is None and r["mean_r"] is None for r in plain)
-
-
-def test_frame_sample_plan(spark):
-    df = spark.range(100).withColumnRenamed("id", "doc_id")
-    assert frame_sample_plan(df, every_n=10).count() == 10
 
 
 def test_groupwise_zscore_pandas_window_parity(spark, sf_dir):
@@ -1894,30 +1888,43 @@ def test_flc_error_paths():
 
 
 def test_flc_spark_plumbing_attach_and_features(spark, sf_dir):
-    """Distributed FLIC plumbing: attach_flc_video renders per-doc FLC
-    payloads in Arrow batches; extract_video_features decodes them back
-    through the shared VIDEO_SCHEMA with the inter-frame codec branch."""
+    """Distributed FLIC plumbing: each document's bytes become 8x8
+    gray-palette frames of one FLC payload (encode_flc, on the driver);
+    extract_video_features decodes them back in Arrow batches through
+    the shared VIDEO_SCHEMA with the inter-frame codec branch."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     from data_pipelines_snowflake_procedures_spark.operators.multimodal import (
-        attach_flc_video,
+        encode_flc,
         extract_video_features,
     )
     from data_pipelines_snowflake_procedures_spark.session import load_table
 
-    docs = load_table(spark, sf_dir, "documents").limit(24)
-    vids = attach_flc_video(docs)
-    feats = {
-        r.doc_id: r for r in extract_video_features(vids).collect()
-    }
-    src = {r.doc_id: r.text for r in docs.collect()}
-    assert set(feats) == set(src)
-    pal_luma = np.array([(299 + 587 + 114) * i for i in range(256)])
-    for doc_id, text in src.items():
-        data = (text or "").encode("utf-8")
+    palette = [(i, i, i) for i in range(256)]
+    bufs, rows = {}, []
+    for r in load_table(spark, sf_dir, "documents").limit(24).collect():
+        data = (r.text or "").encode("utf-8")
         nf = max(-(-len(data) // 64), 1)
         buf = np.zeros(nf * 64, dtype=np.uint8)
         buf[: len(data)] = np.frombuffer(data, dtype=np.uint8)
+        bufs[r.doc_id] = buf
+        rows.append((r.doc_id, encode_flc(list(buf.reshape(nf, 8, 8)), palette, speed_ms=40)))
+    vids = spark.createDataFrame(rows, "doc_id LONG, payload BINARY").select(
+        "doc_id",
+        "payload",
+        F.struct(
+            F.lit("video/x-flic").alias("mime"),
+            F.length("payload").cast("long").alias("n_bytes"),
+        ).alias("media_meta"),
+    )
+    feats = {
+        r.doc_id: r for r in extract_video_features(vids).collect()
+    }
+    assert set(feats) == set(bufs)
+    pal_luma = np.array([(299 + 587 + 114) * i for i in range(256)])
+    for doc_id, buf in bufs.items():
+        nf = len(buf) // 64
         r = feats[doc_id]
         assert (r.width, r.height, r.n_frames) == (8, 8, nf)
         assert r.sampled_mean_y is None  # honest: no sampling shortcut

@@ -1,5 +1,5 @@
-"""Property-based tests (hypothesis) for the pure-Python operators:
-statement splitting, PII masks, fingerprint normalization invariants."""
+"""Property-based tests (hypothesis): statement splitting, the Spark
+PII detector and masks, the ustar codec."""
 
 from __future__ import annotations
 
@@ -10,13 +10,13 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from data_pipelines_snowflake_procedures_spark.functions.sqltools import (
-    escape_sql_literal,
     split_statements,
     strip_comments,
 )
+from data_pipelines_snowflake_procedures_spark.operators.profile import sql_str
 from data_pipelines_snowflake_procedures_spark.operators.security import (
-    detect_pii_types,
-    mask_value,
+    detect_pii_columns,
+    mask_expr,
 )
 
 # -- statement splitter ----------------------------------------------------
@@ -70,41 +70,58 @@ def test_comments_stripped_but_literals_kept(a, b):
 @given(st.text(max_size=50))
 @settings(max_examples=200, deadline=None)
 def test_escape_sql_literal_no_bare_quotes(s):
-    escaped = escape_sql_literal(s)
-    # every quote is doubled: no odd-length quote runs remain
-    assert all(len(run) % 2 == 0 for run in re.findall(r"'+", escaped))
+    lit = sql_str(s)
+    assert lit[0] == lit[-1] == "'"
+    # every quote and backslash in the body is escaped, so no quote
+    # closes the literal early, and unescaping gives the text back
+    body = lit[1:-1]
+    assert re.fullmatch(r"(?:\\.|[^\\'])*", body, re.S)
+    assert re.sub(r"\\(.)", r"\1", body, flags=re.S) == s
 
 
 # -- PII masks -------------------------------------------------------------
 
 
-@given(st.from_regex(r"[a-z]{1,10}@[a-z]{1,10}\.[a-z]{2,4}", fullmatch=True))
-@settings(max_examples=200, deadline=None)
-def test_email_mask_invariants(email):
-    assert detect_pii_types(email) == "EMAIL"
-    masked = mask_value(email, "EMAIL")
+def _first_types_and_masks(spark, values, pii_type):
+    """Per value, the first PII type the Spark detector finds in it and
+    its ``pii_type`` mask: one single-row frame, one column per value,
+    so every drawn value is checked by one detection and one mask job."""
+    names = [f"v{i}" for i in range(len(values))]
+    df = spark.createDataFrame([tuple(values)], ", ".join(f"{n} STRING" for n in names))
+    found = detect_pii_columns(df)
+    masked = df.select(*[mask_expr(n, pii_type) for n in names]).first()
+    return [found.get(n, [None])[0] for n in names], list(masked)
+
+
+@given(st.lists(st.from_regex(r"[a-z]{1,10}@[a-z]{1,10}\.[a-z]{2,4}", fullmatch=True), min_size=1, max_size=40))
+@settings(max_examples=10, deadline=None)
+def test_email_mask_invariants(spark, emails):
+    types, masked = _first_types_and_masks(spark, emails, "EMAIL")
+    assert types == ["EMAIL"] * len(emails)
     # exact contract: first char + *** + intact domain
-    assert masked == email[0] + "***@" + email.split("@", 1)[1]
+    assert masked == [e[0] + "***@" + e.split("@", 1)[1] for e in emails]
 
 
-@given(st.from_regex(r"[0-9]{10}", fullmatch=True))
-@settings(max_examples=200, deadline=None)
-def test_phone_mask_keeps_only_last4(phone):
-    masked = mask_value(phone, "PHONE")
-    assert masked == "*" * 6 + phone[-4:]
+@given(st.lists(st.from_regex(r"[0-9]{10}", fullmatch=True), min_size=1, max_size=40))
+@settings(max_examples=10, deadline=None)
+def test_phone_mask_keeps_only_last4(spark, phones):
+    _, masked = _first_types_and_masks(spark, phones, "PHONE")
+    assert masked == ["*" * 6 + p[-4:] for p in phones]
 
 
-@given(st.from_regex(r"[0-9]{4}-[0-9]{4}-[0-9]{4}-[0-9]{4}", fullmatch=True))
-@settings(max_examples=100, deadline=None)
-def test_card_mask_keeps_only_last4(card):
+@given(st.lists(st.from_regex(r"[0-9]{4}-[0-9]{4}-[0-9]{4}-[0-9]{4}", fullmatch=True), min_size=1, max_size=40))
+@settings(max_examples=10, deadline=None)
+def test_card_mask_keeps_only_last4(spark, cards):
     # dash-separated cards hit the (looser) PHONE pattern first, same
     # as the reference's first-match-wins chain (Data_Security.sql:15);
     # 16 contiguous digits fall through to CREDIT_CARD
-    assert detect_pii_types(card) == "PHONE"
-    assert detect_pii_types(card.replace("-", "")) == "CREDIT_CARD"
-    masked = mask_value(card, "CREDIT_CARD")
-    assert masked == "XXXX-XXXX-XXXX-" + card[-4:]
-    assert card[:4] not in masked or card[:4] == card[-4:]
+    types, masked = _first_types_and_masks(spark, cards, "CREDIT_CARD")
+    assert types == ["PHONE"] * len(cards)
+    bare, _ = _first_types_and_masks(spark, [c.replace("-", "") for c in cards], "CREDIT_CARD")
+    assert bare == ["CREDIT_CARD"] * len(cards)
+    assert masked == ["XXXX-XXXX-XXXX-" + c[-4:] for c in cards]
+    for card, m in zip(cards, masked):
+        assert card[:4] not in m or card[:4] == card[-4:]
 
 
 # -- ustar codec (sources/tar.py) ------------------------------------------

@@ -191,47 +191,6 @@ def test_scd2_merge(spark):
     assert len(by_key[9]) == 1 and by_key[9][0]["is_current"] is True
 
 
-def test_scd1_upsert_stream_matches_batch_merge(spark, sf_dir, tmp_path):
-    """foreachBatch streaming SCD1 must land the same target state as
-    the batch merge plan run over the same data."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_pipelines_snowflake_procedures_spark.operators.scd import (
-        dedup_latest,
-    )
-    from data_pipelines_snowflake_procedures_spark.streaming.stream import (
-        scd1_upsert_stream,
-    )
-
-    orders_path = os.path.join(sf_dir, "orders.parquet")
-    schema = spark.read.parquet(orders_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
-    target = str(tmp_path / "orders_scd1")
-    q = scd1_upsert_stream(
-        spark, stream, target, ["o_custkey"], "o_orderdate", ["o_orderkey"]
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(target)
-    expected = dedup_latest(
-        spark.read.parquet(orders_path),
-        ["o_custkey"],
-        "o_orderdate",
-        ["o_orderkey"],
-    )
-    assert got.count() == expected.count()
-    diff = got.select(sorted(got.columns)).exceptAll(
-        expected.select(sorted(expected.columns))
-    )
-    assert diff.count() == 0
-
-
 def test_snapshot_diff_classifies_and_null_transitions(spark):
     """insert/update/delete classification, null-safe change detection
     (NULL->value and value->NULL are updates), unchanged rows absent."""

@@ -7,8 +7,7 @@ import pytest
 from data_pipelines_snowflake_procedures_spark.operators.security import (
     apply_pii_masking,
     detect_pii_columns,
-    detect_pii_types,
-    mask_value,
+    mask_expr,
 )
 
 
@@ -33,22 +32,48 @@ from data_pipelines_snowflake_procedures_spark.operators.security import (
         (None, None),
     ],
 )
-def test_detect_pii_types(value, expected):
-    assert detect_pii_types(value) == expected
+def test_detect_pii_types(spark, value, expected):
+    """The first type the detector finds in a one-value column is the
+    value's first-match-wins type; a non-string column has none."""
+    df = spark.createDataFrame([(value,)], "v BIGINT" if isinstance(value, int) else "v STRING")
+    assert detect_pii_columns(df).get("v", [None])[0] == expected
 
 
-def test_mask_values():
-    assert mask_value("alice@example.com", "EMAIL") == "a***@example.com"
-    assert mask_value("9876543210", "PHONE") == "******3210"
-    # the digit-star mask only hides digits with >=4 contiguous digits
-    # after them — separator-formatted numbers keep their groups
-    # (faithful to the reference's phone mask)
-    assert mask_value("14155550000", "PHONE") == "*******0000"
-    assert mask_value("+1 415 555 0000", "PHONE") == "+1 415 555 0000"
-    assert mask_value("1234 5678 9012", "AADHAAR") == "XXXX XXXX 9012"
-    assert mask_value("1234-5678-9012-3456", "CREDIT_CARD") == "XXXX-XXXX-XXXX-3456"
-    assert mask_value("whatever", "OTHER") == "*****"
-    assert mask_value(None, "EMAIL") is None
+def _masked(spark, cases):
+    """``mask_expr(value, pii_type)`` for every (value, pii_type) pair,
+    from one single-row frame with one column per pair."""
+    names = [f"v{i}" for i in range(len(cases))]
+    df = spark.createDataFrame([tuple(v for v, _ in cases)], ", ".join(f"{n} STRING" for n in names))
+    return list(df.select(*[mask_expr(n, t) for n, (_, t) in zip(names, cases)]).first())
+
+
+def test_mask_values(spark):
+    cases = {
+        ("alice@example.com", "EMAIL"): "a***@example.com",
+        ("9876543210", "PHONE"): "******3210",
+        # the digit-star mask only hides digits with >=4 contiguous
+        # digits after them — separator-formatted numbers keep their
+        # groups (faithful to the reference's phone mask)
+        ("14155550000", "PHONE"): "*******0000",
+        ("+1 415 555 0000", "PHONE"): "+1 415 555 0000",
+        ("1234 5678 9012", "AADHAAR"): "XXXX XXXX 9012",
+        ("1234-5678-9012-3456", "CREDIT_CARD"): "XXXX-XXXX-XXXX-3456",
+        ("whatever", "OTHER"): "*****",
+        ("no at sign", "EMAIL"): "*****",
+    }
+    assert _masked(spark, list(cases)) == list(cases.values())
+
+
+def test_every_mask_keeps_null(spark):
+    """A NULL stays NULL under every mask, as in the DuckDB oracle
+    (``substr(NULL, ...) || ...`` is NULL), also through the
+    full-table masking of a detected column."""
+    kinds = ["EMAIL", "PHONE", "AADHAAR", "CREDIT_CARD", "OTHER"]
+    assert _masked(spark, [(None, t) for t in kinds]) == [None] * len(kinds)
+    df = spark.createDataFrame([(1, "alice@example.com"), (2, None)], "id INT, contact STRING")
+    masked, info = apply_pii_masking(df)
+    assert info == {"contact": ["EMAIL"]}
+    assert {r["id"]: r["contact"] for r in masked.collect()} == {1: "a***@example.com", 2: None}
 
 
 def test_detect_and_mask_full_table(spark):

@@ -95,7 +95,10 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     """Z-order vs single-column sort: sorting by x alone leaves y
     scattered across every file (no pruning on y); files range-split on
     the Morton key must prune for selective ranges on BOTH dimensions."""
-    from data_pipelines_snowflake_procedures_spark.sources.sink import zorder_key
+    from data_pipelines_snowflake_procedures_spark.operators.layout import (
+        quantize_long,
+        zorder_key,
+    )
 
     n, files = 40000, 16
     df = spark.range(n).select(
@@ -106,7 +109,10 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     zordered = str(tmp_path / "zordered")
     df.repartitionByRange(files, "x").sortWithinPartitions("x").write.parquet(xsorted)
     bounds = df.agg(F.min("x"), F.max("x"), F.min("y"), F.max("y")).collect()[0]
-    key = zorder_key({"x": (bounds[0], bounds[1]), "y": (bounds[2], bounds[3])})
+    key = zorder_key(
+        quantize_long(F.col("x"), F.lit(bounds[0]), F.lit(bounds[1])),
+        quantize_long(F.col("y"), F.lit(bounds[2]), F.lit(bounds[3])),
+    )
     (
         df.withColumn("__zkey", key)
         .repartitionByRange(files, "__zkey")

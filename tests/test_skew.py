@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from data_pipelines_snowflake_procedures_spark.operators.skew import (
     salt_column,
-    salted_broadcast_join,
     salted_sum_count,
 )
 
@@ -40,14 +39,3 @@ def test_salted_sum_count_matches_plain(spark):
     for k in plain:
         assert salted[k][0] == plain[k][0]
         assert abs(salted[k][1] - plain[k][1]) < 1e-6
-
-
-def test_salted_join_matches_plain(spark):
-    big = spark.range(5000).select((F.col("id") % 3).alias("k"), "id")
-    small = spark.createDataFrame(
-        [(0, "zero"), (1, "one"), (2, "two")], ["k", "name"]
-    )
-    salted = salted_broadcast_join(big, small, "k", salt_source="id").collect()
-    plain = big.join(small, "k").collect()
-    key = lambda r: (r["k"], r["id"], r["name"])  # noqa: E731
-    assert sorted(map(key, salted)) == sorted(map(key, plain))

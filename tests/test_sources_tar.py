@@ -15,7 +15,6 @@ from data_pipelines_snowflake_procedures_spark.sources.tar import (
     index_tar,
     parse_ustar,
     read_tar,
-    read_webdataset,
     split_key,
 )
 
@@ -119,21 +118,6 @@ def test_read_tar_distributed(spark, tmp_path):
         assert (r["sample_key"], r["ext"]) == split_key(name)
 
 
-def test_read_webdataset_groups_samples(spark, tmp_path):
-    path = tmp_path / "shard.tar"
-    path.write_bytes(encode_ustar(MEMBERS))
-    got = {
-        r["sample_key"]: r
-        for r in read_webdataset(spark, str(path)).collect()
-    }
-    assert set(got) == {"000/0001", "000/0002"}
-    s1 = got["000/0001"]
-    assert s1["n_parts"] == 2
-    assert sorted(s1["parts"]) == ["cls", "txt"]
-    assert bytes(s1["parts"]["txt"]) == b"hello tar world"
-    assert s1["total_bytes"] == len(b"hello tar world") + 2
-
-
 def test_read_any_dispatches_tar(spark, tmp_path):
     from data_pipelines_snowflake_procedures_spark.sources.discovery import (
         read_any,
@@ -163,11 +147,8 @@ def test_read_tar_directory_of_shards(spark, tmp_path):
         for r in read_tar(spark, str(tmp_path)).collect()
     }
     assert rows == dict(shard_a + shard_b)
-    wds = {
-        r["sample_key"]: r["n_parts"]
-        for r in read_webdataset(spark, str(tmp_path)).collect()
-    }
-    assert wds == {"a/0001": 2, "b/0002": 2}
+    keys = sorted(r["sample_key"] for r in read_tar(spark, str(tmp_path)).collect())
+    assert keys == ["a/0001", "a/0001", "b/0002", "b/0002"]
 
 
 def test_read_tar_empty_directory_raises(spark, tmp_path):

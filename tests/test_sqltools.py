@@ -1,10 +1,9 @@
 from data_pipelines_snowflake_procedures_spark.functions.sqltools import (
-    escape_sql_literal,
     extract_table_names,
-    is_ddl,
     split_statements,
     strip_comments,
 )
+from data_pipelines_snowflake_procedures_spark.operators.profile import sql_str
 
 
 def test_split_basic():
@@ -55,11 +54,6 @@ def test_table_names_skip_if_exists():
     assert extract_table_names("create table if not exists s.t2 AS SELECT 1") == ["s.t2"]
 
 
-def test_is_ddl():
-    assert is_ddl("CREATE TABLE t (a INT)")
-    assert is_ddl("  drop view v")
-    assert not is_ddl("SELECT 1")
-
-
 def test_escape_sql_literal():
-    assert escape_sql_literal("it's") == "it''s"
+    assert sql_str("it's") == "'it\\'s'"
+    assert sql_str("a\\b") == "'a\\\\b'"
