@@ -37,19 +37,13 @@ same construction that took MinHash from 24 interpreted md5s to one
 pairwise-independent family, which is the standard large-scale
 substitute for fresh hashes per replicate (the Poisson bootstrap
 itself already tolerates O(√n) replicate-size noise far larger than
-any family-vs-iid effect on the CI quantiles). An 8-arm CASE still
-never sees a compound input: the uniform is MATERIALIZED as a column
-before the inverse-CDF CASE (the measured CASE-arm-duplication
-trap).
+any family-vs-iid effect on the CI quantiles).
 
-Scale shape: the per-replicate constants explode from one
-CONSTANT-FOLDED literal array (b rows per input row, no join), the
-base pair and the uniform are PLAIN projected expressions, and
-everything past the single md5 is whole-stage-codegen integer
-arithmetic. groupBy(replicate) looks like a B× blow-up but map-side
-partial aggregation collapses each partition to ≤B rows before the
-exchange — the shuffle carries B × partitions rows, and the final
-percentile rule runs over B rows on the driver (the k-means/PQ
+Scale shape (:func:`grouped_replicate_partials`): ONE Arrow pass
+reduces each batch to its (group, replicate) integer partials in
+numpy, so the b× fanout never materializes as rows; the shuffle
+carries groups × B × partitions rows, and the final percentile rule
+runs over B rows per group on the driver (the k-means/PQ
 "model state is driver metadata" contract).
 """
 
@@ -57,7 +51,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -73,17 +67,6 @@ def poisson1_cdf15(max_k: int = 8) -> list[int]:
         out.append(int(cum * 32768))
         term /= k + 1
     return out
-
-
-def _poisson_weight(u15: Column, thresholds: list[int]) -> Column:
-    """Inverse-CDF CASE over a 15-bit uniform. Call this on a
-    MATERIALIZED column only: each WHEN arm re-references the input
-    expression, so a compound ``u15`` would be re-evaluated per arm
-    (the measured 3× regression this module's derivation avoids)."""
-    w: Column = F.lit(len(thresholds))
-    for k in reversed(range(len(thresholds))):
-        w = F.when(u15 < F.lit(thresholds[k]), F.lit(k)).otherwise(w)
-    return w
 
 
 #: Largest prime below 2^30 — same affine-universal family modulus as
@@ -121,89 +104,6 @@ def boot_perm_consts(b: int, seed: str = "boot") -> "list[tuple[int, int, int]]"
     return out
 
 
-def _base_halves(key: Column, seed: str) -> tuple[Column, Column]:
-    """The row's 30-bit base pair: the two 60-bit halves of ONE md5
-    digest, reduced mod 2^30."""
-    h = F.md5(F.concat(key.cast("string"), F.lit(f"|{seed}")))
-    return (
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % F.lit(_BOOT_M30),
-        F.conv(F.substring(h, 16, 15), 16, 10).cast("long") % F.lit(_BOOT_M30),
-    )
-
-
-def _slot_u15(h0a: Column, h0b: Column, const: "tuple[int, int, int]") -> Column:
-    """Replicate's 15-bit uniform from the row base pair and its
-    affine constants."""
-    a, c, d = const
-    return (
-        (F.lit(a) * h0a + F.lit(c) * h0b + F.lit(d)) % F.lit(_BOOT_P)
-    ).bitwiseAND(F.lit(32767))
-
-
-def poisson_weights(key: Column, b: int, seed: str = "boot") -> Column:
-    """Array of ``b`` deterministic Poisson(1) weights for a row key —
-    the readable array-form SPEC of the draw scheme (asserted
-    draw-identical to the hot-path :func:`poisson_draws` in tests).
-    Narrow expression; prefer :func:`poisson_draws` on data-sized
-    inputs (the compound conv(md5) base re-evaluates per replicate in
-    this form)."""
-    thresholds = poisson1_cdf15()
-    h0a, h0b = _base_halves(key, seed)
-    cols = [
-        _poisson_weight(_slot_u15(h0a, h0b, const), thresholds)
-        for const in boot_perm_consts(b, seed)
-    ]
-    return F.array(*cols)
-
-
-def poisson_draws(df: DataFrame, key_col: str, b: int, seed: str = "boot") -> DataFrame:
-    """Exploded hot-path form of :func:`poisson_weights`: appends
-    ``(__r, __w)`` — one row per (input row, replicate). ONE md5 per
-    input row projects the base pair; the per-replicate constants
-    posexplode from a literal array (constant-folded — no per-row
-    construction, no join); the uniform is a plain projection; the
-    inverse-CDF CASE runs on the MATERIALIZED 15-bit column.
-    Everything past the single digest is whole-stage-codegen integer
-    arithmetic.
-
-    Parallelism guard: the b× row fanout MULTIPLIES the scan's
-    parallelism — a small single-file parquet scan arrives as ONE
-    partition, which would serialize a b×n-row explode+aggregate on
-    one core (measured: the entire entry cost at sf0.1 was this, not
-    the hash arithmetic). When the input has fewer partitions than
-    the session default, repartition BEFORE the explode: a shuffle of
-    n narrow rows buys b×n-row parallel fanout. At real scale the
-    scan already arrives wide and the guard is a no-op."""
-    thresholds = poisson1_cdf15()
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
-    h0a, h0b = _base_halves(F.col(key_col), seed)
-    d1 = df.withColumns({"__h0a": h0a, "__h0b": h0b})
-    consts = F.array(
-        *[
-            F.struct(
-                F.lit(a).alias("a"), F.lit(c).alias("c"), F.lit(d).alias("d")
-            )
-            for a, c, d in boot_perm_consts(b, seed)
-        ]
-    )
-    d2 = d1.select("*", F.posexplode(consts).alias("__r", "__k"))
-    u = (
-        (
-            F.col("__k.a") * F.col("__h0a")
-            + F.col("__k.c") * F.col("__h0b")
-            + F.col("__k.d")
-        )
-        % F.lit(_BOOT_P)
-    ).bitwiseAND(F.lit(32767))
-    d2 = d2.withColumn("__u", u)
-    return (
-        d2.withColumn("__w", _poisson_weight(F.col("__u"), thresholds))
-        .drop("__h0a", "__h0b", "__k", "__u")
-    )
-
-
 def grouped_replicate_partials(
     df: DataFrame,
     group_col: str,
@@ -231,7 +131,7 @@ def grouped_replicate_partials(
     # (searchsorted(side='right') ≡ the CASE's smallest k with
     # u < T[k]). Weighted partials are exact long sums, so the final
     # groupBy totals are bit-identical to the exploded form (asserted
-    # against poisson_draws — long AND string keys — in
+    # against the exploded reference — long AND string keys — in
     # tests/test_bootstrap.py::test_grouped_partials_match_exploded_draws).
     src = df.select(
         F.col(key_col).alias("__k"),
@@ -314,10 +214,12 @@ def _rank_rule(b: int, alpha: float, n_means: int) -> "tuple[int, int]":
 def global_ci_from_partials(
     per: list, totals: list, b: int = 200, alpha: float = 0.05
 ) -> "tuple[int, float, float, float]":
-    """:func:`bootstrap_mean_ci`'s result from grouped partials: sum
-    the integer partials across groups per replicate (exact — long
-    addition commutes with the distributed SUM), then the same
-    ordered-means rank rule."""
+    """Percentile-bootstrap CI for the mean over all groups,
+    ``(n_rows, mean, ci_lo, ci_hi)`` unrounded: sum the integer
+    partials across groups per replicate (exact — long addition
+    commutes with the distributed SUM), order the replicate means with
+    the replicate id as tiebreak, and pick the bounds by the integer
+    rank rule rn = ceil(q·b) — deterministic on any engine."""
     agg: dict = {}
     for _g, r, swx, sw in per:
         a = agg.get(r)
@@ -332,7 +234,10 @@ def global_ci_from_partials(
 def group_cis_from_partials(
     per: list, totals: list, b: int = 200, alpha: float = 0.05
 ) -> "list[tuple]":
-    """:func:`bootstrap_group_mean_ci`'s result from grouped partials."""
+    """Per-group percentile-bootstrap mean CIs,
+    ``[(group, n_rows, mean, ci_lo, ci_hi)]`` sorted by group,
+    unrounded: the rank rule of :func:`global_ci_from_partials` over
+    each group's B replicate means."""
     by_group: dict = {}
     for g, r, swx, sw in per:
         if sw:
@@ -347,55 +252,12 @@ def group_cis_from_partials(
     return out
 
 
-def bootstrap_mean_ci(
-    df: DataFrame,
-    key_col: str,
-    value_col: str,
-    b: int = 200,
-    alpha: float = 0.05,
-    seed: str = "boot",
-) -> "tuple[int, float, float, float]":
-    """Percentile-bootstrap CI for the mean of an INTEGER-unit value
-    column: returns ``(n_rows, mean, ci_lo, ci_hi)`` (unrounded —
-    callers round for emission). Replicate means are ordered with the
-    replicate id as tiebreak and the bounds picked by the integer
-    rank rule rn = ceil(q·b) — deterministic on any engine."""
-    per, totals = grouped_replicate_partials(
-        df.withColumn("__one", F.lit(1)), "__one", key_col, value_col, b, seed
-    )
-    return global_ci_from_partials(per, totals, b, alpha)
-
-
 def poisson_case_sql(u15_sql: str, max_k: int = 8) -> str:
-    """The SQL restatement of :func:`_poisson_weight` over a 15-bit
-    uniform expression — single source for oracle queries so the
-    thresholds cannot drift from the Spark side."""
+    """The integer-threshold inverse CDF over a 15-bit uniform SQL
+    expression — single source for oracle queries so the thresholds
+    cannot drift from the Spark side."""
     parts = [
         f"WHEN {u15_sql} < {t} THEN {k}"
         for k, t in enumerate(poisson1_cdf15(max_k))
     ]
     return "CASE " + " ".join(parts) + f" ELSE {max_k} END"
-
-
-def bootstrap_group_mean_ci(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    value_col: str,
-    b: int = 200,
-    alpha: float = 0.05,
-    seed: str = "boot",
-) -> "list[tuple]":
-    """Per-group percentile-bootstrap mean CIs in one pass: the
-    :func:`bootstrap_mean_ci` algebra with the group key carried
-    through the replicate aggregation, so state is groups × B (map-
-    side combined the same way). Returns
-    ``[(group, n_rows, mean, ci_lo, ci_hi)]`` sorted by group,
-    unrounded. The percentile rule runs per group over its B means —
-    groups × B driver-side rows (metadata-sized for dimension-like
-    group columns; for high-cardinality groups, window the rank rule
-    instead of collecting)."""
-    per, totals = grouped_replicate_partials(
-        df, group_col, key_col, value_col, b, seed
-    )
-    return group_cis_from_partials(per, totals, b, alpha)

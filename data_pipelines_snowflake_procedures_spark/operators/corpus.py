@@ -382,26 +382,6 @@ def contamination_hits_bloom(
     )
 
 
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    min_hits: int = 1,
-) -> DataFrame:
-    """Drop training documents contaminated by the eval corpus: any doc
-    with ≥ ``min_hits`` distinct shared n-token shingles (see
-    :func:`contamination_hits`). LEFT ANTI join on doc id — the train
-    side passes through unshuffled apart from the hit scan."""
-    flagged = contamination_hits(train, eval_df, text_col, id_col, n).filter(
-        F.col("n_hits") >= min_hits
-    )
-    return train.join(
-        flagged.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"
-    )
-
-
 def pack_sequences(
     df: DataFrame,
     token_col: str = "n_tokens",

@@ -1,6 +1,6 @@
 """Iterative link analysis over DataFrame edge lists — PageRank-style
 centrality, the second member of this repo's iterative-algorithm family
-(k-means: `similarity.py::kmeans_lloyd`). Connected components
+(k-means: `similarity.py::kmeans_fit`). Connected components
 (`dedup.py::connected_components`) is not iterative: it is one
 union-find pass in a single Arrow task.
 
@@ -124,11 +124,15 @@ def cooccurrence_pairs(
 def topk_cooccurrence_edges(
     df: DataFrame, key_col: str, item_col: str, k: int = 10
 ) -> DataFrame:
-    """Top-k-sparsified co-occurrence graph — result-identical to
-    ``topk_sparsify`` over the per-key co-occurrence pair counts (same
-    (w desc, nbr asc) cutoff, same symmetrize + least/greatest
-    canonicalization), built with ONE wide shuffle of the pair
-    instances instead of four (guide §2.4):
+    """Top-k-sparsified co-occurrence graph (kNN-graph sparsification):
+    each node keeps its ``k`` strongest incident edges (co-occurrence
+    count desc, neighbor asc — a unique, deterministic order), then the
+    kept arcs symmetrize to an undirected simple edge list ``(a, b)``
+    with ``a < b``. Capping per-node degree at k bounds every
+    downstream O(Σ deg²) algorithm (triangles, common neighbors) at
+    n·k² wedges however dense the raw co-occurrence gets. Built with
+    ONE wide shuffle of the pair instances instead of the four of a
+    self-join + union form (guide §2.4):
 
     the pair instances are emitted in BOTH directions at explode time
     (so no union-of-two-scans and no persist), then repartitioned by
@@ -171,61 +175,6 @@ def topk_cooccurrence_edges(
         .distinct()
         .localCheckpoint(eager=True)
     )
-
-
-def topk_sparsify(
-    edges: DataFrame,
-    k: int = 10,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
-) -> DataFrame:
-    """kNN-graph sparsification: keep each node's ``k`` strongest
-    incident edges (weight desc, neighbor asc — a unique, deterministic
-    order), then symmetrize and canonicalize to an undirected simple
-    edge list ``(a, b)`` with ``a < b``.
-
-    Why this exists: co-occurrence graphs densify super-linearly with
-    data volume (at 100 TB a popular-entity graph approaches complete),
-    and every downstream O(Σ deg²) algorithm — triangles, common
-    neighbors — explodes with them. Capping per-node degree at k bounds
-    wedge work at n·k² regardless of how dense the raw co-occurrence
-    gets, which is the standard similarity-graph construction (mutual /
-    union kNN graph). One window shuffle on the node id; output is
-    edge-sized."""
-    w_n = Window.partitionBy("node").orderBy(
-        F.col("w").desc(), F.col("nbr").asc()
-    )
-    # persist the caller's edge frame: the symmetrizing union scans it
-    # twice, and unpersisted that re-runs the (often join+aggregate)
-    # co-occurrence build — the scan-twice audit rule
-    edges = edges.persist()
-    sym = edges.select(
-        F.col(src_col).alias("node"),
-        F.col(dst_col).alias("nbr"),
-        F.col(weight_col).cast("double").alias("w"),
-    ).unionByName(
-        edges.select(
-            F.col(dst_col).alias("node"),
-            F.col(src_col).alias("nbr"),
-            F.col(weight_col).cast("double").alias("w"),
-        )
-    )
-    kept = (
-        sym.filter(F.col("node") != F.col("nbr"))
-        .withColumn("rn", F.row_number().over(w_n))
-        .filter(F.col("rn") <= k)
-    )
-    out = (
-        kept.select(
-            F.least("node", "nbr").alias("a"),
-            F.greatest("node", "nbr").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges.unpersist()
-    return out
 
 
 def triangle_count(

@@ -25,7 +25,6 @@ vector each, season-sized state, single pass over each series).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 ALPHA, BETA, GAMMA = 0.3, 0.05, 0.2
 

@@ -13,8 +13,8 @@ codec layers live in the stdlib decode for REAL: PPM/BMP (raw), PNG
 TIFF 6.0 (operators/tiff.py — both endians, strips, PackBits),
 WAV audio (PCM + IMA-ADPCM), Y4M uncompressed video, and AVI/MJPEG
 compressed video (RIFF walk + per-frame JPEG decode). Remaining codec
-formats (inter-frame video, perceptual audio codecs) are clearly-marked
-``NotImplementedError`` stubs behind ``set_decoder``; everything
+formats (modern video, perceptual audio codecs) raise
+``NotImplementedError`` from :func:`decode`; everything
 around them — schema, partition-preserving batch iteration, UDF
 signatures, deterministic byte-level features — is real and tested.
 
@@ -31,7 +31,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 def decode_ppm(payload: bytes) -> dict[str, Any]:
     """REAL stdlib decoder for PPM images (P6 binary / P3 ascii):
@@ -165,8 +164,7 @@ def decode_png(payload: bytes) -> dict[str, Any]:
     missing-list #1; JPEG followed via operators/jpeg.py's
     own Huffman/IDCT pipeline). Up-filtered rows
     vectorize; Sub/Average/Paeth carry a left-neighbor dependency, so
-    those rows run a per-byte loop — fixture-sized here; register a
-    PIL decoder via :func:`set_decoder` for production rasters.
+    those rows run a per-byte loop — fixture-sized here.
     Palette (color type 3), 16-bit, and Adam7 interlace raise."""
     import struct
     import zlib
@@ -557,8 +555,7 @@ def decode_wav_ima_adpcm(payload: bytes) -> dict[str, Any]:
     over the decoded int16 samples (mean_amp is the plain mean;
     rms is around 0, the int16 midline). The per-sample loop is
     sequential by construction (each step depends on the previous
-    predictor) — fixture-scale here; register a native decoder via
-    :func:`set_decoder` for production audio."""
+    predictor) — fixture-scale here."""
     import struct as _struct
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
@@ -1167,39 +1164,15 @@ _DECODERS: dict[str, Callable[[bytes], Any]] = {
 }
 
 
-def set_decoder(kind: str, fn: Callable[[bytes], Any]) -> None:
-    _DECODERS[kind] = fn
-
-
 def decode(kind: str, payload: bytes) -> Any:
     """Decode one payload. PPM/BMP/PNG/GIF/TIFF/JPEG images, WAV PCM +
     IMA-ADPCM audio, and Y4M / AVI-MJPEG / FLIC video (the last a true
     inter-frame delta codec) decode for real (stdlib + numpy codecs);
-    modern DCT/motion-compensated kinds (H.264 etc.) STUB until a
-    decoder is registered — the container ships no media libraries."""
+    modern DCT/motion-compensated kinds (H.264 etc.) raise
+    ``NotImplementedError`` — the container ships no media libraries."""
     if kind in _DECODERS:
         return _DECODERS[kind](payload)
-    raise NotImplementedError(
-        f"no decoder registered for {kind!r}; call set_decoder() with a "
-        "real implementation (e.g. PIL.Image.open for images)"
-    )
-
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "media_meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
+    raise NotImplementedError(f"no decoder for {kind!r}")
 
 
 def attach_binary(
@@ -1268,7 +1241,7 @@ def _attach_rendered(
     bytes arranged as 8-px-wide RGB rows (zero-padded to whole 24-byte
     rows — the ppm layout exactly), compressed per document inside an
     Arrow batch to a valid PNG (lossless) or baseline JPEG (lossy,
-    quality 90). Output matches MEDIA_SCHEMA."""
+    quality 90). Output has :func:`attach_binary`'s columns."""
     mime = {"png": "image/png", "jpeg": "image/jpeg", "gif": "image/gif"}[fmt]
 
     def per_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -1327,8 +1300,8 @@ def attach_audio(
 ) -> DataFrame:
     """Audio leg of the binary-attach family: each document's utf-8
     bytes become the unsigned 8-bit PCM samples of a VALID mono WAV
-    (:func:`encode_wav`) inside an Arrow batch. Output matches
-    MEDIA_SCHEMA with mime ``audio/wav``."""
+    (:func:`encode_wav`) inside an Arrow batch. Output has
+    :func:`attach_binary`'s columns with mime ``audio/wav``."""
 
     def per_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -1369,8 +1342,8 @@ def attach_video(
     """Video leg of the binary-attach family: each document's utf-8
     bytes become a sequence of 8×8 mono luma frames in a VALID
     YUV4MPEG2 stream (:func:`encode_y4m`, zero-padded to whole
-    frames) inside an Arrow batch. Output matches MEDIA_SCHEMA with
-    mime ``video/x-yuv4mpeg``."""
+    frames) inside an Arrow batch. Output has :func:`attach_binary`'s
+    columns with mime ``video/x-yuv4mpeg``."""
 
     def per_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import numpy as np
@@ -1416,27 +1389,8 @@ VIDEO_SCHEMA = (
 def extract_video_features(df: DataFrame) -> DataFrame:
     """Video feature extraction over Arrow batches (``mapInPandas``):
     container metadata + all-frame and every-2nd-frame luma means via
-    :func:`decode_y4m` for decodable payloads, NULLs otherwise.
-
-    Native-swap contract (the SCALING.md production path, enforced by
-    ``tests/test_multimodal.py::test_set_decoder_native_swap_*``): any
-    decoder registered via :func:`set_decoder` BEFORE this plan is
-    built is snapshotted into the closure and shipped to executors
-    with it, replacing the stdlib kernel for its kind — including
-    kinds with no built-in at all (H.264-class). A swapped decoder
-    must return the same stats-dict contract as the built-in it
-    replaces (``decode_avi_mjpeg``-shaped for 'avi'/'video/x-msvideo',
-    ``decode_y4m``-shaped for Y4M, ``decode_flc``-shaped for FLIC;
-    unknown kinds return the shared VIDEO_SCHEMA key set directly).
-    The plan, Arrow batch shape, and output schema do not change with
-    the swap."""
-    # snapshot driver-side set_decoder() overrides at PLAN time so they
-    # ride to executors inside the pickled closure (a bare module-global
-    # lookup would re-import the default table on each worker)
-    overrides = {
-        k: f for k, f in _DECODERS.items()
-        if _DEFAULT_DECODERS.get(k) is not f
-    }
+    :func:`decode_y4m`, :func:`decode_avi_mjpeg` or :func:`decode_flc`
+    for decodable payloads, NULLs otherwise."""
 
     def per_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -1449,15 +1403,15 @@ def extract_video_features(df: DataFrame) -> DataFrame:
 
         def stats(kind: str, data: bytes) -> dict[str, Any]:
             if kind in ("video/x-yuv4mpeg", "y4m"):
-                dec = overrides.get(kind, decode_y4m)
+                dec = decode_y4m
             elif kind in ("video/x-msvideo", "avi"):
-                dec = overrides.get(kind, decode_avi_mjpeg)
+                dec = decode_avi_mjpeg
             elif kind in ("video/x-flic", "flc", "fli"):
                 # inter-frame codec: adapt FLIC's stats to the shared
                 # schema (palette milli-luma -> 0..255 mean_y; no
                 # sampled mean — sampling an inter-frame stream still
                 # decodes every frame, so the shortcut would be a lie)
-                base = overrides.get(kind, decode_flc)
+                base = decode_flc
 
                 def dec(d: bytes) -> dict[str, Any]:
                     s = base(d)
@@ -1474,10 +1428,6 @@ def extract_video_features(df: DataFrame) -> DataFrame:
                         "mean_y": s["luma_milli_sum"] / 1000.0 / px,
                         "sampled_mean_y": None,
                     }
-            elif kind in overrides:
-                # a kind with NO built-in (H.264-class): a registered
-                # native decoder must return the VIDEO key set directly
-                dec = overrides[kind]
             else:
                 return nulls
             try:
@@ -1617,44 +1567,6 @@ def extract_features(df: DataFrame, batch_hint: int | None = None) -> DataFrame:
     return df.mapInPandas(per_batches, schema=FEATURE_SCHEMA)
 
 
-GROUP_ZSCORE_SCHEMA = "event_id BIGINT, event_type STRING, zscore DOUBLE"
-
-
-def groupwise_zscore(
-    df: DataFrame,
-    key: str = "event_type",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Per-group z-score normalization via ``applyInPandas`` — the
-    grouped Pandas-UDF surface (group-in → Arrow batch → group-out).
-
-    This op is deliberately SQL-expressible (windowed mean/stddev), so
-    the oracle cross-checks the Pandas plumbing itself; real uses of
-    this surface are the NON-expressible ones (per-group model scoring,
-    library calls). One shuffle on the group key; each group must fit
-    in one worker's memory — for the hot-key case pre-split with
-    operators/skew.py salting."""
-
-    def normalize(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import pandas as pd
-
-        std = pdf[value_col].std()  # ddof=1, matches stddev_samp
-        mean = pdf[value_col].mean()
-        z = (pdf[value_col] - mean) / std if std and std > 0 else pdf[value_col] * 0.0
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                key: pdf[key],
-                "zscore": z.round(4),
-            }
-        )
-
-    return df.select(id_col, key, value_col).groupBy(key).applyInPandas(
-        normalize, schema=GROUP_ZSCORE_SCHEMA
-    )
-
-
 def groupwise_zscore_window(
     df: DataFrame,
     key: str = "event_type",
@@ -1665,9 +1577,7 @@ def groupwise_zscore_window(
     (headline) form: no Python in the hot path, whole-stage codegen
     end-to-end, one shuffle on the group key, and no whole-group-in-
     one-worker memory requirement (window aggregates stream within a
-    partition). Semantics identical to :func:`groupwise_zscore`, which
-    remains as the grouped-Pandas *surface* exercise (kept in parity by
-    tests/test_multimodal.py)."""
+    partition). A zero-variance group scores 0.0."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(key)
@@ -2040,15 +1950,7 @@ def decode_flc(payload: bytes) -> dict[str, Any]:
 
 # FLIC registers late (defined after the decoder table): the T13
 # inter-frame video leg is REAL from here on; remaining unregistered
-# kinds are the modern DCT/motion-compensated codecs (H.264 etc.),
-# which stay behind set_decoder().
+# kinds are the modern DCT/motion-compensated codecs (H.264 etc.).
 _DECODERS["flc"] = decode_flc
 _DECODERS["fli"] = decode_flc
 _DECODERS["video/x-flic"] = decode_flc
-
-# Frozen snapshot of the built-in decoder table, taken after ALL
-# built-ins (including the late FLIC rows above) have registered.
-# extract_video_features diffs _DECODERS against this at plan time to
-# find set_decoder() overrides to ship with the closure — the enforced
-# half of the SCALING.md native-swap contract.
-_DEFAULT_DECODERS: dict[str, Callable[[bytes], Any]] = dict(_DECODERS)

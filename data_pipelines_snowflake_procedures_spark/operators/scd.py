@@ -6,19 +6,13 @@ record per business key (ordered by a CREATED_AT-style column), then
 matched target rows are replaced with the latest source data and
 unmatched source rows are inserted.
 
-Spark-first execution:
-
-* **Delta path** (:func:`scd1_merge_delta`) — ``MERGE INTO`` when the
-  delta-spark package is importable; Delta handles the matched/
-  not-matched branches and gives atomic file replacement. Gated behind
-  an import-try so the engine has no hard dependency.
-* **Parquet fallback** (:func:`scd1_merge`) — pure DataFrame plan:
-  ``target LEFT ANTI JOIN dedup_source ON keys`` keeps unmatched
-  target rows, then ``unionByName`` with the deduplicated source.
-  Both sides shuffle once on the business key; AQE picks
-  broadcast-hash when the source increment is small (the common SCD
-  case: daily increment ≪ accumulated target), so at 100 TB target /
-  GB-scale increment the target side never shuffles at all.
+Spark-first execution (:func:`scd1_merge`): a pure DataFrame plan —
+``target LEFT ANTI JOIN dedup_source ON keys`` keeps unmatched target
+rows, then ``unionByName`` with the deduplicated source. Both sides
+shuffle once on the business key; AQE picks broadcast-hash when the
+source increment is small (the common SCD case: daily increment ≪
+accumulated target), so at 100 TB target / GB-scale increment the
+target side never shuffles at all.
 
 The dedup step (:func:`dedup_latest`) is the reference's W1 window —
 ``row_number() OVER (PARTITION BY keys ORDER BY order_col DESC)``.
@@ -60,7 +54,7 @@ def scd1_merge(
     order_col: str | None = None,
     tiebreakers: Sequence[str] = (),
 ) -> DataFrame:
-    """SCD1 merge as a DataFrame plan (parquet fallback for G1).
+    """SCD1 merge as a DataFrame plan (G1).
 
     ``order_col=None`` skips dedup (source already unique per key).
     Output schema is the target's column set.
@@ -156,63 +150,6 @@ def scd2_merge(
     )
 
 
-def scd2_as_of(
-    dim: DataFrame,
-    ts,
-    from_col: str = "effective_from",
-    to_col: str = "effective_to",
-) -> DataFrame:
-    """Point-in-time reconstruction of an SCD2 dimension: the version
-    of each key that was valid at ``ts`` (``from <= ts < to``; an
-    open-ended current row matches any ``ts >= from``). A pure scan
-    predicate — no shuffle, no window — because the SCD2 merge
-    invariant (validity intervals per key are disjoint) guarantees at
-    most one matching version per key. At 100 TB, partition the
-    dimension on ``is_current`` and date-bucket ``from_col`` so an
-    as-of read prunes to the slice that could possibly match; keys
-    whose first version postdates ``ts`` are correctly absent."""
-    t = F.lit(ts).cast("timestamp") if isinstance(ts, str) else ts
-    return dim.filter(
-        (F.col(from_col) <= t) & (F.col(to_col).isNull() | (F.col(to_col) > t))
-    )
-
-
-def scd1_merge_delta(
-    spark,
-    target_table: str,
-    source: DataFrame,
-    keys: Sequence[str],
-    order_col: str | None = None,
-    tiebreakers: Sequence[str] = (),
-) -> None:
-    """Delta-Lake MERGE INTO path (atomic, file-level pruning on the
-    join key). Raises ImportError when delta-spark is absent — callers
-    fall back to :func:`scd1_merge` + overwrite.
-
-    Container status: delta-spark is permanently absent from the test
-    environment (no installs allowed), so the executed coverage is the
-    ImportError gate (tests/test_scd.py::test_delta_merge_gated) plus
-    a skip-unless-delta parity test
-    (test_delta_merge_parity_when_available) asserting MERGE INTO
-    lands exactly scd1_merge's rows wherever delta IS configured."""
-    from delta.tables import DeltaTable  # gated: optional dependency
-
-    src = (
-        dedup_latest(source, keys, order_col, tiebreakers)
-        if order_col is not None
-        else source
-    )
-    tgt = DeltaTable.forName(spark, target_table)
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    (
-        tgt.alias("t")
-        .merge(src.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-
-
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
@@ -223,7 +160,7 @@ def snapshot_diff(
     detection complement of :func:`scd1_merge` (which APPLIES changes).
     Emits one row per changed key with ``op`` ∈ {insert, update,
     delete} — exactly the change stream a downstream incremental
-    pipeline (or the streaming SCD1 upsert) consumes when the source
+    pipeline consumes when the source
     system has no CDC log of its own.
 
     One full-outer join on the key; change detection is a

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructField, StructType
 from pyspark.sql.window import Window
 
+from ..session import rows_frame
 from .dedup import dot_product, norm
 from .profile import ident
 
@@ -274,45 +275,16 @@ def knn_lsh(
 # ---------------------------------------------------------------------------
 
 
-def kmeans_assign_expr(
-    emb_col: Column, centroids: list[list[float]]
-) -> tuple[Column, Column]:
-    """(cluster, distance) columns for assignment to literal centroids:
-    an array of k squared-L2 distances, argmin via
-    array_position(array_min) — first index wins ties, i.e. the lowest
-    cluster id, matching a (dist, cid)-ordered row_number. Zero
-    shuffle: the corpus never moves for an assignment pass.
-
-    The centroids enter the plan as ONE k×dim literal matrix looped by
-    ``transform`` — k separately-unrolled fold chains would bloat the
-    generated code ~k× and dominate runtime with JIT compilation."""
-    matrix = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
-    dists = F.transform(
-        matrix,
-        lambda c: F.aggregate(
-            F.zip_with(
-                emb_col,
-                c,
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    cluster = (F.array_position(dists, F.array_min(dists)) - 1).cast("long")
-    return cluster, F.array_min(dists)
-
-
 def _matrix_df(spark, matrix: list[list[float]], col: str) -> DataFrame:
     """A k×dim float matrix as a 1-ROW broadcastable table — the plan
     stays tiny where a literal expression tree costs ~1 s of
     driver-side analysis per 512 literals (measured; see
-    kmeans_assign_df)."""
-    return spark.createDataFrame(
+    kmeans_assign_df). An Arrow ``LocalRelation``, so reading it
+    starts no Python worker."""
+    return rows_frame(
+        spark,
         [([[float(x) for x in c] for c in matrix],)],
-        f"{col}: array<array<double>>",
+        f"`{col}` ARRAY<ARRAY<DOUBLE>>",
     )
 
 
@@ -477,10 +449,20 @@ def kmeans_fit(
     round_decimals: int = 6,
 ) -> list[list[float]]:
     """Fit Lloyd's k-means and return the final centroids as plain
-    Python lists (k×dim — driver-metadata-sized). See
-    :func:`kmeans_lloyd` for the plan-shape and determinism contract;
-    use the centroids with :func:`kmeans_assign_expr` for shuffle-free
-    downstream assignment (clustering, SemDeDup blocking, IVF cells).
+    Python lists (k×dim — driver-metadata-sized); use them with
+    :func:`kmeans_assign_df` for shuffle-free downstream assignment
+    (clustering, SemDeDup blocking, IVF cells).
+
+    Centroids live on the DRIVER, so every assignment pass is narrow —
+    no shuffle. Each of the ``iters`` update steps costs ONE shuffle:
+    posexplode to (cluster, dim, value) and groupBy-avg, collecting
+    k×dim rounded means back to the driver — the same job structure
+    as MLlib's KMeans (treeAggregate of partial sums).
+
+    Determinism (oracle-matchable): seeds are the k lowest-id vectors;
+    per-dimension means round to ``round_decimals`` so accumulation
+    order can't leak into the next iteration; ties in argmin break to
+    the lowest cluster id. Empty clusters keep their previous centroid.
     """
     # Iterative algorithm: every Lloyd pass re-reads the corpus, so pin
     # the (id, embedding) projection across iterations — the same
@@ -516,41 +498,6 @@ def kmeans_fit(
     return cents
 
 
-def kmeans_lloyd(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_decimals: int = 6,
-) -> DataFrame:
-    """Lloyd's k-means over an embedding column, Spark-first: centroids
-    live on the DRIVER as k×dim literals (metadata-sized, like a
-    broadcast hash table), so every assignment pass is a narrow
-    codegen'd expression over the corpus — no shuffle, no UDF. Each of
-    the ``iters`` update steps costs ONE shuffle: posexplode to
-    (cluster, dim, value) and groupBy-avg, collecting k×dim rounded
-    means back to the driver. Total: iters shuffles + iters tiny
-    collects, independent of corpus size — the same job structure
-    MLlib's KMeans uses (treeAggregate of partial sums), expressed in
-    DataFrame ops.
-
-    Determinism (oracle-matchable): seeds are the k lowest-id vectors;
-    per-dimension means round to ``round_decimals`` so accumulation
-    order can't leak into the next iteration; ties in argmin break to
-    the lowest cluster id. Empty clusters keep their previous centroid.
-
-    Returns (id, cluster, dist) under the FINAL centroids; ``dist`` is
-    squared L2, rounded.
-    """
-    cents = kmeans_fit(df, k, iters, emb_col, id_col, round_decimals)
-    return kmeans_assign_df(df, cents, emb_col).select(
-        F.col(ident(id_col)),
-        F.col("__cl").alias("cluster"),
-        F.round(F.col("__dist"), 6).alias("dist"),
-    )
-
-
 def sq_bounds(
     df: DataFrame, emb_col: str = "embedding"
 ) -> list[tuple[float, float]]:
@@ -568,44 +515,6 @@ def sq_bounds(
         .collect()
     )
     return [(r["lo"], r["hi"]) for r in rows]
-
-
-def sq_dequantized_expr(
-    emb_col: Column, bounds: list[tuple[float, float]], levels: int = 256
-) -> Column:
-    """Quantize-then-dequantize an embedding against literal per-dim
-    bounds: code = round((x-lo)/(hi-lo)*(levels-1)) clamped to
-    [0, levels-1], reconstructed as lo + code*(hi-lo)/(levels-1).
-    int8-per-dimension storage (levels=256) is the point at 100 TB:
-    a 64-dim float32 corpus shrinks 4× and the ANN scan becomes
-    memory-bandwidth-bound on codes, not floats. Narrow expression —
-    quantization never shuffles."""
-    los = F.array(*[F.lit(float(lo)) for lo, _ in bounds])
-    his = F.array(*[F.lit(float(hi)) for _, hi in bounds])
-    n = F.lit(float(levels - 1))
-    scaled = F.zip_with(
-        emb_col,
-        F.zip_with(los, his, lambda lo, hi: F.struct(lo.alias("lo"), hi.alias("hi"))),
-        lambda x, b: F.round(
-            (x.cast("double") - b["lo"])
-            / F.when(b["hi"] > b["lo"], b["hi"] - b["lo"]).otherwise(F.lit(1.0))
-            * n,
-            0,
-        ),
-    )
-    code = F.transform(
-        scaled, lambda s: F.least(F.greatest(s, F.lit(0.0)), n)
-    )
-    return F.zip_with(
-        code,
-        F.zip_with(los, his, lambda lo, hi: F.struct(lo.alias("lo"), hi.alias("hi"))),
-        lambda c, b: b["lo"]
-        + c
-        * (
-            F.when(b["hi"] > b["lo"], b["hi"] - b["lo"]).otherwise(F.lit(1.0))
-        )
-        / n,
-    )
 
 
 #: Margin used by the scan kernel when pre-pruning candidates on RAW
@@ -784,7 +693,7 @@ def knn_sq(
     n_levels = float(256 - 1)
 
     def dequantize(X):
-        # sq_dequantized_expr op for op: scaled = round((x-lo)/span *
+        # the oracle's SQ decode op for op: scaled = round((x-lo)/span *
         # (levels-1)) with Spark's HALF_UP (x >= lo always, so the
         # positive-value floor+frac rule is exact), clamped, then
         # lo + (code*span)/(levels-1)
@@ -807,72 +716,16 @@ def knn_sq(
 # ---------------------------------------------------------------------------
 
 
-def _books_matrix_df(spark, books: list[list[list[float]]], col: str) -> DataFrame:
-    """All m codebooks as ONE 1-row broadcastable table (m × k × sub
-    doubles) — the pq analogue of :func:`_matrix_df`."""
-    return spark.createDataFrame(
-        [([[[float(x) for x in c] for c in b] for b in books],)],
-        f"{col}: array<array<array<double>>>",
-    )
-
-
-def _pq_assign_all(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    sub_exprs: "list[Column]",
-    code_prefix: str = "code_",
-) -> DataFrame:
-    """Every subspace's argmin code in ONE projection over ONE
-    broadcast books matrix — the JVM-NATIVE REFERENCE SPEC of the PQ
-    encode (the ``poisson_weights`` spec-vs-hot-path convention): the
-    hot paths (:func:`pq_encode`, the :func:`pq_fit` iterations) run
-    :func:`_pq_assign_all_numpy`, asserted code-identical to this
-    form in tests/test_llm_ops.py. ``sub_exprs[j]`` is the j-th
-    subvector column (a pre-sliced column or a slice expression).
-    Distances are the ordered ``aggregate(zip_with(sub, c))`` fold
-    per book entry, argmin ties to the lowest code via
-    array_position(array_min)."""
-    mat = _books_matrix_df(df.sparkSession, codebooks, "__pq_books")
-    out = df.crossJoin(F.broadcast(mat))
-
-    def _dist_fn(s):
-        # closure, not a default arg: F.transform treats a 2-arg
-        # lambda as (element, index)
-        return lambda c: F.aggregate(
-            F.zip_with(
-                s,
-                c,
-                lambda x, y: (x.cast("double") - y)
-                * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    code_cols = []
-    for j in range(len(codebooks)):
-        dists = F.transform(
-            F.element_at(F.col("__pq_books"), j + 1),
-            _dist_fn(sub_exprs[j]),
-        )
-        code_cols.append(
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("long")
-            .alias(f"{code_prefix}{j}")
-        )
-    return out.select(*df.columns, *code_cols)
-
-
 def _pq_assign_all_numpy(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     sub_cols: list[str],
     code_prefix: str = "code_",
 ) -> DataFrame:
-    """Every subspace's argmin code in one Arrow pass — the numpy twin
-    of :func:`_pq_assign_all` for fit-internal use: ``sub_cols[j]``
+    """Every subspace's argmin code in one Arrow pass: ``sub_cols[j]``
     against book ``j`` through :func:`_map_nearest`, so codes are
-    bit-identical to the JVM projection."""
+    bit-identical to the JVM-native ``aggregate(zip_with)`` fold
+    (asserted in tests/test_llm_ops.py)."""
     from pyspark.sql.types import LongType
 
     def emit(Xs, cls, d2s):

@@ -2007,7 +2007,7 @@ def _cosupplier_graph_sql(k: int = 10) -> str:
     each node keeps its k strongest edges (weight desc, neighbor asc),
     then the kept arcs are symmetrized back to an undirected simple
     edge list e(a, b) with a < b — restating
-    operators/graph.py::topk_sparsify exactly."""
+    operators/graph.py::topk_cooccurrence_edges exactly."""
     return f"""
     bi AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s FROM lineitem),
     co AS (
@@ -2037,7 +2037,7 @@ def _cosupplier_edges(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFram
     co-occurrence weights, top-k sparsified. Built with the one-shuffle
     set-based pair generation (operators/graph.py::
     topk_cooccurrence_edges) — result-identical to the self-join +
-    topk_sparsify form the oracle CTE restates (the per-order supplier
+    per-node top-k form the oracle CTE restates (the per-order supplier
     sets are ≤7 wide, so the in-task pair explosion is bounded)."""
     from .operators.graph import topk_cooccurrence_edges
 
@@ -3333,11 +3333,11 @@ def _orders_boot_partials(spark: SparkSession, sf_dir: str):
     "weights (ONE md5 per row -> 30-bit base pair -> per-replicate "
     "affine-universal 15-bit uniforms through an integer-threshold "
     "inverse CDF; the MinHash one-digest construction) and all "
-    "replicates accumulate in ONE pass. posexplode + groupBy looks "
-    "like a B× blow-up, but map-side partial aggregation collapses "
-    "each partition to <= B rows before the exchange — the shuffle "
-    "carries B x partitions rows and the percentile rule runs over "
-    "B driver-side rows (integer rank rule, replicate-id tiebreak). "
+    "replicates accumulate in ONE Arrow pass that reduces each batch "
+    "to its (group, replicate) integer partials, so the B× fanout "
+    "never materializes as rows — the shuffle carries B x partitions "
+    "rows and the percentile rule runs over B driver-side rows "
+    "(integer rank rule, replicate-id tiebreak). "
     "Prices pre-scaled to integer cents so weighted partial sums are "
     "exact — hash-exact against an oracle that restates the full "
     "draw-weight-fold chain.",
@@ -3417,7 +3417,7 @@ def _group_bootstrap_oracle(b: int = 200) -> str:
     _group_bootstrap_oracle(200),
     doc="Per-priority bootstrap mean-price CIs — the groupwise form "
     "of orders_bootstrap_mean_ci (operators/bootstrap.py::"
-    "bootstrap_group_mean_ci): identical one-pass Poisson-weight "
+    "group_cis_from_partials): identical one-pass Poisson-weight "
     "algebra with the group key carried through the replicate "
     "aggregation, so distributed state is groups x B (map-side "
     "combined) and the per-group percentile rule runs over B "
@@ -4253,7 +4253,7 @@ def customer_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "node-iterator (O(|E|^1.5) wedges, hubs never fan out) and joins "
     "it back to the degree table LEFT so triangle-free nodes emit "
     "cc = 0 rather than vanishing. The sparsified edge list is "
-    "localCheckpointed by topk_sparsify, so the deg scan and the "
+    "localCheckpointed by topk_cooccurrence_edges, so the deg scan and the "
     "triangle pass share one materialization; the only float is the "
     "final rounded division.",
 )

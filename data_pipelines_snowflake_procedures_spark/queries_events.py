@@ -1532,9 +1532,8 @@ def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     "registers, harmonic mean, and correction branch bit-for-bit. At "
     "100 TB the exact column drops out and the per-day registers "
     "persist — any date-range distinct query is then a KB-sized "
-    "register union, no raw re-scan. The DataSketches-backed variant "
-    "(distinct_with_sketch) remains the production fast path; "
-    "tests/test_sketch.py asserts both paths' merge invariants.",
+    "register union, no raw re-scan; tests/test_sketch.py asserts "
+    "the merge invariants.",
 )
 def events_distinct_users_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketch import portable_hll_distinct
@@ -2098,11 +2097,11 @@ def events_incremental_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY event_type
     """,
     doc="STREAMING incremental-aggregate maintenance (streaming/"
-    "stream.py::rollup_maintain_stream): foreachBatch reduces each "
+    "stream.py::make_rollup_fold): foreachBatch reduces each "
     "micro-batch to its partial state and folds it into a persistent "
     "keys-sized parquet state table with the associative merge, "
-    "committed by the same atomic stage-and-swap as the streaming "
-    "SCD1 upsert. The entry replays events as TWO bounded streams "
+    "committed by an atomic stage-and-swap. The entry replays "
+    "events as TWO bounded streams "
     "(day < 15, day >= 15) folding into ONE state — the second replay "
     "exercises the state-exists merge path — then finalizes. The "
     "oracle is the from-scratch GROUP BY over everything: micro-batch "
@@ -5627,12 +5626,12 @@ def events_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(DISTINCT user_id) AS BIGINT) AS dau
     FROM events GROUP BY 1 ORDER BY 1
     """,
-    doc="STREAMING incremental bitmap-index maintenance (streaming/"
-    "stream.py::bitmap_maintain_stream): each micro-batch's (day, "
-    "user) members become bitmap chunks and OR-fold into a "
-    "persistent per-day index through the same idempotent "
-    "stage-and-swap commit as the rollup fold (shared "
-    "make_state_fold; at-least-once redelivery skips by marker). "
+    doc="STREAMING incremental bitmap-index maintenance: each "
+    "micro-batch's (day, user) members become bitmap chunks and "
+    "OR-fold into a persistent per-day index through the same "
+    "idempotent stage-and-swap commit as the rollup fold (streaming/"
+    "stream.py::make_state_fold; at-least-once redelivery skips by "
+    "marker). "
     "The entry replays events as TWO bounded streams split by USER "
     "PARITY — so the same (day, chunk) rows receive contributions "
     "from both replays and the state-exists OR-merge path truly "

@@ -1916,8 +1916,8 @@ def profile_lineitem_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     "counts. The eval shingle set (benchmarks are tiny vs 100 TB of "
     "train) is BROADCAST, so the train side is scanned once and never "
     "shuffled on text. n=3 fits the tiny test documents; production "
-    "uses 8-13-gram matching (GPT-3-style). `decontaminate` anti-joins "
-    "these hits away.",
+    "uses 8-13-gram matching (GPT-3-style); a LEFT ANTI join on "
+    "doc_id drops these hits from the train side.",
 )
 def corpus_decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.corpus import contamination_hits
@@ -2663,8 +2663,7 @@ def kmeans_clusters_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     # identical fit to the IVF entries' coarse quantizer (k=8, iters=2,
-    # deterministic) — share it through the driver-side memo; the
-    # assignment below is kmeans_lloyd's own final select. r10: the
+    # deterministic) — share it through the driver-side memo. r10: the
     # assignment runs the Arrow numpy kernel — bit-identical to the
     # JVM fold since the per-dimension rewrite — because this entry's
     # k is FIXED at 8, so the k>=32 adaptive switch would never route
@@ -2903,12 +2902,12 @@ def knn_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
     from .operators.similarity import (
+        _vectors,
         ivf_assign,
         knn_bruteforce,
         knn_ivf,
         knn_lsh,
         knn_sq,
-        norm,
         sq_bounds,
         srp_bucket,
         srp_hyperplanes,
@@ -2934,10 +2933,8 @@ def knn_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (plain + multiprobe differ only on the query side)
     assigned = ivf_assign(emb, centroids, 1).persist()
     planes = srp_hyperplanes(8, 64, "srp")
-    hashed = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_nrm"),
+    hashed = _vectors(
+        emb, "c", "vec_id", "embedding",
         srp_bucket(F.col("embedding"), planes).alias("bucket"),
     ).persist()
     variants = [

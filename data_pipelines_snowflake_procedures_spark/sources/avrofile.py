@@ -25,10 +25,6 @@ Schema scope (declared, not silent): records of primitives (null,
 boolean, int, long, float, double, string, bytes) and 2-branch
 ``["null", T]`` unions -> nullable columns. Nested records/arrays/maps
 raise loudly — flatten upstream or extend the decoder.
-
-A deterministic :func:`write_avro` encoder ships alongside (the repo's
-codec convention: every reader gets its own fixture builder so tests
-never depend on external binaries).
 """
 
 from __future__ import annotations
@@ -41,7 +37,6 @@ import zlib
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _MAGIC = b"Obj\x01"
 
@@ -77,29 +72,12 @@ def _read_long(buf: io.BytesIO) -> int:
     return (acc >> 1) ^ -(acc & 1)
 
 
-def _write_long(out: bytearray, n: int) -> None:
-    z = (n << 1) ^ (n >> 63) if n < 0 else n << 1
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
 def _read_bytes(buf: io.BytesIO) -> bytes:
     n = _read_long(buf)
     data = buf.read(n)
     if len(data) != n:
         raise ValueError("Avro bytes/string truncated")
     return data
-
-
-def _write_bytes(out: bytearray, data: bytes) -> None:
-    _write_long(out, len(data))
-    out += data
 
 
 # ---------------------------------------------------------------------------
@@ -290,85 +268,3 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
         [(o, n, b) for o, n, b in blocks], "off BIGINT, n_obj BIGINT, n_b BIGINT"
     ).repartition(min(len(blocks), 64))
     return idx.mapInPandas(read_blocks, schema=spark_schema)
-
-
-# ---------------------------------------------------------------------------
-# fixture encoder
-# ---------------------------------------------------------------------------
-
-
-def write_avro(
-    path: str,
-    rows: list[dict[str, Any]],
-    fields: list[tuple[str, str, bool]],
-    codec: str = "null",
-    records_per_block: int = 1000,
-    record_name: str = "row",
-) -> None:
-    """Deterministic single-file Avro container writer for fixtures and
-    small exports. ``fields``: [(name, primitive, nullable)]."""
-    if codec not in ("null", "deflate"):
-        raise NotImplementedError(f"Avro codec {codec!r}")
-    schema = {
-        "type": "record",
-        "name": record_name,
-        "fields": [
-            {"name": n, "type": (["null", p] if nullable else p)}
-            for n, p, nullable in fields
-        ],
-    }
-    sync = bytes(range(16))  # fixed marker: deterministic fixtures
-
-    out = bytearray(_MAGIC)
-    meta = {
-        "avro.schema": json.dumps(schema).encode("utf-8"),
-        "avro.codec": codec.encode("utf-8"),
-    }
-    _write_long(out, len(meta))
-    for k in sorted(meta):
-        _write_bytes(out, k.encode("utf-8"))
-        _write_bytes(out, meta[k])
-    _write_long(out, 0)
-    out += sync
-
-    def encode_value(blk: bytearray, prim: str, v: Any) -> None:
-        if prim == "boolean":
-            blk.append(1 if v else 0)
-        elif prim in ("int", "long"):
-            _write_long(blk, int(v))
-        elif prim == "float":
-            blk += struct.pack("<f", float(v))
-        elif prim == "double":
-            blk += struct.pack("<d", float(v))
-        elif prim == "string":
-            _write_bytes(blk, str(v).encode("utf-8"))
-        elif prim == "bytes":
-            _write_bytes(blk, bytes(v))
-        else:
-            raise NotImplementedError(prim)
-
-    for lo in range(0, len(rows), records_per_block):
-        chunk = rows[lo : lo + records_per_block]
-        blk = bytearray()
-        for row in chunk:
-            for name, prim, nullable in fields:
-                v = row.get(name)
-                if nullable:
-                    if v is None:
-                        _write_long(blk, 0)
-                        continue
-                    _write_long(blk, 1)
-                elif v is None:
-                    raise ValueError(f"NULL in non-nullable field {name!r}")
-                encode_value(blk, prim, v)
-        payload = bytes(blk)
-        if codec == "deflate":
-            co = zlib.compressobj(9, zlib.DEFLATED, -15)
-            payload = co.compress(payload) + co.flush()
-        _write_long(out, len(chunk))
-        _write_long(out, len(payload))
-        out += payload
-        out += sync
-
-    with open(path, "wb") as f:
-        f.write(bytes(out))

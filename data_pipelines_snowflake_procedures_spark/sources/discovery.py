@@ -35,15 +35,10 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
-from collections.abc import Iterator
-from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..session import rows_frame
 
 AGENT_NAME = "DataDiscoveryAgent"
 
@@ -268,113 +263,3 @@ def discover_and_run_dq(
             "agent_name": AGENT_NAME,
             "input_file": file_path,
         }
-
-
-@dataclass
-class QuarantineSplit:
-    """The PERMISSIVE ingest split's result: ``clean`` (corrupt column
-    dropped) and ``corrupt`` (raw offending text, one row per bad
-    record), plus an explicit :meth:`release` for the cache the split
-    reads through — an attribute monkey-patched onto ``clean`` would be
-    lost on the first transformation (ADVICE r5). Unpacks as the
-    historical ``(clean, corrupt)`` 2-tuple."""
-
-    clean: DataFrame
-    corrupt: DataFrame
-    _cached: DataFrame | None = None
-
-    def release(self) -> None:
-        """Unpersist the split's cached read (idempotent)."""
-        if self._cached is not None:
-            self._cached.unpersist()
-            self._cached = None
-
-    def __iter__(self) -> Iterator[DataFrame]:
-        return iter((self.clean, self.corrupt))
-
-
-def read_with_quarantine(
-    spark: SparkSession, path: str, fmt: str | None = None
-) -> QuarantineSplit:
-    """PERMISSIVE ingest split for the structured-text formats
-    (csv / ndjson) — the 100 TB ingest contract where malformed rows
-    are DATA to count and route (the file-DQ completeness pillar's
-    upstream), never exceptions that kill the job.
-
-    CSV needs TWO passes: with ``inferSchema`` Spark never adds the
-    corrupt-record column to a CSV schema (unlike JSON), so a
-    single-pass read silently reports corrupt files clean (ADVICE r5).
-    Pass 1 infers the data schema; pass 2 re-reads with that schema
-    extended by an explicit ``_corrupt_record`` string field, under
-    which malformed/short/broken-quote rows ARE flagged. At 100 TB the
-    inference pass is bounded with ``samplingRatio`` by the caller's
-    conventions; here files are test-sized.
-
-    Note: Spark disallows queries referencing ONLY the internal
-    corrupt-record column on raw file reads, so the split reads
-    through a cache — release it via :meth:`QuarantineSplit.release`
-    (:func:`quarantine_report`, the intended counting entry point,
-    does)."""
-    ext = (fmt or os.path.splitext(path)[1].lstrip(".")).lower()
-    if ext == "csv":
-        inferred = (
-            spark.read.option("header", True)
-            .option("inferSchema", True)
-            .option("mode", "DROPMALFORMED")
-            .csv(path)
-        )
-        schema = T.StructType(
-            [f for f in inferred.schema.fields if f.name != "_corrupt_record"]
-            + [T.StructField("_corrupt_record", T.StringType())]
-        )
-        df = (
-            spark.read.option("header", True)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .schema(schema)
-            .csv(path)
-        )
-    elif ext in ("json", "ndjson", "jsonl"):
-        df = (
-            spark.read.option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .json(path)
-        )
-    else:
-        raise ValueError(
-            f"quarantine split supports csv/json text formats, not {ext!r}"
-        )
-    if "_corrupt_record" not in df.columns:
-        return QuarantineSplit(
-            clean=df,
-            corrupt=rows_frame(spark, [], "_corrupt_record STRING"),
-        )
-    df = df.cache()
-    clean = df.filter(F.col("_corrupt_record").isNull()).drop(
-        "_corrupt_record"
-    )
-    corrupt = df.filter(F.col("_corrupt_record").isNotNull()).select(
-        "_corrupt_record"
-    )
-    return QuarantineSplit(clean=clean, corrupt=corrupt, _cached=df)
-
-
-def quarantine_report(
-    spark: SparkSession, path: str, fmt: str | None = None
-) -> dict[str, Any]:
-    """Count-level corrupt-record report for a structured text file:
-    ``{"n_clean", "n_corrupt", "corrupt_fraction", "samples"}`` (up to
-    5 raw offending lines). Materializes both counts, then releases
-    the split's cache — no session-lifetime blocks."""
-    split = read_with_quarantine(spark, path, fmt)
-    n_clean = split.clean.count()
-    bad_rows = [r["_corrupt_record"] for r in split.corrupt.limit(5).collect()]
-    n_corrupt = split.corrupt.count()
-    split.release()
-    total = n_clean + n_corrupt
-    return {
-        "n_clean": int(n_clean),
-        "n_corrupt": int(n_corrupt),
-        "corrupt_fraction": round(n_corrupt / total, 6) if total else 0.0,
-        "samples": bad_rows,
-    }

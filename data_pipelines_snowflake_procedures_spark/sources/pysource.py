@@ -43,7 +43,7 @@ _EPOCH = _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc)
 
 def synth_row(i: int) -> tuple:
     """Row ``i`` of the synthetic table — pure integer arithmetic so any
-    engine can regenerate it (see ``SYNTH_ORACLE_SQL``)."""
+    engine can regenerate it (the ``synthetic_events_agg`` oracle does)."""
     return (
         i,
         (i * 40503) % 1000,
@@ -101,15 +101,3 @@ def register_synthetic_source(spark: SparkSession) -> None:
     """Idempotently register the format with this session."""
     spark.dataSource.register(SyntheticEventsDataSource)
 
-
-#: DuckDB reconstruction of the same table — the cross-engine oracle
-#: for anything computed over the custom source.
-SYNTH_ORACLE_SQL = """
-    SELECT i AS event_id,
-           (i * 40503) % 1000 AS user_id,
-           ['view', 'click', 'purchase', 'signup', 'error'][(i % 5) + 1]
-               AS event_type,
-           ((i * 2654435761) % 10000) / 100.0 AS value,
-           TIMESTAMP '2024-01-01 00:00:00' + to_seconds(i) AS ts
-    FROM range({n}) t(i)
-"""

@@ -1,32 +1,23 @@
-"""Table sinks for the 100 TB layout: partitioned parquet writes, a
-Morton (Z-order) key for clustering, a storage report, and the atomic
-stage-and-swap commit.
+"""Table sinks: the atomic stage-and-swap commit of the streaming
+state folds, its crash recovery, and a footer-only storage report.
 
 The reference's only sinks were whole-table overwrites and per-row
-INSERTs (SURVEY.md §2.1 S9/S11). At scale, layout is the difference
-between scanning 100 TB and scanning one partition:
-
-* **Hive-style partitioning** (``partitionBy``) on low-cardinality
-  predicates columns (date, event_type, source) → partition pruning
-  eliminates directories before any I/O (visible as
-  ``PartitionFilters`` in the scan node).
-* **File sizing**: aim for 128 MB - 1 GB files; ``repartition`` on the
-  partition columns before writing prevents the small-files problem
-  (one file per task per partition).
+INSERTs (SURVEY.md §2.1 S9/S11). At scale, file sizing decides the
+scan cost: aim for 128 MB - 1 GB files; ``repartition`` on the
+partition columns before a ``partitionBy`` write prevents the
+small-files problem (one file per task per partition), which
+:func:`table_storage_report` flags.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
-
-from pyspark.sql import DataFrame
 
 
 def commit_swap(staging: str, target: str) -> None:
     """Atomically promote a fully-written staging directory to
     ``target`` (the parquet stand-in for a transactional MERGE/REPLACE,
-    used by the streaming SCD1 upsert and its state store).
+    used by the streaming state folds).
 
     Refuses to promote unless the staging write finished (Spark's
     ``_SUCCESS`` marker). The swap is two atomic directory renames —
@@ -74,26 +65,12 @@ def recover_swap(target: str, staging: str | None = None) -> str:
     )
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str],
-    mode: str = "overwrite",
-    coalesce_per_partition: bool = True,
-) -> None:
-    """Write Hive-partitioned parquet. ``coalesce_per_partition``
-    repartitions on the partition columns first so each directory gets
-    few well-sized files instead of one shard per upstream task."""
-    out = df.repartition(*partition_by) if coalesce_per_partition else df
-    out.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
 def table_storage_report(path: str) -> dict:
     """Storage-layout report from parquet footers (no data read):
     file count, bytes, rows, row groups, and the small-files flag that
     drives compaction decisions. Footer-only, so it is cheap even on a
-    100 TB table — this is the report that tells you whether
-    ``write_partitioned``'s repartition-first did its job."""
+    100 TB table — this is the report that tells you whether a
+    repartition-first write did its job."""
     import os
 
     import pyarrow.parquet as pq

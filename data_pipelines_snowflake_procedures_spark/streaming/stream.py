@@ -328,51 +328,6 @@ def run_to_memory(
     return spark.table(name)
 
 
-def rollup_maintain_stream(
-    spark: SparkSession,
-    source_stream: DataFrame,
-    state_path: str,
-    keys: list[str],
-    value_col: str,
-    checkpoint_suffix: str = "",
-) -> "object":
-    """Streaming incremental-aggregate maintenance: every micro-batch
-    is reduced to its PARTIAL state (count/sum/min/max per key,
-    :func:`~..operators.incremental.partial_agg`) and folded into the
-    persistent state table with the associative merge
-    (:func:`~..operators.incremental.merge_partials`) — the streaming
-    face of the same algebra the batch ``events_incremental_rollup``
-    entry proves against recomputation. State is keys-sized, never
-    history-sized; the fold reads only the prior state + one batch's
-    partials, so a 100 TB history is never re-aggregated.
-
-    The parquet state commits via the same atomic stage-and-swap as
-    the streaming SCD1 upsert (``commit_swap``: the state is only ever
-    fully old or fully new, crash-recoverable). foreachBatch is
-    AT-LEAST-once, so the fold must be idempotent: every applied batch
-    leaves an ``_applied_<suffix>_<batch_id>`` marker INSIDE the state
-    directory (underscore-prefixed files are invisible to parquet
-    readers, and they travel through the atomic swap with the data
-    they describe), and a redelivered batch whose marker is already
-    present is skipped — without this, a crash between the state swap
-    and the streaming checkpoint's offset commit would double-fold
-    that batch's counts on restart. ``checkpoint_suffix`` lets several
-    bounded replays fold into ONE state table, each with its own
-    progress tracking. Returns the query handle."""
-    _fold = make_rollup_fold(
-        spark, state_path, keys, value_col, checkpoint_suffix
-    )
-    return (
-        source_stream.writeStream.foreachBatch(_fold)
-        .option(
-            "checkpointLocation",
-            state_path + ".checkpoint" + checkpoint_suffix,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def make_rollup_fold(
     spark: SparkSession,
     state_path: str,
@@ -380,12 +335,17 @@ def make_rollup_fold(
     value_col: str,
     checkpoint_suffix: str = "",
 ):
-    """The foreachBatch body of :func:`rollup_maintain_stream`,
-    exposed so tests can exercise the at-least-once redelivery path
-    directly (call it twice with the same batch_id). The commit
-    protocol (markers, stage-and-swap, bootstrap-only-when-missing —
-    ADVICE r5) lives in :func:`make_state_fold`, shared with the
-    streaming bitmap index."""
+    """Streaming incremental-aggregate maintenance, as a foreachBatch
+    body: every micro-batch is reduced to its PARTIAL state
+    (count/sum/min/max per key,
+    :func:`~..operators.incremental.partial_agg`) and folded into the
+    persistent state table with the associative merge
+    (:func:`~..operators.incremental.merge_partials`) — the streaming
+    face of the same algebra the batch ``events_incremental_rollup``
+    entry proves against recomputation. State is keys-sized, never
+    history-sized; the fold reads only the prior state + one batch's
+    partials, so a 100 TB history is never re-aggregated. The commit
+    protocol lives in :func:`make_state_fold`."""
     from ..operators.incremental import merge_partials, partial_agg
 
     def step(batch_df: DataFrame, state: "DataFrame | None") -> DataFrame:
@@ -439,16 +399,37 @@ def make_state_fold(
     step,
 ):
     """Generic idempotent foreachBatch fold: ``step(batch_df,
-    state_or_None) -> merged state DF``, committed with the
-    stage-and-swap + ``_applied`` marker protocol documented on
-    :func:`make_rollup_fold` (at-least-once redelivery skips, crash
-    between swap and offset commit cannot double-fold). Factored out
-    so every incrementally-maintained state representation — partial
-    aggregates, bitmap indexes — shares one audited commit path."""
+    state_or_None) -> merged state DF``. Factored out so every
+    incrementally-maintained state representation — partial
+    aggregates, bitmap indexes — shares one audited commit path.
+
+    The parquet state commits via the atomic stage-and-swap
+    (``commit_swap``: the state is only ever fully old or fully new),
+    and a fold that finds the state missing first restores the last
+    committed version (``recover_swap``), so a crash between the
+    swap's two renames loses nothing; only a state never committed
+    bootstraps from the batch alone. foreachBatch is
+    AT-LEAST-once, so the fold must be idempotent: every applied batch
+    leaves an ``_applied_<suffix>_<batch_id>`` marker INSIDE the state
+    directory (underscore-prefixed files are invisible to parquet
+    readers, and they travel through the atomic swap with the data
+    they describe), and a redelivered batch whose marker is already
+    present is skipped — without this, a crash between the state swap
+    and the streaming checkpoint's offset commit would double-fold
+    that batch on restart. ``checkpoint_suffix`` lets several bounded
+    replays fold into ONE state table, each with its own progress
+    tracking."""
     import glob as _glob
     import shutil as _shutil
 
+    from ..sources.sink import commit_swap, recover_swap
+
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        if not os.path.exists(state_path):
+            try:
+                recover_swap(state_path)
+            except FileNotFoundError:
+                pass  # nothing committed yet: the first batch bootstraps
         marker = f"_applied_{checkpoint_suffix}_{batch_id}"
         if os.path.exists(os.path.join(state_path, marker)):
             return
@@ -465,51 +446,9 @@ def make_state_fold(
             for m in _glob.glob(os.path.join(state_path, "_applied_*")):
                 _shutil.copy(m, staging)
         open(os.path.join(staging, marker), "w").close()
-        from ..sources.sink import commit_swap
-
         commit_swap(staging, state_path)
 
     return _fold
-
-
-def bitmap_maintain_stream(
-    spark: SparkSession,
-    source_stream: DataFrame,
-    state_path: str,
-    key_cols: list[str],
-    value_col: str,
-    chunk_bits: int = 13,
-    checkpoint_suffix: str = "",
-) -> "object":
-    """Streaming incremental bitmap-index maintenance: each
-    micro-batch's member rows become per-key bitmap chunks
-    (:func:`~..operators.bitmap.bitmap_build`) and OR-fold into the
-    persistent index (:func:`~..operators.bitmap.bitmap_merge`) —
-    the streaming face of the batch `events_dau_wau_mau_bitmap`
-    state, sharing :func:`make_state_fold`'s idempotent
-    stage-and-swap commit. State is O(keys × chunks) bitmap rows,
-    never history-sized; because OR-folding is associative/
-    commutative/idempotent, batch boundaries cannot leak into the
-    final index (the oracle proves it byte-equivalently via exact
-    distinct counts)."""
-    from ..operators.bitmap import bitmap_build, bitmap_merge
-
-    def step(batch_df: DataFrame, state: DataFrame | None) -> DataFrame:
-        part = bitmap_build(batch_df, key_cols, value_col, chunk_bits)
-        if state is None:
-            return part
-        return bitmap_merge(state.unionByName(part), key_cols)
-
-    _fold = make_state_fold(spark, state_path, checkpoint_suffix, step)
-    return (
-        source_stream.writeStream.foreachBatch(_fold)
-        .option(
-            "checkpointLocation",
-            state_path + ".checkpoint" + checkpoint_suffix,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def drain_bounded_replays(

@@ -2,10 +2,14 @@
 
     python3 scripts/ab.py --parent HEAD~1 --seeds 600-609
 
-Run from the repository root. The parent ref's committed files are
-extracted (``git archive``) into a fresh directory, so the parent side
-runs exactly what the commit holds; the change side is this checkout.
-For every seed and every workload in ``BENCHMARK.json`` the script
+Run from the repository root. Both sides run from extracted trees
+(``git archive``) in fresh directories, never from the git working
+tree: a run from the working tree was measured slower than the same
+code run from an extracted copy. The parent side is the parent ref's
+committed files; the change side is this checkout's tracked files as
+they stand (a ``git stash create`` commit of the uncommitted edits, or
+HEAD when the tree is clean). A new file reaches the change side only
+once it is ``git add``-ed. For every seed and every workload in ``BENCHMARK.json`` the script
 runs its command (its ``run_seconds``, ``--trace 0``) once in each
 checkout, one after the other (the parent first on even seeds, the
 change first on odd ones), so host load falls on both sides alike.
@@ -48,6 +52,13 @@ def extract(ref: str, dest: str) -> None:
     os.makedirs(dest)
     archive = subprocess.run(["git", "archive", ref], cwd=ROOT, check=True, capture_output=True)
     subprocess.run(["tar", "-x", "-C", dest], input=archive.stdout, check=True)
+
+
+def change_ref() -> str:
+    """A commit of the tracked files as they stand: ``git stash create``
+    (the edits, staged or not, on top of HEAD), or HEAD when clean."""
+    stash = subprocess.run(["git", "stash", "create"], cwd=ROOT, check=True, capture_output=True, text=True)
+    return stash.stdout.strip() or "HEAD"
 
 
 def run_once(checkout: str, command: list[str], workload: str, seed: int, seconds: float) -> dict:
@@ -126,7 +137,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="git ref of the parent side")
     ap.add_argument("--seeds", required=True, help="e.g. 600-609 or 600,601")
-    ap.add_argument("--out", help="directory for the parent checkout and runs.jsonl (default: a new temporary one)")
+    ap.add_argument("--out", help="directory for the two checkouts and runs.jsonl (default: a new temporary one)")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -134,11 +145,12 @@ def main(argv: list[str] | None = None) -> int:
     workloads = [w["name"] for w in bench["workloads"]]
     out_dir = args.out or tempfile.mkdtemp(prefix="ab-")
     os.makedirs(out_dir, exist_ok=True)
-    parent = os.path.join(out_dir, "parent")
-    extract(args.parent, parent)
-    checkouts = {"parent": parent, "change": ROOT}
+    refs = {"parent": args.parent, "change": change_ref()}
+    checkouts = {side: os.path.join(out_dir, side) for side in refs}
+    for side, ref in refs.items():
+        extract(ref, checkouts[side])
     log = os.path.join(out_dir, "runs.jsonl")
-    print(f"parent {args.parent} in {parent}; runs in {log}", file=sys.stderr)
+    print(f"parent {refs['parent']}, change {refs['change']} in {out_dir}; runs in {log}", file=sys.stderr)
 
     runs = []
     for seed in parse_seeds(args.seeds):

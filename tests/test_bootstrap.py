@@ -1,5 +1,11 @@
 """operators/bootstrap.py: deterministic Poisson bootstrap — draw
-distribution, determinism, CI sanity."""
+distribution, determinism, CI sanity.
+
+The Column-expression draws below are the reference the program's
+numpy partials (``grouped_replicate_partials``) are compared against:
+the same single md5 per row, affine-universal 15-bit uniforms and
+integer-threshold inverse CDF, as Spark expressions.
+"""
 
 from __future__ import annotations
 
@@ -7,13 +13,106 @@ import pytest
 
 import math
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_pipelines_snowflake_procedures_spark.operators.bootstrap import (
-    bootstrap_mean_ci,
+    _BOOT_M30,
+    _BOOT_P,
+    boot_perm_consts,
+    global_ci_from_partials,
+    group_cis_from_partials,
+    grouped_replicate_partials,
     poisson1_cdf15,
-    poisson_weights,
 )
+
+
+def _poisson_weight(u15: Column, thresholds: list[int]) -> Column:
+    """Inverse-CDF CASE over a 15-bit uniform. Call this on a
+    MATERIALIZED column only: each WHEN arm re-references the input
+    expression, so a compound ``u15`` would be re-evaluated per arm."""
+    w: Column = F.lit(len(thresholds))
+    for k in reversed(range(len(thresholds))):
+        w = F.when(u15 < F.lit(thresholds[k]), F.lit(k)).otherwise(w)
+    return w
+
+
+def _base_halves(key: Column, seed: str) -> tuple[Column, Column]:
+    """The row's 30-bit base pair: the two 60-bit halves of ONE md5
+    digest, reduced mod 2^30."""
+    h = F.md5(F.concat(key.cast("string"), F.lit(f"|{seed}")))
+    return (
+        F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % F.lit(_BOOT_M30),
+        F.conv(F.substring(h, 16, 15), 16, 10).cast("long") % F.lit(_BOOT_M30),
+    )
+
+
+def _slot_u15(h0a: Column, h0b: Column, const: "tuple[int, int, int]") -> Column:
+    """Replicate's 15-bit uniform from the row base pair and its
+    affine constants."""
+    a, c, d = const
+    return (
+        (F.lit(a) * h0a + F.lit(c) * h0b + F.lit(d)) % F.lit(_BOOT_P)
+    ).bitwiseAND(F.lit(32767))
+
+
+def poisson_weights(key: Column, b: int, seed: str = "boot") -> Column:
+    """Array of ``b`` deterministic Poisson(1) weights for a row key —
+    the readable array-form spec of the draw scheme."""
+    thresholds = poisson1_cdf15()
+    h0a, h0b = _base_halves(key, seed)
+    cols = [
+        _poisson_weight(_slot_u15(h0a, h0b, const), thresholds)
+        for const in boot_perm_consts(b, seed)
+    ]
+    return F.array(*cols)
+
+
+def poisson_draws(df: DataFrame, key_col: str, b: int, seed: str = "boot") -> DataFrame:
+    """Exploded form of :func:`poisson_weights`: appends ``(__r, __w)``
+    — one row per (input row, replicate). The per-replicate constants
+    posexplode from a literal array and the inverse-CDF CASE runs on
+    the materialized 15-bit column."""
+    thresholds = poisson1_cdf15()
+    h0a, h0b = _base_halves(F.col(key_col), seed)
+    d1 = df.withColumns({"__h0a": h0a, "__h0b": h0b})
+    consts = F.array(
+        *[
+            F.struct(
+                F.lit(a).alias("a"), F.lit(c).alias("c"), F.lit(d).alias("d")
+            )
+            for a, c, d in boot_perm_consts(b, seed)
+        ]
+    )
+    d2 = d1.select("*", F.posexplode(consts).alias("__r", "__k"))
+    u = (
+        (
+            F.col("__k.a") * F.col("__h0a")
+            + F.col("__k.c") * F.col("__h0b")
+            + F.col("__k.d")
+        )
+        % F.lit(_BOOT_P)
+    ).bitwiseAND(F.lit(32767))
+    d2 = d2.withColumn("__u", u)
+    return (
+        d2.withColumn("__w", _poisson_weight(F.col("__u"), thresholds))
+        .drop("__h0a", "__h0b", "__k", "__u")
+    )
+
+
+def _global_ci(df: DataFrame, key_col: str, value_col: str, b: int):
+    """The global CI the registry emits, from partials grouped on
+    ``key % 3`` (three groups, re-aggregated per replicate)."""
+    grouped = df.withColumn("__g", F.col(key_col) % 3)
+    per, totals = grouped_replicate_partials(grouped, "__g", key_col, value_col, b)
+    return global_ci_from_partials(per, totals, b)
+
+
+def _group_cis(
+    df: DataFrame, group_col: str, key_col: str, value_col: str, b: int
+):
+    per, totals = grouped_replicate_partials(df, group_col, key_col, value_col, b)
+    return group_cis_from_partials(per, totals, b)
 
 
 def test_cdf15_thresholds_match_poisson1():
@@ -47,8 +146,8 @@ def test_weights_distribution_is_poisson1(spark):
 def test_bootstrap_deterministic_and_sane(spark):
     rows = [(i, 100 + (i * 37) % 50) for i in range(3000)]
     df = spark.createDataFrame(rows, "k LONG, x LONG")
-    a = bootstrap_mean_ci(df, "k", "x", b=80)
-    bb = bootstrap_mean_ci(df, "k", "x", b=80)
+    a = _global_ci(df, "k", "x", b=80)
+    bb = _global_ci(df, "k", "x", b=80)
     assert a == bb  # md5 draws: bit-identical across runs
     n, mean, lo, hi = a
     assert n == 3000
@@ -66,46 +165,34 @@ def test_ci_narrows_with_n(spark):
     big = spark.createDataFrame(
         [(i, (i * 13) % 100) for i in range(6000)], "k LONG, x LONG"
     )
-    _, _, lo_s, hi_s = bootstrap_mean_ci(small, "k", "x", b=80)
-    _, _, lo_b, hi_b = bootstrap_mean_ci(big, "k", "x", b=80)
+    _, _, lo_s, hi_s = _global_ci(small, "k", "x", b=80)
+    _, _, lo_b, hi_b = _global_ci(big, "k", "x", b=80)
     assert (hi_b - lo_b) < (hi_s - lo_s)
 
 
 def test_group_bootstrap_matches_global_on_single_group(spark):
-    from data_pipelines_snowflake_procedures_spark.operators.bootstrap import (
-        bootstrap_group_mean_ci,
-    )
-
     df = spark.createDataFrame(
         [("a", i, 100 + (i * 37) % 50) for i in range(1500)],
         "g STRING, k LONG, x LONG",
     )
-    [(g, n, mean, lo, hi)] = bootstrap_group_mean_ci(df, "g", "k", "x", b=80)
-    gn, gmean, glo, ghi = bootstrap_mean_ci(df, "k", "x", b=80)
+    [(g, n, mean, lo, hi)] = _group_cis(df, "g", "k", "x", b=80)
+    gn, gmean, glo, ghi = _global_ci(df, "k", "x", b=80)
     assert (g, n) == ("a", 1500)
     # same keys, same seed -> identical draws -> identical interval
     assert (mean, lo, hi) == (gmean, glo, ghi)
 
 
 def test_group_bootstrap_separates_shifted_groups(spark):
-    from data_pipelines_snowflake_procedures_spark.operators.bootstrap import (
-        bootstrap_group_mean_ci,
-    )
-
     rows = [("lo", i, (i * 13) % 100) for i in range(2000)] + [
         ("hi", 10_000 + i, 500 + (i * 13) % 100) for i in range(2000)
     ]
     df = spark.createDataFrame(rows, "g STRING, k LONG, x LONG")
     out = {g: (lo, hi) for g, _, _, lo, hi in
-           bootstrap_group_mean_ci(df, "g", "k", "x", b=80)}
+           _group_cis(df, "g", "k", "x", b=80)}
     assert out["lo"][1] < out["hi"][0]  # disjoint intervals
 
 
 def test_poisson_draws_identical_to_array_form(spark):
-    from data_pipelines_snowflake_procedures_spark.operators.bootstrap import (
-        poisson_draws,
-    )
-
     df = spark.createDataFrame([(i,) for i in range(50)], "k LONG")
     arr = df.select(
         "k", F.posexplode(poisson_weights(F.col("k"), 20)).alias("r", "w")
@@ -121,11 +208,6 @@ def test_grouped_partials_match_exploded_draws(spark):
     the exploded poisson_draws → groupBy(__g, __r) aggregation — the
     pre-r10 form — including a NON-long key dtype (string keys hash via
     Python str(k), which must agree with Spark's cast('string'))."""
-    from data_pipelines_snowflake_procedures_spark.operators.bootstrap import (
-        grouped_replicate_partials,
-        poisson_draws,
-    )
-
     cases = [
         (
             [(i, f"g{i % 3}", 100 + (i * 37) % 50) for i in range(400)],

@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import json
+import struct
+import zlib
+from typing import Any
 
 import pytest
 
@@ -14,6 +17,8 @@ from data_pipelines_snowflake_procedures_spark.sources.discovery import (
     read_any,
 )
 from pyspark.sql import types as T
+
+from data_pipelines_snowflake_procedures_spark.sources.avrofile import _MAGIC
 
 
 def test_format_file_size():
@@ -1000,61 +1005,6 @@ def test_xls_v3_directory_size_high_dword_garbage(tmp_path):
     assert read_xls_rows(dirty) == read_xls_rows(clean)
 
 
-def test_quarantine_corrupt_json_and_csv(spark, tmp_path):
-    """PERMISSIVE ingest split: malformed records route to the
-    quarantine side with raw text preserved; clean rows parse
-    normally; fully-clean files yield an empty quarantine; the report
-    counts and samples without leaving cached blocks."""
-    from data_pipelines_snowflake_procedures_spark.sources.discovery import (
-        quarantine_report,
-        read_with_quarantine,
-    )
-
-    j = tmp_path / "mixed.json"
-    j.write_text(
-        '{"id": 1, "name": "a"}\n'
-        "{broken json here\n"
-        '{"id": 2, "name": "b"}\n'
-        "also not json\n"
-    )
-    clean, corrupt = read_with_quarantine(spark, str(j))
-    assert sorted(r["id"] for r in clean.collect()) == [1, 2]
-    bad = {r["_corrupt_record"] for r in corrupt.collect()}
-    assert bad == {"{broken json here", "also not json"}
-
-    rep = quarantine_report(spark, str(j))
-    assert rep["n_clean"] == 2 and rep["n_corrupt"] == 2
-    assert rep["corrupt_fraction"] == 0.5
-    assert set(rep["samples"]) == bad
-
-    c = tmp_path / "clean.csv"
-    c.write_text("id,name\n1,a\n2,b\n")
-    rep2 = quarantine_report(spark, str(c))
-    assert rep2["n_corrupt"] == 0 and rep2["n_clean"] == 2
-
-    # corrupt CSV: short rows and extra-token rows must route to the
-    # quarantine side, not pass as clean null-padded rows (the
-    # single-pass inferSchema read never flags them — ADVICE r5; the
-    # two-pass explicit-schema read does)
-    cc = tmp_path / "dirty.csv"
-    cc.write_text("id,name\n1,a\n2\n3,c\n4,d,extra\n")
-    rep3 = quarantine_report(spark, str(cc))
-    assert rep3["n_clean"] == 2 and rep3["n_corrupt"] == 2
-    assert set(rep3["samples"]) == {"2", "4,d,extra"}
-
-    # the split object exposes an explicit release() (no monkey-patched
-    # cache attribute that a transformation would drop — ADVICE r5)
-    split = read_with_quarantine(spark, str(cc))
-    assert split.clean.count() == 2
-    split.release()
-    split.release()  # idempotent
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="quarantine split"):
-        read_with_quarantine(spark, "whatever.parquet")
-
-
 def test_read_any_arrow_ipc_file_batch_parallel(spark, tmp_path):
     """Arrow IPC FILE format loads through read_any with values intact;
     the reader distributes by record batch (footer opened once)."""
@@ -1157,10 +1107,103 @@ def test_sniff_ipc_kind_rejects_garbage_and_truncation(spark, tmp_path):
     assert sniff_ipc_kind(str(stream)) == "stream"
 
 
+def _write_long(out: bytearray, n: int) -> None:
+    z = (n << 1) ^ (n >> 63) if n < 0 else n << 1
+    while True:
+        b = z & 0x7F
+        z >>= 7
+        if z:
+            out.append(b | 0x80)
+        else:
+            out.append(b)
+            return
+
+
+def _write_bytes(out: bytearray, data: bytes) -> None:
+    _write_long(out, len(data))
+    out += data
+
+
+def write_avro(
+    path: str,
+    rows: list[dict[str, Any]],
+    fields: list[tuple[str, str, bool]],
+    codec: str = "null",
+    records_per_block: int = 1000,
+) -> None:
+    """Deterministic single-file Avro container writer (Apache Avro 1.11
+    "Object Container Files"), the fixture encoder of the reader tests.
+    ``fields``: [(name, primitive, nullable)]."""
+    if codec not in ("null", "deflate"):
+        raise NotImplementedError(f"Avro codec {codec!r}")
+    schema = {
+        "type": "record",
+        "name": "row",
+        "fields": [
+            {"name": n, "type": (["null", p] if nullable else p)}
+            for n, p, nullable in fields
+        ],
+    }
+    sync = bytes(range(16))  # fixed marker: deterministic fixtures
+
+    out = bytearray(_MAGIC)
+    meta = {
+        "avro.schema": json.dumps(schema).encode("utf-8"),
+        "avro.codec": codec.encode("utf-8"),
+    }
+    _write_long(out, len(meta))
+    for k in sorted(meta):
+        _write_bytes(out, k.encode("utf-8"))
+        _write_bytes(out, meta[k])
+    _write_long(out, 0)
+    out += sync
+
+    def encode_value(blk: bytearray, prim: str, v: Any) -> None:
+        if prim == "boolean":
+            blk.append(1 if v else 0)
+        elif prim in ("int", "long"):
+            _write_long(blk, int(v))
+        elif prim == "float":
+            blk += struct.pack("<f", float(v))
+        elif prim == "double":
+            blk += struct.pack("<d", float(v))
+        elif prim == "string":
+            _write_bytes(blk, str(v).encode("utf-8"))
+        elif prim == "bytes":
+            _write_bytes(blk, bytes(v))
+        else:
+            raise NotImplementedError(prim)
+
+    for lo in range(0, len(rows), records_per_block):
+        chunk = rows[lo : lo + records_per_block]
+        blk = bytearray()
+        for row in chunk:
+            for name, prim, nullable in fields:
+                v = row.get(name)
+                if nullable:
+                    if v is None:
+                        _write_long(blk, 0)
+                        continue
+                    _write_long(blk, 1)
+                elif v is None:
+                    raise ValueError(f"NULL in non-nullable field {name!r}")
+                encode_value(blk, prim, v)
+        payload = bytes(blk)
+        if codec == "deflate":
+            co = zlib.compressobj(9, zlib.DEFLATED, -15)
+            payload = co.compress(payload) + co.flush()
+        _write_long(out, len(chunk))
+        _write_long(out, len(payload))
+        out += payload
+        out += sync
+
+    with open(path, "wb") as f:
+        f.write(bytes(out))
+
+
 def test_read_any_avro_round_trip_both_codecs(spark, tmp_path):
     """S14 Avro object-container source: stdlib spec-path reader,
     block-parallel, null + deflate codecs, nullable-union columns."""
-    from data_pipelines_snowflake_procedures_spark.sources.avrofile import write_avro
     from data_pipelines_snowflake_procedures_spark.sources.discovery import read_any
 
     fields = [
@@ -1197,7 +1240,6 @@ def test_read_any_avro_round_trip_both_codecs(spark, tmp_path):
 def test_read_avro_empty_and_errors(spark, tmp_path):
     from data_pipelines_snowflake_procedures_spark.sources.avrofile import (
         read_avro,
-        write_avro,
     )
 
     fields = [("id", "long", False)]

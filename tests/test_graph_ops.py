@@ -7,15 +7,41 @@ from __future__ import annotations
 import math
 from itertools import combinations
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
 from data_pipelines_snowflake_procedures_spark.operators.graph import (
     adamic_adar,
     label_propagation,
-    topk_sparsify,
     triangle_count,
 )
 from data_pipelines_snowflake_procedures_spark.operators.itemsets import (
     frequent_pairs,
 )
+
+
+def topk_sparsify(edges: DataFrame, k: int) -> DataFrame:
+    """kNN-graph sparsification of a weighted edge list, the two-scan
+    reference ``topk_cooccurrence_edges`` must match: keep each node's
+    ``k`` strongest incident edges (weight desc, neighbor asc), then
+    symmetrize and canonicalize to an undirected simple edge list
+    ``(a, b)`` with ``a < b``."""
+    w_n = Window.partitionBy("node").orderBy(
+        F.col("w").desc(), F.col("nbr").asc()
+    )
+    sym = edges.selectExpr("src AS node", "dst AS nbr", "CAST(w AS DOUBLE) AS w")
+    sym = sym.unionByName(
+        edges.selectExpr("dst AS node", "src AS nbr", "CAST(w AS DOUBLE) AS w")
+    )
+    kept = (
+        sym.filter(F.col("node") != F.col("nbr"))
+        .withColumn("rn", F.row_number().over(w_n))
+        .filter(F.col("rn") <= k)
+    )
+    return kept.select(
+        F.least("node", "nbr").alias("a"), F.greatest("node", "nbr").alias("b")
+    ).distinct()
 
 
 def _edges(spark, pairs):
@@ -312,11 +338,8 @@ def test_topk_cooccurrence_edges_matches_sparsified_join(spark):
     """topk_cooccurrence_edges == topk_sparsify over the self-join
     co-occurrence counts, on a graph where the k-cutoff actually binds
     (node 1 co-occurs with 2,3,4 at different weights)."""
-    from pyspark.sql import functions as F
-
     from data_pipelines_snowflake_procedures_spark.operators.graph import (
         topk_cooccurrence_edges,
-        topk_sparsify,
     )
 
     rows = [  # (basket, item): weights = co-occurrence counts

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_pipelines_snowflake_procedures_spark.operators.dedup import (
@@ -580,7 +581,6 @@ def test_connected_components_job_count_is_fixed(spark, count_jobs):
 def test_decontaminate_drops_overlapping_docs(spark):
     from data_pipelines_snowflake_procedures_spark.operators.corpus import (
         contamination_hits,
-        decontaminate,
     )
 
     train = spark.createDataFrame(
@@ -594,18 +594,19 @@ def test_decontaminate_drops_overlapping_docs(spark):
     ev = spark.createDataFrame(
         [(100, "watch the quick brown fox run")], "doc_id BIGINT, text STRING"
     )
-    hits = {r["doc_id"]: r["n_hits"] for r in contamination_hits(train, ev).collect()}
+    hits = contamination_hits(train, ev)
     # shared 3-shingles: doc 1 {the quick brown, quick brown fox}, doc 3 {quick brown fox}
-    assert hits == {1: 2, 3: 1}
-    kept = sorted(
-        r["doc_id"] for r in decontaminate(train, ev, min_hits=1).collect()
-    )
-    assert kept == [2]
+    assert {r["doc_id"]: r["n_hits"] for r in hits.collect()} == {1: 2, 3: 1}
+
+    def kept(min_hits):
+        flagged = hits.filter(F.col("n_hits") >= min_hits).select("doc_id")
+        return sorted(
+            r["doc_id"] for r in train.join(flagged, "doc_id", "left_anti").collect()
+        )
+
+    assert kept(1) == [2]
     # min_hits=2 keeps the single-shingle overlap
-    kept2 = sorted(
-        r["doc_id"] for r in decontaminate(train, ev, min_hits=2).collect()
-    )
-    assert kept2 == [2, 3]
+    assert kept(2) == [2, 3]
 
 
 def test_pack_sequences_offsets_and_boundaries(spark):
@@ -737,17 +738,24 @@ def test_quality_quantile_gate_keeps_top_half_per_group(spark, sf_dir):
 def test_kmeans_sse_decreases_with_iterations(spark, sf_dir):
     """Lloyd invariant: total within-cluster squared distance is
     non-increasing in the iteration count."""
-    from data_pipelines_snowflake_procedures_spark.operators.similarity import kmeans_lloyd
+    from data_pipelines_snowflake_procedures_spark.operators.similarity import (
+        kmeans_assign_df,
+        kmeans_fit,
+    )
     from data_pipelines_snowflake_procedures_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
+
+    def assigned(iters):
+        return kmeans_assign_df(emb, kmeans_fit(emb, k=4, iters=iters))
+
     sse = [
-        kmeans_lloyd(emb, k=4, iters=i).agg(F.sum("dist")).collect()[0][0]
+        assigned(i).agg(F.sum(F.round("__dist", 6))).collect()[0][0]
         for i in (0, 1, 3)
     ]
     assert sse[0] >= sse[1] >= sse[2]
     # k=4 clusters all non-empty on this data
-    assert kmeans_lloyd(emb, k=4, iters=2).select("cluster").distinct().count() == 4
+    assert assigned(2).select("__cl").distinct().count() == 4
 
 
 def test_knn_sq_recall_vs_bruteforce(spark, sf_dir):
@@ -1956,13 +1964,57 @@ def test_fit_cache_is_sf_keyed_and_memoizes(spark):
         QL._FIT_CACHE.update(saved)
 
 
+def _pq_assign_all(
+    df: DataFrame, codebooks: list[list[list[float]]], sub_exprs: list[Column]
+) -> DataFrame:
+    """Every subspace's argmin code in ONE projection over ONE
+    broadcast books matrix — the JVM-native reference spec of the PQ
+    encode that the numpy kernel of ``pq_encode``/``pq_fit`` must
+    match code for code. ``sub_exprs[j]`` is the j-th
+    subvector column (a pre-sliced column or a slice expression).
+    Distances are the ordered ``aggregate(zip_with(sub, c))`` fold
+    per book entry, argmin ties to the lowest code via
+    array_position(array_min)."""
+    mat = df.sparkSession.createDataFrame(
+        [([[[float(x) for x in c] for c in b] for b in codebooks],)],
+        "__pq_books: array<array<array<double>>>",
+    )
+    out = df.crossJoin(F.broadcast(mat))
+
+    def _dist_fn(s):
+        # closure, not a default arg: F.transform treats a 2-arg
+        # lambda as (element, index)
+        return lambda c: F.aggregate(
+            F.zip_with(
+                s,
+                c,
+                lambda x, y: (x.cast("double") - y)
+                * (x.cast("double") - y),
+            ),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+
+    code_cols = []
+    for j in range(len(codebooks)):
+        dists = F.transform(
+            F.element_at(F.col("__pq_books"), j + 1),
+            _dist_fn(sub_exprs[j]),
+        )
+        code_cols.append(
+            (F.array_position(dists, F.array_min(dists)) - 1)
+            .cast("long")
+            .alias(f"code_{j}")
+        )
+    return out.select(*df.columns, *code_cols)
+
+
 def test_pq_numpy_assign_matches_jvm_spec(spark, sf_dir):
     """r10: the Arrow numpy PQ encode (hot path) must emit codes
     IDENTICAL to the JVM-native reference projection _pq_assign_all —
     the bit-exactness claim behind routing pq_encode/pq_fit through
     numpy (per-dimension index-order accumulation, first-min ties)."""
     from data_pipelines_snowflake_procedures_spark.operators.similarity import (
-        _pq_assign_all,
         pq_encode,
         pq_fit,
     )

@@ -93,20 +93,23 @@ def test_grouping_sets_single_expand_single_agg_exchange(spark, sf_dir):
 
 
 def test_kmeans_assignment_is_shuffle_free(spark, sf_dir):
-    """The final k-means assignment pass (literal centroids) must be a
-    narrow projection: no exchange, no join, no Python."""
+    """The final k-means assignment pass (k=4 centroids as a 1-row
+    broadcast matrix) must stay narrow: no shuffle exchange and no
+    Python. Its one join is the BroadcastNestedLoopJoin of that
+    1-row matrix."""
+    import re
+
     from data_pipelines_snowflake_procedures_spark.operators.similarity import (
-        kmeans_assign_expr,
+        kmeans_assign_df,
         kmeans_fit,
     )
     from data_pipelines_snowflake_procedures_spark.session import load_table
-    from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, k=4, iters=1)
-    cluster, dist = kmeans_assign_expr(F.col("embedding"), cents)
     plan = (
-        emb.select("vec_id", cluster.alias("c"), dist.alias("d"))
+        kmeans_assign_df(emb, cents)
+        .select("vec_id", "__cl", "__dist")
         ._jdf.queryExecution()
         .explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -114,8 +117,7 @@ def test_kmeans_assignment_is_shuffle_free(spark, sf_dir):
             )
         )
     )
-    assert "Exchange" not in plan
-    assert "Join" not in plan
+    assert not re.search(r"\bExchange\b", plan)
     assert "Python" not in plan
 
 
@@ -337,27 +339,35 @@ def test_jl_projection_is_narrow(spark, sf_dir):
     assert "label" not in plan  # untouched column pruned from the scan
 
 
-def test_bootstrap_draws_fanout_parallelism_guard(spark, sf_dir):
+def test_bootstrap_draws_fanout_parallelism_guard(spark, sf_dir, count_jobs):
+    """The b× replicate fan-out of a narrow single-file scan must run
+    at session parallelism: ``grouped_replicate_partials`` repartitions
+    before its Arrow pass instead of folding every row on one core."""
     from pyspark.sql import functions as F
 
     from data_pipelines_snowflake_procedures_spark.operators.bootstrap import (
-        poisson_draws,
+        grouped_replicate_partials,
     )
     from data_pipelines_snowflake_procedures_spark.session import load_table
 
+    sc = spark.sparkContext
     src = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", F.round(F.col("o_totalprice") * 100).cast("long").alias("c")
+        "o_orderpriority",
+        "o_orderkey",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
     )
-    d = poisson_draws(src, "o_orderkey", 40)
-    # the guard must lift a narrow single-file scan to session
-    # parallelism BEFORE the 40x explode
-    assert d.rdd.getNumPartitions() >= min(
-        spark.sparkContext.defaultParallelism, 8
+    assert src.rdd.getNumPartitions() < sc.defaultParallelism  # narrow scan
+    count_jobs(
+        "boot-guard",
+        lambda: grouped_replicate_partials(src, "o_orderpriority", "o_orderkey", "c", b=40),
     )
-    # and the per-replicate constants must be CONSTANT-FOLDED into the
-    # Generate (a literal array, not per-row construction)
-    plan = d._jdf.queryExecution().optimizedPlan().toString()
-    assert "posexplode([[" in plan.replace(" ", "") or "posexplode([" in plan
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(s)
+        for j in tracker.getJobIdsForGroup("boot-guard")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert max(st.numTasks for st in stages if st) >= min(sc.defaultParallelism, 8)
 
 
 def test_top_sf1_entries_plan_budgets(spark, sf_dir):

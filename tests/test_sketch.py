@@ -3,52 +3,46 @@
 The scale claim being tested: sketches built per-slice and UNIONED
 must estimate exactly what a single one-pass sketch over the same
 rows estimates (HLL register state is order/partition-insensitive),
-and the estimate must sit within the lgK=14 error envelope.
+and the estimate must sit within the p=12 error envelope.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from data_pipelines_snowflake_procedures_spark.operators.sketch import (
-    distinct_with_sketch,
-    merged_distinct_estimate,
-    sliced_distinct_sketches,
+    portable_hll_distinct,
 )
 from data_pipelines_snowflake_procedures_spark.session import load_table
 
 
 def test_union_of_slices_equals_one_pass_sketch(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
-    daily = sliced_distinct_sketches(
-        ev, ["event_type"], F.to_date("ts"), "user_id"
-    )
+    cols = ("approx_distinct", "n_registers_filled")
     merged = {
-        r["event_type"]: r["approx_distinct"]
-        for r in merged_distinct_estimate(daily, ["event_type"]).collect()
+        r["event_type"]: tuple(r[c] for c in cols)
+        for r in portable_hll_distinct(
+            ev, ["event_type"], F.to_date("ts"), "user_id"
+        ).collect()
     }
     one_pass = {
-        r["event_type"]: r["direct"]
-        for r in ev.groupBy("event_type")
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg("user_id", F.lit(14))
-            ).alias("direct")
-        )
-        .collect()
+        r["event_type"]: tuple(r[c] for c in cols)
+        for r in portable_hll_distinct(
+            ev, ["event_type"], F.lit(0), "user_id"
+        ).collect()
     }
     assert merged == one_pass
 
 
 def test_sketch_estimate_within_error_bound(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
-    rows = distinct_with_sketch(
+    rows = portable_hll_distinct(
         ev, ["event_type"], F.to_date("ts"), "user_id"
     ).collect()
     assert rows
     for r in rows:
         assert r["exact_distinct"] > 0
-        # lgK=14 standard error ~0.8%; 2% is a ~2.5-sigma bound.
-        assert r["rel_err"] <= 0.02, (r["event_type"], r["rel_err"])
+        # p=12 standard error ~1.6%; 5% is a ~3-sigma bound.
+        assert r["rel_err"] <= 0.05, (r["event_type"], r["rel_err"])
 
 
 def test_cms_merge_invariant_and_one_sided_error(spark, sf_dir):
